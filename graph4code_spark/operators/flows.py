@@ -73,10 +73,20 @@ extraction per snippet, emitting the reference's node/edge vocabulary —
   `…Engine.java:1892-1954` with the holder contributing no node.  A
   tracked subscript receiver with an uncataloged method emits no node
   (parity with dotted calls on tracked variables)
-- multi-line call spans: physical lines with open parens merge into one
-  logical statement with a first_line≠last_line source span; explicit
-  ``\\`` continuations splice token-tight (late r5 — ``x = pandas.\\`` +
-  `read_csv(…)` keeps the dotted name whole)
+- one lexer for snippet text: a single regex scan (`_LEX_RE`) finds
+  string literals (any prefix, single or triple quotes, escapes), `#`
+  comments, brackets, ``\\`` continuations, newlines and top-level
+  `,`/`;`; every "inside a string, comment or bracket?" question reads
+  that scan.  Comments are cut; a multi-line triple-quoted literal
+  keeps its delimiters and blanks its interior lines (text, not
+  statements); calls and reads inside string text are inert, while
+  f-string brace regions evaluate (`{{`/`}}` are literal)
+- multi-line call spans: physical lines inside open brackets (or inside
+  a string literal) join one logical statement with a
+  first_line≠last_line source span; explicit ``\\`` continuations
+  splice token-tight (``x = pandas.\\`` + `read_csv(…)` keeps the
+  dotted name whole).  A statement spans at most `_MAX_SPAN` lines, so
+  an unclosed paren or string cannot swallow the snippet
 - container def-use chaining: ``v = [a, b]`` then ``f(v)`` flows a's and
   b's producers into f (`…Engine.java:1905-1920`'s dict/tuple/list
   recursion, scoped to literal containers of tracked variables)
@@ -164,10 +174,11 @@ extraction per snippet, emitting the reference's node/edge vocabulary —
   `df = RHS` — type hints carry no runtime dataflow, and erasing them
   keeps the binding so later turtle extensions on df survive (one-line
   compound clauses like `else: y = 1` are kept out by a keyword guard)
-- semicolon compound lines (late r5): top-level `;` splits a line into
-  its statements (quote/paren-aware), so `import pandas; df =
-  pd.read_csv('a')` tracks like the multi-line form; one-line compound
-  bodies (`if x: a; b`) keep their single statement (subset)
+- semicolon compound lines (late r5): a `;` outside strings and
+  brackets (per the lexer) splits a line into its statements, so
+  `import pandas; df = pd.read_csv('a')` tracks like the multi-line
+  form; one-line compound bodies (`if x: a; b`) keep their single
+  statement (subset)
 - `del a, b` (late r5): unbinds the named variables — WALA treats a
   post-del use as an unresolved read, so dropping every binding keeps
   stale producers from cross-wiring later receiver edges
@@ -176,10 +187,10 @@ extraction per snippet, emitting the reference's node/edge vocabulary —
   hoists into a `_subN_` temp just before the head — the condition
   evaluates on the pre path, so placement is exact for `if` and the
   walrus-style one-unrolling approximation for `while`; chains unwind
-  recursively (`if df.isnull().sum() > 0:`).  Subset: dotted callees
-  only (`len(df.dropna())` hoists the inner call, not len), `elif`
-  heads stay out (a hoist between chain arms would break the open
-  frame), string literals skipped by quote parity
+  recursively (`if df.isnull().sum() > 0:`).  `elif` conditions hoist
+  too, with the walrus hoist's one-unrolling placement mid-chain.
+  Subset: dotted callees only (`len(df.dropna())` hoists the inner
+  call, not len); a match inside a string literal is skipped
 - subscript-write chain RHS (final r5): `df['z'] = df['a'].apply(str)`
   hoists the RHS chain into a temp (the chain desugar splits it), so
   the field read + chain-final call mint AND the existing
@@ -368,24 +379,159 @@ _ATTR_WRITE_RE = re.compile(r"^\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=[^=]")
 _SUBSCR_WRITE_RE = re.compile(
     r"^\s*([A-Za-z_]\w*)\[\s*(?:'([^']*)'|\"([^\"]*)\")\s*\]\s*=[^=]"
 )
-#: string literals (optionally f-prefixed) for the inert-text check
-_STRING_LIT_RE = re.compile(
-    r"([fF]?)('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")"
+#: the snippet lexer — ONE left-to-right scan that finds every token
+#: deciding statement structure: string literals (any prefix, single or
+#: triple quotes, backslash escapes; an unterminated literal runs to the
+#: end of its line, a triple-quoted one to the end of the text), `#`
+#: comments, brackets, `\`-newline continuations, newlines and the
+#: separators `,`/`;`.  Names and operators between tokens are skipped.
+#: Every question of the form "is this inside a string, a comment or a
+#: bracket?" is answered from this scan.
+_LEX_RE = re.compile(
+    # the leading lookahead lets the scan skip other characters quickly
+    r"(?=[rRbBuUfF'\"#()\[\]{}\\\n,;])"
+    r"(?:(?P<str>(?P<pre>(?<!\w)[rRbBuUfF]{1,2}|)"
+    r"(?:'''[^'\\]*+(?:(?:\\.|'(?!''))[^'\\]*+)*+(?:'''|\\?\Z)"
+    r"|\"\"\"[^\"\\]*+(?:(?:\\.|\"(?!\"\"))[^\"\\]*+)*+(?:\"\"\"|\\?\Z)"
+    r"|'[^'\\\n]*+(?:\\.[^'\\\n]*+)*+(?:'|(?=\n)|\\?\Z)"
+    r"|\"[^\"\\\n]*+(?:\\.[^\"\\\n]*+)*+(?:\"|(?=\n)|\\?\Z)))"
+    r"|(?P<com>\#[^\n]*)"
+    r"|(?P<open>[(\[{])|(?P<close>[)\]}])"
+    r"|(?P<cont>\\\n)|(?P<nl>\n)|(?P<sep>[,;]))",
+    re.S,
 )
+#: max physical lines one logical statement may span (an unclosed paren
+#: or string must not swallow the snippet)
+_MAX_SPAN = 8
 
 
-def _in_inert_string(line: str, pos: int) -> bool:
+def _logical_lines(lines: list[str]):
+    """Assemble physical lines into logical statements — multi-line call
+    spans, the G2 subset of the reference's statement-level source spans
+    (`RunTurtleSingleAnalysis.java:233-259` records firstLine != lastLine
+    for such calls).  A statement continues across a newline inside open
+    brackets, after a `\\` or inside a string literal, for at most
+    `_MAX_SPAN` lines.  Returns ``(first line, kept physical
+    lines, statement text)`` per statement.  Comments are cut, with the
+    blanks before them (a trailing comment would break every
+    `$`-anchored desugar); a multi-line triple-quoted literal keeps only
+    its delimiters — the interior is text, never statements, so its
+    lines are blanked.  Explicit `\\` continuations splice
+    token-tight in the statement text (`x = pandas.\\` + `read_csv(…)`
+    keeps the dotted name whole); bracket spans keep their newlines."""
+    text = "\n".join(lines)
+    drop: list[tuple[int, int]] = []  # text ranges cut from the lines
+    spans: list[tuple[int, int]] = []  # (first, last) line per statement
+    first = ln = depth = 0
+    for m in _LEX_RE.finditer(text):
+        kind = m.lastgroup
+        if kind == "open":
+            depth += 1
+        elif kind == "close":
+            depth = max(0, depth - 1)
+        elif kind == "com":  # cut with the blanks before it
+            bol = text.rfind("\n", 0, m.start()) + 1
+            drop.append((bol + len(text[bol:m.start()].rstrip()), m.end()))
+        elif kind == "str" and "\n" in m.group():
+            ln += m.group().count("\n")
+            while ln - first >= _MAX_SPAN:
+                spans.append((first, first + _MAX_SPAN - 1))
+                first, depth = first + _MAX_SPAN, 0
+            body = m.end("pre") + 3
+            if text[body - 3:body] in ("'''", '"""'):
+                closed = (m.end() - body >= 3
+                          and m.group().endswith(text[body - 3:body]))
+                drop.append((body, m.end() - 3 if closed else m.end()))
+        elif kind in ("nl", "cont"):
+            ln += 1
+            if ln - first >= _MAX_SPAN or (kind == "nl" and not depth):
+                spans.append((first, ln - 1))
+                first, depth = ln, 0
+    spans.append((first, len(lines) - 1))
+    parts, pos = [], 0
+    for start, end in drop:
+        parts += (text[pos:start], "\n" * text.count("\n", start, end))
+        pos = end
+    kept = ("".join(parts) + text[pos:]).split("\n")
+    out: list[tuple[int, list[str], str]] = []
+    for i, j in spans:
+        stmt = "\n".join(kept[i:j + 1])
+        if "\\\n" in stmt:
+            stmt = re.sub(r"\\\n\s*", "", stmt)
+        out.append((i, kept[i:j + 1], stmt))
+    return out
+
+
+def _split_top(text: str, sep: str) -> list[tuple[int, str]]:
+    """Split ``text`` at each ``sep`` (`,` or `;`) outside strings and
+    brackets: ``(offset, part)`` pairs, parts unstripped."""
+    if sep not in text:
+        return [(0, text)]
+    out, depth, start = [], 0, 0
+    for m in _LEX_RE.finditer(text):
+        kind = m.lastgroup
+        if kind == "open":
+            depth += 1
+        elif kind == "close":
+            depth = max(0, depth - 1)
+        elif kind == "sep" and not depth and m.group() == sep:
+            out.append((start, text[start:m.start()]))
+            start = m.end()
+    out.append((start, text[start:]))
+    return out
+
+
+def _args(text: str) -> list[tuple[int, str]]:
+    """Top-level comma items of a call's argument text: ``(offset,
+    item)`` per non-blank item, stripped, offset of its first char."""
+    return [
+        (off + len(p) - len(p.lstrip()), p.strip())
+        for off, p in _split_top(text, ",") if p.strip()
+    ]
+
+
+def _close_at(text: str, start: int, comma: bool = False) -> int:
+    """Offset of the first closing bracket at or after ``start`` that
+    has no opener there (with ``comma``, of a top-level `,` if one comes
+    first) — the end of a call's argument text; ``len(text)`` when the
+    bracket never closes."""
+    depth = 0
+    for m in _LEX_RE.finditer(text, start):
+        kind = m.lastgroup
+        if kind == "open":
+            depth += 1
+        elif kind == "close":
+            if not depth:
+                return m.start()
+            depth -= 1
+        elif comma and kind == "sep" and not depth and m.group() == ",":
+            return m.start()
+    return len(text)
+
+
+def _string_at(text: str, pos: int):
+    """The string-literal token covering offset ``pos``, or None."""
+    if "'" not in text and '"' not in text:
+        return None
+    for m in _LEX_RE.finditer(text):
+        if m.end() > pos:
+            return m if m.start() <= pos and m.lastgroup == "str" else None
+    return None
+
+
+def _inert_at(text: str, pos: int) -> bool:
     """True when ``pos`` sits inside string-literal TEXT — a plain
-    literal, or an f-string outside its brace regions.  Code inside
-    f-string braces evaluates (`f'{df.shape}'` is a real read); code
-    inside plain quotes is text (`'df.empty'` is not)."""
-    for m in _STRING_LIT_RE.finditer(line):
-        if m.start(2) <= pos < m.end(2):
-            if not m.group(1):
-                return True
-            seg = line[m.start(2):pos]
-            return seg.count("{") - seg.count("}") <= 0
-    return False
+    literal, or an f-string outside its brace regions (`{{`/`}}` are
+    literal braces).  Code inside f-string braces evaluates
+    (`f'{df.shape}'` is a real read); code inside plain quotes is text
+    (`'df.empty'` is not)."""
+    m = _string_at(text, pos)
+    if m is None:
+        return False
+    if "f" not in m.group("pre").lower():
+        return True
+    seg = text[m.end("pre"):pos].replace("{{", "").replace("}}", "")
+    return seg.count("{") <= seg.count("}")
 
 
 _ATTR_READ_RE = re.compile(
@@ -499,8 +645,8 @@ _DEL_STMT_RE = re.compile(
 #: their ARGS still hoist); `elif` heads hoist with the same
 #: one-unrolling placement the walrus hoist already takes mid-chain
 #: (the frame machinery chains the hoisted binding before the arm —
-#: verified against the walrus-in-elif shape); strings in the
-#: condition are skipped by quote parity.
+#: verified against the walrus-in-elif shape); matches inside a string
+#: literal of the condition are skipped.
 _COND_CALL_RE = re.compile(
     r"(?<![\w.)\]])([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)+)\(([^()]*)\)"
 )
@@ -549,20 +695,8 @@ def _split_lambda_arg(stmt: str):
     params = stmt[start + len("lambda"):colon].strip()
     if any(ch in params for ch in "()[]{}="):
         return None
-    depth, end = 0, None
-    for i in range(colon + 1, len(stmt)):
-        ch = stmt[i]
-        if ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            if depth == 0:
-                end = i
-                break
-            depth -= 1
-        elif ch == "," and depth == 0:
-            end = i
-            break
-    if end is None:
+    end = _close_at(stmt, colon + 1, comma=True)
+    if end == len(stmt):
         return None
     body = stmt[colon + 1:end].strip()
     if not body:
@@ -833,35 +967,6 @@ _EXPR_BINOP_RE = re.compile(
 )
 
 
-def _split_args(argstr: str) -> list[str]:
-    """Split a call's argument text at top-level commas (no nesting aware
-    beyond brackets/quotes — snippets, not a parser)."""
-    out, depth, cur, quote = [], 0, [], None
-    for ch in argstr:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-            cur.append(ch)
-        elif ch in "([{":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")]}":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return [a for a in out if a]
-
-
 #: one dict-literal entry `'key': VALUE` (string key, any value text)
 _DICT_ENTRY_RE = re.compile(
     r"^\s*(?:'([^']*)'|\"([^\"]*)\")\s*:\s*(\S.*)$", re.S
@@ -882,7 +987,7 @@ def _dict_literal_fields(line, m, var_producer, var_klass,
         return {}
     out = {}
     inner = m.group(2)
-    for off, part in zip(_split_args_offsets(inner), _split_args(inner)):
+    for off, part in _args(inner):
         km = _DICT_ENTRY_RE.match(part)
         if not km:
             continue
@@ -900,46 +1005,6 @@ def _dict_literal_fields(line, m, var_producer, var_klass,
                     (line_call_klass or {}).get(voff),
                 )
     return out
-
-
-def _split_args_offsets(argstr: str) -> list[int]:
-    """Start offset (within ``argstr``) of each stripped arg returned by
-    `_split_args`, same splitting rules."""
-    offs, depth, start, quote, i = [], 0, 0, None, 0
-    def _push(lo, hi):
-        seg = argstr[lo:hi]
-        lead = len(seg) - len(seg.lstrip())
-        if seg.strip():
-            offs.append(lo + lead)
-    for i, ch in enumerate(argstr):
-        if quote:
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            _push(start, i)
-            start = i + 1
-    _push(start, len(argstr))
-    return offs
-
-
-def _call_args(line: str, m: re.Match) -> str:
-    """Text between the call's parens (best effort, same-line)."""
-    start = m.end()
-    depth, i = 1, start
-    while i < len(line) and depth:
-        if line[i] == "(":
-            depth += 1
-        elif line[i] == ")":
-            depth -= 1
-        i += 1
-    return line[start : i - 1] if depth == 0 else line[start:]
 
 
 def build_flow_catalog(records: list[dict]):
@@ -1077,155 +1142,6 @@ def extract_flow_nodes(qa: DataFrame, catalog_records: list[dict],
             F.count(F.lit(1)).alias("rows_seen"),
         )
     return nodes.filter("node_number >= 0")
-
-
-def _split_semicolons(line: str) -> list[str]:
-    """Split a statement on top-level `;` (quote- and paren-aware) —
-    `import pandas; df = pd.read_csv('a')` is two statements.  Returns
-    [line] unchanged when there is nothing to split."""
-    if ";" not in line:
-        return [line]
-    parts, start, depth, quote = [], 0, 0, None
-    for i, ch in enumerate(line):
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth = max(0, depth - 1)
-        elif ch == ";" and depth == 0:
-            parts.append(line[start:i])
-            start = i + 1
-    parts.append(line[start:])
-    return parts if len(parts) > 1 else [line]
-
-
-def _net_paren_depth(line: str, depth: int = 0) -> int:
-    """Paren/bracket/brace nesting delta across a line, quote-aware."""
-    quote = None
-    for ch in line:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth = max(0, depth - 1)
-    return depth
-
-
-#: max physical lines a single logical statement may span (snippets)
-_MAX_SPAN = 8
-
-
-def _strip_comment(line: str) -> str:
-    """Cut a trailing `# …` comment (quote-aware: a `#` inside a string
-    literal stays).  Comments are not statements in WALA's IR, and a
-    trailing comment otherwise breaks every `$`-anchored desugar AND
-    the paren-depth joiner (`x = f(a)  # (note` would read as an open
-    paren)."""
-    if "#" not in line:
-        return line
-    q = None
-    i = 0
-    while i < len(line):
-        ch = line[i]
-        if q:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == q:
-                q = None
-        elif ch in "'\"":
-            q = ch
-        elif ch == "#":
-            return line[:i].rstrip()
-        i += 1
-    return line
-
-
-_TRIPLE_RE = re.compile(r"'''|\"\"\"")
-
-
-def _scan_triple_open(line: str):
-    """Detect an UNCLOSED triple-quote opener on ``line``: returns
-    (text up to and including the opener, open delimiter) or
-    (line, None).  Same-line open+close pairs pass through (the
-    single-line quote scanners treat their content as string text)."""
-    pos = 0
-    while True:
-        m = _TRIPLE_RE.search(line, pos)
-        if not m:
-            return line, None
-        close = line.find(m.group(0), m.end())
-        if close < 0:
-            return line[: m.end()], m.group(0)
-        pos = close + 3
-
-
-def _blank_multiline_strings(lines: list[str]) -> list[str]:
-    """Blank every line INSIDE a multi-line triple-quoted string — the
-    content is text (docstrings, embedded SQL, quoted code samples),
-    and WALA's parser never sees it as statements.  Before this, code
-    spelled inside a triple-quoted block minted real nodes AND
-    bindings.  Pragmatic subset: a triple quote nested inside a
-    single-quoted literal on the same line reads as an opener."""
-    out: list[str] = []
-    delim = None
-    for line in lines:
-        if delim is not None:
-            j = line.find(delim)
-            if j < 0:
-                out.append("")
-                continue
-            delim = None
-            kept, delim = _scan_triple_open(line[j + 3:])
-            out.append(kept)
-            continue
-        kept, delim = _scan_triple_open(line)
-        out.append(kept)
-    return out
-
-
-def _logical_lines(lines: list[str]):
-    """Merge physical lines whose parens stay open into one logical
-    statement — multi-line call spans, the G2 subset of the reference's
-    statement-level source spans (`RunTurtleSingleAnalysis.java:233-259`
-    records firstLine != lastLine for such calls).  Comments strip per
-    physical line (quote-aware) and multi-line triple-quoted string
-    interiors blank before depth counting and statement assembly."""
-    stripped = _blank_multiline_strings(
-        [_strip_comment(l) for l in lines]
-    )
-    out: list[tuple[int, list[str], str]] = []
-    i, n = 0, len(lines)
-    while i < n:
-        depth = _net_paren_depth(stripped[i])
-        j = i
-        while (
-            (depth > 0 or stripped[j].rstrip().endswith("\\"))
-            and j + 1 < n
-            and (j - i) < _MAX_SPAN - 1
-        ):
-            j += 1
-            depth = _net_paren_depth(stripped[j], depth)
-        phys = stripped[i : j + 1]
-        # explicit `\` continuations splice token-tight (late r5):
-        # `x = pandas.\` + `    read_csv(…)` is ONE statement whose
-        # dotted name must not carry the newline; paren-merged spans
-        # keep their newlines (offsets stay self-consistent — every
-        # regex runs over this same statement string)
-        stmt = "\n".join(phys)
-        if "\\\n" in stmt:
-            stmt = re.sub(r"\\\n\s*", "", stmt)
-        out.append((i, phys, stmt))
-        i = j + 1
-    return out
 
 
 #: interactive-transcript prompts — plain REPL and IPython
@@ -1614,7 +1530,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                   INVOKING the callback is out of scope (G6 subset), so
                   no return edge flows into the outer call
                 """
-                parts_ = _split_semicolons(stmt_)
+                parts_ = [p_ for _, p_ in _split_top(stmt_, ";")]
                 if len(parts_) > 1:
                     head_ = stmt_.lstrip()
                     kw_ = re.match(r"[A-Za-z_]\w*", head_)
@@ -1640,22 +1556,8 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     # hoist `(name := EXPR)` into `name = EXPR` before
                     # the statement; the group becomes the bare name
                     o_ = wz_.start()
-                    depth2_, close_, quote2_ = 0, -1, None
-                    for i_ in range(o_, len(stmt_)):
-                        ch_ = stmt_[i_]
-                        if quote2_:
-                            if ch_ == quote2_:
-                                quote2_ = None
-                        elif ch_ in "'\"":
-                            quote2_ = ch_
-                        elif ch_ == "(":
-                            depth2_ += 1
-                        elif ch_ == ")":
-                            depth2_ -= 1
-                            if depth2_ == 0:
-                                close_ = i_
-                                break
-                    if close_ > 0:
+                    close_ = _close_at(stmt_, o_ + 1)
+                    if close_ < len(stmt_):
                         nm2_ = wz_.group(1)
                         expr_ = stmt_[wz_.end():close_].strip()
                         ind_ = stmt_[: len(stmt_) - len(stmt_.lstrip())]
@@ -1690,9 +1592,9 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                         () if (is_for_ or seg0_ is None)
                         else _COND_CALL_RE.finditer(body_)
                     ):
+                        if _string_at(body_, cc_.start()):
+                            continue
                         pre_ = body_[: cc_.start()]
-                        if pre_.count("'") % 2 or pre_.count('"') % 2:
-                            continue  # inside a string literal
                         ind_ = stmt_[: len(stmt_) - len(head2_)]
                         tmp_ = f"_sub{lam_counter[0]}_"
                         lam_counter[0] += 1
@@ -1714,9 +1616,9 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     ):
                         if cr_.group(1) not in var_producer:
                             continue
-                        pre_ = body_[: cr_.start()]
-                        if pre_.count("'") % 2 or pre_.count('"') % 2:
+                        if _string_at(body_, cr_.start()):
                             continue
+                        pre_ = body_[: cr_.start()]
                         ind_ = stmt_[: len(stmt_) - len(head2_)]
                         tmp_ = f"_sub{lam_counter[0]}_"
                         lam_counter[0] += 1
@@ -1730,8 +1632,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                 if (
                     tern_
                     and " lambda " not in f" {tern_.group(3)} "
-                    and tern_.group(2).count("'") % 2 == 0
-                    and tern_.group(2).count('"') % 2 == 0
+                    and not _string_at(stmt_, tern_.end(2))
                 ):
                     # ternary assignment: the CONDITION always evaluates
                     # — hoist tracked reads from it like if-heads; the
@@ -1740,9 +1641,9 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     for cr_ in _COND_READ_RE.finditer(cond_):
                         if cr_.group(1) not in var_producer:
                             continue
-                        p_ = cond_[: cr_.start()]
-                        if p_.count("'") % 2 or p_.count('"') % 2:
+                        if _string_at(cond_, cr_.start()):
                             continue
+                        p_ = cond_[: cr_.start()]
                         ind_ = tern_.group(1)
                         tmp_ = f"_sub{lam_counter[0]}_"
                         lam_counter[0] += 1
@@ -1789,7 +1690,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     # name-binding machinery (G3 wiring, G8 receiver
                     # clones) sees a bound value exactly like the
                     # two-line form
-                    args_ = _split_args(cs_.group(4))
+                    args_ = [a_ for _, a_ in _args(cs_.group(4))]
                     hoisted_, new_args_ = False, []
                     for a_ in args_:
                         kw_ = re.match(r"^([A-Za-z_]\w*)=(?!=)(.*)$", a_, re.S)
@@ -1815,7 +1716,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     # before the call (args evaluate first, so the
                     # transform is order-exact); the temp statements
                     # re-enter the chain desugar below
-                    args_ = _split_args(cs_.group(4))
+                    args_ = [a_ for _, a_ in _args(cs_.group(4))]
                     if any(_ARG_SUBSCR_CHAIN_RE.match(a_.split("=", 1)[-1]
                                                       if re.match(r"^[A-Za-z_]\w*=[^=]", a_)
                                                       else a_)
@@ -1947,9 +1848,9 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                             if h_.group(1) in var_producer
                         ]
                         for ih_ in hits_:
-                            pre_ = idx_[: ih_.start()]
-                            if pre_.count("'") % 2 or pre_.count('"') % 2:
+                            if _string_at(idx_, ih_.start()):
                                 continue
+                            pre_ = idx_[: ih_.start()]
                             ind_, lhs_, base_ = ie_.group(1, 2, 3)
                             tmp_ = f"_sub{lam_counter[0]}_"
                             lam_counter[0] += 1
@@ -2024,7 +1925,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     return
                 wm_ = _WITH_MULTI_RE.match(stmt_)
                 if wm_:
-                    items_ = _split_args(wm_.group(2))
+                    items_ = [p for _, p in _args(wm_.group(2))]
                     if len(items_) >= 2 and all(
                         _WITH_ITEM_RE.match(p) for p in items_
                     ):
@@ -2036,7 +1937,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                 tm_ = _TUPLE_TARGETS_RE.match(stmt_)
                 if tm_:
                     targets_ = [t.strip() for t in tm_.group(2).split(",")]
-                    parts_ = _split_args(tm_.group(3))
+                    parts_ = [p for _, p in _args(tm_.group(3))]
                     if len(parts_) == len(targets_):
                         ind_ = tm_.group(1)
                         base_ = lam_counter[0]
@@ -2581,9 +2482,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                 # target because a param may have several body uses
                 pending_def_args: list = []  # (inner start, [(node#, pos)])
                 for m in _CALL_RE.finditer(line):
-                    if ("'" in line or '"' in line) and _in_inert_string(
-                        line, m.start()
-                    ):
+                    if _inert_at(line, m.start()):
                         # `s = 'pd.read_csv(x)'` is text, not a call
                         # (f-string braces evaluate and stay live)
                         continue
@@ -2646,11 +2545,8 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                         d = local_defs[cname]
                         upos = 0
                         binding: dict[str, str] = {}  # param -> caller value
-                        argtext_d = _call_args(line, m)
-                        for a, aoff_d in zip(
-                            _split_args(argtext_d),
-                            _split_args_offsets(argtext_d),
-                        ):
+                        argtext_d = line[m.end():_close_at(line, m.end())]
+                        for aoff_d, a in _args(argtext_d):
                             nm_ = _NAMED_ARG.match(a)
                             if nm_:
                                 # keyword call-site arg: wire by the
@@ -2910,8 +2806,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                             # methods dispatch through the local-def
                             # machinery via per-instance aliases
                             inst_targets = list(lhs_vars)
-                            argtext_ld = _call_args(line, m)
-                            close_ld = m.end() + len(argtext_ld)
+                            close_ld = _close_at(line, m.end())
                             if line[close_ld : close_ld + 2] == ").":
                                 # ctor expression chained into a method
                                 # call: mint an anonymous instance the
@@ -3184,7 +3079,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                             if recv in cur_def["params"]:
                                 spec = []
                                 dpos = 0
-                                for a in _split_args(_call_args(line, m)):
+                                for _, a in _args(line[m.end():_close_at(line, m.end())]):
                                     dm_ = _NAMED_ARG.match(a)
                                     if dm_ and not _NAMED_ARG.match(dm_.group(2)):
                                         dpos += 1
@@ -3276,16 +3171,14 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     if produced_klass:
                         node_klass[node["node_number"]] = produced_klass
                     # args: constants + variable dataflow (receiver=0 ⇒ args 1..n)
-                    argtext = _call_args(line, m)
-                    close = m.end() + len(argtext)  # index of the ')'
+                    close = _close_at(line, m.end())  # index of the ')'
+                    argtext = line[m.end():close]
                     if line[close : close + 1] == ")":
                         last_chain = (close + 1, node["node_number"], produced_klass, chain_start)
                     else:
                         last_chain = None
-                    args = _split_args(argtext)
-                    arg_offs = _split_args_offsets(argtext)
                     pos = 0
-                    for a, aoff in zip(args, arg_offs):
+                    for aoff, a in _args(argtext):
                         nm = _NAMED_ARG.match(a)
                         if nm and not _NAMED_ARG.match(nm.group(2)):
                             # keyword args occupy a SOURCE-ORDER ordinal
@@ -3585,7 +3478,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     cm_call = _CONTAINER_RE.match(line)
                     if cm_call:
                         members = []
-                        for part in _split_args(cm_call.group(2)):
+                        for _, part in _args(cm_call.group(2)):
                             val = part.split(":", 1)[-1].strip() if ":" in part else part
                             if val in var_producer:
                                 members.append(var_producer[val])
@@ -4010,7 +3903,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     bm = None if (cm or am) else _BINOP_RE.match(line)
                     if cm:
                         members = []
-                        for part in _split_args(cm.group(2)):
+                        for _, part in _args(cm.group(2)):
                             val = part.split(":", 1)[-1].strip() if ":" in part else part
                             if val in var_producer:
                                 members.append(var_producer[val])
@@ -4141,7 +4034,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                 for rm in _ATTR_READ_RE.finditer(line):
                     if wm is not None and rm.start(1) == wm.start(1):
                         continue  # the write target itself is not a read
-                    if _in_inert_string(line, rm.start()):
+                    if _inert_at(line, rm.start()):
                         continue  # `'df.empty'` is text; f-string braces evaluate
                     if rm.group(1) in var_producer:
                         src = nodes[idx_of[var_producer[rm.group(1)]]]

@@ -2788,6 +2788,10 @@ def test_string_literal_reads_inert():
     assert reads_of("s = f'{df.shape}'\n") == [
         {"container": None, "field": "shape"}]
     assert reads_of("s = f'df.empty is {1}'\n") == []
+    # doubled braces are literal text, not a brace region
+    assert reads_of("s = f'{{df.shape}}'\n") == []
+    assert reads_of("s = f'{{{df.shape}}}'\n") == [
+        {"container": None, "field": "shape"}]
 
 
 def test_comments_and_string_calls_inert():
@@ -2828,6 +2832,31 @@ def test_comments_and_string_calls_inert():
          "    \"\"\"uses pandas.read_csv('a.csv')\"\"\"\n    return 1\n"],
         cat)
     assert [n["path"][-1] for n in doc] == ["pandas"]
+    # `{{`/`}}` are literal braces: the call is text; a real brace
+    # region still evaluates
+    lit = extract_page_flow_nodes(
+        "http://q/5", [pre + "s = f'{{df.dropna()}}'\n"], cat)
+    assert [n["path"][-1] for n in lit] == ["pandas", "read_csv"]
+    live = extract_page_flow_nodes(
+        "http://q/6", [pre + "s = f'{df.dropna()}'\n"], cat)
+    assert [n["path"][-1] for n in live] == ["pandas", "read_csv", "dropna"]
+    # a quoted `)` does not close the call; an escaped quote does not
+    # end the string (nor open a bracket span over the next line)
+    par = extract_page_flow_nodes(
+        "http://q/7", ["import pandas\n"
+                       "df = pandas.read_csv('a)b.csv', sep=';')\n"], cat)
+    rc = next(n for n in par if n["path"][-1] == "read_csv")
+    assert rc["constant_positional_args"] == {"1": "a)b.csv"}
+    assert rc["constant_named_args"] == {"sep": ";"}
+    esc = extract_page_flow_nodes(
+        "http://q/8", ["import pandas\n"
+                       "df = pandas.read_csv('it\\'s', sep=',')\n"
+                       "df.dropna()\n"], cat)
+    rc = next(n for n in esc if n["path"][-1] == "read_csv")
+    assert rc["constant_named_args"] == {"sep": ","}
+    assert rc["source_lines"] == ["df = pandas.read_csv('it\\'s', sep=',')"]
+    drop = next(n for n in esc if n["path"][-1] == "dropna")
+    assert rc["flows_to"]["0"] == [drop["node_number"]]
 
 
 def test_multiline_string_interiors_inert():
@@ -2855,6 +2884,15 @@ def test_multiline_string_interiors_inert():
          "    example: pandas.read_csv('x.csv')\n    '''\n    return 1\n"],
         cat)
     assert [n["path"][-1] for n in doc] == ["pandas"]
+    # a `#` inside the string is text, not a comment: the string still
+    # closes and everything after it tracks
+    com = extract_page_flow_nodes(
+        "http://q/3",
+        ['import pandas\nx = """a\nb # c"""\n'
+         'df = pandas.read_csv("f"); df.dropna()\n'],
+        cat)
+    assert [n["path"][-1] for n in com] == ["pandas", "read_csv", "dropna"]
+    assert com[1]["flows_to"]["0"] == [com[2]["node_number"]]
 
 
 def test_repl_transcript_repair():

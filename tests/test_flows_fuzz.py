@@ -10,6 +10,8 @@ statement grammar + a fixed adversarial corpus; (c) is unit-tested with
 an injected failing extractor and integration-tested through the Arrow
 UDF path with `observe()` lineage.
 """
+import hashlib
+import json
 import random
 import time
 
@@ -24,7 +26,14 @@ from graph4code_spark.operators.flows import (
     extract_page_flow_nodes,
 )
 from graph4code_spark.schemas import ANALYSIS_NODES_SCHEMA
-from graph4code_spark.synth import FIXED_CATALOG
+from graph4code_spark.sources.qa import parse_qa_page
+from graph4code_spark.synth import (
+    FIXED_CATALOG,
+    HUB_ENTITY,
+    _page_record,
+    entity_name,
+    entity_type,
+)
 
 CAT = build_flow_catalog(FIXED_CATALOG)
 FIELDS = {f.name for f in ANALYSIS_NODES_SCHEMA.fields}
@@ -53,7 +62,14 @@ GARBAGE = ["@decorator", "@app.route('/x')", "assert x == 1", "del x",
            "a = 1; b = m.fit(df); c", ";;;", "x = 'a;b'; y = 2",
            "if (v := pandas.read_csv('w.csv')) is not None:",
            "y = (z := 's;s')", "(q := 'un;term", "(w :=)",
-           "while (chunk := reader.read()):"]
+           "while (chunk := reader.read()):",
+           # lexer edge cases: unterminated and multi-line triple quotes,
+           # escaped quotes, literal f-string braces, quoted brackets and
+           # `\` continuations inside brackets
+           "x = '''never closed", 's = """a\n# not a comment\nb"""',
+           "x = 'it\\'s ('", "s = f'{{df.fillna(0)}}'",
+           "pandas.read_csv(')', sep=';')",
+           "x = pandas.read_csv('a', \\\n    sep=',')"]
 
 
 def _call(rng):
@@ -150,16 +166,109 @@ def _check_invariants(nodes):
             "dangling precedes target"
 
 
+def _fuzz_pages():
+    for i in range(300):
+        rng = random.Random(i)
+        yield f"http://fuzz/{i}", [_snippet(rng)
+                                   for _ in range(rng.randrange(1, 4))]
+
+
 def test_grammar_fuzz_no_crash_and_invariants():
     """300 seeded random pages: never raises; node numbers unique and
     every flowsTo/precedes edge targets an existing page node."""
-    for i in range(300):
-        rng = random.Random(i)
-        codes = [_snippet(rng) for _ in range(rng.randrange(1, 4))]
-        nodes = extract_page_flow_nodes(f"http://fuzz/{i}", codes, CAT)
+    for url, codes in _fuzz_pages():
+        nodes = extract_page_flow_nodes(url, codes, CAT)
         _check_invariants(nodes)
         # the expressions twin runs the same tracker — same guarantee
-        extract_page_expressions(f"http://fuzz/{i}", codes, CAT)
+        extract_page_expressions(url, codes, CAT)
+
+
+# ---------------------------------------------------------------------------
+# differential pin: an order-independent digest of the extractor's output
+# over the synth corpus and the fuzz grammar, so a front-end rewrite shows
+# every page whose node/edge set moves
+# ---------------------------------------------------------------------------
+def _synth_pages(seed, n):
+    """(url, codes) of synth pages 0..n-1, built without Spark."""
+    names = sorted({entity_name(r) for r in FIXED_CATALOG})
+    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
+    for pid in range(n):
+        rec = _page_record(pid, seed, names, HUB_ENTITY, etypes)
+        qa = parse_qa_page(rec["url"], rec["html"].decode("utf-8"))
+        if qa is not None:
+            yield qa["url"], list(qa["codes"])
+
+
+def _digest(pages):
+    """(node count, sha256 over the sorted node and edge tuples)."""
+    rows = []
+    for url, codes in pages:
+        for n in extract_page_flow_nodes(url, codes, CAT):
+            src = n["node_number"]
+            rows.append(json.dumps(
+                {k: v for k, v in n.items()
+                 if k not in ("flows_to", "immediately_precedes")},
+                sort_keys=True))
+            rows.extend(f"{url} {src} -{o}-> {d}"
+                        for o, ds in n["flows_to"].items() for d in ds)
+            rows.extend(f"{url} {src} -> {d}"
+                        for d in n["immediately_precedes"])
+    n_nodes = sum(r.startswith("{") for r in rows)
+    return n_nodes, hashlib.sha256("\n".join(sorted(rows)).encode()).hexdigest()
+
+
+#: fuzz pages whose output intentionally differs from the per-character
+#: scanners this digest was first recorded on, with the reason; they are
+#: left out of the fuzz digest
+_QUOTED_CLOSE = ("a quoted `)` in the args no longer closes the call "
+                 "early, so its constant args are kept")
+_ESCAPED_QUOTE = ("the escaped quote in `'it\\'s ('` no longer reopens the "
+                  "string, so its `(` stays text and the next seven lines "
+                  "are not swallowed into one statement")
+_LINE_END_STRING = ("the unterminated `'un;term` string ends at its line "
+                    "end, as the statement assembler already read it, so a "
+                    "call on a following line is code")
+_LITERAL_BRACES = ("the doubled braces in `f'{{df.fillna(0)}}'` are literal "
+                   "text, so no fillna call is minted")
+FUZZ_INTENDED_FIXES: dict[int, str] = {
+    1: _ESCAPED_QUOTE,
+    10: _QUOTED_CLOSE,
+    27: _ESCAPED_QUOTE,
+    71: _QUOTED_CLOSE,
+    95: _ESCAPED_QUOTE,
+    99: _LINE_END_STRING,
+    103: _LINE_END_STRING,
+    116: _LITERAL_BRACES,
+    144: _ESCAPED_QUOTE,
+    172: _QUOTED_CLOSE,
+    189: _QUOTED_CLOSE,
+    196: _QUOTED_CLOSE,
+    233: _ESCAPED_QUOTE,
+    234: _QUOTED_CLOSE,
+    243: _ESCAPED_QUOTE,
+    258: _QUOTED_CLOSE,
+    268: _QUOTED_CLOSE,
+    283: _QUOTED_CLOSE,
+}
+
+
+@pytest.mark.parametrize("corpus,expected", [
+    ("synth-1", (16359, "7dc7717cc68ce18e6f70d6d856d98522"
+                        "fb9d665fa4ced3bb06511584fc0bb400")),
+    ("synth-2", (16323, "31c5015ff6547670a4994921fbf1a0c1"
+                        "27ee1fafda17ffa2030ee89cfeadf090")),
+    ("fuzz", (1914, "97ad2de6aadda09153228fabe2e811b0"
+                    "3a7777e95c50b5cdb9b92632bf1334cf")),
+])
+def test_extractor_output_digest_pinned(corpus, expected):
+    """Synth seeds 1 and 2 (1,000 pages each) and the 300 fuzz-grammar
+    pages extract to the recorded node/edge sets."""
+    if corpus == "fuzz":
+        pages = (p for i, p in enumerate(_fuzz_pages())
+                 if i not in FUZZ_INTENDED_FIXES)
+    else:
+        pages = _synth_pages(int(corpus[-1]), 1000)
+    assert _digest(pages) == expected
 
 
 ADVERSARIAL = {
@@ -181,6 +290,7 @@ ADVERSARIAL = {
     "crlf": "x = pandas.read_csv('a.csv')\r\ny = x.dropna()\r\n",
     "mixed_indent": "if a:\n    if b:\n\t m = sklearn.svm.SVC()\n  m.fit(x)",
     "triple_quote_code": 's = """\nm = sklearn.svm.SVC()\n"""\nm.fit(x)',
+    "unterminated_triple": "x = '''" + "a\\'b'' (\n" * 20000,
     "class_depth": "\n".join(
         ["class A:"] + [f"    def m{i}(self, p):\n        self.f{i} = p"
                         for i in range(200)]),
