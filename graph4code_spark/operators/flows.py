@@ -85,8 +85,10 @@ extraction per snippet, emitting the reference's node/edge vocabulary —
   a string literal) join one logical statement with a
   first_line≠last_line source span; explicit ``\\`` continuations
   splice token-tight (``x = pandas.\\`` + `read_csv(…)` keeps the
-  dotted name whole).  A statement spans at most `_MAX_SPAN` lines, so
-  an unclosed paren or string cannot swallow the snippet
+  dotted name whole).  Bracket and `\\` joins stop after `_MAX_SPAN`
+  lines, so an unclosed paren cannot swallow the snippet; a closed
+  string literal joins its statement whatever its length, and an
+  unterminated triple quote ends its statement at the opening line
 - container def-use chaining: ``v = [a, b]`` then ``f(v)`` flows a's and
   b's producers into f (`…Engine.java:1905-1920`'s dict/tuple/list
   recursion, scoped to literal containers of tracked variables)
@@ -391,17 +393,17 @@ _LEX_RE = re.compile(
     # the leading lookahead lets the scan skip other characters quickly
     r"(?=[rRbBuUfF'\"#()\[\]{}\\\n,;])"
     r"(?:(?P<str>(?P<pre>(?<!\w)[rRbBuUfF]{1,2}|)"
-    r"(?:'''[^'\\]*+(?:(?:\\.|'(?!''))[^'\\]*+)*+(?:'''|\\?\Z)"
-    r"|\"\"\"[^\"\\]*+(?:(?:\\.|\"(?!\"\"))[^\"\\]*+)*+(?:\"\"\"|\\?\Z)"
+    r"(?:'''[^'\\]*+(?:(?:\\.|'(?!''))[^'\\]*+)*+(?:(?P<q1>''')|\\?\Z)"
+    r"|\"\"\"[^\"\\]*+(?:(?:\\.|\"(?!\"\"))[^\"\\]*+)*+(?:(?P<q2>\"\"\")|\\?\Z)"
     r"|'[^'\\\n]*+(?:\\.[^'\\\n]*+)*+(?:'|(?=\n)|\\?\Z)"
     r"|\"[^\"\\\n]*+(?:\\.[^\"\\\n]*+)*+(?:\"|(?=\n)|\\?\Z)))"
     r"|(?P<com>\#[^\n]*)"
     r"|(?P<open>[(\[{])|(?P<close>[)\]}])"
-    r"|(?P<cont>\\\n)|(?P<nl>\n)|(?P<sep>[,;]))",
+    r"|(?P<cont>\\\r?\n)|(?P<nl>\n)|(?P<sep>[,;]))",
     re.S,
 )
-#: max physical lines one logical statement may span (an unclosed paren
-#: or string must not swallow the snippet)
+#: max physical lines a bracket or `\` join may span (an unclosed paren
+#: must not swallow the snippet); never applied inside a string literal
 _MAX_SPAN = 8
 
 
@@ -410,13 +412,13 @@ def _logical_lines(lines: list[str]):
     spans, the G2 subset of the reference's statement-level source spans
     (`RunTurtleSingleAnalysis.java:233-259` records firstLine != lastLine
     for such calls).  A statement continues across a newline inside open
-    brackets, after a `\\` or inside a string literal, for at most
-    `_MAX_SPAN` lines.  Returns ``(first line, kept physical
-    lines, statement text)`` per statement.  Comments are cut, with the
-    blanks before them (a trailing comment would break every
-    `$`-anchored desugar); a multi-line triple-quoted literal keeps only
-    its delimiters — the interior is text, never statements, so its
-    lines are blanked.  Explicit `\\` continuations splice
+    brackets or after a `\\` for at most `_MAX_SPAN` lines, and across
+    every newline inside a closed string literal.  Returns ``(first
+    line, kept physical lines, statement text)`` per statement.
+    Comments are cut, with the blanks before them (a trailing comment
+    would break every `$`-anchored desugar); a multi-line triple-quoted
+    literal keeps only its delimiters — the interior is text, never
+    statements, so its lines are blanked.  Explicit `\\` continuations splice
     token-tight in the statement text (`x = pandas.\\` + `read_csv(…)`
     keeps the dotted name whole); bracket spans keep their newlines."""
     text = "\n".join(lines)
@@ -433,15 +435,16 @@ def _logical_lines(lines: list[str]):
             bol = text.rfind("\n", 0, m.start()) + 1
             drop.append((bol + len(text[bol:m.start()].rstrip()), m.end()))
         elif kind == "str" and "\n" in m.group():
-            ln += m.group().count("\n")
-            while ln - first >= _MAX_SPAN:
-                spans.append((first, first + _MAX_SPAN - 1))
-                first, depth = first + _MAX_SPAN, 0
             body = m.end("pre") + 3
-            if text[body - 3:body] in ("'''", '"""'):
-                closed = (m.end() - body >= 3
-                          and m.group().endswith(text[body - 3:body]))
-                drop.append((body, m.end() - 3 if closed else m.end()))
+            if m.group("q1") or m.group("q2"):  # closed triple quote
+                drop.append((body, m.end() - 3))
+            elif text[body - 3:body] in ("'''", '"""'):
+                # unterminated: the rest of the text is string; the
+                # statement ends at the opening line
+                drop.append((body, m.end()))
+                spans.append((first, ln))
+                first = ln + 1
+            ln += m.group().count("\n")
         elif kind in ("nl", "cont"):
             ln += 1
             if ln - first >= _MAX_SPAN or (kind == "nl" and not depth):
@@ -456,8 +459,8 @@ def _logical_lines(lines: list[str]):
     out: list[tuple[int, list[str], str]] = []
     for i, j in spans:
         stmt = "\n".join(kept[i:j + 1])
-        if "\\\n" in stmt:
-            stmt = re.sub(r"\\\n\s*", "", stmt)
+        if "\\" in stmt:
+            stmt = re.sub(r"\\\r?\n\s*", "", stmt)
         out.append((i, kept[i:j + 1], stmt))
     return out
 
@@ -1628,7 +1631,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                             ln_, phys_,
                             ind_ + pre_ + tmp_ + body_[cr_.end():] + ":")
                         return
-                tern_ = _TERNARY_ASSIGN_RE.match(stmt_)
+                tern_ = "else" in stmt_ and _TERNARY_ASSIGN_RE.match(stmt_)
                 if (
                     tern_
                     and " lambda " not in f" {tern_.group(3)} "

@@ -2081,6 +2081,11 @@ def test_backslash_continuation_splices():
     assert read["source_location"]["last_line"] == 3
     assert any(n["path"] == ["pandas", "read_csv", "dropna"]
                for n in nodes)
+    # a `\\` before a CRLF line end splices the same way
+    crlf = extract_page_flow_nodes(
+        "http://q/bslash-crlf", [code.replace("\n", "\r\n")], cat)
+    assert [n["path"][-1] for n in crlf] == ["pandas", "read_csv", "dropna"]
+    assert crlf[1]["flows_to"]["0"] == [crlf[2]["node_number"]]
 
 
 def test_walrus_binding_hoists():
@@ -2893,6 +2898,19 @@ def test_multiline_string_interiors_inert():
         cat)
     assert [n["path"][-1] for n in com] == ["pandas", "read_csv", "dropna"]
     assert com[1]["flows_to"]["0"] == [com[2]["node_number"]]
+    # a docstring longer than the bracket-join cap stays one statement of
+    # the def body: the def keeps its return, and the caller's binding
+    # flows into dropna()
+    long_doc = extract_page_flow_nodes(
+        "http://q/4",
+        ['import pandas\ndef load(p):\n    """Load a frame.\n'
+         + "".join(f"    line {i}\n" for i in range(10))
+         + '    """\n    d = pandas.read_csv(p)\n    return d\n'
+         'df = load("a.csv")\ndf.dropna()\n'],
+        cat)
+    assert [n["path"][-1] for n in long_doc] == [
+        "pandas", "read_csv", "dropna"]
+    assert long_doc[1]["flows_to"]["0"] == [long_doc[2]["node_number"]]
 
 
 def test_repl_transcript_repair():

@@ -64,12 +64,13 @@ GARBAGE = ["@decorator", "@app.route('/x')", "assert x == 1", "del x",
            "y = (z := 's;s')", "(q := 'un;term", "(w :=)",
            "while (chunk := reader.read()):",
            # lexer edge cases: unterminated and multi-line triple quotes,
-           # escaped quotes, literal f-string braces, quoted brackets and
-           # `\` continuations inside brackets
+           # escaped quotes, literal f-string braces, quoted brackets,
+           # `\` continuations inside brackets and before a CRLF
            "x = '''never closed", 's = """a\n# not a comment\nb"""',
            "x = 'it\\'s ('", "s = f'{{df.fillna(0)}}'",
            "pandas.read_csv(')', sep=';')",
-           "x = pandas.read_csv('a', \\\n    sep=',')"]
+           "x = pandas.read_csv('a', \\\n    sep=',')",
+           "x = pandas.\\\r\n    read_csv('a.csv')"]
 
 
 def _call(rng):
@@ -217,57 +218,21 @@ def _digest(pages):
     return n_nodes, hashlib.sha256("\n".join(sorted(rows)).encode()).hexdigest()
 
 
-#: fuzz pages whose output intentionally differs from the per-character
-#: scanners this digest was first recorded on, with the reason; they are
-#: left out of the fuzz digest
-_QUOTED_CLOSE = ("a quoted `)` in the args no longer closes the call "
-                 "early, so its constant args are kept")
-_ESCAPED_QUOTE = ("the escaped quote in `'it\\'s ('` no longer reopens the "
-                  "string, so its `(` stays text and the next seven lines "
-                  "are not swallowed into one statement")
-_LINE_END_STRING = ("the unterminated `'un;term` string ends at its line "
-                    "end, as the statement assembler already read it, so a "
-                    "call on a following line is code")
-_LITERAL_BRACES = ("the doubled braces in `f'{{df.fillna(0)}}'` are literal "
-                   "text, so no fillna call is minted")
-FUZZ_INTENDED_FIXES: dict[int, str] = {
-    1: _ESCAPED_QUOTE,
-    10: _QUOTED_CLOSE,
-    27: _ESCAPED_QUOTE,
-    71: _QUOTED_CLOSE,
-    95: _ESCAPED_QUOTE,
-    99: _LINE_END_STRING,
-    103: _LINE_END_STRING,
-    116: _LITERAL_BRACES,
-    144: _ESCAPED_QUOTE,
-    172: _QUOTED_CLOSE,
-    189: _QUOTED_CLOSE,
-    196: _QUOTED_CLOSE,
-    233: _ESCAPED_QUOTE,
-    234: _QUOTED_CLOSE,
-    243: _ESCAPED_QUOTE,
-    258: _QUOTED_CLOSE,
-    268: _QUOTED_CLOSE,
-    283: _QUOTED_CLOSE,
-}
-
-
 @pytest.mark.parametrize("corpus,expected", [
     ("synth-1", (16359, "7dc7717cc68ce18e6f70d6d856d98522"
                         "fb9d665fa4ced3bb06511584fc0bb400")),
     ("synth-2", (16323, "31c5015ff6547670a4994921fbf1a0c1"
                         "27ee1fafda17ffa2030ee89cfeadf090")),
-    ("fuzz", (1914, "97ad2de6aadda09153228fabe2e811b0"
-                    "3a7777e95c50b5cdb9b92632bf1334cf")),
+    ("fuzz", (2117, "3618cf4faac5f3974346fcbfd430923a"
+                    "89855b1bdef98cfd15bad95ff3513070")),
 ])
 def test_extractor_output_digest_pinned(corpus, expected):
     """Synth seeds 1 and 2 (1,000 pages each) and the 300 fuzz-grammar
-    pages extract to the recorded node/edge sets."""
-    if corpus == "fuzz":
-        pages = (p for i, p in enumerate(_fuzz_pages())
-                 if i not in FUZZ_INTENDED_FIXES)
-    else:
-        pages = _synth_pages(int(corpus[-1]), 1000)
+    pages extract to the recorded node/edge sets.  The synth digests
+    match the per-character scanners the lexer replaced; the fuzz
+    digest is re-recorded whenever `GARBAGE` or the grammar changes."""
+    pages = (_fuzz_pages() if corpus == "fuzz"
+             else _synth_pages(int(corpus[-1]), 1000))
     assert _digest(pages) == expected
 
 
@@ -291,6 +256,7 @@ ADVERSARIAL = {
     "mixed_indent": "if a:\n    if b:\n\t m = sklearn.svm.SVC()\n  m.fit(x)",
     "triple_quote_code": 's = """\nm = sklearn.svm.SVC()\n"""\nm.fit(x)',
     "unterminated_triple": "x = '''" + "a\\'b'' (\n" * 20000,
+    "long_closed_triple": "x = '''" + "a\\'b'' (\n" * 20000 + "'''\nx.y()",
     "class_depth": "\n".join(
         ["class A:"] + [f"    def m{i}(self, p):\n        self.f{i} = p"
                         for i in range(200)]),
