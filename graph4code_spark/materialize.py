@@ -6,14 +6,21 @@ write partitioned by **(predicate short-name, subject-hash bucket)** per
 the north rule.  Predicate cardinality is the fixed edge vocabulary
 (~40), so `pred_name` is a safe partition column; `subj_bucket` spreads
 within a predicate so hub subjects don't produce giant files and
-SPARQL-style per-predicate scans prune to one directory.
+SPARQL-style per-predicate scans prune to one directory.  The bucket
+count follows the data size: ``run_pipeline`` passes
+``plans.pipeline.subject_buckets`` of its triple-stage row total, one
+bucket per ``ROWS_PER_BUCKET`` quads rounded up to a power of two, so a
+small build writes one file per predicate.
 
 Set semantics (SO1): rdflib collapses duplicate quads per graph — here a
 `dropDuplicates` over the full quad key before the write.
 
-Lineage (north rule): `observe()` counters for totals + a per-partition
-row-count table written next to the data, so a resumed job can verify
-partition completeness without rescanning.
+Lineage (north rule): `observe()` counters for totals and distinct
+graphs/subjects, taken on the write itself, plus a per-partition
+row-count table written next to the data in one pass over the written
+table, so a resumed job can verify partition completeness without
+rescanning.  The sink always overwrites: the write-time counters
+describe exactly the rows that the lineage table counts.
 """
 
 from __future__ import annotations
@@ -27,9 +34,8 @@ from pyspark.sql import functions as F
 
 from graph4code_spark.schemas import TRIPLE_COLS
 
-#: subject-hash buckets. Local default keeps file counts sane; at the
-#: 100 TB design point raise via the parameter (e.g. 256) so a single
-#: (pred, bucket) partition stays in the hundreds-of-MB range.
+#: subject-hash buckets for direct callers; ``run_pipeline`` derives its
+#: count from the data size instead (``plans.pipeline.subject_buckets``).
 DEFAULT_BUCKETS = 8
 
 
@@ -46,20 +52,25 @@ def materialize_triples(
     triples: DataFrame,
     out_path: str,
     buckets: int = DEFAULT_BUCKETS,
-    mode: str = "overwrite",
 ) -> dict:
     """Dedup + write + metrics. Returns the metrics dict (also persisted
     as `_metrics.json` beside the table)."""
     t0 = time.time()
-    obs = Observation("materialize")
+    obs = Observation()
     df = (
         dedup_quads(triples)
         .withColumn("pred_name", pred_short_name(F.col("pred")))
         .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int"))
-        .observe(obs, F.count(F.lit(1)).alias("n_triples"))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n_triples"),
+            # distinct stats: approx at scale
+            F.approx_count_distinct("graph").alias("n_graphs"),
+            F.approx_count_distinct("subj").alias("n_subjects"),
+        )
     )
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy("pred_name", "subj_bucket")
         .parquet(out_path)
@@ -68,20 +79,17 @@ def materialize_triples(
     metrics["wall_sec"] = round(time.time() - t0, 3)
     metrics["buckets"] = buckets
 
-    # per-partition lineage counters + distinct stats (approx at scale)
+    # per-partition lineage counters
     spark = triples.sparkSession
-    written = spark.read.parquet(out_path)
-    stats = written.select(
-        F.approx_count_distinct("graph").alias("n_graphs"),
-        F.approx_count_distinct("subj").alias("n_subjects"),
-    ).first()
-    metrics["n_graphs"] = int(stats["n_graphs"])
-    metrics["n_subjects"] = int(stats["n_subjects"])
-    lineage = written.groupBy("pred_name", "subj_bucket").agg(
-        F.count(F.lit(1)).alias("rows")
+    lineage_obs = Observation()
+    lineage = (
+        spark.read.schema(df.schema).parquet(out_path)
+        .groupBy("pred_name", "subj_bucket")
+        .agg(F.count(F.lit(1)).alias("rows"))
+        .observe(lineage_obs, F.count(F.lit(1)).alias("n_partitions"))
     )
     lineage.coalesce(1).write.mode("overwrite").parquet(out_path + "_lineage")
-    metrics["n_partitions"] = lineage.count()
+    metrics["n_partitions"] = int(lineage_obs.get["n_partitions"])
 
     with open(os.path.join(out_path, "_metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2, sort_keys=True)

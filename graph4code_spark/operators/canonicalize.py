@@ -110,13 +110,16 @@ def connected_components(
     "distributed", "rounds": n} so tests can assert O(log n) convergence.
     """
     cur = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+    if small_graph_threshold:
+        # one bounded collect: more than threshold rows means distributed
+        edge_rows = cur.limit(small_graph_threshold + 1).collect()
+        if len(edge_rows) <= small_graph_threshold:
+            rows = _union_find_mapping((r[0], r[1]) for r in edge_rows)
+            if stats is not None:
+                stats.update(path="unionfind", rounds=0)
+            return edges.sparkSession.createDataFrame(
+                rows or [], "name string, canon string")
     cur = cur.localCheckpoint(eager=True)
-    if small_graph_threshold and cur.count() <= small_graph_threshold:
-        spark = edges.sparkSession
-        rows = _union_find_mapping((r[0], r[1]) for r in cur.collect())
-        if stats is not None:
-            stats.update(path="unionfind", rounds=0)
-        return spark.createDataFrame(rows or [], "name string, canon string")
     prev_sig = None
     rounds = 0
     for _ in range(max_iter):

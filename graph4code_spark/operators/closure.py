@@ -124,20 +124,23 @@ def transitive_closure(
         # graphs with no seed contribute nothing — drop their edges before
         # any iteration (semi-join, no shuffle of the seed side: tiny)
         base = base.join(seed_nodes.select("graph").distinct(), "graph", "left_semi")
+    if small_graph_threshold:
+        # one bounded collect: more than threshold rows means distributed
+        edge_rows = base.limit(small_graph_threshold + 1).collect()
+        if len(edge_rows) <= small_graph_threshold:
+            rows = _driver_closure(
+                [(r["src"], r["dst"], r["graph"]) for r in edge_rows],
+                None if seed_nodes is None
+                else [(r["node"], r["graph"]) for r in seed_nodes.collect()],
+                direction,
+            )
+            if stats is not None:
+                stats.update(path="driver", rounds=0)
+            spark = edges.sparkSession
+            return spark.createDataFrame(
+                rows or [], "src string, dst string, graph string, min_hops int"
+            )
     base = base.localCheckpoint(eager=True)
-    if small_graph_threshold and base.count() <= small_graph_threshold:
-        rows = _driver_closure(
-            [(r["src"], r["dst"], r["graph"]) for r in base.collect()],
-            None if seed_nodes is None
-            else [(r["node"], r["graph"]) for r in seed_nodes.collect()],
-            direction,
-        )
-        if stats is not None:
-            stats.update(path="driver", rounds=0)
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            rows or [], "src string, dst string, graph string, min_hops int"
-        )
     if stats is not None:
         stats.update(path="distributed")
     if seed_nodes is not None:

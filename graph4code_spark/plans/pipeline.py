@@ -16,9 +16,12 @@ while skipping stages 1..k (verified by ``tests/test_pipeline_resume``).
 The reference's analogue is its pickle checkpointing
 (`/root/reference/src/utils.py:104-189`) and idempotent per-stage reruns.
 
-The parquet stage boundaries double as the shuffle barriers you'd want
-at 100 TB anyway: qa and links are written partitioned so downstream
-joins read co-partitioned data.
+A stage boundary adds no Spark job beyond the stage's own write: the
+manifest row count is an ``Observation`` taken during the write, and the
+stage is read back with the schema just written, so neither a count nor
+a footer-inference job follows it.  The final sink's subject-bucket count follows the data
+size: ``subject_buckets`` of the summed triple-stage rows, read from
+the manifest at no job cost.
 """
 
 from __future__ import annotations
@@ -29,7 +32,8 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from graph4code_spark.emitters.analysis import analysis_triples
 from graph4code_spark.emitters.docstrings import build_class_alias_map, docstring_triples
@@ -46,13 +50,30 @@ from graph4code_spark.sources.qa import extract_qa
 from graph4code_spark.synth import FIXED_CATALOG, FIXED_CLASS_MAP, catalog_df, class_map_df
 from graph4code_spark.uris import PREFIXES
 
+#: quads per subject bucket of the final sink.  At the ~7 B/quad (zstd)
+#: measured on the synthetic KG, one bucket's files total ~120 MB, about
+#: one ``spark.sql.files.maxPartitionBytes`` (128m) read split; a bucket
+#: is further split across the ``pred_name`` directories, so single files
+#: are smaller still.  Below this size a second bucket only multiplies
+#: small files.
+ROWS_PER_BUCKET = 1 << 24
+
+#: the stages unioned into the final sink
+TRIPLE_STAGES = ("03_doc_triples", "04_forum_triples", "06_flow_triples",
+                 "08_sameas_triples")
+
+
+def subject_buckets(rows: int) -> int:
+    """Smallest power of two ≥ ``rows / ROWS_PER_BUCKET`` (at least 1)."""
+    need = -(-rows // ROWS_PER_BUCKET)
+    return 1 << max(need - 1, 0).bit_length()
+
 
 @dataclass
 class PipelineConfig:
     out_dir: str
     forum_prefix: str = PREFIXES["stackoverflow3"]
     cap: int = ES_RESULT_CAP
-    buckets: int = 8
     catalog_records: list = field(default_factory=lambda: FIXED_CATALOG)
     class_map_pairs: list = field(default_factory=lambda: FIXED_CLASS_MAP)
 
@@ -88,13 +109,7 @@ class StageRunner:
         with open(self.manifest_path, "w") as f:
             json.dump(self.manifest, f, indent=2, sort_keys=True)
 
-    def run(
-        self,
-        name: str,
-        build,
-        partition_by: list[str] | None = None,
-        deps: list[str] | None = None,
-    ) -> DataFrame:
+    def run(self, name: str, build, deps: list[str] | None = None) -> DataFrame:
         """``deps``: upstream stage names — if any of them was RECOMPUTED
         this run, this stage's checkpoint is invalid even when its own
         fingerprint matches (a resumed downstream must never read a
@@ -110,20 +125,22 @@ class StageRunner:
             return self.spark.read.parquet(path)
         t0 = time.time()
         df = build()
-        w = df.write.mode("overwrite").option("compression", "zstd")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
-        out = self.spark.read.parquet(path)
+        obs = Observation()
+        (
+            df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .parquet(path)
+        )
         self.manifest[name] = {
             "fingerprint": self.fingerprint,
-            "rows": out.count(),
+            "rows": int(obs.get["rows"]),
             "wall_sec": round(time.time() - t0, 3),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._save()
         self.executed.append(name)
-        return out
+        return self.spark.read.schema(df.schema).parquet(path)
 
 
 def run_pipeline(
@@ -180,11 +197,7 @@ def run_pipeline(
         entry
         and entry.get("fingerprint") == runner.fingerprint
         and os.path.exists(os.path.join(final_path, "_SUCCESS"))
-        and not any(
-            d in runner.executed
-            for d in ("03_doc_triples", "04_forum_triples",
-                      "06_flow_triples", "08_sameas_triples")
-        )
+        and not any(d in runner.executed for d in TRIPLE_STAGES)
     ):
         return spark.read.parquet(final_path).select(*TRIPLE_COLS)
 
@@ -195,7 +208,8 @@ def run_pipeline(
         .unionByName(flow_t.select(*TRIPLE_COLS))
         .unionByName(sameas_t.select(*TRIPLE_COLS))
     )
-    metrics = materialize_triples(all_t, final_path, buckets=cfg.buckets)
+    buckets = subject_buckets(sum(runner.manifest[s]["rows"] for s in TRIPLE_STAGES))
+    metrics = materialize_triples(all_t, final_path, buckets=buckets)
     runner.manifest["triples"] = {
         "fingerprint": runner.fingerprint,
         "rows": metrics["n_triples"],
@@ -205,4 +219,4 @@ def run_pipeline(
     }
     runner._save()
     runner.executed.append("triples")
-    return spark.read.parquet(final_path).select(*TRIPLE_COLS)
+    return spark.read.schema(all_t.schema).parquet(final_path).select(*TRIPLE_COLS)

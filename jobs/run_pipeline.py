@@ -39,7 +39,6 @@ def main() -> None:
                     help="synthetic corpus size when --input is not given")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--cap", type=int, default=5000, help="per-entity result cap (W4)")
-    ap.add_argument("--buckets", type=int, default=8, help="subject-hash write buckets")
     ap.add_argument("--bench", type=int, default=0, metavar="R",
                     help="throughput mode: skip the checkpointed write, run the "
                          "in-memory pipeline R times after a warm-up and report "
@@ -130,7 +129,7 @@ def main() -> None:
         return
 
     t0 = time.time()
-    cfg = PipelineConfig(out_dir=args.out_dir, cap=args.cap, buckets=args.buckets)
+    cfg = PipelineConfig(out_dir=args.out_dir, cap=args.cap)
     stats: dict = {}
     triples = run_pipeline(spark, pages, cfg, stats=stats)
     n = triples.count()

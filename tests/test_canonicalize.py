@@ -55,12 +55,19 @@ def test_random_graph_vs_union_find(spark):
     # small-graph fast path (driver union-find)
     got_fast = {r["name"]: r["canon"] for r in connected_components(df).collect()}
     assert got_fast == want
-    # distributed large-star/small-star path (forced)
-    got_dist = {
-        r["name"]: r["canon"]
-        for r in connected_components(df, small_graph_threshold=0).collect()
-    }
-    assert got_dist == want
+    # distributed large-star/small-star path (forced), and thresholds at
+    # the bounded-collect boundary: n edges → fast, n - 1 → distributed
+    n_edges = len(set(edges))
+    for threshold, path in ((0, "distributed"), (n_edges, "unionfind"),
+                            (n_edges - 1, "distributed")):
+        stats: dict = {}
+        got = {
+            r["name"]: r["canon"]
+            for r in connected_components(
+                df, small_graph_threshold=threshold, stats=stats).collect()
+        }
+        assert got == want, threshold
+        assert stats["path"] == path, threshold
 
 
 def test_same_as_and_rewrite(spark):

@@ -109,23 +109,27 @@ def test_max_hops_raises_instead_of_truncating(spark):
 
 def test_driver_fast_path_matches_distributed(spark):
     # same inputs through both paths (seeded and unseeded): identical
-    # (src, dst, graph, min_hops) sets
+    # (src, dst, graph, min_hops) sets.  The thresholds bracket the
+    # bounded collect: exactly the (seed-pruned) edge count stays on the
+    # driver, one fewer distributes.
     edges, seeds = _edges(spark), _seeds(spark)
-    for kwargs in (
-        {},
-        {"seeds": seeds, "direction": "backward"},
-        {"seeds": seeds, "direction": "forward"},
+    seeded = len(SEED_GRAPHS) * CHAIN
+    for kwargs, n_edges in (
+        ({}, N_GRAPHS * CHAIN),
+        ({"seeds": seeds, "direction": "backward"}, seeded),
+        ({"seeds": seeds, "direction": "forward"}, seeded),
     ):
         stats_d: dict = {}
         via_driver = sorted(
-            transitive_closure(edges, stats=stats_d, **kwargs)
-            .select(*_COLS).collect()
+            transitive_closure(
+                edges, small_graph_threshold=n_edges, stats=stats_d, **kwargs
+            ).select(*_COLS).collect()
         )
         assert stats_d["path"] == "driver"
         stats_x: dict = {}
         via_dist = sorted(
             transitive_closure(
-                edges, small_graph_threshold=0, stats=stats_x, **kwargs
+                edges, small_graph_threshold=n_edges - 1, stats=stats_x, **kwargs
             ).select(*_COLS).collect()
         )
         assert stats_x["path"] == "distributed"

@@ -3,8 +3,20 @@
 import json
 import os
 
-from graph4code_spark.plans.pipeline import PipelineConfig, StageRunner, run_pipeline
+from graph4code_spark.plans.pipeline import (
+    ROWS_PER_BUCKET,
+    PipelineConfig,
+    StageRunner,
+    run_pipeline,
+    subject_buckets,
+)
 from graph4code_spark.synth import synth_pages
+
+#: Spark jobs a cold 40-page build may submit: it measures 25 on
+#: local[4], the stage and sink writes with their own shuffles.  A count
+#: or schema-inference job after each of the eight stage writes would
+#: push it past the bound.
+MAX_BUILD_JOBS = 35
 
 
 def _quadset(df):
@@ -56,12 +68,52 @@ def test_materialize_layout_and_metrics(spark, tmp_path):
     assert any(d.startswith("pred_name=") for d in top)
     lineage = spark.read.parquet(os.path.join(out, "triples_lineage"))
     assert lineage.count() == metrics["n_partitions"]
+    assert lineage.agg({"rows": "sum"}).first()[0] == metrics["n_triples"]
+
+    # observed stage row counts agree with what is on disk
+    manifest = json.load(open(os.path.join(out, "manifest.json")))
+    for stage, entry in manifest.items():
+        assert spark.read.parquet(os.path.join(out, stage)).count() == entry["rows"], stage
+
+    # a 40-page build is far below ROWS_PER_BUCKET: one subject bucket
+    assert metrics["buckets"] == 1
+    for d in top:
+        if d.startswith("pred_name="):
+            assert os.listdir(os.path.join(out, "triples", d)) == ["subj_bucket=0"], d
 
     # no duplicate quads in the final table
     t = spark.read.parquet(os.path.join(out, "triples"))
     assert t.count() == t.dropDuplicates(
         ["subj", "pred", "obj", "is_literal", "arg_pos", "arg_name", "graph"]
     ).count()
+
+
+def test_subject_buckets_follow_data_size():
+    assert subject_buckets(0) == 1
+    assert subject_buckets(1) == 1
+    assert subject_buckets(ROWS_PER_BUCKET) == 1
+    assert subject_buckets(ROWS_PER_BUCKET + 1) == 2
+    b = subject_buckets(10**12)
+    assert b & (b - 1) == 0  # a power of two
+    assert b * ROWS_PER_BUCKET >= 10**12 > (b // 2) * ROWS_PER_BUCKET
+
+
+def test_cold_build_job_count(spark, tmp_path):
+    """A stage boundary adds no job beyond its write: no count or
+    schema-inference job after a stage write, no stats rescan after the
+    sink."""
+    pages = synth_pages(spark, 40, seed=12).localCheckpoint()
+    pages.count()
+    sc = spark.sparkContext
+    group = "test_cold_build_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, pages, PipelineConfig(out_dir=str(tmp_path / "kg")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= MAX_BUILD_JOBS, n_jobs
 
 
 def test_corpus_pipeline_resume(spark, tmp_path):
