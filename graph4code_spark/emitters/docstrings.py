@@ -31,6 +31,7 @@ from graph4code_spark.functions import (
     explode_quads,
     quad,
 )
+from graph4code_spark.session import local_df
 from graph4code_spark.uris import DOCSTRINGS_GRAPH, PREFIXES
 
 _G = DOCSTRINGS_GRAPH  # quad() lifts plain strings to literals lazily
@@ -66,6 +67,11 @@ def build_class_alias_map(pairs: list[tuple[str, str]]) -> dict[str, str]:
     return out
 
 
+def alias_table(spark, alias: dict[str, str]) -> DataFrame:
+    """(alias_key, alias_val) rows of an alias map, for a broadcast join."""
+    return local_df(spark, list(alias.items()), "alias_key string, alias_val string")
+
+
 def docstring_triples(
     catalog: DataFrame,
     class_alias: dict[str, str] | None = None,
@@ -99,11 +105,8 @@ def docstring_triples(
     else:
         alias = build_class_alias_map(class_alias)
     if alias:
-        alias_df = spark.createDataFrame(
-            list(alias.items()), "alias_key string, alias_val string"
-        )
         c = c.join(
-            F.broadcast(alias_df),
+            F.broadcast(alias_table(spark, alias)),
             (F.col("etype") == "class") & (F.col("klass_n") == F.col("alias_key")),
             "left",
         )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph4code_spark.functions import explode_quads, quad
+from graph4code_spark.session import local_df
 from graph4code_spark.synth import entity_name, entity_type
 from graph4code_spark.uris import PREFIXES
 
@@ -25,13 +26,9 @@ _SIOC = PREFIXES["sioc"]
 _PROV = PREFIXES["prov"]
 
 
-def anchor_triples(
-    links: DataFrame, catalog_records: list[dict], forum_prefix: str
-) -> DataFrame:
-    """rdfs:label (+ rdfs:altLabel for methods) for every entity with at
-    least one search hit — emitted even when all hits are bad matches
-    (`utils.py:395-419,455-467`)."""
-    spark = links.sparkSession
+def anchor_labels(spark, catalog_records: list[dict]) -> DataFrame:
+    """(entity, label, alt_label) per catalog record — the driver-side
+    table the anchor quads join against."""
     rows = []
     for rec in catalog_records:
         name = entity_name(rec)
@@ -42,8 +39,16 @@ def anchor_triples(
             rows.append((name, rec["klass"], None))
         else:
             rows.append((name, rec["function"], None))
-    ent_df = spark.createDataFrame(rows, "entity string, label string, alt_label string")
+    return local_df(spark, rows, "entity string, label string, alt_label string")
 
+
+def anchor_triples(
+    links: DataFrame, catalog_records: list[dict], forum_prefix: str
+) -> DataFrame:
+    """rdfs:label (+ rdfs:altLabel for methods) for every entity with at
+    least one search hit — emitted even when all hits are bad matches
+    (`utils.py:395-419,455-467`)."""
+    ent_df = anchor_labels(links.sparkSession, catalog_records)
     linked = links.select("entity").distinct()
     g = F.lit(forum_prefix)
     d = F.concat(F.lit(_PY), F.col("entity"))

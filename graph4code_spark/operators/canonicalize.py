@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph4code_spark.session import local_df
 from graph4code_spark.uris import PREFIXES
 
 
@@ -74,7 +75,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
 #: the iterative algorithm (4 shuffles + a convergence job) dwarfs the
 #: actual work.  Same adaptive philosophy as broadcast-vs-shuffle join
 #: selection; at 10^12-document scale the edge set exceeds the threshold
-#: and the distributed large-star/small-star path engages.
+#: and the distributed large-star/small-star path engages.  The mapping
+#: comes back as an Arrow-built frame (``local_df``), so downstream scans
+#: of it start no Python worker.
 SMALL_GRAPH_EDGES = 200_000
 
 
@@ -117,8 +120,7 @@ def connected_components(
             rows = _union_find_mapping((r[0], r[1]) for r in edge_rows)
             if stats is not None:
                 stats.update(path="unionfind", rounds=0)
-            return edges.sparkSession.createDataFrame(
-                rows or [], "name string, canon string")
+            return local_df(edges.sparkSession, rows, "name string, canon string")
     cur = cur.localCheckpoint(eager=True)
     prev_sig = None
     rounds = 0

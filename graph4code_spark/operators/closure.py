@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph4code_spark.session import local_df
+
 
 def _driver_closure(edge_rows, seed_rows, direction: str):
     """Driver-side min-hop closure (the small-graph fast path): BFS per
@@ -109,7 +111,8 @@ def transitive_closure(
 
     ``small_graph_threshold`` — when the (seed-pruned) edge set is at
     most this many rows, the closure runs driver-side (BFS) and the
-    result is parallelized back: a docstrings-hierarchy closure is a few
+    result comes back as an Arrow-built frame (``local_df``) whose scans
+    start no Python worker: a docstrings-hierarchy closure is a few
     hundred edges, and 3-5 distributed rounds of fixed job overhead cost
     more than the entire BFS.  Pass 0 to force the distributed path
     (the scale tests do).  ``stats`` (optional dict) records which path
@@ -136,9 +139,9 @@ def transitive_closure(
             )
             if stats is not None:
                 stats.update(path="driver", rounds=0)
-            spark = edges.sparkSession
-            return spark.createDataFrame(
-                rows or [], "src string, dst string, graph string, min_hops int"
+            return local_df(
+                edges.sparkSession, rows,
+                "src string, dst string, graph string, min_hops int",
             )
     base = base.localCheckpoint(eager=True)
     if stats is not None:

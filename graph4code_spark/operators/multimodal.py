@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from graph4code_spark.session import local_df
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -260,4 +262,4 @@ def synth_media(spark, n: int, seed: int = 42) -> DataFrame:
             meta = (None, None, 1000 * (1 + h[2] % 10), f"{mtype}/bin")
             payload = h * 4
         rows.append((f"m{i}", mtype, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_df(spark, rows, MEDIA_SCHEMA)

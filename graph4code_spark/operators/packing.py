@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graph4code_spark.functions.hashing import KNUTH, M32, mulmod32
+from graph4code_spark.session import local_df
 
 #: Knuth's multiplicative hash constant (2^32 / phi); applied mod 2^32
 #: it is a bijection on [0, 2^32), i.e. a deterministic permutation.
@@ -84,8 +85,8 @@ def pack_sequences(
     for r in totals:
         offsets.append((r["_bucket"], base))
         base += r["_total"]
-    bases = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "_bucket long, _base long"
+    bases = local_df(
+        df.sparkSession, offsets or [(0, 0)], "_bucket long, _base long"
     )
 
     w = (

@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from graph4code_spark.session import local_df
+
 #: base types the reference unconditionally adds to the class set
 #: (`inspect_docstrings_per_module.py:456-469`)
 BASE_TYPES = [
@@ -70,8 +72,8 @@ def class_table(catalog: DataFrame, extra: list[str] | None = None) -> DataFrame
         .select(F.col("klass").alias("class_name"))
         .distinct()
     )
-    fixed = spark.createDataFrame(
-        [(c,) for c in BASE_TYPES + list(extra or [])], "class_name string"
+    fixed = local_df(
+        spark, [(c,) for c in BASE_TYPES + list(extra or [])], "class_name string"
     )
     return (
         from_catalog.unionByName(fixed)

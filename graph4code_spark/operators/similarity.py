@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph4code_spark.session import local_df
+
 
 def _norm(col):
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -98,7 +100,8 @@ def ivf_centroids(dim: int, n_lists: int, seed: int) -> np.ndarray:
 
 def _centroid_df(spark, dim: int, n_lists: int, seed: int) -> DataFrame:
     cents = ivf_centroids(dim, n_lists, seed)
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(i, [float(x) for x in cents[i]]) for i in range(n_lists)],
         "list_id int, centroid array<double>",
     )

@@ -19,9 +19,11 @@ The reference's analogue is its pickle checkpointing
 A stage boundary adds no Spark job beyond the stage's own write: the
 manifest row count is an ``Observation`` taken during the write, and the
 stage is read back with the schema just written, so neither a count nor
-a footer-inference job follows it.  The final sink's subject-bucket count follows the data
-size: ``subject_buckets`` of the summed triple-stage rows, read from
-the manifest at no job cost.
+a footer-inference job follows it.  Each manifest entry also records
+that schema, so a resumed stage is read with it too; an entry without a
+schema is not resumable.  The final sink's subject-bucket count follows
+the data size: ``subject_buckets`` of the summed triple-stage rows, read
+from the manifest at no job cost.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from graph4code_spark.emitters.analysis import analysis_triples
 from graph4code_spark.emitters.docstrings import build_class_alias_map, docstring_triples
@@ -109,20 +112,45 @@ class StageRunner:
         with open(self.manifest_path, "w") as f:
             json.dump(self.manifest, f, indent=2, sort_keys=True)
 
-    def run(self, name: str, build, deps: list[str] | None = None) -> DataFrame:
-        """``deps``: upstream stage names — if any of them was RECOMPUTED
-        this run, this stage's checkpoint is invalid even when its own
-        fingerprint matches (a resumed downstream must never read a
-        stale view of a refreshed upstream)."""
+    def resumed(self, name: str, deps=()) -> DataFrame | None:
+        """The checkpointed output of ``name``, read with its recorded
+        schema, or None when it must be recomputed: no entry or schema,
+        another fingerprint, no ``_SUCCESS``, or a dep recomputed this
+        run (a resumed downstream must never read a stale view of a
+        refreshed upstream)."""
         path = os.path.join(self.out_dir, name)
         entry = self.manifest.get(name)
         if (
             entry
+            and "schema" in entry
             and entry.get("fingerprint") == self.fingerprint
             and os.path.exists(os.path.join(path, "_SUCCESS"))
-            and not any(d in self.executed for d in (deps or []))
+            and not any(d in self.executed for d in deps)
         ):
-            return self.spark.read.parquet(path)
+            return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(path)
+        return None
+
+    def record(self, name: str, schema: StructType, rows: int, t0: float, **extra) -> None:
+        """Manifest entry for a freshly written ``name``."""
+        self.manifest[name] = {
+            "fingerprint": self.fingerprint,
+            "rows": rows,
+            "schema": schema.jsonValue(),
+            "wall_sec": round(time.time() - t0, 3),
+            "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            **extra,
+        }
+        self._save()
+        self.executed.append(name)
+
+    def run(self, name: str, build, deps: list[str] | None = None) -> DataFrame:
+        """``deps``: upstream stage names — if any of them was RECOMPUTED
+        this run, this stage's checkpoint is invalid even when its own
+        fingerprint matches."""
+        done = self.resumed(name, deps or ())
+        if done is not None:
+            return done
+        path = os.path.join(self.out_dir, name)
         t0 = time.time()
         df = build()
         obs = Observation()
@@ -132,14 +160,7 @@ class StageRunner:
             .option("compression", "zstd")
             .parquet(path)
         )
-        self.manifest[name] = {
-            "fingerprint": self.fingerprint,
-            "rows": int(obs.get["rows"]),
-            "wall_sec": round(time.time() - t0, 3),
-            "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        self._save()
-        self.executed.append(name)
+        self.record(name, df.schema, int(obs.get["rows"]), t0)
         return self.spark.read.schema(df.schema).parquet(path)
 
 
@@ -191,15 +212,9 @@ def run_pipeline(
     sameas_t = runner.run("08_sameas_triples", lambda: same_as_triples(mapping),
                           deps=["07_cc_mapping"])
 
-    final_path = os.path.join(cfg.out_dir, "triples")
-    entry = runner.manifest.get("triples")
-    if (
-        entry
-        and entry.get("fingerprint") == runner.fingerprint
-        and os.path.exists(os.path.join(final_path, "_SUCCESS"))
-        and not any(d in runner.executed for d in TRIPLE_STAGES)
-    ):
-        return spark.read.parquet(final_path).select(*TRIPLE_COLS)
+    done = runner.resumed("triples", TRIPLE_STAGES)
+    if done is not None:
+        return done.select(*TRIPLE_COLS)
 
     t0 = time.time()
     all_t = (
@@ -209,14 +224,7 @@ def run_pipeline(
         .unionByName(sameas_t.select(*TRIPLE_COLS))
     )
     buckets = subject_buckets(sum(runner.manifest[s]["rows"] for s in TRIPLE_STAGES))
+    final_path = os.path.join(cfg.out_dir, "triples")
     metrics = materialize_triples(all_t, final_path, buckets=buckets)
-    runner.manifest["triples"] = {
-        "fingerprint": runner.fingerprint,
-        "rows": metrics["n_triples"],
-        "wall_sec": round(time.time() - t0, 3),
-        "metrics": metrics,
-        "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    runner._save()
-    runner.executed.append("triples")
+    runner.record("triples", all_t.schema, metrics["n_triples"], t0, metrics=metrics)
     return spark.read.schema(all_t.schema).parquet(final_path).select(*TRIPLE_COLS)

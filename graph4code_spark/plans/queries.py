@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph4code_spark.operators.closure import flows_to_edges, transitive_closure
+from graph4code_spark.session import local_df
 from graph4code_spark.uris import PREFIXES
 
 _RDFS_LABEL = PREFIXES["rdfs"] + "label"
@@ -130,7 +131,7 @@ def debug_posts(
     sioc_p = PREFIXES["sioc"]
     rdf_type = PREFIXES["rdf"] + "type"
 
-    vals = spark.createDataFrame([(_PY + n,) for n in entity_names], "f string")
+    vals = local_df(spark, [(_PY + n,) for n in entity_names], "f string")
     qtype = (
         _pred(triples, rdf_type).where(F.col("obj") == schema_p + "Question")
         .select(F.col("subj").alias("q")).distinct()
@@ -271,7 +272,7 @@ def classifier_class_names_any(
         .where(F.col("dst").isin(base_uris))
         .select(F.col("src").alias("cls"))
         .union(
-            sub.sparkSession.createDataFrame([(u,) for u in base_uris], "cls string")
+            local_df(sub.sparkSession, [(u,) for u in base_uris], "cls string")
         )
         .distinct()
     )

@@ -1,15 +1,26 @@
-"""SparkSession factory tuned for the KG-construction workload.
+"""SparkSession factory tuned for the KG-construction workload, and
+``local_df``, the one constructor for driver-side tables.
 
 Local testing runs on ``local[N]``; the same config block is what we would
 ship to a 1000-executor cluster via ``spark-submit --py-files`` — nothing
 here is local-mode specific except the master URL.
+
+``local_df`` exists because ``spark.createDataFrame`` over a list is a Python
+RDD: every scan of the API catalog, the class map, the anchor labels or a
+union-find result started Python worker tasks, seconds of executor time
+for a few dozen rows.  ``local_df`` ships the rows to the JVM as one Arrow
+table instead, so scans of the result run in the JVM alone.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 # Defaults chosen for the 100 TB design point, not the sandbox:
 # - AQE on: runtime coalescing + skew-join splitting (hub entities like
@@ -57,3 +68,44 @@ def stop_all() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    built from an Arrow table: its scans start no Python worker.
+
+    Top-level map columns travel as key/value entry lists and are rebuilt in the
+    JVM by ``map_from_entries``: with pyarrow < 17, PySpark's Arrow path
+    drops the null mask of a map with nested values (SPARK-48302), which
+    would turn a null map into ``{}``.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    maps = {f.name for f in schema.fields if isinstance(f.dataType, MapType)}
+    wire = StructType([
+        StructField(f.name, ArrayType(StructType([
+            StructField("key", f.dataType.keyType),
+            StructField("value", f.dataType.valueType, f.dataType.valueContainsNull),
+        ])), f.nullable) if f.name in maps else f
+        for f in schema.fields
+    ])
+    arrow = to_arrow_schema(wire)
+    cols = list(zip(*rows)) or [()] * len(wire.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(
+                [None if v is None else list(v.items()) for v in col]
+                if name in maps else col,
+                type=arrow.field(name).type,
+            )
+            for name, col in zip(wire.names, cols)
+        ],
+        schema=arrow,
+    )
+    df = spark.createDataFrame(table, wire)
+    if maps:
+        df = df.select(*[
+            F.map_from_entries(n).alias(n) if n in maps else F.col(n)
+            for n in schema.names
+        ])
+    return df

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from graph4code_spark.schemas import API_CATALOG_SCHEMA, CLASS_MAP_SCHEMA
+from graph4code_spark.session import local_df
 
 # ---------------------------------------------------------------------------
 # Fixed catalog: modules / classes / methods / functions with params, types,
@@ -243,12 +244,12 @@ def catalog_df(spark: SparkSession, records: list[dict] | None = None) -> DataFr
     rows = [
         tuple(r.get(f.name) for f in API_CATALOG_SCHEMA.fields) for r in recs
     ]
-    return spark.createDataFrame(rows, schema=API_CATALOG_SCHEMA)
+    return local_df(spark, rows, API_CATALOG_SCHEMA)
 
 
 def class_map_df(spark: SparkSession, pairs=None) -> DataFrame:
     pairs = pairs if pairs is not None else FIXED_CLASS_MAP
-    return spark.createDataFrame(pairs, schema=CLASS_MAP_SCHEMA)
+    return local_df(spark, pairs, CLASS_MAP_SCHEMA)
 
 
 def render_docstring(rec: dict) -> str | None:

@@ -18,6 +18,12 @@ from graph4code_spark.synth import synth_pages
 #: push it past the bound.
 MAX_BUILD_JOBS = 35
 
+#: Spark jobs a full resume of that build (no stage executed) may
+#: submit: it measures 1, because every stage and the final table are
+#: read with the schema in their manifest entry.  Inferring the schema
+#: from the parquet footers costs a job per checkpoint (10 in all).
+MAX_RESUME_JOBS = 2
+
 
 def _quadset(df):
     return {
@@ -98,22 +104,52 @@ def test_subject_buckets_follow_data_size():
     assert b * ROWS_PER_BUCKET >= 10**12 > (b // 2) * ROWS_PER_BUCKET
 
 
+def _build_jobs(spark, pages, cfg, group, stats=None) -> int:
+    """Spark jobs one ``run_pipeline`` call submits."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, pages, cfg, stats=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cold_build_job_count(spark, tmp_path):
     """A stage boundary adds no job beyond its write: no count or
     schema-inference job after a stage write, no stats rescan after the
     sink."""
     pages = synth_pages(spark, 40, seed=12).localCheckpoint()
     pages.count()
-    sc = spark.sparkContext
-    group = "test_cold_build_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        run_pipeline(spark, pages, PipelineConfig(out_dir=str(tmp_path / "kg")))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    cfg = PipelineConfig(out_dir=str(tmp_path / "kg"))
+    n_jobs = _build_jobs(spark, pages, cfg, "test_cold_build_job_count")
     assert 0 < n_jobs <= MAX_BUILD_JOBS, n_jobs
+
+
+def test_full_resume_job_count(spark, tmp_path):
+    """A resumed stage is read with the schema its manifest entry
+    records: a full resume infers no schema, and an entry without a
+    schema is recomputed rather than read another way."""
+    pages = synth_pages(spark, 40, seed=12).localCheckpoint()
+    pages.count()
+    cfg = PipelineConfig(out_dir=str(tmp_path / "kg"))
+    first = _quadset(run_pipeline(spark, pages, cfg))
+    manifest = json.load(open(os.path.join(cfg.out_dir, "manifest.json")))
+    assert all("schema" in e for e in manifest.values())
+
+    stats: dict = {}
+    n_jobs = _build_jobs(spark, pages, cfg, "test_full_resume_job_count", stats)
+    assert stats["executed"] == []
+    assert n_jobs <= MAX_RESUME_JOBS, n_jobs
+    assert _quadset(run_pipeline(spark, pages, cfg)) == first
+
+    # an entry without a schema is not resumable
+    del manifest["08_sameas_triples"]["schema"]
+    json.dump(manifest, open(os.path.join(cfg.out_dir, "manifest.json"), "w"))
+    stats = {}
+    assert _quadset(run_pipeline(spark, pages, cfg, stats=stats)) == first
+    assert stats["executed"] == ["08_sameas_triples", "triples"]
 
 
 def test_corpus_pipeline_resume(spark, tmp_path):
