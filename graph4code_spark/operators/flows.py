@@ -76,7 +76,7 @@ extraction per snippet, emitting the reference's node/edge vocabulary —
 - one lexer for snippet text: a single regex scan (`_LEX_RE`) finds
   string literals (any prefix, single or triple quotes, escapes), `#`
   comments, brackets, ``\\`` continuations, newlines and top-level
-  `,`/`;`; every "inside a string, comment or bracket?" question reads
+  `,`; every "inside a string, comment or bracket?" question reads
   that scan.  Comments are cut; a multi-line triple-quoted literal
   keeps its delimiters and blanks its interior lines (text, not
   statements); calls and reads inside string text are inert, while
@@ -145,88 +145,98 @@ extraction per snippet, emitting the reference's node/edge vocabulary —
   `except ...:`/`else:` arms fork from the pre-try frontier,
   `finally:` joins immediately (its body chains off the join), and the
   join never adds the pre fall-through edge (the try body always runs)
-- lambdas (late r5): a top-level `f = lambda params: EXPR` desugars
-  into the equivalent local def (`def f(params): return EXPR`) before
-  line processing — call sites wire args and return values through
-  the existing interprocedural machinery, bit-identical to the def
-  form (WALA compiles a lambda as an anonymous function the binding
-  names).  A lambda passed as a CALL ARGUMENT (`df.apply(lambda x:
-  np.log(x))`, `sorted(xs, key=lambda r: r[1])`) hoists into a
-  synthetic def bound just before the call — the body's module-rooted
-  calls mint their shared nodes through the def machinery, matching
-  the reference's treatment of every lambda as its OWN entrypoint
-  (`TurtleSummary.java:57-61`: CodeBody/comprehension/lambda bodies
-  are analyzed whether or not anything invokes them), while the
-  library INVOKING the callback stays out of scope (G6 subset: no
-  return edge into the outer call).  Lambdas inside def bodies stay
-  out (subset)
-- decorators (late r5): a bare `@mod.deco` line desugars into the call
-  statement `mod.deco()` — Python applies the decorator at def time
-  (`f = mod.deco(f)`), so a catalog-rooted decorator mints its call
-  node in the def-site control flow (WALA's decorator-application
+- one AST lowering pass (`_Lowering`) ahead of the tracker: each
+  logical statement is `ast.parse`d (a block header with a `pass`
+  body) and its sugar lowered, case by node type, into the core forms
+  the tracker reads.  Lowered text is sliced from the statement itself,
+  so `source_text` keeps the snippet's spelling; hoisted intermediates
+  are `_subN_` temps, unnamed in the output.  A statement that does not
+  parse (Python 2 `print 'x'`, a stray `)`) reaches the tracker
+  unchanged
+- lambdas (late r5): a top-level `f = lambda params: EXPR` lowers to
+  the equivalent local def (`def f(params): return EXPR`) — call sites
+  wire args and return values through the existing interprocedural
+  machinery, bit-identical to the def form (WALA compiles a lambda as
+  an anonymous function the binding names).  A `Lambda` among a
+  call's ARGUMENTS (`df.apply(lambda x: np.log(x))`, `sorted(xs,
+  key=lambda r: r[1])`) hoists into a synthetic def bound just before
+  the call — the body's module-rooted calls mint their shared nodes
+  through the def machinery, matching the reference's treatment of
+  every lambda as its OWN entrypoint (`TurtleSummary.java:57-61`:
+  CodeBody/comprehension/lambda bodies are analyzed whether or not
+  anything invokes them), while the library INVOKING the callback
+  stays out of scope (G6 subset: no return edge into the outer call).
+  Lambdas inside def bodies stay out (subset)
+- decorators (late r5): a bare `@mod.deco` line (a dotted name) lowers
+  to the call statement `mod.deco()` — Python applies the decorator at
+  def time (`f = mod.deco(f)`), so a catalog-rooted decorator mints its
+  call node in the def-site control flow (WALA's decorator-application
   invoke); a parenthesized factory (`@app.route('/x')`) already flows
   through the plain call path.  Subset: the decorated def keeps its
   own name binding (wrapper identity untracked), and the factory's
   applied-result invoke stays out
-- chained assignment (late r5): `a = b = Ctor()` desugars into
-  `b = Ctor()` + `a = b` — Python assigns every target the same
-  evaluated object, so the alias copy is exact and method calls on
-  EITHER name resolve against the one producer
-- annotated assignment (late r5): `df: pd.DataFrame = RHS` desugars to
-  `df = RHS` — type hints carry no runtime dataflow, and erasing them
-  keeps the binding so later turtle extensions on df survive (one-line
-  compound clauses like `else: y = 1` are kept out by a keyword guard)
-- semicolon compound lines (late r5): a `;` outside strings and
-  brackets (per the lexer) splits a line into its statements, so
-  `import pandas; df = pd.read_csv('a')` tracks like the multi-line
-  form; one-line compound bodies (`if x: a; b`) keep their single
-  statement (subset)
+- chained assignment (late r5): a multi-target `Assign` `a = b =
+  Ctor()` lowers to `b = Ctor()` + `a = b` — Python assigns every
+  target the same evaluated object, so the alias copy is exact and
+  method calls on EITHER name resolve against the one producer
+- annotated assignment (late r5): an `AnnAssign` `df: pd.DataFrame =
+  RHS` lowers to `df = RHS` — type hints carry no runtime dataflow,
+  and erasing them keeps the binding so later turtle extensions on df
+  survive
+- semicolon compound lines (late r5): a line that parses to several
+  statements lowers each in turn, so `import pandas; df =
+  pd.read_csv('a')` tracks like the multi-line form; a one-line
+  compound body (`if x: a; b`) parses as one statement and stays whole
+  (subset)
 - `del a, b` (late r5): unbinds the named variables — WALA treats a
   post-del use as an unresolved read, so dropping every binding keeps
   stale producers from cross-wiring later receiver edges
-- condition-call hoist (final r5): a dotted call in an `if`/`while`
-  condition (`if df.dropna() is not None:`, `while m.score(X) < t:`)
-  hoists into a `_subN_` temp just before the head — the condition
-  evaluates on the pre path, so placement is exact for `if` and the
-  walrus-style one-unrolling approximation for `while`; chains unwind
-  recursively (`if df.isnull().sum() > 0:`).  `elif` conditions hoist
-  too, with the walrus hoist's one-unrolling placement mid-chain.
-  Subset: dotted callees only (`len(df.dropna())` hoists the inner
-  call, not len); a match inside a string literal is skipped
+- condition hoists (final r5): the leftmost dotted call of an
+  `if`/`elif`/`while` test (`if df.dropna() is not None:`, `while
+  m.score(X) < t:`), else its leftmost field read on a tracked name
+  (`if df.empty:`), hoists into a `_subN_` temp just before the head
+  — the condition evaluates on the pre path, so placement is exact for
+  `if` and the walrus-style one-unrolling approximation for `while`
+  and mid-chain `elif`; the head lowers again, so chains unwind
+  innermost-first (`if df.isnull().sum() > 0:`).  A `for` iterable and
+  a ternary condition hoist their field reads the same way.  Subset:
+  dotted callees only (`len(df.dropna())` hoists the inner call, not
+  len); string text is never hoisted
 - subscript-write chain RHS (final r5): `df['z'] = df['a'].apply(str)`
-  hoists the RHS chain into a temp (the chain desugar splits it), so
+  hoists the RHS chain into a temp (the chain split lowers it), so
   the field read + chain-final call mint AND the existing
   subscript-STORE path records the `z` write on df's producer —
   bit-identical to the two-line form
-- augmented field targets (final r5): `df['a'] += 1` / `df.a *= 2`
-  desugar into the exact read-then-write two-line form
+- augmented field targets (final r5): an `AugAssign` onto an
+  `Attribute`/`Subscript` (`df['a'] += 1` / `df.a *= 2`) lowers to the
+  exact read-then-write two-line form
 - call→subscript chains (final r5): `x = df.groupby('k')['v'].mean()`
   hoists the call so the field read + trailing chain mint; a second
   bracket after a subscript access (`df.iloc[0]['name']`,
-  `df['a']['b']`) re-enters the chain desugar the same way
+  `df['a']['b']`) lowers through the chain split the same way
 - complex-index inner reads (final r5): `df2 = df[df['a'] > 0]` /
   `df[df.a > 0]` hoist each inner tracked access (minting its read)
   while the mask selection keeps the path-unchanged selection binding
 - attr-chain calls on tracked values (final r5): `x = t.str.lower()` /
   `x = m.coef_.sum()` split hop-by-hop into AstPropertyReads + the
   single-hop receiver call (same tracked-base guard as pure chains)
-- walrus (late r5): `(name := EXPR)` hoists into `name = EXPR` just
-  before the statement with the group replaced by the bare name —
-  Python binds the walrus in the enclosing scope when the expression
-  evaluates, so `if (df := read_csv(...)) is not None:` tracks df in
-  the arm exactly like the two-line form.  Subset: in elif/while
-  conditions the hoist evaluates once ahead of the re-test, the same
-  one-unrolling approximation the loop projection takes
-- multi-manager with (late r5): `with A() as a, B() as b:` desugars
-  into consecutive single-manager withs — the binding is the same SSA
-  def and `with` opens no branch frame, so the split preserves
-  semantics
-- literal-tuple unpack (late r5): `a, b = X(), Y()` desugars into
-  per-element temps then alias copies (rhs evaluated fully first, so
-  `a, b = b, a` swaps exactly); each element binds to ITS OWN rhs
-  producer left-to-right (WALA's element-wise SSA over the tuple
-  literal), the temp names never reach output, and a single-call rhs
-  keeps the existing element-node path
+- walrus (late r5): a `NamedExpr` `(name := EXPR)` hoists into `name =
+  EXPR` just before the statement with the group replaced by the bare
+  name — Python binds the walrus in the enclosing scope when the
+  expression evaluates, so `if (df := read_csv(...)) is not None:`
+  tracks df in the arm exactly like the two-line form.  Subset: in
+  elif/while conditions the hoist evaluates once ahead of the re-test,
+  the same one-unrolling approximation the loop projection takes
+- multi-manager with (late r5): a `With` header with several items
+  (`with A() as a, B() as b:`) lowers to consecutive single-manager
+  withs — the binding is the same SSA def and `with` opens no branch
+  frame, so the split preserves semantics
+- literal-tuple unpack (late r5): a tuple `Assign` of a tuple literal
+  (`a, b = X(), Y()`) lowers to per-element temps then alias copies
+  (rhs evaluated fully first, so `a, b = b, a` swaps exactly); each
+  element binds to ITS OWN rhs producer left-to-right (WALA's
+  element-wise SSA over the tuple literal), the temp names never reach
+  output, and a single-call rhs keeps the existing element-node path
 - boolean-operator phi (late r5): `x = a or b` / `x = a and b` (plain
   names, chains allowed) — Python's boolean operators RETURN one of
   their operands, so the binding is the ternary-style phi: every
@@ -346,8 +356,10 @@ sequential per page so URIs are unique within the page's named graph.
 
 from __future__ import annotations
 
+import ast
+import itertools
 import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -375,23 +387,38 @@ _FROM_STAR_RE = re.compile(r"^\s*from\s+([A-Za-z_][\w.]*)\s+import\s+\*\s*$")
 _CALL_RE = re.compile(r"\b([A-Za-z_][\w.]*)\s*\(")
 _ASSIGN_RE = re.compile(r"^\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*=[^=]")
 _STR_ARG = re.compile(r"^(?:'([^']*)'|\"([^\"]*)\")$")
+#: a quoted literal with backslash escapes (`'it\'s'`)
+_ESC_STR_ARG = re.compile(r"^(['\"])((?:\\.|(?!\1)[^\\])*)\1$", re.S)
 _NUM_ARG = re.compile(r"^-?\d+(?:\.\d+)?$")
 _NAMED_ARG = re.compile(r"^([A-Za-z_]\w*)\s*=\s*(.+)$")
 _ATTR_WRITE_RE = re.compile(r"^\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=[^=]")
 _SUBSCR_WRITE_RE = re.compile(
     r"^\s*([A-Za-z_]\w*)\[\s*(?:'([^']*)'|\"([^\"]*)\")\s*\]\s*=[^=]"
 )
+
+
+def _str_arg(text: str):
+    """The value of a string-literal argument, or None.  An escaped
+    quote of the literal's own kind unescapes (`'it\\'s'` → `it's`);
+    every other backslash stays as written."""
+    m = _STR_ARG.match(text)
+    if m:
+        return m.group(1) or m.group(2) or ""
+    m = _ESC_STR_ARG.match(text)
+    return m and m.group(2).replace("\\" + m.group(1), m.group(1))
+
+
 #: the snippet lexer — ONE left-to-right scan that finds every token
 #: deciding statement structure: string literals (any prefix, single or
 #: triple quotes, backslash escapes; an unterminated literal runs to the
 #: end of its line, a triple-quoted one to the end of the text), `#`
 #: comments, brackets, `\`-newline continuations, newlines and the
-#: separators `,`/`;`.  Names and operators between tokens are skipped.
+#: separator `,`.  Names and operators between tokens are skipped.
 #: Every question of the form "is this inside a string, a comment or a
 #: bracket?" is answered from this scan.
 _LEX_RE = re.compile(
     # the leading lookahead lets the scan skip other characters quickly
-    r"(?=[rRbBuUfF'\"#()\[\]{}\\\n,;])"
+    r"(?=[rRbBuUfF'\"#()\[\]{}\\\n,])"
     r"(?:(?P<str>(?P<pre>(?<!\w)[rRbBuUfF]{1,2}|)"
     r"(?:'''[^'\\]*+(?:(?:\\.|'(?!''))[^'\\]*+)*+(?:(?P<q1>''')|\\?\Z)"
     r"|\"\"\"[^\"\\]*+(?:(?:\\.|\"(?!\"\"))[^\"\\]*+)*+(?:(?P<q2>\"\"\")|\\?\Z)"
@@ -399,7 +426,7 @@ _LEX_RE = re.compile(
     r"|\"[^\"\\\n]*+(?:\\.[^\"\\\n]*+)*+(?:\"|(?=\n)|\\?\Z)))"
     r"|(?P<com>\#[^\n]*)"
     r"|(?P<open>[(\[{])|(?P<close>[)\]}])"
-    r"|(?P<cont>\\\r?\n)|(?P<nl>\n)|(?P<sep>[,;]))",
+    r"|(?P<cont>\\\r?\n)|(?P<nl>\n)|(?P<sep>,))",
     re.S,
 )
 #: max physical lines a bracket or `\` join may span (an unclosed paren
@@ -415,8 +442,8 @@ def _logical_lines(lines: list[str]):
     brackets or after a `\\` for at most `_MAX_SPAN` lines, and across
     every newline inside a closed string literal.  Returns ``(first
     line, kept physical lines, statement text)`` per statement.
-    Comments are cut, with the blanks before them (a trailing comment
-    would break every `$`-anchored desugar); a multi-line triple-quoted
+    Comments are cut, with the blanks before them (the tracker's
+    statement regexes are `$`-anchored); a multi-line triple-quoted
     literal keeps only its delimiters — the interior is text, never
     statements, so its lines are blanked.  Explicit `\\` continuations splice
     token-tight in the statement text (`x = pandas.\\` + `read_csv(…)`
@@ -465,39 +492,29 @@ def _logical_lines(lines: list[str]):
     return out
 
 
-def _split_top(text: str, sep: str) -> list[tuple[int, str]]:
-    """Split ``text`` at each ``sep`` (`,` or `;`) outside strings and
-    brackets: ``(offset, part)`` pairs, parts unstripped."""
-    if sep not in text:
-        return [(0, text)]
-    out, depth, start = [], 0, 0
-    for m in _LEX_RE.finditer(text):
+def _args(text: str) -> list[tuple[int, str]]:
+    """Top-level comma items of a call's argument text, split outside
+    strings and brackets: ``(offset, item)`` per non-blank item,
+    stripped, offset of its first char."""
+    parts, depth, start = [], 0, 0
+    for m in _LEX_RE.finditer(text) if "," in text else ():
         kind = m.lastgroup
         if kind == "open":
             depth += 1
         elif kind == "close":
             depth = max(0, depth - 1)
-        elif kind == "sep" and not depth and m.group() == sep:
-            out.append((start, text[start:m.start()]))
+        elif kind == "sep" and not depth:
+            parts.append((start, text[start:m.start()]))
             start = m.end()
-    out.append((start, text[start:]))
-    return out
+    parts.append((start, text[start:]))
+    return [(off + len(p) - len(p.lstrip()), p.strip())
+            for off, p in parts if p.strip()]
 
 
-def _args(text: str) -> list[tuple[int, str]]:
-    """Top-level comma items of a call's argument text: ``(offset,
-    item)`` per non-blank item, stripped, offset of its first char."""
-    return [
-        (off + len(p) - len(p.lstrip()), p.strip())
-        for off, p in _split_top(text, ",") if p.strip()
-    ]
-
-
-def _close_at(text: str, start: int, comma: bool = False) -> int:
+def _close_at(text: str, start: int) -> int:
     """Offset of the first closing bracket at or after ``start`` that
-    has no opener there (with ``comma``, of a top-level `,` if one comes
-    first) — the end of a call's argument text; ``len(text)`` when the
-    bracket never closes."""
+    has no opener there — the end of a call's argument text;
+    ``len(text)`` when the bracket never closes."""
     depth = 0
     for m in _LEX_RE.finditer(text, start):
         kind = m.lastgroup
@@ -507,8 +524,6 @@ def _close_at(text: str, start: int, comma: bool = False) -> int:
             if not depth:
                 return m.start()
             depth -= 1
-        elif comma and kind == "sep" and not depth and m.group() == ",":
-            return m.start()
     return len(text)
 
 
@@ -537,6 +552,606 @@ def _inert_at(text: str, pos: int) -> bool:
     return seg.count("{") <= seg.count("}")
 
 
+# ---------------------------------------------------------------------------
+# the lowering pass: snippet sugar → the core statements the tracker reads
+# ---------------------------------------------------------------------------
+#: binary operators whose subscript operands hoist (`x = df['a'] * k`)
+_HOIST_BINOPS = (ast.Add, ast.Sub, ast.Mult, ast.Div, ast.Mod)
+#: the only parents a hoisted operand may have for the next operand to
+#: hoist in the same step: its temp can then start no new hoist
+_OPERATORS = (ast.BoolOp, ast.Compare, ast.UnaryOp, ast.BinOp)
+#: most hops an attribute chain splits into (a subset bound)
+_MAX_HOPS = 40
+#: most lowering steps one statement takes; each re-parses what is left,
+#: so a 1000-link call chain in a condition must not take 1000 of them
+_MAX_STEPS = 64
+#: what `ast.parse` raises on text that is not Python 3, or nested too
+#: deep for its parser stack (MemoryError) or AST construction (RecursionError)
+_UNPARSED = (SyntaxError, ValueError, RecursionError, MemoryError)
+
+
+def _span(text: str, node) -> tuple[int, int]:
+    """Character offsets of ``node`` in the ``text`` it was parsed from.
+    ast counts lines at ``\\r\\n``, ``\\r`` and ``\\n`` and columns in
+    UTF-8 bytes, so a slice by ``col_offset`` alone breaks on non-ASCII
+    text."""
+    if "\r" in text:  # same length, ast's line breaks
+        text = text.replace("\r\n", " \n").replace("\r", "\n")
+    out = []
+    for ln, col in ((node.lineno, node.col_offset),
+                    (node.end_lineno, node.end_col_offset)):
+        bol = 0
+        for _ in range(ln - 1):
+            bol = text.index("\n", bol) + 1
+        if not text.isascii():
+            col = len(text[bol:].encode()[:col].decode())
+        out.append(bol + col)
+    return out[0], out[1]
+
+
+def _pos(node):
+    return node.lineno, node.col_offset
+
+
+def _nodes(node):
+    """``(node, parent)`` for ``node`` and everything under it, outside
+    f-strings (string text is never lowered)."""
+    todo = [(node, None)]
+    while todo:
+        n, p = todo.pop()
+        yield n, p
+        if type(n) is not ast.JoinedStr:
+            todo.extend((c, n) for c in ast.iter_child_nodes(n))
+
+
+def _arg_lambdas(node):
+    """The lambdas under a call's arguments, outside other lambdas."""
+    todo = [(node, False)]
+    while todo:
+        n, arg = todo.pop()
+        if type(n) is ast.Lambda:
+            if arg:
+                yield n
+        elif type(n) is ast.Call:
+            todo.append((n.func, arg))
+            todo += [(a, True) for a in n.args]
+            todo += [(k.value, True) for k in n.keywords]
+        else:
+            todo += [(c, arg) for c in ast.iter_child_nodes(n)]
+
+
+def _chain(node):
+    """``(root, links)`` of a postfix expression: its attribute,
+    subscript and call links, innermost first."""
+    links = []
+    while type(node) in (ast.Attribute, ast.Subscript, ast.Call):
+        links.append(node)
+        node = node.func if type(node) is ast.Call else node.value
+    links.reverse()
+    return node, links
+
+
+def _hops(links) -> int:
+    """How many attribute links a chain starts with."""
+    k = 0
+    while k < len(links) and type(links[k]) is ast.Attribute:
+        k += 1
+    return k
+
+
+def _has(nodes, kinds) -> bool:
+    """A node of ``kinds`` among ``nodes`` or under them."""
+    todo = list(nodes)
+    while todo:
+        n = todo.pop()
+        if isinstance(n, kinds):
+            return True
+        if type(n) not in (ast.Name, ast.Constant):
+            todo.extend(ast.iter_child_nodes(n))
+    return False
+
+
+def _flat(link) -> bool:
+    """A call with no call among its arguments, or a subscript with no
+    bracket in its index — a link that splits off in one step."""
+    if type(link) is ast.Call:
+        return not _has([*link.args, *(k.value for k in link.keywords)],
+                        ast.Call)
+    if type(link) is ast.Subscript:
+        return not _has([link.slice], (ast.Subscript, ast.List, ast.ListComp))
+    return True
+
+
+def _dotted(node, dots=0) -> bool:
+    """A plain name or an attribute chain of names, ≥ ``dots`` hops."""
+    while type(node) is ast.Attribute:
+        node, dots = node.value, dots - 1
+    return type(node) is ast.Name and dots <= 0
+
+
+def _tail(links, subscripts=True) -> bool:
+    """Links a chain split leaves on its temp: `.name`, `.name(args)`
+    with flat args and, with ``subscripts``, a flat `[index]`."""
+    for i, t in enumerate(links):
+        if type(t) is ast.Call:
+            if not (i and type(links[i - 1]) is ast.Attribute and _flat(t)):
+                return False
+        elif type(t) is ast.Subscript and not (subscripts and _flat(t)):
+            return False
+    return True
+
+
+def _access(links) -> int:
+    """Index of the subscript in a `v[key]` / `v.attr[key]` chain head,
+    or -1."""
+    k = int(bool(links) and type(links[0]) is ast.Attribute)
+    return k if len(links) > k and type(links[k]) is ast.Subscript else -1
+
+
+def _subscr_chain(node) -> bool:
+    """`v.attr[key].name(args)…`: one flat subscript on a dotted name with
+    at least one attribute link after it."""
+    root, links = _chain(node)
+    k = _hops(links)
+    return (type(root) is ast.Name and k < len(links) - 1
+            and type(links[k]) is ast.Subscript and _flat(links[k])
+            and _tail(links[k + 1:], subscripts=False))
+
+
+def _str_key(node) -> bool:
+    """`v['key']` on a plain name."""
+    return (type(node) is ast.Subscript and type(node.value) is ast.Name
+            and type(node.slice) is ast.Constant
+            and type(node.slice.value) is str)
+
+
+def _number(node) -> bool:
+    return (type(node) is ast.Constant
+            and type(node.value) in (int, float))
+
+
+def _operand(node) -> bool:
+    """A binop operand the subscript hoist takes: a name, a number, or a
+    flat subscript of `v` / `v.attr`."""
+    if type(node) is ast.Subscript:
+        return _dotted(node.value) and not _dotted(node.value, 2) \
+            and _flat(node)
+    return type(node) is ast.Name or _number(node)
+
+
+def _hoists(expr, tracked, calls=True):
+    """The operands of a condition or index to hoist next, in source
+    order: its dotted calls with flat args (`df.isnull()`), or without
+    any (or without ``calls``) its field reads on tracked names — a
+    `v.attr` that is not the base of another link, and `v['key']`.
+    One hoist at a time would re-lower the statement after each; an
+    operand under operators only cannot feed a new hoist, so the next
+    one joins it, up to the first that could."""
+    up = {}
+    found, reads = [], []
+    for n, p in _nodes(expr):
+        up[id(n)] = p
+        if type(n) is ast.Call:
+            if calls and _dotted(n.func, 1) and _flat(n):
+                found.append(n)
+        elif type(n) is ast.Attribute:
+            if (type(n.value) is ast.Name and n.value.id in tracked
+                    and not (type(p) in (ast.Attribute, ast.Subscript)
+                             and p.value is n)
+                    and not (type(p) is ast.Call and p.func is n)):
+                reads.append(n)
+        elif _str_key(n) and n.value.id in tracked:
+            reads.append(n)
+    out = []
+    for n in sorted(found or reads, key=_pos):
+        out.append(n)
+        p = up[id(n)]
+        while type(p) in _OPERATORS:
+            p = up[id(p)]
+        if p is not None:
+            break
+    return out
+
+
+class _Lowering:
+    """Lower a snippet's logical statements to the core forms the
+    tracker reads.  Each statement is `ast.parse`d (a block header with
+    a `pass` body, an `elif` as an `if`) and its sugar rewritten,
+    case by node type, into statements that keep its source span.
+    Emitted text is sliced from the statement itself, redundant
+    parentheses included.  A statement that does not parse, such as
+    Python 2 `print 'x'`, passes through unchanged.
+
+    Hoisted intermediates are `_subN_` temps, a tuple unpack's elements
+    `_unpN_i` and a lifted lambda `_lamN_`, numbered by one counter per
+    snippet in emission order; `_subN_` names are stripped from
+    value_names at page end, since WALA gives such an intermediate an
+    SSA value with no name.  Guards read the tracker's live bindings
+    (`env()`) when a statement lowers, after every statement before it
+    has been tracked.  The lowerings, in the order they are tried:
+
+    - `;`-separated statements lower one by one; a one-line compound
+      body (`if x: a; b`) stays whole.
+    - walrus `(name := EXPR)` → `name = EXPR` just before the
+      statement, the group replaced by the name: Python binds the walrus
+      in the enclosing scope when the expression evaluates.  In
+      elif/while heads this is the one-unrolling approximation the loop
+      projection already takes.
+    - annotated assignment `df: T = RHS` → `df = RHS` (hints carry no
+      runtime dataflow).
+    - `if`/`elif`/`while` heads hoist the leftmost dotted call with flat
+      args (`if df.dropna() is not None:`), else the leftmost field read
+      on a tracked name (`if df.empty:`, `if df['a'] is None:`), into a
+      temp before the head; a `for` iterable hoists its field reads
+      (iterable calls keep the tracker's for-over-call path).  The head
+      lowers again, so chains unwind innermost-first (`if
+      df.isnull().sum() > 0:`).  Bare callees (`len(…)`) stay put.
+    - `with A() as a, B() as b:` → one `with` per item (`with` opens
+      no branch frame, so the split keeps semantics).
+    - a bare decorator `@mod.deco` → the call `mod.deco()`: Python
+      applies it at def time, so a catalog decorator mints its call in
+      the def-site control flow.  A factory (`@app.route('/x')`) is
+      already a call; the decorated def keeps its own name.
+    - assignment to a name: a ternary hoists the field reads of its
+      condition (it always evaluates; the arms keep the tracker's phi);
+      chained `a = b = RHS` → `b = RHS` + `a = b` (every target gets
+      the one evaluated object); then the chain splits below, a binop
+      of subscripts, a complex index, and a top-level `f = lambda
+      params: EXPR` → `def f(params):` + `    return EXPR`.
+    - postfix chains, assigned or bare:
+      - call → subscript: `x = df.groupby('k')['v'].mean()` hoists the
+        call, so the subscript chain lowers on its value;
+      - call arguments: at a call of a local def, call-shaped args hoist
+        into temps so its G3/G8 wiring sees bound values; at any call,
+        subscript-chain args (`pandas.concat(df['c'].values)`) hoist.
+        Args evaluate before the call, so the order is exact;
+      - attribute chains on a tracked name (`x = m.coef_.T`, `x =
+        s.str.lower()`, `df.plot.bar()`) split hop by hop into the
+        single-attribute reads the tracker mints; a call-ended chain
+        needs a base with no field store or container binding;
+      - subscript chains (`x = df['c'].sum()`, `x = df.iloc[0]['n']`,
+        `df['a'].plot()`): the access hoists and the chain extends the
+        turtle, instead of a tail-token catalog guess.  A container base
+        (`models[0].fit(x)`) stays whole for the tracker's element
+        receiver, and a bare chain needs a tracked base.
+    - binop of subscripts (`x = df['a'] + df['b']`, `df['n'] = df['a']
+      * k`): each subscript operand hoists, so its read node mints.  The
+      string-key × string-key form stays whole for the semForms
+      expression miner.
+    - a complex index (`df2 = df[df['a'] > 0]`) hoists its dotted calls,
+      then its field reads on tracked names; the mask selection stays.
+    - a subscript write of a subscript-chain value (`df['z'] =
+      df['a'].apply(str)`) hoists the value for the tracker's store.
+    - augmented field target `df['a'] += 1` / `df.a *= 2` → read into a
+      temp, then `df['a'] = _subN_ + 1` (read, evaluate, write).
+    - tuple unpack of a tuple literal `a, b = X(), Y()` → `_unpN_0 =
+      X()`, `_unpN_1 = Y()`, then `a = _unpN_0`, `b = _unpN_1`: the
+      whole rhs evaluates first, so `a, b = b, a` swaps.
+    - last, a lambda among the call arguments of a top-level statement
+      hoists into a def `_lamN_` bound just before it (lambda bodies are
+      entrypoints, `TurtleSummary.java:57-61`); the library invoking it
+      stays out of scope, so no return edge flows into the call.
+    """
+
+    def __init__(self, env):
+        # env() -> (var_producer, var_members, var_fields, local_defs)
+        self.env = env
+        self.n = 0
+
+    def tmp(self, kind="sub"):
+        self.n += 1
+        return f"_{kind}{self.n - 1}_"
+
+    def __call__(self, stmt: str):
+        """Yield the core statements ``stmt`` lowers to."""
+        for _ in range(_MAX_STEPS):  # a loop, not recursion: a long tail
+            stmt = yield from self.step(stmt)
+            if stmt is None:
+                return
+        yield stmt
+
+    def step(self, stmt: str):
+        """Yield the statements that lower ahead of ``stmt``; return the
+        statement left to lower after them, or None."""
+        text = stmt.lstrip()
+        ind = stmt[:len(stmt) - len(text)]
+        text = text.rstrip()
+        if not text:
+            yield stmt
+            return None
+        if text[0] == "@":
+            try:
+                deco = ast.parse(text[1:], mode="eval").body
+            except _UNPARSED:
+                deco = None
+            yield f"{ind}{text[1:]}()" if _dotted(deco) else stmt
+            return None
+        lead, code = "", text
+        if text.endswith(":"):
+            if text.startswith("elif"):
+                lead, text = "el", text[2:]
+            code = text + " pass"
+        try:
+            body = ast.parse(code).body
+        except _UNPARSED:
+            body = None
+        if not body:
+            yield stmt
+            return None
+        st = _Stmt(body[-1], ind, ind + lead, text, code is not text)
+        if len(body) > 1 or text.endswith(";"):
+            for s in body[:-1]:
+                yield from self(ind + st.seg(s))
+            return ind + st.seg(body[-1])
+        out = self.lower(st)
+        if out is None:
+            yield stmt
+            return None
+        return out if type(out) is str else (yield from out)
+
+    def lower(self, st):
+        """The lowering of one parsed statement: the statement it
+        rewrites to, a generator like `step`'s, or None when it is
+        already a core form."""
+        s = st.node
+        walrus = ":=" in st.text and min(
+            ((n, p) for n, p in _nodes(s) if type(n) is ast.NamedExpr),
+            key=lambda np: _pos(np[0]), default=None)
+        if walrus:
+            w, p = walrus
+            return self.splice(st, [(st.src(w.value, w), st.extent(w, p),
+                                     w.target.id)])
+        case = _CASES.get(type(s))
+        out = case(self, st, *self.env()) if case else None
+        if out is None and not st.ind and "lambda" in st.text:
+            lam = min(_arg_lambdas(s), key=_pos, default=None)
+            params = lam and st.params(lam, defaults=False)
+            if params is not None:
+                out = self.lift(st, lam, params)
+        return out
+
+    def annotated(self, st, *_):
+        s = st.node
+        if s.value is None or type(s.target) is not ast.Name:
+            return None
+        return f"{st.ind}{s.target.id} = {st.src(s.value, s)}"
+
+    def condition(self, st, tracked, *_):
+        s = st.node
+        if not st.header:
+            return None
+        hits = (_hoists(s.iter, tracked, calls=False)
+                if type(s) is ast.For else _hoists(s.test, tracked))
+        return self.hoist(st, hits) if hits else None
+
+    def with_items(self, st, *_):
+        s = st.node
+        if not (st.header and len(s.items) > 1 and all(
+                type(it.optional_vars) is ast.Name for it in s.items)):
+            return None
+        return itertools.chain.from_iterable(
+            self(f"{st.ind}with {st.text[a:b]}:")
+            for a, b in ((st.span(it.context_expr)[0],
+                          st.span(it.optional_vars)[1]) for it in s.items))
+
+    def expr(self, st, *env):
+        return self.postfix(st, st.node.value, False, *env)
+
+    def assign(self, st, tracked, members, fields, defs):
+        s, ts = st.node, st.node.targets
+        t, v = ts[0], s.value
+        if type(t) is ast.Name:
+            cond = "else" in st.text and min(
+                (n.test for n, _ in _nodes(v) if type(n) is ast.IfExp),
+                key=_pos, default=None)
+            hits = (_hoists(cond, tracked, calls=False)
+                    if cond and not _has([cond], ast.Lambda) else ())
+            if hits:
+                return self.hoist(st, hits)
+            if len(ts) > 1 and type(ts[1]) is ast.Name:
+                m = 1  # the last of the leading name targets
+                while m + 1 < len(ts) and type(ts[m + 1]) is ast.Name:
+                    m += 1
+                return itertools.chain(
+                    self(st.ind + st.text[st.span(ts[m])[0]:]),
+                    (f"{st.ind}{ts[i].id} = {ts[i + 1].id}"
+                     for i in range(m - 1, -1, -1)))
+        if len(ts) > 1:
+            return None
+        if type(t) is ast.Name:
+            out = self.postfix(st, v, True, tracked, members, fields, defs)
+            if out is not None:
+                return out
+        if (type(v) is ast.BinOp and isinstance(v.op, _HOIST_BINOPS)
+                and (type(t) is ast.Name
+                     or (type(t) is ast.Subscript
+                         and type(t.value) is ast.Name and _flat(t)))):
+            ops = [v.left, v.right]
+            subs = [o for o in ops if type(o) is ast.Subscript]
+            if (subs and all(map(_operand, ops))
+                    and not ((type(t) is ast.Name or _str_key(t))
+                             and all(map(_str_key, ops))
+                             and type(v.op) is not ast.Mod)):
+                return self.hoist(st, subs)
+        if type(t) is ast.Name:
+            if type(v) is ast.Subscript and type(v.value) is ast.Name:
+                hits = _hoists(v.slice, tracked)
+                if hits:
+                    return self.hoist(st, hits)
+            params = (st.params(v) if type(v) is ast.Lambda and not st.ind
+                      else None)
+            if params is not None:
+                return (f"def {t.id}({params}):",
+                        f"    return {st.src(v.body, v)}")
+        if _str_key(t) and _subscr_chain(v):
+            return self.hoist(st, [v])
+        if (type(t) is ast.Tuple and type(v) is ast.Tuple
+                and len(v.elts) == len(t.elts) > 1
+                and all(type(e) is ast.Name for e in t.elts)
+                and not any(type(e) is ast.Starred for e in v.elts)
+                and not (st.grouped(t) or st.grouped(v))):
+            return self.unpack(st.ind, [e.id for e in t.elts],
+                               [st.src(e, v) for e in v.elts])
+        return None
+
+    def aug_assign(self, st, *_):
+        s = st.node
+        t, v = s.target, s.value
+        if not ((type(t) is ast.Attribute and type(t.value) is ast.Name)
+                or _str_key(t)):
+            return None
+        a, b = st.extent(v, s)
+        op = st.text[st.span(t)[1]:a].strip(" \t\n()")[:-1]  # `+=` → `+`
+        rhs = st.text[a:b]
+        if rhs != st.seg(v) or not (
+                _dotted(v) or _number(v)
+                or (type(v) is ast.Constant and type(v.value) is str)
+                or (type(v) is ast.Subscript and _dotted(v.value)
+                    and _flat(v))
+                or (type(v) is ast.UnaryOp and type(v.op) is ast.USub
+                    and _number(v.operand))):
+            rhs = f"({rhs})"
+        return self.aug(st.ind, st.seg(t), op, rhs)
+
+    def postfix(self, st, value, assigned, tracked, members, fields, defs):
+        """Split an assigned (``x = …``) or bare postfix chain."""
+        root, links = _chain(value)
+        if type(root) is not ast.Name or not links:
+            return None
+        base = root.id
+        plain = base in tracked and base not in fields and base not in members
+        k = _hops(links)
+        call = links[k] if k < len(links) and type(links[k]) is ast.Call \
+            else None
+        if (assigned and call and k + 1 < len(links)
+                and type(links[k + 1]) is ast.Subscript
+                and _flat(call) and _tail(links[k + 1:])):
+            return self.hoist(st, [call])
+        if call is value:
+            args = call.args + [kw.value for kw in call.keywords if kw.arg]
+            if call.keywords:
+                args.sort(key=_pos)
+            hits = [a for a in args if not k and base in defs
+                    and type(a) is ast.Call and _dotted(a.func) and _flat(a)]
+            hits = hits or [a for a in args if _subscr_chain(a)]
+            if hits:
+                return self.hoist(st, hits)
+            if plain and 2 <= k <= _MAX_HOPS and _flat(call):
+                return self.hoist(st, links[:1])
+        if (assigned and 2 <= k == len(links) <= _MAX_HOPS
+                and base in tracked):
+            return self.hoist(st, links[:1])
+        j = _access(links)
+        if (0 <= j < len(links) - 1
+                and (plain or assigned and base not in members)
+                and _flat(links[j]) and _tail(links[j + 1:])):
+            return self.hoist(st, [links[j]])
+        return None
+
+    def splice(self, st, hoists):
+        """Assign each hoisted ``(text, span, name)`` to ``name`` (a fresh
+        temp when None) just before the statement; return the statement
+        with each span replaced by its name."""
+        text, edits = st.text, []
+        for rhs, span, name in hoists:
+            name = name or self.tmp()
+            yield from self(f"{st.ind}{name} = {rhs}")
+            edits.append((span, name))
+        for (a, b), name in sorted(edits, reverse=True):
+            text = text[:a] + name + text[b:]
+        return st.pre + text
+
+    def hoist(self, st, nodes):
+        return self.splice(st, [(st.seg(n), st.span(n), None)
+                                for n in nodes])
+
+    def aug(self, ind, target, op, rhs):
+        tmp = self.tmp()
+        yield from self(f"{ind}{tmp} = {target}")
+        return f"{ind}{target} = {tmp} {op} {rhs}"
+
+    def unpack(self, ind, names, parts):
+        base = self.tmp("unp")
+        for i, part in enumerate(parts):
+            yield from self(f"{ind}{base}{i} = {part}")
+        for i, name in enumerate(names):
+            yield f"{ind}{name} = {base}{i}"
+
+    def lift(self, st, lam, params):
+        name = self.tmp("lam")
+        yield f"def {name}({params}):"
+        yield f"    return {st.src(lam.body, lam)}"
+        a, b = st.span(lam)
+        return st.pre + st.text[:a] + name + st.text[b:]
+
+
+class _Stmt(NamedTuple):
+    """One parsed statement: its node, indentation, the prefix the parse
+    left off (``ind`` plus the `el` of an `elif`), its parsed text and
+    whether it is a block header."""
+    node: ast.stmt
+    ind: str
+    pre: str
+    text: str
+    header: bool
+
+    def span(self, node):
+        return _span(self.text, node)
+
+    def extent(self, node, parent=None):
+        """The span of ``node`` widened over the parentheses that only
+        group it: those inside ``parent``'s own brackets (the parentheses
+        of a call are not its argument's)."""
+        text = self.text
+        a, b = self.span(node)
+        lo, hi = self.span(parent) if parent is not None else (0, len(text))
+        if type(parent) is ast.Call and node is not parent.func:
+            lo, hi = text.index("(", self.span(parent.func)[1]) + 1, hi - 1
+        while True:
+            i = len(text[:a].rstrip()) - 1
+            j = len(text) - len(text[b:].lstrip())
+            if not (lo <= i and j < hi and text[i] == "("
+                    and text[j] == ")"):
+                return a, b
+            a, b = i, j + 1
+
+    def seg(self, node):
+        a, b = self.span(node)
+        return self.text[a:b]
+
+    def src(self, node, parent=None):
+        """The text of ``node``'s extent in ``parent`` (None: the whole
+        statement)."""
+        a, b = self.extent(node, parent)
+        return self.text[a:b]
+
+    def grouped(self, tup):
+        """A tuple written in parentheses of its own."""
+        return self.extent(tup.elts[0], tup)[0] > self.span(tup)[0]
+
+    def params(self, lam, defaults=True):
+        """The parameter text of ``lam`` for a `def` line, or None when a
+        default is not a plain name or constant (or, without
+        ``defaults``, when there is any default)."""
+        ds = [d for d in (*lam.args.defaults, *lam.args.kw_defaults) if d]
+        if ds and not (defaults and all(type(d) in (ast.Name, ast.Constant)
+                                        for d in ds)):
+            return None
+        a = self.span(lam)[0] + len("lambda")
+        b = self.extent(lam.body, lam)[0]
+        return self.text[a:b].rstrip()[:-1].strip()
+
+
+#: the statement-kind cases of the lowering
+_CASES = {
+    ast.AnnAssign: _Lowering.annotated,
+    ast.If: _Lowering.condition, ast.While: _Lowering.condition,
+    ast.For: _Lowering.condition, ast.With: _Lowering.with_items,
+    ast.Assign: _Lowering.assign, ast.AugAssign: _Lowering.aug_assign,
+    ast.Expr: _Lowering.expr,
+}
+
+
 _ATTR_READ_RE = re.compile(
     r"(?<![\w.])([A-Za-z_]\w*)\.([A-Za-z_]\w*)(?![\w.])(?!\s*\()"
 )
@@ -553,39 +1168,6 @@ _CLASS_RE = re.compile(
     r"^class\s+([A-Za-z_]\w*)\s*"
     r"(?:\(\s*([A-Za-z_]\w*)?[^)]*\))?\s*:\s*$"
 )
-#: top-level `f = lambda x, y: EXPR` (late r5) — desugared into the
-#: equivalent local def (`def f(x, y): return EXPR`) before line
-#: processing, so call sites wire args/returns through the existing
-#: interprocedural machinery (WALA compiles a lambda as an anonymous
-#: function the binding names — same call-graph shape)
-_LAMBDA_RE = re.compile(
-    r"^([A-Za-z_]\w*)\s*=\s*lambda\s*([^:()]*):\s*(.+?)\s*$"
-)
-#: bare decorator `@mod.deco` on its own line (late r5) — desugared
-#: into the call statement `mod.deco()`: Python evaluates the decorator
-#: and APPLIES it at def time (`f = mod.deco(f)`), so a catalog-rooted
-#: decorator mints its call node in the def-site control flow exactly
-#: like WALA's decorator-application invoke.  The function argument is
-#: untracked at decoration time (same edges as the zero-arg form) and
-#: the def keeps its own name binding for interprocedural wiring — the
-#: wrapper identity is the documented subset.  A PARENTHESIZED
-#: decorator factory (`@app.route('/x')`) already flows through the
-#: plain call path (factory call node; the second, applied-result
-#: invoke stays out).  The name guard keeps matrix-multiply `a @ b`
-#: and decorators-with-args out of this branch.
-_BARE_DECORATOR_RE = re.compile(r"^(\s*)@([A-Za-z_][\w.]*)\s*$")
-#: chained assignment `a = b = RHS` (late r5) — desugared into
-#: `b = RHS` + `a = b` (Python evaluates RHS once and assigns every
-#: target the same object, so the alias copy is exact); `(?!=)` keeps
-#: comparison operators (`a = b == c`) out
-_CHAIN_ASSIGN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*\s*=(?!=).*)$"
-)
-#: a `lambda` used as a call ARGUMENT (late r5) — located after `(` or
-#: `,`, optionally keyword-passed (`key=lambda r: …`); hoisted into a
-#: synthetic top-level def bound to a fresh name, with the argument
-#: replaced by that name
-_LAMBDA_ARG_RE = re.compile(r"[(,]\s*(?:[A-Za-z_]\w*\s*=\s*)?(lambda)\b")
 #: `x = a or b [or c …]` / mixed and/or over plain names (late r5) —
 #: Python's boolean operators RETURN one of their operands, so the
 #: binding is the ternary-style phi: every tracked operand unions into
@@ -595,116 +1177,12 @@ _BOOLOP_RE = re.compile(
     r"((?:\s+(?:or|and)\s+[A-Za-z_]\w*)+)\s*$"
 )
 _BOOLOP_OPERAND_RE = re.compile(r"(?:or|and)\s+([A-Za-z_]\w*)")
-#: multi-manager `with A() as a, B() as b:` (late r5) — desugared into
-#: consecutive single-manager withs (the binding is the same SSA def;
-#: `with` opens no branch frame, so the split is semantics-preserving)
-_WITH_MULTI_RE = re.compile(r"^(\s*)with\s+(.+?)\s*:\s*$")
-_WITH_ITEM_RE = re.compile(r"^.+\s+as\s+[A-Za-z_]\w*$")
-#: literal-tuple unpack `a, b = X(), Y()` (late r5) — desugared into
-#: per-element temps then alias copies (`_unp0_0 = X()` … `a = _unp0_0`
-#: …), matching Python's evaluate-whole-rhs-first semantics exactly
-#: (so `a, b = b, a` swaps cleanly); single-call rhs keeps the existing
-#: element-node path
-_TUPLE_TARGETS_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)+)\s*=(?!=)\s*(\S.*)$"
-)
-#: annotated assignment `df: pd.DataFrame = RHS` (late r5) — the
-#: annotation is erased (desugar to `df = RHS`): type hints carry no
-#: runtime dataflow, and losing the binding loses every later turtle
-#: extension on df.  The keyword guard keeps one-line compound clauses
-#: (`else: y = 1`) out of this branch.
-_ANNOTATED_ASSIGN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)\s*:\s*[A-Za-z_][\w.\[\], ]*?\s*=(?!=)\s*(\S.*)$"
-)
-_PY_STMT_KEYWORDS = frozenset((
-    "if", "elif", "else", "try", "except", "finally", "while", "for",
-    "with", "def", "class", "lambda", "return", "yield", "assert",
-    "import", "from", "global", "nonlocal", "del", "pass", "raise",
-))
-#: walrus `(name := EXPR)` (late r5) — hoisted into `name = EXPR`
-#: just before the statement, the parenthesized group replaced by the
-#: bare name: Python binds the walrus in the enclosing scope when the
-#: expression evaluates, which for a top-level statement is exactly
-#: "before this line runs".  Subset: inside elif/while conditions the
-#: hoist evaluates once ahead of the re-test — the same one-unrolling
-#: approximation the loop projection already takes.
-_WALRUS_RE = re.compile(r"\(\s*([A-Za-z_]\w*)\s*:=\s*")
 #: `del a, b` (late r5) — unbinds the named variables: WALA treats a
 #: post-del use as an unresolved read, so dropping every binding keeps
 #: stale producers from cross-wiring later receiver edges
 _DEL_STMT_RE = re.compile(
     r"^\s*del\s+([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*$"
 )
-#: a dotted call with paren-free args inside an `if`/`while` condition
-#: (final r5) — `if df.dropna() is not None:` / `while m.score(X) < t:`:
-#: the call hoists into a `_subN_` temp just before the head (the
-#: condition always evaluates on the pre path when control reaches the
-#: statement, so the placement is exact for `if`; for `while` the hoist
-#: evaluates once ahead of the re-test — the same one-unrolling
-#: approximation the walrus hoist and the loop projection take).
-#: Innermost-first: recursion unwinds outer chain hops
-#: (`if df.isnull().sum() > 0:` hoists isnull then `_sub_.sum()`).
-#: Subset: dotted callees only (bare `len(...)`/ctor calls stay put,
-#: their ARGS still hoist); `elif` heads hoist with the same
-#: one-unrolling placement the walrus hoist already takes mid-chain
-#: (the frame machinery chains the hoisted binding before the arm —
-#: verified against the walrus-in-elif shape); matches inside a string
-#: literal of the condition are skipped.
-_COND_CALL_RE = re.compile(
-    r"(?<![\w.)\]])([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)+)\(([^()]*)\)"
-)
-#: a field access on a TRACKED base inside an `if`/`while` condition
-#: (final r5) — `if df.empty:` / `if df['a'] is None:`: hoisted like
-#: the condition calls above, minting the AstPropertyRead the
-#: assignment form already mints.  Single attr hop only (chains stay
-#: out; a subscript may carry a trailing chain — recursion unwinds it
-#: through the subscript-chain desugar).  The tracked-base guard keeps
-#: module paths (`pd.DataFrame` in an isinstance) from matching.
-_COND_READ_RE = re.compile(
-    r"(?<![\w.)\]])([A-Za-z_]\w*)"
-    r"(\.[A-Za-z_]\w*(?![\w.(\[])|\[\s*(?:'[^']*'|\"[^\"]*\")\s*\])"
-)
-#: augmented assignment onto a FIELD target (final r5) — `df['a'] += 1`
-#: / `df.a *= 2`: desugars into the exact read-then-write two-line form
-#: (`_subN_ = TARGET` then `TARGET = _subN_ op EXPR`), minting the
-#: field-read node and the store on the base's producer.  Python's
-#: evaluation order (read target, evaluate RHS, write) is preserved.
-#: Name-target augmented (`x += a`) keeps the existing G7 fold.
-_AUG_FIELD_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*(?:\.[A-Za-z_]\w*|\[\s*(?:'[^']*'|\"[^\"]*\")\s*\]))"
-    r"\s*(\*\*|//|>>|<<|[+\-*/%&|^])=\s*(.+?)\s*$",
-    re.S,
-)
-#: RHS atoms that need no defensive parens in the aug-field desugar
-_AUG_ATOM_RE = re.compile(
-    r"^(?:[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*(?:\[[^\][]+\])?"
-    r"|-?\d+(?:\.\d+)?|'[^']*'|\"[^\"]*\")$"
-)
-
-
-def _split_lambda_arg(stmt: str):
-    """Locate ONE ``lambda params: BODY`` used as a call argument and
-    excise it: returns ``(head, params, body, tail)`` or None.  BODY may
-    itself contain calls — it ends at the first ``,`` or closing
-    bracket at the lambda's own paren depth.  Parenthesized/default
-    params stay out (subset)."""
-    m = _LAMBDA_ARG_RE.search(stmt)
-    if not m:
-        return None
-    start = m.start(1)
-    colon = stmt.find(":", start)
-    if colon < 0:
-        return None
-    params = stmt[start + len("lambda"):colon].strip()
-    if any(ch in params for ch in "()[]{}="):
-        return None
-    end = _close_at(stmt, colon + 1, comma=True)
-    if end == len(stmt):
-        return None
-    body = stmt[colon + 1:end].strip()
-    if not body:
-        return None
-    return stmt[:start], params, body, stmt[end:]
 #: a method def INSIDE an open class block (indented `def`)
 _METHOD_DEF_RE = re.compile(
     r"^\s+def\s+([A-Za-z_]\w*)\s*\(([^)]*)\)\s*:\s*$"
@@ -777,132 +1255,7 @@ _ATTR_SUBSCR_SEL_RE = re.compile(
     r"^\s*([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)"
     r"\[([^\]:]+)\]\s*$"
 )
-#: `x = v[KEY].CHAIN` / `x = v.attr[KEY].CHAIN` (late r5) — a dot-chain
-#: hanging off a subscript access desugars into the two-line form the
-#: tracker already handles exactly (`_subN_ = v[KEY]` then
-#: `x = _subN_.CHAIN`): `x = df['col'].values` mints the field read
-#: then the attr read on its value, `x = df['col'].sum()` the field
-#: read then the turtle extension — WALA's per-value SSA gives the
-#: intermediate a temp value number with NO name, so the `_subN_` temp
-#: is stripped from value_names at page end.  Nested brackets / parens
-#: in the index or call args stay out (documented subset — those fall
-#: through to the complex-index path).
-_SUBSCR_CHAIN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)\s*=(?!=)\s*"
-    r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?\[[^\][]+\])"
-    r"((?:\.[A-Za-z_]\w*(?:\([^()]*\))?|\[[^\][]+\])+)\s*$"
-)
-#: a CALL followed by a subscript access (then any chain) on the RHS
-#: (final r5) — `x = df.groupby('k')['v'].mean()`: the call hoists into
-#: a temp, so the subscript read and trailing chain mint through the
-#: existing subscript-chain machinery, bit-identical to the two-line
-#: `g = df.groupby('k')` form.  Paren-free call args only (nested calls
-#: unwind through the arg-hoist paths).
-_CALL_SUBSCR_CHAIN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)\s*=(?!=)\s*"
-    r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*\([^()]*\))"
-    r"((?:\[[^\][]+\]|\.[A-Za-z_]\w*(?:\([^()]*\))?)+)\s*$",
-    re.S,
-)
-#: inner field accesses / dotted calls inside a COMPLEX index (final
-#: r5) — `df2 = df[df['a'] > 0]` / `df2 = df[df.a > 0]`: each inner
-#: access hoists into a temp (minting its read through the assignment
-#: form), leaving the boolean-mask selection itself on the existing
-#: complex-index path; reads keep the tracked-base guard, dotted calls
-#: hoist like the condition-hoist precedent.
-_INDEX_EXPR_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)\s*=(?!=)\s*([A-Za-z_]\w*)\[(.+)\]\s*$", re.S
-)
-#: STATEMENT-form subscript chain (final r5) — `df['a'].plot()` with no
-#: assignment: desugars into `_subN_ = df['a']` + `_subN_.plot()` so
-#: the receiver path extends the turtle on df's value.  Before this,
-#: the bare `plot` tail token could falsely catalog-match a module
-#: function (e.g. matplotlib.pyplot.plot) — dataflow attribution must
-#: win over tail-token guessing, like the assignment form already does.
-_STMT_SUBSCR_CHAIN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?\[[^\][]+\])"
-    r"((?:\.[A-Za-z_]\w*(?:\([^()]*\))?|\[[^\][]+\])+)\s*$"
-)
-#: STATEMENT-form attr-chain call on a TRACKED base (final r5) —
-#: `df.plot.bar()`: split like the assignment form.  The tracked-base
-#: guard keeps module-rooted statement calls (`pandas.read_csv('x')`)
-#: on the plain call path.
-_STMT_ATTR_CHAIN_CALL_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)((?:\.[A-Za-z_]\w*){2,40})(\([^()]*\))\s*$"
-)
-#: a call-shaped ARGUMENT (paren-free inner args) — used by the
-#: user-def call-site hoist below
-_CALL_ARG_RE = re.compile(
-    r"^[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*\([^()]*\)$"
-)
-#: ternary assignment (final r5) — the CONDITION always evaluates, so
-#: tracked reads in it hoist exactly like if-head conditions
-#: (`x = 1 if df.empty else 2`); the arm expressions keep the existing
-#: ternary member-union path
-_TERNARY_ASSIGN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*\s*=(?!=).+?)\s+if\s+(.+?)\s+else\s+(.+)$", re.S
-)
-#: string-keyed subscript WRITE target with a chain RHS (final r5) —
-#: `df['z'] = df['a'].apply(str)` / `df['z'] = df['a'].values`: the RHS
-#: hoists into a `_subN_` temp (which the chain desugar above then
-#: splits), so the existing subscript-STORE path sees a tracked value.
-#: Target form mirrors _SUBSCR_WRITE_RE (one string-keyed bracket).
-_SUBSCR_WRITE_CHAIN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*\[\s*(?:'[^']*'|\"[^\"]*\")\s*\])\s*=(?!=)\s*(.+?)\s*$",
-    re.S,
-)
 _SUB_TMP_RE = re.compile(r"^_sub\d+_$")
-#: a whole-statement call (optionally assigned) whose args may carry
-#: subscript chains to hoist: `z = pandas.concat(df['col'].values)`
-_CALL_STMT_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*\s*=\s*)?"
-    r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)\((.*)\)\s*$", re.S
-)
-#: an ARG that is a subscript chain — base, optional attrs, ONE
-#: bracket access, then ≥1 dot segment (optionally a call).  Bare
-#: `df['col']` / `df.values` args stay put (the per-occurrence read
-#: machinery already mints those); chains currently drop, so hoisting
-#: them into a temp assignment (which the chain desugar then splits) is
-#: pure recall with no change to existing shapes.
-_ARG_SUBSCR_CHAIN_RE = re.compile(
-    r"^[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*\[[^\][]+\]"
-    r"(?:\.[A-Za-z_]\w*(?:\([^()]*\))?)+$"
-)
-#: binop of subscript reads — `x = df['a'] + df['b']` / `df['new'] =
-#: df['a'] * k` (final r5): each subscript operand hoists into a temp
-#: (minting its field-read node), then the existing binop-union /
-#: field-write paths see tracked temps.  Exactly two operands, at
-#: least one a subscript access; LHS may itself be a subscript write.
-#: pure attr chain on a TRACKED value — `x = m.coef_.T` / `df.T.values`
-#: (final r5): splits into single-attr reads the tracker already chains
-#: (`_sub = m.coef_` then `x = _sub.T`), recursing for longer chains.
-#: Guarded at desugar time on the base being tracked (the desugar
-#: generator is pulled statement-by-statement, so var_producer reflects
-#: all prior statements) — module paths (`x = sklearn.svm.SVC`) and
-#: self-attrs never match because modules/params are not in
-#: var_producer.
-#: chain capped at 40 hops: the desugar recurses once per attr, and an
-#: adversarial 1000-dot line must not turn into a RecursionError
-_ATTR_CHAIN_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)\s*=(?!=)\s*([A-Za-z_]\w*)"
-    r"((?:\.[A-Za-z_]\w*){2,40})\s*$"
-)
-#: attr chain on a TRACKED base ENDING in a call (final r5) —
-#: `x = df_col.str.lower()` / `x = m.coef_.sum()`: splits the first
-#: attr hop into a temp exactly like _ATTR_CHAIN_RE (each hop is the
-#: AstPropertyRead the tracker mints), recursing until the tail is the
-#: single-hop method call the receiver path already handles.  Same
-#: tracked-base guard (module-rooted calls never match).
-_ATTR_CHAIN_CALL_RE = re.compile(
-    r"^(\s*)([A-Za-z_]\w*)\s*=(?!=)\s*([A-Za-z_]\w*)"
-    r"((?:\.[A-Za-z_]\w*){2,40})(\([^()]*\))\s*$"
-)
-_SUBSCR_OPERAND = r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?\[[^\][]+\]"
-_BINOP_SUBSCR_RE = re.compile(
-    rf"^(\s*)([A-Za-z_]\w*(?:\[[^\][]+\])?)\s*=(?!=)\s*"
-    rf"({_SUBSCR_OPERAND}|[A-Za-z_]\w*|[\d.]+)\s*([-+*/%])\s*"
-    rf"({_SUBSCR_OPERAND}|[A-Za-z_]\w*|[\d.]+)\s*$"
-)
 #: `x = v[<any expression>]` — whole-subscript selection on a tracked
 #: value whose index is too complex for the string-key/simple-slice
 #: forms (nested brackets, computed slices); the reference mints a
@@ -1512,465 +1865,12 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                         branch_stack.pop(), prev_in_snippet
                     )
 
-            lam_counter = [0]
-
-            def _desugar_stmt(ln_, phys_, stmt_):
-                """Statement-level sugar → the core forms the extractor
-                already handles (recursive; yielded stmts keep the
-                sugar line's source span):
-
-                - chained assignment `a = b = RHS` → `b = RHS` + `a = b`
-                  (Python assigns every target the same evaluated
-                  object, so the alias copy is exact)
-                - top-level `f = lambda params: EXPR` →
-                  `def f(params):` + `    return EXPR` — call sites wire
-                  args/returns through the local-def machinery
-                - a lambda passed as a CALL ARGUMENT in a top-level
-                  statement hoists into a synthetic def (`_lam0_ …`)
-                  bound just before the call, and the argument becomes
-                  that name — the body's module-rooted calls mint their
-                  shared nodes through the def machinery; the library
-                  INVOKING the callback is out of scope (G6 subset), so
-                  no return edge flows into the outer call
-                """
-                parts_ = [p_ for _, p_ in _split_top(stmt_, ";")]
-                if len(parts_) > 1:
-                    head_ = stmt_.lstrip()
-                    kw_ = re.match(r"[A-Za-z_]\w*", head_)
-                    # one-line compound bodies (`if x: a; b`) keep their
-                    # single statement (subset) — plain lines split
-                    if not (kw_ and kw_.group(0) in _PY_STMT_KEYWORDS
-                            and ":" in parts_[0]):
-                        ind_ = stmt_[: len(stmt_) - len(head_)]
-                        for p_ in parts_:
-                            if p_.strip():
-                                yield from _desugar_stmt(
-                                    ln_, phys_, ind_ + p_.strip())
-                        return
-                am_ = _ANNOTATED_ASSIGN_RE.match(stmt_)
-                if am_ and am_.group(2) not in _PY_STMT_KEYWORDS:
-                    # type hints carry no runtime dataflow: erase
-                    yield from _desugar_stmt(
-                        ln_, phys_,
-                        f"{am_.group(1)}{am_.group(2)} = {am_.group(3)}")
-                    return
-                wz_ = _WALRUS_RE.search(stmt_)
-                if wz_:
-                    # hoist `(name := EXPR)` into `name = EXPR` before
-                    # the statement; the group becomes the bare name
-                    o_ = wz_.start()
-                    close_ = _close_at(stmt_, o_ + 1)
-                    if close_ < len(stmt_):
-                        nm2_ = wz_.group(1)
-                        expr_ = stmt_[wz_.end():close_].strip()
-                        ind_ = stmt_[: len(stmt_) - len(stmt_.lstrip())]
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{nm2_} = {expr_}")
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            stmt_[:o_] + nm2_ + stmt_[close_ + 1:])
-                        return
-                head2_ = stmt_.lstrip()
-                is_for_ = head2_.startswith("for ")
-                if (
-                    (head2_.startswith("if ") or head2_.startswith("while ")
-                     or head2_.startswith("elif ") or is_for_)
-                    and head2_.rstrip().endswith(":")
-                ):
-                    # hoist dotted calls out of if/while conditions: the
-                    # condition evaluates on the pre path, so a temp
-                    # assignment just before the head is exact for `if`
-                    # (one-unrolling approximation for `while`, like the
-                    # walrus hoist); recursion unwinds outer chain hops.
-                    # `for v in df['col'](.chain):` hoists only the READ
-                    # (the iterable evaluates ONCE before the loop —
-                    # exact placement; iterable CALLS keep the existing
-                    # for-over-call path)
-                    body_ = head2_.rstrip()[:-1]
-                    seg0_ = 0
-                    if is_for_:
-                        in_pos_ = body_.find(" in ")
-                        seg0_ = None if in_pos_ < 0 else in_pos_ + 4
-                    for cc_ in (
-                        () if (is_for_ or seg0_ is None)
-                        else _COND_CALL_RE.finditer(body_)
-                    ):
-                        if _string_at(body_, cc_.start()):
-                            continue
-                        pre_ = body_[: cc_.start()]
-                        ind_ = stmt_[: len(stmt_) - len(head2_)]
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {cc_.group(0)}")
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            ind_ + pre_ + tmp_ + body_[cc_.end():] + ":")
-                        return
-                    # no call to hoist: field accesses on TRACKED bases
-                    # (`if df.empty:`, `if df['a'] is None:`, `for v in
-                    # df['col']:`) hoist the same way, minting the read
-                    # the assignment form mints; a subscript's trailing
-                    # chain unwinds via the chain desugar on the next
-                    # pass
-                    for cr_ in (
-                        () if seg0_ is None
-                        else _COND_READ_RE.finditer(body_, seg0_)
-                    ):
-                        if cr_.group(1) not in var_producer:
-                            continue
-                        if _string_at(body_, cr_.start()):
-                            continue
-                        pre_ = body_[: cr_.start()]
-                        ind_ = stmt_[: len(stmt_) - len(head2_)]
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {cr_.group(0)}")
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            ind_ + pre_ + tmp_ + body_[cr_.end():] + ":")
-                        return
-                tern_ = "else" in stmt_ and _TERNARY_ASSIGN_RE.match(stmt_)
-                if (
-                    tern_
-                    and " lambda " not in f" {tern_.group(3)} "
-                    and not _string_at(stmt_, tern_.end(2))
-                ):
-                    # ternary assignment: the CONDITION always evaluates
-                    # — hoist tracked reads from it like if-heads; the
-                    # arms keep the existing member-union path
-                    cond_ = tern_.group(3)
-                    for cr_ in _COND_READ_RE.finditer(cond_):
-                        if cr_.group(1) not in var_producer:
-                            continue
-                        if _string_at(cond_, cr_.start()):
-                            continue
-                        p_ = cond_[: cr_.start()]
-                        ind_ = tern_.group(1)
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {cr_.group(0)}")
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            f"{ind_}{tern_.group(2)} if "
-                            f"{p_}{tmp_}{cond_[cr_.end():]} else "
-                            f"{tern_.group(4)}")
-                        return
-                dm_ = _BARE_DECORATOR_RE.match(stmt_)
-                if dm_:
-                    # `@D` runs D at def time: mint its call in place
-                    yield ln_, phys_, f"{dm_.group(1)}{dm_.group(2)}()"
-                    return
-                cm_ = _CHAIN_ASSIGN_RE.match(stmt_)
-                if cm_:
-                    ind_, t1_, rest_ = cm_.groups()
-                    yield from _desugar_stmt(ln_, phys_, f"{ind_}{rest_}")
-                    t2_ = re.match(r"\s*([A-Za-z_]\w*)", rest_).group(1)
-                    yield ln_, phys_, f"{ind_}{t1_} = {t2_}"
-                    return
-                if "(" in stmt_ and "[" in stmt_:
-                    csc_ = _CALL_SUBSCR_CHAIN_RE.match(stmt_)
-                    if csc_ and csc_.group(4).startswith("["):
-                        # call → subscript (→ chain): hoist the call so
-                        # the access chain mints on its tracked value
-                        ind_, lhs_, call_, tail_ = csc_.groups()
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {call_}")
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{lhs_} = {tmp_}{tail_}")
-                        return
-                cs_ = _CALL_STMT_RE.match(stmt_)
-                if (cs_ and "(" in (cs_.group(4) or "")
-                        and "." not in cs_.group(3)
-                        and cs_.group(3) in local_defs):
-                    # USER-DEF call site with call-shaped args (final
-                    # r5): `train(SVC(), df)` / `train(m=SVC(), d=df)`
-                    # — hoist each nested call into a temp so the
-                    # name-binding machinery (G3 wiring, G8 receiver
-                    # clones) sees a bound value exactly like the
-                    # two-line form
-                    args_ = [a_ for _, a_ in _args(cs_.group(4))]
-                    hoisted_, new_args_ = False, []
-                    for a_ in args_:
-                        kw_ = re.match(r"^([A-Za-z_]\w*)=(?!=)(.*)$", a_, re.S)
-                        core_ = kw_.group(2).strip() if kw_ else a_.strip()
-                        if _CALL_ARG_RE.match(core_):
-                            tmp_ = f"_sub{lam_counter[0]}_"
-                            lam_counter[0] += 1
-                            yield from _desugar_stmt(
-                                ln_, phys_, f"{cs_.group(1)}{tmp_} = {core_}")
-                            new_args_.append(
-                                f"{kw_.group(1)}={tmp_}" if kw_ else tmp_)
-                            hoisted_ = True
-                        else:
-                            new_args_.append(a_)
-                    if hoisted_:
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            f"{cs_.group(1)}{cs_.group(2) or ''}"
-                            f"{cs_.group(3)}({', '.join(new_args_)})")
-                        return
-                if cs_ and "[" in (cs_.group(4) or ""):
-                    # subscript-chain ARGS hoist into temp assignments
-                    # before the call (args evaluate first, so the
-                    # transform is order-exact); the temp statements
-                    # re-enter the chain desugar below
-                    args_ = [a_ for _, a_ in _args(cs_.group(4))]
-                    if any(_ARG_SUBSCR_CHAIN_RE.match(a_.split("=", 1)[-1]
-                                                      if re.match(r"^[A-Za-z_]\w*=[^=]", a_)
-                                                      else a_)
-                           for a_ in args_):
-                        ind_ = cs_.group(1)
-                        new_args_ = []
-                        for a_ in args_:
-                            kw_ = re.match(r"^([A-Za-z_]\w*)=(?!=)(.*)$", a_, re.S)
-                            core_ = kw_.group(2).strip() if kw_ else a_
-                            if _ARG_SUBSCR_CHAIN_RE.match(core_):
-                                tmp_ = f"_sub{lam_counter[0]}_"
-                                lam_counter[0] += 1
-                                yield from _desugar_stmt(
-                                    ln_, phys_, f"{ind_}{tmp_} = {core_}")
-                                new_args_.append(
-                                    f"{kw_.group(1)}={tmp_}" if kw_ else tmp_)
-                            else:
-                                new_args_.append(a_)
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            f"{ind_}{cs_.group(2) or ''}{cs_.group(3)}"
-                            f"({', '.join(new_args_)})")
-                        return
-                ac_ = _ATTR_CHAIN_RE.match(stmt_)
-                if ac_ and ac_.group(3) in var_producer:
-                    # pure attr chain on a tracked base: split the first
-                    # attr into a hidden temp, recurse for the rest —
-                    # each hop is the single-attr read the tracker
-                    # already mints (chained AstPropertyReads)
-                    ind_, lhs_, base_, chain_ = ac_.groups()
-                    segs_ = chain_.split(".")[1:]
-                    tmp_ = f"_sub{lam_counter[0]}_"
-                    lam_counter[0] += 1
-                    yield from _desugar_stmt(
-                        ln_, phys_, f"{ind_}{tmp_} = {base_}.{segs_[0]}")
-                    yield from _desugar_stmt(
-                        ln_, phys_,
-                        f"{ind_}{lhs_} = {tmp_}." + ".".join(segs_[1:]))
-                    return
-                acc_ = _ATTR_CHAIN_CALL_RE.match(stmt_)
-                if (acc_ and acc_.group(3) in var_producer
-                        and acc_.group(3) not in var_fields
-                        and acc_.group(3) not in var_members):
-                    # attr chain ending in a call on a tracked base:
-                    # split the first hop, recurse until the tail is a
-                    # single-hop method call
-                    ind_, lhs_, base_, chain_, args_ = acc_.groups()
-                    segs_ = chain_.split(".")[1:]
-                    tmp_ = f"_sub{lam_counter[0]}_"
-                    lam_counter[0] += 1
-                    yield from _desugar_stmt(
-                        ln_, phys_, f"{ind_}{tmp_} = {base_}.{segs_[0]}")
-                    yield from _desugar_stmt(
-                        ln_, phys_,
-                        f"{ind_}{lhs_} = {tmp_}."
-                        + ".".join(segs_[1:]) + args_)
-                    return
-                bs_ = _BINOP_SUBSCR_RE.match(stmt_)
-                if (bs_ and "[" in (bs_.group(3) + bs_.group(5))
-                        and not _EXPR_BINOP_RE.match(stmt_)):
-                    # (the string-key × string-key form stays whole —
-                    # the semForms expression miner owns that statement
-                    # and normalizes receivers by producer identity)
-                    # binop of subscript reads: hoist each subscript
-                    # operand into a temp so its field-read node mints
-                    # and the binop-union / field-write paths see
-                    # tracked values
-                    ind_ = bs_.group(1)
-                    ops_ = []
-                    for o_ in (bs_.group(3), bs_.group(5)):
-                        if "[" in o_:
-                            tmp_ = f"_sub{lam_counter[0]}_"
-                            lam_counter[0] += 1
-                            yield from _desugar_stmt(
-                                ln_, phys_, f"{ind_}{tmp_} = {o_}")
-                            ops_.append(tmp_)
-                        else:
-                            ops_.append(o_)
-                    yield ln_, phys_, (
-                        f"{ind_}{bs_.group(2)} = "
-                        f"{ops_[0]} {bs_.group(4)} {ops_[1]}")
-                    return
-                sc_ = _SUBSCR_CHAIN_RE.match(stmt_)
-                if sc_ and re.match(
-                    r"[A-Za-z_]\w*", sc_.group(3)
-                ).group(0) in var_members:
-                    # container base (`r = models[0].fit(x)`): leave the
-                    # line whole — the precise element-receiver path
-                    # resolves the member the index selects; the temp
-                    # desugar would hit the digit-subscript ambiguity
-                    # path and drop the call
-                    sc_ = None
-                if sc_:
-                    # dot-chain off a subscript access → the two-line
-                    # form via a hidden `_subN_` temp (stripped from
-                    # value_names at page end — WALA's intermediate is
-                    # an unnamed temp value)
-                    ind_, lhs_, acc_, chain_ = sc_.groups()
-                    tmp_ = f"_sub{lam_counter[0]}_"
-                    lam_counter[0] += 1
-                    yield from _desugar_stmt(ln_, phys_, f"{ind_}{tmp_} = {acc_}")
-                    yield from _desugar_stmt(ln_, phys_, f"{ind_}{lhs_} = {tmp_}{chain_}")
-                    return
-                if "." in stmt_ or "[" in stmt_:
-                    ag_ = _AUG_FIELD_RE.match(stmt_)
-                    if ag_:
-                        # `df['a'] += 1` / `df.a *= 2`: exact two-line
-                        # read-then-write form via a hidden temp
-                        ind_, tgt_, op_, rhs_ = ag_.groups()
-                        if not _AUG_ATOM_RE.match(rhs_):
-                            rhs_ = f"({rhs_})"
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {tgt_}")
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            f"{ind_}{tgt_} = {tmp_} {op_} {rhs_}")
-                        return
-                if "[" in stmt_:
-                    ie_ = _INDEX_EXPR_RE.match(stmt_)
-                    if ie_:
-                        # complex index: hoist inner tracked reads /
-                        # dotted calls so their nodes mint; the mask
-                        # selection stays on the complex-index path
-                        idx_ = ie_.group(4)
-                        hits_ = list(_COND_CALL_RE.finditer(idx_)) + [
-                            h_ for h_ in _COND_READ_RE.finditer(idx_)
-                            if h_.group(1) in var_producer
-                        ]
-                        for ih_ in hits_:
-                            if _string_at(idx_, ih_.start()):
-                                continue
-                            pre_ = idx_[: ih_.start()]
-                            ind_, lhs_, base_ = ie_.group(1, 2, 3)
-                            tmp_ = f"_sub{lam_counter[0]}_"
-                            lam_counter[0] += 1
-                            yield from _desugar_stmt(
-                                ln_, phys_, f"{ind_}{tmp_} = {ih_.group(0)}")
-                            yield from _desugar_stmt(
-                                ln_, phys_,
-                                f"{ind_}{lhs_} = {base_}"
-                                f"[{pre_}{tmp_}{idx_[ih_.end():]}]")
-                            return
-                if "[" in stmt_:
-                    ssc_ = _STMT_SUBSCR_CHAIN_RE.match(stmt_)
-                    # guard: only a tracked NON-container base — known
-                    # containers / keyed stores keep the precise
-                    # element-receiver machinery (`models[0].fit(x)`,
-                    # `cfg['m'].fit(x)`), untracked bases keep the old
-                    # fall-through
-                    if ssc_:
-                        sbase_ = re.match(r"[A-Za-z_]\w*", ssc_.group(2)).group(0)
-                        if (sbase_ not in var_producer
-                                or sbase_ in var_members
-                                or sbase_ in var_fields):
-                            ssc_ = None
-                    if ssc_:
-                        # statement-form subscript chain: hoist the
-                        # access so the chain extends the turtle instead
-                        # of tail-token catalog guessing
-                        ind_, acc_, chain_ = ssc_.groups()
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {acc_}")
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_}{chain_}")
-                        return
-                if "." in stmt_:
-                    sac_ = _STMT_ATTR_CHAIN_CALL_RE.match(stmt_)
-                    if (sac_ and sac_.group(2) in var_producer
-                            and sac_.group(2) not in var_fields
-                            and sac_.group(2) not in var_members):
-                        # statement-form attr-chain call on a tracked
-                        # base: split the first hop like the assignment
-                        # form
-                        ind_, base_, chain_, args_ = sac_.groups()
-                        segs_ = chain_.split(".")[1:]
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {base_}.{segs_[0]}")
-                        yield from _desugar_stmt(
-                            ln_, phys_,
-                            f"{ind_}{tmp_}." + ".".join(segs_[1:]) + args_)
-                        return
-                if "[" in stmt_:
-                    swc_ = _SUBSCR_WRITE_CHAIN_RE.match(stmt_)
-                    if swc_ and _ARG_SUBSCR_CHAIN_RE.match(swc_.group(3)):
-                        # subscript-WRITE target with a chain RHS:
-                        # `df['z'] = df['a'].apply(str)` — hoist the RHS
-                        # into a temp (the chain desugar splits it), then
-                        # the subscript-STORE path sees a tracked value
-                        ind_, tgt_, rhs_ = swc_.groups()
-                        tmp_ = f"_sub{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield from _desugar_stmt(
-                            ln_, phys_, f"{ind_}{tmp_} = {rhs_}")
-                        yield ln_, phys_, f"{ind_}{tgt_} = {tmp_}"
-                        return
-                lam = _LAMBDA_RE.match(stmt_)
-                if lam:
-                    yield ln_, phys_, f"def {lam.group(1)}({lam.group(2).strip()}):"
-                    yield ln_, phys_, f"    return {lam.group(3)}"
-                    return
-                wm_ = _WITH_MULTI_RE.match(stmt_)
-                if wm_:
-                    items_ = [p for _, p in _args(wm_.group(2))]
-                    if len(items_) >= 2 and all(
-                        _WITH_ITEM_RE.match(p) for p in items_
-                    ):
-                        for p in items_:
-                            yield from _desugar_stmt(
-                                ln_, phys_, f"{wm_.group(1)}with {p}:"
-                            )
-                        return
-                tm_ = _TUPLE_TARGETS_RE.match(stmt_)
-                if tm_:
-                    targets_ = [t.strip() for t in tm_.group(2).split(",")]
-                    parts_ = [p for _, p in _args(tm_.group(3))]
-                    if len(parts_) == len(targets_):
-                        ind_ = tm_.group(1)
-                        base_ = lam_counter[0]
-                        lam_counter[0] += 1
-                        for i_, p in enumerate(parts_):
-                            yield from _desugar_stmt(
-                                ln_, phys_, f"{ind_}_unp{base_}_{i_} = {p}"
-                            )
-                        for i_, t in enumerate(targets_):
-                            yield ln_, phys_, f"{ind_}{t} = _unp{base_}_{i_}"
-                        return
-                if "lambda" in stmt_ and not stmt_[:1].isspace():
-                    parts = _split_lambda_arg(stmt_)
-                    if parts:
-                        head_, params_, body_, tail_ = parts
-                        name_ = f"_lam{lam_counter[0]}_"
-                        lam_counter[0] += 1
-                        yield ln_, phys_, f"def {name_}({params_}):"
-                        yield ln_, phys_, f"    return {body_}"
-                        yield from _desugar_stmt(
-                            ln_, phys_, head_ + name_ + tail_
-                        )
-                        return
-                yield ln_, phys_, stmt_
-
-            def _desugar(stmts):
-                for ln_, phys_, stmt_ in stmts:
-                    yield from _desugar_stmt(ln_, phys_, stmt_)
-
-            for ln, phys, line in _desugar(_logical_lines(lines)):
+            lower = _Lowering(
+                lambda: (var_producer, var_members, var_fields, local_defs))
+            for ln, phys, line in (
+                (ln_, phys_, low) for ln_, phys_, stmt in _logical_lines(lines)
+                for low in lower(stmt)
+            ):
                 # blank lines are not statements: a blank line between an
                 # if-arm and its elif/else must not join the open branch
                 # chain, and a blank line inside a def body must not end
@@ -2648,11 +2548,10 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                                             ("tracked", key, var_producer[bval])
                                         )
                                     else:
-                                        sm_ = _STR_ARG.match(bval)
-                                        if sm_:
+                                        sv_ = _str_arg(bval)
+                                        if sv_ is not None:
                                             spec2.append((
-                                                "const_pos", str(key),
-                                                sm_.group(1) or sm_.group(2) or "",
+                                                "const_pos", str(key), sv_,
                                             ))
                                         elif _NUM_ARG.match(bval):
                                             spec2.append(
@@ -3087,10 +2986,10 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                                     if dm_ and not _NAMED_ARG.match(dm_.group(2)):
                                         dpos += 1
                                         key, val = dm_.group(1), dm_.group(2)
-                                        dsm = _STR_ARG.match(val)
-                                        if dsm:
-                                            spec.append(("const_named", key,
-                                                         dsm.group(1) or dsm.group(2) or ""))
+                                        dsv = _str_arg(val)
+                                        if dsv is not None:
+                                            spec.append(
+                                                ("const_named", key, dsv))
                                         elif _NUM_ARG.match(val):
                                             spec.append(("const_named", key, val))
                                         elif val in cur_def["params"]:
@@ -3099,10 +2998,10 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                                             spec.append(("tracked", dpos, var_producer[val]))
                                         continue
                                     dpos += 1
-                                    dsm = _STR_ARG.match(a)
-                                    if dsm:
-                                        spec.append(("const_pos", str(dpos),
-                                                     dsm.group(1) or dsm.group(2) or ""))
+                                    dsv = _str_arg(a)
+                                    if dsv is not None:
+                                        spec.append(
+                                            ("const_pos", str(dpos), dsv))
                                     elif _NUM_ARG.match(a):
                                         spec.append(("const_pos", str(dpos), a))
                                     elif a in cur_def["params"]:
@@ -3193,9 +3092,9 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                             # random_state=0, stratify=data['Dataset'])`).
                             pos += 1
                             key, val = nm.group(1), nm.group(2)
-                            sm = _STR_ARG.match(val)
-                            if sm:
-                                node["constant_named_args"][key] = sm.group(1) or sm.group(2) or ""
+                            sv = _str_arg(val)
+                            if sv is not None:
+                                node["constant_named_args"][key] = sv
                             elif _NUM_ARG.match(val):
                                 node["constant_named_args"][key] = val
                             elif val in var_producer:
@@ -3249,9 +3148,9 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                                 )
                             continue
                         pos += 1
-                        sm = _STR_ARG.match(a)
-                        if sm:
-                            node["constant_positional_args"][str(pos)] = sm.group(1) or sm.group(2) or ""
+                        sv = _str_arg(a)
+                        if sv is not None:
+                            node["constant_positional_args"][str(pos)] = sv
                         elif _NUM_ARG.match(a):
                             node["constant_positional_args"][str(pos)] = a
                         elif a in var_producer:
@@ -3407,9 +3306,9 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     feeds, consts = [], {}
                     for k in (1, 2):
                         txt = bm.group(k)
-                        sm_ = _STR_ARG.match(txt)
-                        if sm_:
-                            consts[str(k - 1)] = sm_.group(1) or sm_.group(2) or ""
+                        sv_ = _str_arg(txt)
+                        if sv_ is not None:
+                            consts[str(k - 1)] = sv_
                         elif _NUM_ARG.match(txt):
                             consts[str(k - 1)] = txt
                         elif txt in var_producer:
@@ -3660,9 +3559,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                         psrc["flows_to"] = _append_flow(
                             psrc["flows_to"], "0", rnode["node_number"]
                         )
-                        sm_ = _STR_ARG.match(idx)
-                        key = (sm_.group(1) if sm_ and sm_.group(1) is not None
-                               else (sm_.group(2) if sm_ else None))
+                        key = _str_arg(idx)
                         if key and not key.isdigit():
                             fnode = new_node(base + [attr, key], ln, phys,
                                              line.split("=", 1)[1].strip())
@@ -3940,7 +3837,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                             else:
                                 var_bound.pop(v, None)
                             if re.match(r"^_unp\d+_\d+$", rhs):
-                                # desugar temp from a literal-tuple
+                                # lowering temp from a literal-tuple
                                 # unpack: the USER name is v — swap it
                                 # into the producer's value_names so the
                                 # synthetic temp never reaches output
@@ -4098,7 +3995,7 @@ def _page_nodes(url, codes, by_name, methods_of, modules, tail_first,
                     n["immediately_precedes"] = out
             nodes = [n for n in nodes if not n.pop("_dead", False)]
         for n in nodes:
-            # `_subN_` desugar temps are WALA's unnamed intermediate
+            # `_subN_` lowering temps are WALA's unnamed intermediate
             # values — they never reach output
             if n["value_names"] and any(_SUB_TMP_RE.match(v)
                                         for v in n["value_names"]):

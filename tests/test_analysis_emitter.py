@@ -2858,10 +2858,74 @@ def test_comments_and_string_calls_inert():
                        "df = pandas.read_csv('it\\'s', sep=',')\n"
                        "df.dropna()\n"], cat)
     rc = next(n for n in esc if n["path"][-1] == "read_csv")
+    assert rc["constant_positional_args"] == {"1": "it's"}
     assert rc["constant_named_args"] == {"sep": ","}
     assert rc["source_lines"] == ["df = pandas.read_csv('it\\'s', sep=',')"]
     drop = next(n for n in esc if n["path"][-1] == "dropna")
     assert rc["flows_to"]["0"] == [drop["node_number"]]
+    # an escaped quote of the literal's own kind unescapes; any other
+    # backslash stays as written
+    dq = extract_page_flow_nodes(
+        "http://q/9", ["import pandas\n"
+                       "df = pandas.read_csv(\"say \\\"hi\\\"\", "
+                       "sep='\\\\t')\n"], cat)
+    rc = next(n for n in dq if n["path"][-1] == "read_csv")
+    assert rc["constant_positional_args"] == {"1": 'say "hi"'}
+    assert rc["constant_named_args"] == {"sep": "\\\\t"}
+
+
+def test_unparseable_statement_passes_through():
+    """A statement that is not Python 3 (`print 'x'`, a stray `)`)
+    reaches the tracker unchanged: the statements around it still
+    track, so read_csv keeps its constant and its DATA-0 edge into the
+    dropna after it."""
+    from graph4code_spark.operators.flows import (
+        build_flow_catalog,
+        extract_page_flow_nodes,
+    )
+
+    cat = build_flow_catalog(FIXED_CATALOG)
+    for i, junk in enumerate(["print 'x'", ")"]):
+        got = extract_page_flow_nodes(
+            f"http://u/{i}", ["import pandas as pd\n"
+                              "df = pd.read_csv('a.csv')\n"
+                              f"{junk}\n"
+                              "df.dropna()\n"], cat)
+        rc = next(n for n in got if n["path"][-1] == "read_csv")
+        drop = next(n for n in got if n["path"][-1] == "dropna")
+        assert rc["constant_positional_args"] == {"1": "a.csv"}, junk
+        assert rc["flows_to"]["0"] == [drop["node_number"]], junk
+
+
+def test_non_ascii_text_before_lowered_sugar():
+    """ast columns count UTF-8 bytes: non-ASCII text ahead of a lowered
+    annotated assignment or walrus in the same statement must give the
+    nodes and edges of its ASCII spelling."""
+    import json
+
+    from graph4code_spark.operators.flows import (
+        build_flow_catalog,
+        extract_page_flow_nodes,
+    )
+
+    cat = build_flow_catalog(FIXED_CATALOG)
+    for code, ascii_code in [
+        ("x = 'é'; df: pd.DataFrame = pd.read_csv('données.csv')\n"
+         "df.dropna()\n",
+         "x = 'e'; df: pd.DataFrame = pd.read_csv('donnees.csv')\n"
+         "df.dropna()\n"),
+        ("if (df := pd.read_csv('ü')) is not None:\n    df.dropna()\n",
+         "if (df := pd.read_csv('u')) is not None:\n    df.dropna()\n"),
+    ]:
+        got, want = (
+            extract_page_flow_nodes("http://n/1",
+                                    ["import pandas as pd\n" + c], cat)
+            for c in (code, ascii_code))
+        assert [n["path"][-1] for n in want] == [
+            "pandas", "read_csv", "dropna"]
+        assert want[1]["flows_to"]["0"] == [2]
+        assert json.dumps(got, ensure_ascii=False).translate(
+            str.maketrans("éü", "eu")) == json.dumps(want), code
 
 
 def test_multiline_string_interiors_inert():

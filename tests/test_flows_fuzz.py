@@ -14,6 +14,7 @@ import hashlib
 import json
 import random
 import time
+from pathlib import Path
 
 import pytest
 
@@ -201,21 +202,40 @@ def _synth_pages(seed, n):
 
 
 def _digest(pages):
-    """(node count, sha256 over the sorted node and edge tuples)."""
-    rows = []
+    """(node count, sha256 over the sorted node and edge tuples, and
+    ``(url, digest)`` per page in page order, truncated to 8 hex)."""
+    rows, per_page = [], []
     for url, codes in pages:
+        page = []
         for n in extract_page_flow_nodes(url, codes, CAT):
             src = n["node_number"]
-            rows.append(json.dumps(
+            page.append(json.dumps(
                 {k: v for k, v in n.items()
                  if k not in ("flows_to", "immediately_precedes")},
                 sort_keys=True))
-            rows.extend(f"{url} {src} -{o}-> {d}"
+            page.extend(f"{url} {src} -{o}-> {d}"
                         for o, ds in n["flows_to"].items() for d in ds)
-            rows.extend(f"{url} {src} -> {d}"
+            page.extend(f"{url} {src} -> {d}"
                         for d in n["immediately_precedes"])
+        per_page.append((url, _sha("\n".join(sorted(page)))[:8]))
+        rows += page
     n_nodes = sum(r.startswith("{") for r in rows)
-    return n_nodes, hashlib.sha256("\n".join(sorted(rows)).encode()).hexdigest()
+    return n_nodes, _sha("\n".join(sorted(rows))), per_page
+
+
+def _sha(text):
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def _corpus(name):
+    return (_fuzz_pages() if name == "fuzz"
+            else _synth_pages(int(name[-1]), 1000))
+
+
+#: per-page digests recorded with the pins below, in page order; a
+#: failing pin names the pages that moved.  Re-record with
+#: `python -m tests.test_flows_fuzz` from the repository root.
+PAGE_DIGESTS = Path(__file__).with_name("flows_page_digests.json")
 
 
 @pytest.mark.parametrize("corpus,expected", [
@@ -223,17 +243,22 @@ def _digest(pages):
                         "fb9d665fa4ced3bb06511584fc0bb400")),
     ("synth-2", (16323, "31c5015ff6547670a4994921fbf1a0c1"
                         "27ee1fafda17ffa2030ee89cfeadf090")),
-    ("fuzz", (2117, "3618cf4faac5f3974346fcbfd430923a"
-                    "89855b1bdef98cfd15bad95ff3513070")),
+    ("fuzz", (2115, "5c22d9a832ec872de8bd7f8e8466f534"
+                    "73e92917e899b3d298ddfb865071ee39")),
 ])
 def test_extractor_output_digest_pinned(corpus, expected):
     """Synth seeds 1 and 2 (1,000 pages each) and the 300 fuzz-grammar
     pages extract to the recorded node/edge sets.  The synth digests
-    match the per-character scanners the lexer replaced; the fuzz
-    digest is re-recorded whenever `GARBAGE` or the grammar changes."""
-    pages = (_fuzz_pages() if corpus == "fuzz"
-             else _synth_pages(int(corpus[-1]), 1000))
-    assert _digest(pages) == expected
+    are those of the per-character scanners and the regex desugar the
+    lexer and the AST lowering replaced; the fuzz digest is re-recorded
+    whenever `GARBAGE` or the grammar changes, or the handling of a
+    statement that does not parse."""
+    n_nodes, sha, per_page = _digest(_corpus(corpus))
+    pinned = json.loads(PAGE_DIGESTS.read_text())[corpus]
+    moved = [u for (u, d), p in zip(per_page, pinned) if d != p]
+    assert (n_nodes, sha) == expected, (
+        f"{len(moved)} of {len(pinned)} pinned pages moved "
+        f"({len(per_page)} now), first: {moved[:10]}")
 
 
 ADVERSARIAL = {
@@ -329,3 +354,14 @@ def test_extract_flow_nodes_filters_sentinels_and_observes(spark):
     assert rows, "clean page produced no nodes"
     assert all(r.node_number >= 0 for r in rows)
     assert not any(r.path_end == PAGE_ERROR_SENTINEL for r in rows)
+
+
+if __name__ == "__main__":
+    # `python -m tests.test_flows_fuzz`: re-record the per-page digests
+    # and print the pins for the table above
+    out = {}
+    for name in ("synth-1", "synth-2", "fuzz"):
+        n_nodes, sha, per_page = _digest(_corpus(name))
+        out[name] = [d for _, d in per_page]
+        print(name, n_nodes, sha)
+    PAGE_DIGESTS.write_text(json.dumps(out, indent=0) + "\n")
