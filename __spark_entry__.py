@@ -2157,19 +2157,19 @@ def queries_full() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def oracle_sql_full() -> dict[str, str]:
-    """Oracles for `queries_full()` (superset of the curated driver
-    oracles).  Entries absent here are rows-only by design."""
+def _oracle_builders() -> dict[str, Callable[[], str] | str]:
+    """Oracle SQL per query name: a constant, or a function that builds
+    it (some read reference files)."""
     return {
-        "kg_doc_triples": _oracle_kg_doc_triples(),
-        "kg_sameas": _oracle_kg_sameas(),
-        "kg_mentions": _oracle_kg_mentions(),
-        "kg_question_triples": _oracle_kg_question_triples(),
-        "kg_flow_closure": _oracle_kg_flow_closure(),
-        "kg_pipeline_digest": _oracle_kg_pipeline_digest(),
-        "kg_flow_digest": _oracle_kg_flow_digest(),
-        "kg_next_steps": _oracle_kg_next_steps(),
-        "posts_xml_questions": _oracle_posts_xml_questions(),
+        "kg_doc_triples": _oracle_kg_doc_triples,
+        "kg_sameas": _oracle_kg_sameas,
+        "kg_mentions": _oracle_kg_mentions,
+        "kg_question_triples": _oracle_kg_question_triples,
+        "kg_flow_closure": _oracle_kg_flow_closure,
+        "kg_pipeline_digest": _oracle_kg_pipeline_digest,
+        "kg_flow_digest": _oracle_kg_flow_digest,
+        "kg_next_steps": _oracle_kg_next_steps,
+        "posts_xml_questions": _oracle_posts_xml_questions,
         "graph_uri_normalize": _ORACLE_GRAPH_URI,
         "dedup_exact": _ORACLE_DEDUP_EXACT,
         "dedup_groups": _ORACLE_DEDUP_GROUPS,
@@ -2178,21 +2178,21 @@ def oracle_sql_full() -> dict[str, str]:
         "dedup_simhash": _ORACLE_DEDUP_SIMHASH,
         "dedup_minhash_md5": _ORACLE_DEDUP_MINHASH_MD5,
         "sim_cosine_topk": _ORACLE_COSINE_TOPK,
-        "sim_lsh_topk": _oracle_sim_lsh_topk(),
-        "dedup_embedding_lsh": _oracle_dedup_embedding_lsh(),
-        "media_features": _oracle_media_features(),
+        "sim_lsh_topk": _oracle_sim_lsh_topk,
+        "dedup_embedding_lsh": _oracle_dedup_embedding_lsh,
+        "media_features": _oracle_media_features,
         "text_token_counts": _ORACLE_TOKEN_COUNTS,
-        "text_language": _oracle_text_language(),
+        "text_language": _oracle_text_language,
         "text_quality": _ORACLE_TEXT_QUALITY,
         "text_repetition": _ORACLE_TEXT_REPETITION,
         "doc_fingerprint": _ORACLE_FINGERPRINT,
         "doc_md5_keys": _ORACLE_MD5_KEYS,
         "posexplode_words": _ORACLE_POSEXPLODE,
-        "semforms_expressions": _oracle_semforms_expressions(),
-        "semforms_dataflow": _oracle_semforms_dataflow(),
-        "semforms_corpus": _oracle_semforms_corpus(),
-        "datarinse_index": _oracle_datarinse_index(),
-        "mining_suite": _oracle_mining_suite(),
+        "semforms_expressions": _oracle_semforms_expressions,
+        "semforms_dataflow": _oracle_semforms_dataflow,
+        "semforms_corpus": _oracle_semforms_corpus,
+        "datarinse_index": _oracle_datarinse_index,
+        "mining_suite": _oracle_mining_suite,
         "agg_pricing_summary": _ORACLE_PRICING,
         "join_topk_orders": _ORACLE_TOPK_ORDERS,
         "corpus_extraction_sql": _ORACLE_CORPUS_EXTRACTION,
@@ -2205,48 +2205,48 @@ def oracle_sql_full() -> dict[str, str]:
         "events_stream_hourly": _ORACLE_EVENTS_HOURLY,
         "votes_per_user": _ORACLE_VOTES_PER_USER,
         "topk_event_types": _ORACLE_TOPK_EVENTS,
-        "merge_modules": _oracle_merge_modules(),
+        "merge_modules": _oracle_merge_modules,
         "longest_description": _ORACLE_LONGEST_DESC,
-        "shape_dims": _oracle_shape_dims(),
-        "kg_patched_types": _oracle_kg_patched_types(),
-        "kg_rst_docstrings": _oracle_kg_rst_docstrings(),
-        "kg_golden_nq": _oracle_kg_golden_nq(),
-        "kg_sink_roundtrip": _oracle_kg_sink_roundtrip(),
-        "kg_golden_emitter": _oracle_kg_golden_emitter(),
-        "top_modules": _oracle_top_modules(),
-        "builtin_blacklist": _oracle_builtin_blacklist(),
-        "test_module_filter": _oracle_test_module_filter(),
-        "optional_left_outer": _oracle_optional_left_outer(),
-        "posts_xml_volume": _oracle_posts_xml_volume(),
-        "posts_xml_volume_agg": _oracle_posts_xml_volume_agg(),
-        "sim_ivf_topk": _oracle_sim_ivf_topk(),
-        "kg_canonical_triples": _oracle_kg_canonical_triples(),
-        "media_frame_plan": _oracle_media_frame_plan(),
-        "kg_debug_posts": _oracle_kg_debug_posts(),
-        "kg_find_posts": _oracle_kg_find_posts(),
-        "kg_hyperparam_dist": _oracle_kg_hyperparam_dist(),
-        "kg_single_model_fits": _oracle_kg_single_model_fits(),
-        "kg_fit_predict_pairs": _oracle_kg_fit_predict_pairs(),
-        "kg_type_inference": _oracle_kg_type_inference(),
-        "kg_hyperparam_violations": _oracle_kg_hyperparam_violations(),
-        "kg_similar_flows": _oracle_kg_similar_flows(),
-        "kg_pipeline_forum": _oracle_kg_pipeline_forum(),
-        "kg_flow_triples": _oracle_kg_flow_triples(),
-        "top_modules_volume": _oracle_top_modules_volume(),
+        "shape_dims": _oracle_shape_dims,
+        "kg_patched_types": _oracle_kg_patched_types,
+        "kg_rst_docstrings": _oracle_kg_rst_docstrings,
+        "kg_golden_nq": _oracle_kg_golden_nq,
+        "kg_sink_roundtrip": _oracle_kg_sink_roundtrip,
+        "kg_golden_emitter": _oracle_kg_golden_emitter,
+        "top_modules": _oracle_top_modules,
+        "builtin_blacklist": _oracle_builtin_blacklist,
+        "test_module_filter": _oracle_test_module_filter,
+        "optional_left_outer": _oracle_optional_left_outer,
+        "posts_xml_volume": _oracle_posts_xml_volume,
+        "posts_xml_volume_agg": _oracle_posts_xml_volume_agg,
+        "sim_ivf_topk": _oracle_sim_ivf_topk,
+        "kg_canonical_triples": _oracle_kg_canonical_triples,
+        "media_frame_plan": _oracle_media_frame_plan,
+        "kg_debug_posts": _oracle_kg_debug_posts,
+        "kg_find_posts": _oracle_kg_find_posts,
+        "kg_hyperparam_dist": _oracle_kg_hyperparam_dist,
+        "kg_single_model_fits": _oracle_kg_single_model_fits,
+        "kg_fit_predict_pairs": _oracle_kg_fit_predict_pairs,
+        "kg_type_inference": _oracle_kg_type_inference,
+        "kg_hyperparam_violations": _oracle_kg_hyperparam_violations,
+        "kg_similar_flows": _oracle_kg_similar_flows,
+        "kg_pipeline_forum": _oracle_kg_pipeline_forum,
+        "kg_flow_triples": _oracle_kg_flow_triples,
+        "top_modules_volume": _oracle_top_modules_volume,
         "doc_sample_stratified": _ORACLE_SAMPLE_STRATIFIED,
         "doc_sample_topk": _ORACLE_SAMPLE_TOPK,
-        "corpus_curation": _oracle_corpus_curation(),
+        "corpus_curation": _oracle_corpus_curation,
         "pii_redact": _ORACLE_PII_REDACT,
         "dedup_lines": _ORACLE_DEDUP_LINES,
         "decontaminate": _ORACLE_DECONTAMINATE,
         "pack_sequences": _ORACLE_PACK_SEQUENCES,
         "emb_quantize": _ORACLE_EMB_QUANTIZE,
-        "sim_ivf_recall": _oracle_sim_ivf_recall(),
-        "kg_void_stats": _oracle_kg_void_stats(),
+        "sim_ivf_recall": _oracle_sim_ivf_recall,
+        "kg_void_stats": _oracle_kg_void_stats,
         "corpus_pipeline": _ORACLE_CORPUS_PIPELINE,
-        "kmeans_clusters": _oracle_kmeans_clusters(),
-        "cluster_balanced_sample": _oracle_cluster_balanced_sample(),
-        "bm25_search": _oracle_bm25_search(),
+        "kmeans_clusters": _oracle_kmeans_clusters,
+        "cluster_balanced_sample": _oracle_cluster_balanced_sample,
+        "bm25_search": _oracle_bm25_search,
         "events_sessionize": _ORACLE_EVENTS_SESSIONIZE,
         "asof_join_events": _ORACLE_ASOF_JOIN,
         "range_join_events": _ORACLE_RANGE_JOIN,
@@ -2256,20 +2256,38 @@ def oracle_sql_full() -> dict[str, str]:
         "cms_user_counts": _ORACLE_CMS_USER_COUNTS,
         "kmv_distinct": _ORACLE_KMV_DISTINCT,
         # round-4 composed family oracles
-        "kg_canonicalize": _oracle_kg_canonicalize(),
-        "kg_usage_posts": _oracle_kg_usage_posts(),
-        "kg_usage_models": _oracle_kg_usage_models(),
-        "kg_usage_graph": _oracle_kg_usage_graph(),
-        "kg_doc_aggregates": _oracle_kg_doc_aggregates(),
-        "text_profile": _oracle_text_profile(),
-        "semi_anti_joins": _oracle_semi_anti_joins(),
-        "posts_votes": _oracle_posts_votes(),
-        "top_modules_suite": _oracle_top_modules_suite(),
-        "doc_sampling": _oracle_doc_sampling(),
-        "events_temporal": _oracle_events_temporal(),
-        "events_analytics": _oracle_events_analytics(),
-        "media_suite": _oracle_media_suite(),
+        "kg_canonicalize": _oracle_kg_canonicalize,
+        "kg_usage_posts": _oracle_kg_usage_posts,
+        "kg_usage_models": _oracle_kg_usage_models,
+        "kg_usage_graph": _oracle_kg_usage_graph,
+        "kg_doc_aggregates": _oracle_kg_doc_aggregates,
+        "text_profile": _oracle_text_profile,
+        "semi_anti_joins": _oracle_semi_anti_joins,
+        "posts_votes": _oracle_posts_votes,
+        "top_modules_suite": _oracle_top_modules_suite,
+        "doc_sampling": _oracle_doc_sampling,
+        "events_temporal": _oracle_events_temporal,
+        "events_analytics": _oracle_events_analytics,
+        "media_suite": _oracle_media_suite,
     }
+
+
+def _build_oracle(oracle: Callable[[], str] | str) -> str:
+    """The oracle's SQL.  When it needs a reference file that is absent,
+    an oracle that fails with the missing path instead: only the rows
+    that read the file fail, not every oracle."""
+    if isinstance(oracle, str):
+        return oracle
+    try:
+        return oracle()
+    except FileNotFoundError as exc:
+        return f"SELECT error({_sql_quote(f'missing reference file: {exc.filename}')})"
+
+
+def oracle_sql_full() -> dict[str, str]:
+    """Oracles for `queries_full()` (superset of the curated driver
+    oracles).  Entries absent here are rows-only by design."""
+    return {name: _build_oracle(o) for name, o in _oracle_builders().items()}
 
 
 # ---------------------------------------------------------------------------
@@ -6127,5 +6145,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    full = oracle_sql_full()
-    return {name: full[name] for name in _CURATED if name in full}
+    builders = _oracle_builders()
+    return {name: _build_oracle(builders[name]) for name in _CURATED if name in builders}

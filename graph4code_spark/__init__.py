@@ -17,4 +17,9 @@ selection; Python appears only inside Arrow-batched pandas UDFs.
 
 __version__ = "0.1.0"
 
+from graph4code_spark import _zipcache
 from graph4code_spark.session import get_spark  # noqa: F401
+
+# workers import the package when they unpickle its functions: from then
+# on their per-task import-cache reset skips unchanged zip archives
+_zipcache.install()

@@ -362,7 +362,8 @@ import re
 from typing import Iterator, NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from graph4code_spark.schemas import ANALYSIS_NODES_SCHEMA
 from graph4code_spark.synth import entity_name, entity_type
@@ -1466,13 +1467,15 @@ def _extract_page_safe(url, codes, flow_catalog,
 
 
 def extract_flow_nodes(qa: DataFrame, catalog_records: list[dict],
-                       error_observation: str | None = None) -> DataFrame:
+                       error_observation: Observation | None = None) -> DataFrame:
     """(url, codes) → ANALYSIS_NODES_SCHEMA rows, graph_uri = page url.
 
     Per-page fault barrier: a page whose extraction raises contributes a
-    sentinel row (`node_number = -1`), counted into `error_observation`
-    when a name is given (`observe()` lineage, same discipline as
-    `materialize.py`) and always filtered before return."""
+    sentinel row (`node_number = -1`), always filtered before return.
+    When given, `error_observation` receives ``pages_failed`` (sentinel
+    rows) and ``rows_seen`` (rows before the filter) once an action has
+    run the result (`observe()` lineage, same discipline as
+    `materialize.py`)."""
     flow_catalog = build_flow_catalog(catalog_records)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1489,12 +1492,9 @@ def extract_flow_nodes(qa: DataFrame, catalog_records: list[dict],
 
     nodes = qa.select("url", "codes").mapInPandas(run, schema=ANALYSIS_NODES_SCHEMA)
     if error_observation is not None:
-        import pyspark.sql.functions as F
-
         nodes = nodes.observe(
             error_observation,
-            F.sum(F.when(F.col("node_number") < 0, 1).otherwise(0))
-            .alias("pages_failed"),
+            F.count(F.when(F.col("node_number") < 0, 1)).alias("pages_failed"),
             F.count(F.lit(1)).alias("rows_seen"),
         )
     return nodes.filter("node_number >= 0")

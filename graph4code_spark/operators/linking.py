@@ -25,6 +25,8 @@ The reference probes an Elasticsearch index per catalog entity
   this is the one shuffle, keyed by entity.  Hub entities (``fit``) are
   exactly the skewed keys; AQE skew-join/partition splitting plus the cap
   itself bound the damage, mirroring the reference's silent truncation.
+  The scan counts each entity's candidates, and the cap runs only when
+  some entity has more than 5000.
 - **good_match** — must-term re-check (`utils.py:300-343`), vectorized.
 """
 
@@ -304,7 +306,12 @@ def link_entities(
     BM25 stays in CPython on both passes' data with the exact
     `bm25_score` expressions and sorted-token summation order, so the
     result is bit-identical to the two-pass composition (and to the
-    straight-line reference_impl oracle)."""
+    straight-line reference_impl oracle).
+
+    The scan's stats rows also count each entity's candidates, so the
+    cap runs only when some entity has more than ``cap`` of them: a cap
+    that keeps every row is the identity, and skipping it saves its
+    window shuffle."""
     entities, index = build_entity_index(catalog_records)
     index_keys = frozenset(index)
     vocab_set = {t for _, _, _, req in entities for t in req}
@@ -367,19 +374,24 @@ def link_entities(
                                 ml in content_lower or mj in content_lower
                                 for ml, mj in musts_by_id[ei]
                             ))
-            nc, ns = len(c_url), len(df_part) + 1
+            # stats rows (no document): per-token df, per-entity
+            # candidate counts, then the (doc count, summed length) anchor
+            e_part = Counter(c_ei)
+            nc, nt, ne = len(c_url), len(df_part), len(e_part)
+            ns = nt + ne + 1
             # typed nullable columns (not object) — cheaper Arrow path
             yield pd.DataFrame({
                 "url": pd.array(c_url + [None] * ns, dtype="string"),
                 "question_id": pd.array(c_qid + [None] * ns, dtype="string"),
                 "dl": pd.array(c_dl + [None] * ns, dtype="Int32"),
-                "tok": pd.array([None] * nc + list(df_part) + [None],
+                "tok": pd.array([None] * nc + list(df_part) + [None] * (ne + 1),
                                 dtype="string"),
-                "cnt": pd.array([None] * nc + list(df_part.values()) + [n_b],
-                                dtype="Int64"),
+                "cnt": pd.array([None] * nc + list(df_part.values())
+                                + list(e_part.values()) + [n_b], dtype="Int64"),
                 "sumdl": pd.array([None] * (nc + ns - 1) + [sumdl_b],
                                   dtype="Int64"),
-                "entity_id": pd.array(c_ei + [None] * ns, dtype="Int32"),
+                "entity_id": pd.array(c_ei + [None] * nt + list(e_part) + [None],
+                                      dtype="Int32"),
                 "tfs": c_tfs + [None] * ns,
                 "gm": pd.array(c_gm + [None] * ns, dtype="boolean"),
             }, columns=cols)
@@ -398,22 +410,25 @@ def link_entities(
     )
 
     # global index statistics: ONE tiny aggregation over the partial
-    # stats rows (bounded by catalog vocabulary × batches).  Exact-int
+    # stats rows (bounded by catalog size × batches).  Exact-int
     # sums; avgdl = total_dl / n_docs is the same double as Spark's
     # avg-over-ints in corpus_token_stats (long sum, one final divide).
+    candidate = F.col("dl").isNotNull()  # stats rows have no document
     rows = (
-        scanned.where(F.col("entity_id").isNull())
-        .groupBy("tok")
+        scanned.where(~candidate)
+        .groupBy("tok", "entity_id")
         .agg(F.sum("cnt").alias("c"), F.sum("sumdl").alias("s"))
         .collect()
     )
     dfreq: dict = {}
-    n_docs, total_dl = 0, 0
+    n_docs, total_dl, most_candidates = 0, 0, 0
     for r in rows:
-        if r["tok"] is None:
-            n_docs, total_dl = int(r["c"] or 0), int(r["s"] or 0)
-        else:
+        if r["tok"] is not None:
             dfreq[r["tok"]] = int(r["c"])
+        elif r["entity_id"] is not None:
+            most_candidates = max(most_candidates, int(r["c"]))
+        else:
+            n_docs, total_dl = int(r["c"] or 0), int(r["s"] or 0)
     stats = CorpusStats(dfreq, n_docs, (total_dl / n_docs) if n_docs else 0.0)
 
     # light rescoring pass: candidates only, no page content
@@ -467,8 +482,10 @@ def link_entities(
             yield pd.concat(parts, ignore_index=True)
 
     links = (
-        scanned.where(F.col("entity_id").isNotNull())
+        scanned.where(candidate)
         .select("url", "question_id", "dl", "entity_id", "tfs", "gm")
         .mapInPandas(rescore, schema=MENTIONS_SCHEMA)
     )
+    if most_candidates <= cap:
+        return links
     return cap_per_entity(links, cap, salt_buckets=salt_buckets)

@@ -143,10 +143,13 @@ class StageRunner:
         self._save()
         self.executed.append(name)
 
-    def run(self, name: str, build, deps: list[str] | None = None) -> DataFrame:
+    def run(self, name: str, build, deps: list[str] | None = None,
+            observation: Observation | None = None) -> DataFrame:
         """``deps``: upstream stage names — if any of them was RECOMPUTED
         this run, this stage's checkpoint is invalid even when its own
-        fingerprint matches."""
+        fingerprint matches.  ``observation``: one that ``build`` attaches
+        to the stage; its metrics join the manifest entry when the stage
+        is written (a resumed stage keeps its entry as it was)."""
         done = self.resumed(name, deps or ())
         if done is not None:
             return done
@@ -160,7 +163,8 @@ class StageRunner:
             .option("compression", "zstd")
             .parquet(path)
         )
-        self.record(name, df.schema, int(obs.get["rows"]), t0)
+        extra = observation.get if observation is not None else {}
+        self.record(name, df.schema, int(obs.get["rows"]), t0, **extra)
         return self.spark.read.schema(df.schema).parquet(path)
 
 
@@ -196,13 +200,15 @@ def run_pipeline(
         lambda: forum_triples(links, qa, records, cfg.forum_prefix),
         deps=["01_qa", "02_links"],
     )
-    # fault-barrier lineage: pages the extractor dropped surface in the
-    # stage's observed metrics (one bad page must never fail the stage)
+    # fault-barrier lineage: the pages the extractor dropped
+    # (``pages_failed``) and the rows it produced before the filter
+    # (``rows_seen``) land in the stage's manifest entry; one bad page
+    # must never fail the stage
+    flow_obs = Observation("flow_extract_05")
     flow_nodes = runner.run(
         "05_flow_nodes",
-        lambda: extract_flow_nodes(
-            qa, records, error_observation="flow_extract_05"),
-        deps=["01_qa"])
+        lambda: extract_flow_nodes(qa, records, error_observation=flow_obs),
+        deps=["01_qa"], observation=flow_obs)
     flow_t = runner.run("06_flow_triples", lambda: analysis_triples(flow_nodes),
                         deps=["05_flow_nodes"])
     mapping = runner.run(

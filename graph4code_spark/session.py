@@ -10,6 +10,16 @@ RDD: every scan of the API catalog, the class map, the anchor labels or a
 union-find result started Python worker tasks, seconds of executor time
 for a few dozen rows.  ``local_df`` ships the rows to the JVM as one Arrow
 table instead, so scans of the result run in the JVM alone.
+
+The Python workers carry one more fixed cost per task, which the package
+removes on import (``graph4code_spark._zipcache``).  Every task's set-up
+calls ``importlib.invalidate_caches()``, and before CPython 3.13 that
+re-reads the central directory of ``pyspark.zip`` once per importer the
+worker holds on it: 0.13–0.19 CPU s a task, so it grows with the task
+count, not the data.  On Python < 3.13 the package backports 3.13's cheap
+invalidation: an archive whose ``(st_mtime_ns, st_size)`` is unchanged is
+not re-read, a changed one is, and what is left per task is one ``stat``
+per importer.  Python ≥ 3.13 is left as it is.
 """
 
 from __future__ import annotations

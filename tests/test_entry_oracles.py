@@ -13,6 +13,10 @@ import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
 
+#: built once: building every oracle takes seconds (straight-line
+#: recomputations), and each parity case needs only its own
+ORACLES = entry_mod.oracle_sql_full()
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -42,14 +46,14 @@ def _multiset(cols, rows):
     return Counter(tuple(_canon(r[i]) for i in order) for r in rows)
 
 
-@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql_full().keys()))
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, con, name):
     q = entry_mod.queries_full()[name]
     sdf = q(spark, SF_DIR)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
 
-    odf = con.sql(entry_mod.oracle_sql_full()[name])
+    odf = con.sql(ORACLES[name])
     o_cols = list(odf.columns)
     o_rows = odf.fetchall()
 
@@ -59,6 +63,19 @@ def test_oracle_parity(spark, con, name):
     if sm != om:
         diff = list((sm - om).items())[:3] + list((om - sm).items())[:3]
         raise AssertionError(f"{name}: value mismatch, e.g. {diff}")
+
+
+def test_missing_reference_file_fails_only_its_oracle(con, tmp_path):
+    missing = str(tmp_path / "absent.nq")
+
+    def reads_reference():
+        with open(missing) as f:
+            return f.read()
+
+    sql = entry_mod._build_oracle(reads_reference)
+    with pytest.raises(duckdb.Error, match=f"missing reference file: {missing}"):
+        con.sql(sql).fetchall()
+    assert entry_mod._build_oracle("SELECT 1 AS x") == "SELECT 1 AS x"
 
 
 def test_entry_smoke(spark):
@@ -83,9 +100,8 @@ def test_curated_contract_shape():
 
 def test_rows_only_queries_run(spark):
     qs = entry_mod.queries_full()
-    oracles = entry_mod.oracle_sql_full()
     for name in qs:
-        if name in oracles:
+        if name in ORACLES:
             continue
         df = qs[name](spark, SF_DIR)
         assert df.count() >= 0, name

@@ -17,6 +17,7 @@ import time
 from pathlib import Path
 
 import pytest
+from pyspark.sql import Observation
 
 from graph4code_spark.operators.flows import (
     PAGE_ERROR_SENTINEL,
@@ -348,12 +349,13 @@ def test_extract_flow_nodes_filters_sentinels_and_observes(spark):
         [("http://p/1", ["import pandas\ndf = pandas.read_csv('a.csv')"]),
          ("http://p/2", ["@decorator\nx = ("])],
         "url string, codes array<string>")
-    out = extract_flow_nodes(qa, FIXED_CATALOG,
-                             error_observation="flow_fuzz_obs")
+    obs = Observation("flow_fuzz_obs")
+    out = extract_flow_nodes(qa, FIXED_CATALOG, error_observation=obs)
     rows = out.collect()
     assert rows, "clean page produced no nodes"
     assert all(r.node_number >= 0 for r in rows)
     assert not any(r.path_end == PAGE_ERROR_SENTINEL for r in rows)
+    assert obs.get == {"pages_failed": 0, "rows_seen": len(rows)}
 
 
 if __name__ == "__main__":

@@ -12,7 +12,7 @@ from graph4code_spark.plans.pipeline import (
 )
 from graph4code_spark.synth import synth_pages
 
-#: Spark jobs a cold 40-page build may submit: it measures 25 on
+#: Spark jobs a cold 40-page build may submit: it measures 23 on
 #: local[4], the stage and sink writes with their own shuffles.  A count
 #: or schema-inference job after each of the eight stage writes would
 #: push it past the bound.
@@ -57,6 +57,11 @@ def test_pipeline_runs_and_resumes(spark, tmp_path):
     # upstream stages were reused, not recomputed
     manifest2 = json.load(open(os.path.join(out, "manifest.json")))
     assert manifest2["01_qa"]["completed_at"] == manifest["01_qa"]["completed_at"]
+    # the flow stage's observed extractor metrics: clean input drops no
+    # page; a resumed stage keeps its entry as written
+    flow = manifest["05_flow_nodes"]
+    assert flow["pages_failed"] == 0 and flow["rows_seen"] == flow["rows"] > 0
+    assert manifest2["05_flow_nodes"] == flow
     assert runner is not None
 
 

@@ -252,7 +252,31 @@ def test_cross_graph_node_reuse_stress(spark):
     assert fit_predict_pairs(tri, "sklearn.base.ClassifierMixin").count() == 0
 
 
-def test_fused_link_entities_equals_two_pass_composition(spark):
+#: Spark jobs one ``link_entities`` call and the write of its output may
+#: submit on a 40-page stage input: it measures 4 on local[4] (the scan
+#: checkpoint, the two-stage stats aggregate, the write).  Running the
+#: cap when no entity exceeds it adds the window shuffle: 6.
+MAX_LINK_JOBS = 5
+
+
+def test_link_entities_job_count(spark, tmp_path):
+    qa_dir, out_dir = str(tmp_path / "qa"), str(tmp_path / "links")
+    extract_qa(synth_pages(spark, 40, seed=12)).write.parquet(qa_dir)
+    qa = spark.read.parquet(qa_dir)
+    sc = spark.sparkContext
+    group = "test_link_entities_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        link_entities(qa, FIXED_CATALOG).write.parquet(out_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= MAX_LINK_JOBS, n_jobs
+    assert spark.read.parquet(out_dir).count() > 0
+
+
+def test_fused_link_entities_equals_two_pass_composition(spark, monkeypatch):
     """Round-4 fused single-tokenization plan (`link_entities`) must be
     row-for-row AND bit-for-bit (bm25 doubles included) identical to the
     legacy two-pass composition `cap_per_entity(detect_mentions(qa, cat,
@@ -276,17 +300,35 @@ def test_fused_link_entities_equals_two_pass_composition(spark):
     ]
     words = ["pandas", "read_csv", "readCsv", "LinearSVC", "fit", "misfit",
              "numpy", "argmax", "zlib", "x2go", "CSVFile", "the", "a", "b2b"]
-    rows = []
+    rows_in = []
     for i in range(120):
         n = rng.randint(0, 40)
-        rows.append((f"u://{i}", str(i), " ".join(rng.choice(words) for _ in range(n))))
-    qa = spark.createDataFrame(rows, "url string, question_id string, content string")
+        rows_in.append((f"u://{i}", str(i), " ".join(rng.choice(words) for _ in range(n))))
+    qa = spark.createDataFrame(rows_in, "url string, question_id string, content string")
 
+    from graph4code_spark.operators import linking
+
+    capped = []
+
+    def spy(links, cap, salt_buckets=0):
+        capped.append((cap, salt_buckets))
+        return cap_per_entity(links, cap, salt_buckets=salt_buckets)
+
+    monkeypatch.setattr(linking, "cap_per_entity", spy)
     fused = link_entities(qa, cat, cap=7, salt_buckets=3)
+    # some entity has more than 7 candidates: the salted cap must run
+    assert capped == [(7, 3)]
     stats = corpus_token_stats(qa, cat)
-    legacy = cap_per_entity(detect_mentions(qa, cat, stats), cap=7, salt_buckets=0)
+    mentions = detect_mentions(qa, cat, stats)
+    legacy = cap_per_entity(mentions, cap=7, salt_buckets=0)
 
-    key = lambda r: (r["entity"], r["url"])
-    got = sorted((tuple(r) for r in fused.collect()), key=lambda t: (t[2], t[0]))
-    want = sorted((tuple(r) for r in legacy.collect()), key=lambda t: (t[2], t[0]))
-    assert got == want  # exact equality: ints, bools, and float bm25 bits
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=lambda t: (t[2], t[0]))
+
+    assert rows(fused) == rows(legacy)  # exact: ints, bools, float bm25 bits
+
+    # no entity exceeds the cap (one candidate per page at most): the
+    # cap is skipped and every mention kept
+    uncapped = link_entities(qa, cat, cap=len(rows_in), salt_buckets=3)
+    assert capped == [(7, 3)]
+    assert rows(uncapped) == rows(mentions)
