@@ -20,6 +20,27 @@ count, not the data.  On Python < 3.13 the package backports 3.13's cheap
 invalidation: an archive whose ``(st_mtime_ns, st_size)`` is unchanged is
 not re-read, a changed one is, and what is left per task is one ``stat``
 per importer.  Python ≥ 3.13 is left as it is.
+
+The driver JVM carries a fixed cost of its own: its C2 JIT compiler.  A
+batch build runs in a cold JVM, and with HotSpot's default tier-4
+thresholds C2 compiles every method that turns lukewarm, which in a build
+is mostly one-off planning, Janino, serialization and JDK code.
+``_BASE_CONF`` therefore launches the driver JVM with the four tier-4
+thresholds at ×10 their JDK 17 defaults: C2 still compiles the code that is
+really hot, and C1 compiles the rest.  The price is executor CPU, since hot
+code stays longer in C1's profiled tier, and the gain shrinks as the build
+grows: the ×10 thresholds are justified for ``kg_full`` builds of up to
+8,000 pages and are about neutral at 32,000 (``local[4]``); larger builds
+are unmeasured.  The numbers, and why C1-only and ×20 thresholds were
+rejected, are in README "Scale design".
+
+The flags reach the JVM only when it is launched, so they are set as
+``spark.driver.extraJavaOptions`` before the first session of a process;
+``spark.conf.set`` after launch, or ``spark.executor.*``, would not reach
+the driver.  Under ``spark-submit`` the JVM starts before any Python runs:
+pass them with ``--driver-java-options`` (see ``jobs/run_pipeline.py``).
+A caller's own ``spark.driver.extraJavaOptions`` in ``extra_conf``
+replaces the entry, as any key there does.
 """
 
 from __future__ import annotations
@@ -39,6 +60,8 @@ from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 #   partitions).
 # - Arrow on: every Python-side stage is a vectorized pandas UDF.
 # - shuffle.partitions is a starting point; AQE coalesces down.
+# - Driver JVM tier-4 JIT thresholds at ×10 the JDK 17 defaults (5000, 600,
+#   15000, 40000); see the module docstring.
 _BASE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -51,6 +74,10 @@ _BASE_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    "spark.driver.extraJavaOptions": (
+        "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+        "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    ),
 }
 
 

@@ -6,9 +6,19 @@ beyond arg parsing, so the exact same command moves to a 1000-executor
 cluster by changing ``--master``/executor conf only:
 
     python -c "import shutil; shutil.make_archive('dist/graph4code_spark','zip',root_dir='.',base_dir='graph4code_spark')"
+    JIT_OPTS="$(python -c 'from graph4code_spark.session import _BASE_CONF as c; print(c["spark.driver.extraJavaOptions"])')"
     spark-submit --master local[8] \
         --py-files dist/graph4code_spark.zip \
+        --driver-java-options "$JIT_OPTS" \
         jobs/run_pipeline.py --out-dir /tmp/kg_out --pages 32000
+
+The driver JVM starts before this script runs, so the JIT thresholds
+``graph4code_spark.session`` sets for sessions it launches cannot reach it
+from here; ``--driver-java-options`` passes the same flags, read from
+``session._BASE_CONF["spark.driver.extraJavaOptions"]`` (why: README
+"Scale design").  ``spark.executor.extraJavaOptions`` is left
+at its default: the thresholds were measured on one ``local[N]`` JVM, and
+executor JVMs on a cluster have not been measured.
 
 On a cluster: ``--master yarn --num-executors N --executor-cores C ...``
 with ``--input <parquet/iceberg path>`` pointing at the real pages table
