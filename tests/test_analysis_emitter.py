@@ -2519,6 +2519,36 @@ def test_call_subscript_chain():
     assert mean["node_number"] in rd["flows_to"]["0"]
 
 
+def test_binop_keyword_arg_expr_node():
+    """`kernel=1.0 * RBF(1.0)` (example2.json node 102): a binop argument
+    mints an `….RBF.expr` turtle with its constant operand at ordinal 0,
+    fed by the RBF call at ordinal 1 and flowing into the constructor at
+    the keyword's ordinal."""
+    from graph4code_spark.operators.flows import (
+        build_flow_catalog,
+        extract_page_flow_nodes,
+    )
+
+    cat = build_flow_catalog(FIXED_CATALOG)
+    got = extract_page_flow_nodes(
+        "http://q/1",
+        ["from sklearn.gaussian_process import GaussianProcessClassifier\n"
+         "from sklearn.gaussian_process.kernels import RBF\n"
+         "clf = GaussianProcessClassifier(kernel=1.0 * RBF(1.0))\n"], cat)
+    ctor, rbf, expr = got[-3:]
+    assert ctor["normalized_label"] == (
+        "sklearn.gaussian_process.GaussianProcessClassifier")
+    assert ctor["value_names"] == ["clf"]
+    assert rbf["normalized_label"] == "sklearn.gaussian_process.kernels.RBF"
+    assert rbf["constant_positional_args"] == {"1": "1.0"}
+    assert expr["normalized_label"] == (
+        "sklearn.gaussian_process.kernels.RBF.expr")
+    assert expr["constant_positional_args"] == {"0": "1.0"}
+    assert expr["source_text"] == "1.0 * RBF(1.0)"
+    assert rbf["flows_to"] == {"1": [expr["node_number"]]}
+    assert expr["flows_to"] == {"1": [ctor["node_number"]]}
+
+
 def test_complex_index_inner_reads():
     """`df2 = df[df['a'] > 0]` / `df[df.a > 0]` (final r5): inner
     tracked accesses in a complex index hoist and mint their reads,
@@ -2549,6 +2579,22 @@ def test_complex_index_inner_reads():
     # plain forms keep their existing shapes (no hoist, no extra nodes)
     plain = extract_page_flow_nodes("http://q/2", [pre + "x = df['a']\n"], cat)
     assert [n["path"][-1] for n in plain] == ["pandas", "read_csv", "a"]
+    # example1 node 84: the index slices an attribute of a tracked value,
+    # so the read → slice chain feeds the selection bound to X
+    ex1 = extract_page_flow_nodes(
+        "http://q/3", [pre + "X = df[df.columns[:len(df.columns)-1]]\n"], cat)
+    assert [(n["path"], n["is_slice"], n["value_names"]) for n in ex1[2:]] == [
+        (["pandas", "read_csv", "columns"], False, []),  # len()'s hoisted read
+        (["pandas", "read_csv", "columns"], False, []),
+        (["pandas", "read_csv", "columns"], True, []),
+        (["pandas", "read_csv"], False, ["X"]),
+    ]
+    read, sl, sel = ex1[3:]
+    assert read["reads"] == [{"container": [1], "field": "columns"}]
+    assert read["constant_positional_args"] == {"1": "columns"}
+    assert ex1[1]["flows_to"]["0"] == [2, 3, sel["node_number"]]
+    assert read["flows_to"] == {"1": [sl["node_number"]]}
+    assert sl["flows_to"] == {"1": [sel["node_number"]]}
 
 
 def test_attr_chain_call_and_bracket_tails():
@@ -2875,26 +2921,38 @@ def test_comments_and_string_calls_inert():
 
 
 def test_unparseable_statement_passes_through():
-    """A statement that is not Python 3 (`print 'x'`, a stray `)`)
-    reaches the tracker unchanged: the statements around it still
-    track, so read_csv keeps its constant and its DATA-0 edge into the
-    dropna after it."""
+    """A statement that does not parse (a stray `)`, a keyword argument
+    before a positional one) mints nothing, and the statements around it
+    still track: read_csv keeps its constant and its DATA-0 edge into
+    the dropna after it.  A Python 2 `print x, y` lowers to its operand
+    expression, so `print df.dropna()` gives the dropna of
+    `df.dropna()`."""
     from graph4code_spark.operators.flows import (
         build_flow_catalog,
         extract_page_flow_nodes,
     )
 
     cat = build_flow_catalog(FIXED_CATALOG)
-    for i, junk in enumerate(["print 'x'", ")"]):
+    for i, junk in enumerate(["print 'x'", ")",
+                              "pandas.read_csv(key='v', x)"]):
         got = extract_page_flow_nodes(
             f"http://u/{i}", ["import pandas as pd\n"
                               "df = pd.read_csv('a.csv')\n"
                               f"{junk}\n"
                               "df.dropna()\n"], cat)
-        rc = next(n for n in got if n["path"][-1] == "read_csv")
-        drop = next(n for n in got if n["path"][-1] == "dropna")
+        assert [n["path"][-1] for n in got] == [
+            "pandas", "read_csv", "dropna"], junk
+        rc, drop = got[1], got[2]
         assert rc["constant_positional_args"] == {"1": "a.csv"}, junk
         assert rc["flows_to"]["0"] == [drop["node_number"]], junk
+    for i, stmt in enumerate(["print df.dropna()", "print 'n', df.dropna()"]):
+        got = extract_page_flow_nodes(
+            f"http://p/{i}", ["import pandas\n"
+                              "df = pandas.read_csv('a.csv')\n"
+                              f"{stmt}\n"], cat)
+        assert [n["normalized_label"] for n in got] == [
+            "pandas", "pandas.read_csv", "pandas.read_csv.dropna"], stmt
+        assert got[1]["flows_to"]["0"] == [2], stmt
 
 
 def test_non_ascii_text_before_lowered_sugar():
@@ -3007,6 +3065,14 @@ def test_repl_transcript_repair():
          "Out[2]: <DataFrame>\nIn [3]: df.head()\n"],
         cat)
     assert [n["path"][-1] for n in ipy] == ["pandas", "read_csv", "head"]
+    ipy_loop = extract_page_flow_nodes(
+        "http://q/5",
+        ["In [1]: import numpy\nIn [2]: for i in range(2):\n"
+         "   ...:     a = numpy.zeros(i)\n   ...:\n"],
+        cat)
+    assert [n["path"][-1] for n in ipy_loop] == ["numpy", "zeros"]
+    assert ipy_loop[1]["value_names"] == ["a"]
+    assert ipy_loop[1]["source_location"]["first_line"] == 3
     plain = extract_page_flow_nodes(
         "http://q/4",
         ["import pandas\nx = ...\ndf = pandas.read_csv('a.csv')\n"], cat)

@@ -244,8 +244,8 @@ PAGE_DIGESTS = Path(__file__).with_name("flows_page_digests.json")
                         "fb9d665fa4ced3bb06511584fc0bb400")),
     ("synth-2", (16323, "31c5015ff6547670a4994921fbf1a0c1"
                         "27ee1fafda17ffa2030ee89cfeadf090")),
-    ("fuzz", (2115, "5c22d9a832ec872de8bd7f8e8466f534"
-                    "73e92917e899b3d298ddfb865071ee39")),
+    ("fuzz", (1915, "f0e870adeee4d0765a26c94b4781f573"
+                    "f9f3420940628886aa8c2c0e3778bb41")),
 ])
 def test_extractor_output_digest_pinned(corpus, expected):
     """Synth seeds 1 and 2 (1,000 pages each) and the 300 fuzz-grammar
@@ -316,6 +316,21 @@ def test_adversarial_page_fast_and_sane(name):
                                     [ADVERSARIAL[name]], CAT)
     assert time.time() - t0 < 5.0, f"{name} pathologically slow"
     _check_invariants(nodes)
+
+
+def test_tracker_reads_nodes_not_text():
+    """The tracker reads parsed statement nodes: the only compiled
+    module patterns left are the snippet lexer and the four REPL-prompt
+    patterns, and the per-page closure function is gone."""
+    import re
+
+    from graph4code_spark.operators import flows
+
+    patterns = {name for name, v in vars(flows).items()
+                if isinstance(v, re.Pattern)}
+    assert patterns == {"_LEX_RE", "_REPL_PS1_RE", "_REPL_PS2_RE",
+                        "_IPY_IN_RE", "_IPY_CONT_RE"}
+    assert not hasattr(flows, "_page_nodes")
 
 
 # ---------------------------------------------------------------------------
