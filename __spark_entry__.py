@@ -22,6 +22,9 @@ records rows-only checks; their semantics are covered by tests/.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+from collections import defaultdict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +63,14 @@ from graph4code_spark.synth import (
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
+
+#: a registered query: (spark, sf_dir) → DataFrame
+Query = Callable[[SparkSession, str], DataFrame]
+#: a composed family's parts: (part label, component row, spine mapping)
+Parts = list[tuple[str, str, dict[str, str]]]
+#: an oracle: its SQL text, a function that builds it, or a family's parts
+Oracle = str | Callable[[], str] | Parts
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -698,23 +709,24 @@ FROM g
 """
 
 
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
+def _quality_columns(t: F.Column) -> list[F.Column]:
     w = F.split(F.lower(F.trim(t)), r"\s+")
-    n_words = whitespace_token_count(t)
     sw = F.array(*[F.lit(s) for s in _EN_STOP])
     sw_ratio = F.size(F.filter(w, lambda x: F.array_contains(sw, x))) / F.greatest(
         F.size(w), F.lit(1)
     )
     punct = F.size(F.regexp_extract_all(t, F.lit(r"[^\w\s]"), 0))
-    return docs.select(
-        "doc_id",
+    return [
         F.length(t).cast("long").alias("q_chars"),
-        n_words.cast("long").alias("q_words"),
+        whitespace_token_count(t).cast("long").alias("q_words"),
         F.round(sw_ratio, 6).alias("q_stopword_ratio"),
         F.round(punct / F.greatest(F.length(t), F.lit(1)), 6).alias("q_punct_ratio"),
-    )
+    ]
+
+
+def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select("doc_id", *_quality_columns(F.col("text")))
 
 
 _ORACLE_TEXT_QUALITY = f"""
@@ -732,10 +744,10 @@ FROM base
 """
 
 
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint, md5 flavor (oracle-comparable)."""
-    docs = _t(spark, sf_dir, "documents")
-    w = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+def _fingerprint(t: F.Column) -> F.Column:
+    """Winnowing fingerprint, md5 flavor: the least md5 of the 5-word
+    shingles (of the whole text when shorter)."""
+    w = F.split(F.lower(F.trim(t)), r"\s+")
     n = F.size(w)
     win = 5
     grams = F.when(
@@ -745,7 +757,13 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.md5(F.array_join(F.slice(w, i, win), " ")),
         ),
     ).otherwise(F.array(F.md5(F.array_join(w, " "))))
-    return docs.select("doc_id", F.array_min(grams).alias("fp"))
+    return F.array_min(grams)
+
+
+def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing fingerprint, md5 flavor (oracle-comparable)."""
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select("doc_id", _fingerprint(F.col("text")).alias("fp"))
 
 
 _ORACLE_FINGERPRINT = """
@@ -1180,115 +1198,52 @@ ORDER BY cnt DESC, event_type LIMIT 3
 
 
 # ---------------------------------------------------------------------------
-# rows-only entries (non-SQL-expressible; semantics covered by tests/)
+# the shared quad stores and the seed-42 oracle corpus
 # ---------------------------------------------------------------------------
 
-def _pipeline_forum_triples(spark: SparkSession) -> DataFrame:
-    """Full webtext path on synthesized pages: QA → analyzer linking →
-    E4/E5 forum triples."""
+#: session-scoped materialized quad stores, keyed by Spark applicationId
+#: (a localCheckpoint dies with its session, so a stale entry must never
+#: outlive the session that built it).  The reference's usage model is
+#: load-once-query-many: `create_kg.sh` bulk-loads the emitted N-Quads
+#: into Jena TDB2 ONCE (SURVEY §2.1 S11), then every usage_queries/*.sparql
+#: runs against that store.  Rebuilding the 300-page extraction chain per
+#: query would charge every usage query the full KG-construction cost —
+#: the one-time load is the semantically faithful stand-in.  Inputs are
+#: deterministic (FIXED_CATALOG + seed-42 pages), so caching cannot
+#: change any query's result.
+_QUAD_STORE_CACHE: dict[tuple[str, str], DataFrame] = {}
+
+
+def _cached_store(spark: SparkSession, kind: str, build) -> DataFrame:
+    """``build()`` materialized once per session: the per-predicate legs
+    of the usage queries re-scan this buffer instead of re-executing the
+    extraction pipeline once per leg (a 300-page mapInPandas chain).  At
+    production scale the quad table is a parquet read with (pred_name)
+    partition pruning — this stands in for that read."""
+    key = (spark.sparkContext.applicationId, kind)
+    df = _QUAD_STORE_CACHE.get(key)
+    if df is None:
+        df = _QUAD_STORE_CACHE[key] = build().localCheckpoint(eager=True)
+    return df
+
+
+def _forum_quads(spark: SparkSession) -> DataFrame:
+    """The forum store: the full webtext path on 300 synthesized pages
+    (QA → analyzer linking → E4/E5 forum triples) as distinct
+    (subj, pred, obj, is_literal, graph) quads."""
     from graph4code_spark.emitters.forum import forum_triples
     from graph4code_spark.operators.linking import link_entities
     from graph4code_spark.sources.qa import extract_qa
 
-    pages = synth_pages(spark, 300, seed=42)
-    qa = extract_qa(pages)
-    links = link_entities(qa, FIXED_CATALOG)
-    return forum_triples(links, qa, FIXED_CATALOG).dropDuplicates()
-
-
-def q_kg_pipeline_forum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full forum pipeline, projected to ONE md5 per emitted quad so
-    the straight-line reference pipeline can serve as a strict VALUES
-    oracle (full quad text — raw html content literals — would bloat the
-    oracle SQL; the md5 projection keeps the row-per-quad comparison
-    exact).  The per-predicate digest twin (kg_pipeline_digest) remains
-    the human-readable view."""
-    tri = _pipeline_forum_triples(spark).select(
-        "subj", "pred", "obj", "is_literal", "graph"
-    ).dropDuplicates()
-    h = F.md5(
-        F.concat_ws(
-            "\x1f", "subj", "pred", "obj",
-            F.col("is_literal").cast("string"), "graph",
+    def build() -> DataFrame:
+        qa = extract_qa(synth_pages(spark, 300, seed=42))
+        links = link_entities(qa, FIXED_CATALOG)
+        return (
+            forum_triples(links, qa, FIXED_CATALOG)
+            .select("subj", "pred", "obj", "is_literal", "graph").dropDuplicates()
         )
-    )
-    return tri.select(h.alias("quad_md5"))
 
-
-def _oracle_kg_pipeline_forum() -> str:
-    import hashlib
-
-    from graph4code_spark.reference_impl.emitters import forum_pipeline_quads
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
-    from graph4code_spark.uris import PREFIXES
-
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    pages_rows = [_page_record(pid, 42, names, hub, etypes) for pid in range(300)]
-    quads = forum_pipeline_quads(pages_rows, FIXED_CATALOG, PREFIXES["stackoverflow3"])
-    rows = sorted(
-        (
-            hashlib.md5(
-                "\x1f".join(
-                    [s, p, o, "true" if lit else "false", g]
-                ).encode("utf-8")
-            ).hexdigest(),
-        )
-        for s, p, o, lit, g in set(quads)
-    )
-    return _values_table(rows, ["quad_md5"], ["VARCHAR"])
-
-
-def q_kg_pipeline_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-sensitive digest of the FULL forum pipeline output, per
-    predicate: row count + md5 over the sorted per-quad md5s.  The oracle
-    side recomputes the same digests from the straight-line reference
-    pipeline (`reference_impl.forum_pipeline_quads`) — a compact but
-    complete equality check of every emitted quad."""
-    tri = _pipeline_forum_triples(spark).select(
-        "subj", "pred", "obj", "is_literal", "graph"
-    ).dropDuplicates()
-    h = F.md5(
-        F.concat_ws(
-            "\x1f", "subj", "pred", "obj",
-            F.col("is_literal").cast("string"), "graph",
-        )
-    )
-    return (
-        tri.select("pred", h.alias("h"))
-        .groupBy("pred")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias("digest"),
-        )
-    )
-
-
-def _oracle_kg_pipeline_digest() -> str:
-    import hashlib
-    from collections import defaultdict
-
-    from graph4code_spark.reference_impl.emitters import forum_pipeline_quads
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
-    from graph4code_spark.uris import PREFIXES
-
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    pages_rows = [_page_record(pid, 42, names, hub, etypes) for pid in range(300)]
-    quads = forum_pipeline_quads(pages_rows, FIXED_CATALOG, PREFIXES["stackoverflow3"])
-
-    per_pred: dict[str, list[str]] = defaultdict(list)
-    for subj, pred, obj, is_literal, graph in quads:
-        row = "\x1f".join([subj, pred, obj, "true" if is_literal else "false", graph])
-        per_pred[pred].append(hashlib.md5(row.encode("utf-8")).hexdigest())
-    rows = [
-        (pred, len(hs), hashlib.md5("".join(sorted(hs)).encode()).hexdigest())
-        for pred, hs in sorted(per_pred.items())
-    ]
-    return _values_table(rows, ["pred", "n", "digest"],
-                         ["VARCHAR", "BIGINT", "VARCHAR"])
+    return _cached_store(spark, "forum", build)
 
 
 def _flow_triples(spark: SparkSession) -> DataFrame:
@@ -1301,43 +1256,191 @@ def _flow_triples(spark: SparkSession) -> DataFrame:
     return analysis_triples(extract_flow_nodes(qa, FIXED_CATALOG)).dropDuplicates()
 
 
+def _flow_quads(spark: SparkSession) -> DataFrame:
+    """Analysis-graphs-only store (queries that never touch docstrings)."""
+    return _cached_store(spark, "flow", lambda: _flow_triples(spark))
+
+
+def _usage_quads(spark: SparkSession) -> DataFrame:
+    """The full usage-query store: docstrings graph ∪ analysis graphs."""
+
+    def build() -> DataFrame:
+        alias = build_class_alias_map(FIXED_CLASS_MAP)
+        doc_t = docstring_triples(catalog_df(spark, FIXED_CATALOG), alias)
+        return doc_t.unionByName(_flow_triples(spark)).dropDuplicates()
+
+    return _cached_store(spark, "doc+flow", build)
+
+
+def _quad_md5(annotated: bool = True) -> F.Column:
+    """md5 of one quad's fields joined by \\x1f; ``annotated`` quads are
+    the 7-column analysis shape, whose arg_pos/arg_name join as ''
+    when NULL."""
+    ann = [
+        F.coalesce(F.col("arg_pos").cast("string"), F.lit("")),
+        F.coalesce(F.col("arg_name"), F.lit("")),
+    ] if annotated else []
+    return F.md5(
+        F.concat_ws(
+            "\x1f", "subj", "pred", "obj",
+            F.col("is_literal").cast("string"), *ann, "graph",
+        )
+    )
+
+
+def _pred_digest(tri: DataFrame, annotated: bool) -> DataFrame:
+    """Per predicate: row count + md5 over the sorted per-quad md5s."""
+    return (
+        tri.select("pred", _quad_md5(annotated).alias("h"))
+        .groupBy("pred")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias("digest"),
+        )
+    )
+
+
+@functools.cache
+def _oracle_pages(pids: range) -> tuple[dict, ...]:
+    """The seed-42 synth page records ``pids``: the one page source of
+    every straight-line oracle over the synthesized corpus."""
+    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
+
+    names = sorted({entity_name(r) for r in FIXED_CATALOG})
+    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
+    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
+    return tuple(_page_record(pid, 42, names, hub, etypes) for pid in pids)
+
+
+def _oracle_code_pages(pids: range):
+    """(url, codes) of each of those pages that the oracle's own QA
+    parser keeps."""
+    from graph4code_spark.reference_impl.qa_oracle import oracle_parse_qa_page
+
+    for page in _oracle_pages(pids):
+        rec = oracle_parse_qa_page(page["url"], page["html"].decode("utf-8"))
+        if rec is not None:
+            yield page["url"], rec["codes"]
+
+
+@functools.cache
+def _oracle_flow_nodes(pids: range) -> tuple[dict, ...]:
+    """The flow nodes of those pages, from the shared per-page worker."""
+    from graph4code_spark.operators.flows import (
+        build_flow_catalog,
+        extract_page_flow_nodes,
+    )
+
+    cat = build_flow_catalog(FIXED_CATALOG)
+    return tuple(
+        node
+        for url, codes in _oracle_code_pages(pids)
+        for node in extract_page_flow_nodes(url, codes, cat)
+    )
+
+
+@functools.cache
+def _oracle_forum_quads() -> set:
+    """The straight-line reference forum pipeline
+    (`reference_impl.forum_pipeline_quads`, its own QA parser) over the
+    300 seed-42 pages: the twin of `_forum_quads`."""
+    from graph4code_spark.reference_impl.emitters import forum_pipeline_quads
+    from graph4code_spark.uris import PREFIXES
+
+    return forum_pipeline_quads(
+        list(_oracle_pages(range(300))), FIXED_CATALOG, PREFIXES["stackoverflow3"]
+    )
+
+
+@functools.cache
+def _oracle_corpus() -> tuple[set, set]:
+    """(doc_quads, ana_quads) for the shared 300-page oracle corpus —
+    the straight-line reference_impl recomputation every cross-graph
+    usage-query oracle starts from: the twin of `_usage_quads`."""
+    from graph4code_spark.reference_impl.emitters import (
+        analysis_quads,
+        documentation_quads,
+    )
+
+    alias = build_class_alias_map(FIXED_CLASS_MAP)
+    doc_quads = set()
+    for rec in FIXED_CATALOG:
+        doc_quads |= documentation_quads(rec, alias)
+    ana_quads = set()
+    for node in _oracle_flow_nodes(range(300)):
+        ana_quads |= analysis_quads(node)
+    return doc_quads, ana_quads
+
+
+def _quad_hex(q: tuple) -> str:
+    """The oracle-side twin of `_quad_md5`: 5-column forum quads and
+    7-column annotated analysis quads alike."""
+    s, p, o, lit, *ann, g = q
+    fields = [s, p, o, "true" if lit else "false"]
+    fields += ["" if a is None else str(a) for a in ann]
+    return hashlib.md5("\x1f".join(fields + [g]).encode("utf-8")).hexdigest()
+
+
+def _oracle_quad_md5s(quads) -> str:
+    return _values_table(
+        sorted((_quad_hex(q),) for q in quads), ["quad_md5"], ["VARCHAR"]
+    )
+
+
+def _oracle_pred_digest(quads) -> str:
+    """The oracle-side twin of `_pred_digest`."""
+    per_pred: dict[str, list[str]] = defaultdict(list)
+    for q in quads:
+        per_pred[q[1]].append(_quad_hex(q))
+    rows = [
+        (pred, len(hs), hashlib.md5("".join(sorted(hs)).encode()).hexdigest())
+        for pred, hs in sorted(per_pred.items())
+    ]
+    return _values_table(rows, ["pred", "n", "digest"],
+                         ["VARCHAR", "BIGINT", "VARCHAR"])
+
+
+# ---------------------------------------------------------------------------
+# the full pipeline's quads: per-quad md5s and per-predicate digests
+# ---------------------------------------------------------------------------
+
+def q_kg_pipeline_forum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full forum pipeline, projected to ONE md5 per emitted quad so
+    the straight-line reference pipeline can serve as a strict VALUES
+    oracle (full quad text — raw html content literals — would bloat the
+    oracle SQL; the md5 projection keeps the row-per-quad comparison
+    exact).  The per-predicate digest twin (kg_pipeline_digest) remains
+    the human-readable view."""
+    return _forum_quads(spark).select(_quad_md5(annotated=False).alias("quad_md5"))
+
+
+def _oracle_kg_pipeline_forum() -> str:
+    return _oracle_quad_md5s(_oracle_forum_quads())
+
+
+def q_kg_pipeline_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Value-sensitive digest of the FULL forum pipeline output, per
+    predicate: row count + md5 over the sorted per-quad md5s.  The oracle
+    side recomputes the same digests from the straight-line reference
+    pipeline (`reference_impl.forum_pipeline_quads`) — a compact but
+    complete equality check of every emitted quad."""
+    return _pred_digest(_forum_quads(spark), annotated=False)
+
+
+def _oracle_kg_pipeline_digest() -> str:
+    return _oracle_pred_digest(_oracle_forum_quads())
+
+
 def q_kg_flow_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E6/E7 analysis triples projected to ONE md5 per annotated quad —
     strict row-per-quad comparison against the independent
     `reference_impl.analysis_quads` recomputation (the per-predicate
     digest twin kg_flow_digest remains the human-readable view)."""
-    h = F.md5(
-        F.concat_ws(
-            "\x1f", "subj", "pred", "obj",
-            F.col("is_literal").cast("string"),
-            F.coalesce(F.col("arg_pos").cast("string"), F.lit("")),
-            F.coalesce(F.col("arg_name"), F.lit("")),
-            "graph",
-        )
-    )
-    return _flow_triples(spark).select(h.alias("quad_md5"))
+    return _flow_quads(spark).select(_quad_md5().alias("quad_md5"))
 
 
 def _oracle_kg_flow_triples() -> str:
-    import hashlib
-
-    _doc, quads = _oracle_corpus()
-    rows = sorted(
-        (
-            hashlib.md5(
-                "\x1f".join(
-                    [
-                        s, p, o, "true" if lit else "false",
-                        "" if pos is None else str(pos),
-                        "" if nm is None else nm,
-                        g,
-                    ]
-                ).encode("utf-8")
-            ).hexdigest(),
-        )
-        for s, p, o, lit, pos, nm, g in quads
-    )
-    return _values_table(rows, ["quad_md5"], ["VARCHAR"])
+    return _oracle_quad_md5s(_oracle_corpus()[1])
 
 
 def q_kg_flow_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1347,47 +1450,11 @@ def q_kg_flow_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     `reference_impl.analysis_quads` (independent emitter; the per-page
     extraction worker is shared — its semantics are covered separately by
     tests/test_analysis_emitter)."""
-    tri = _flow_triples(spark)
-    h = F.md5(
-        F.concat_ws(
-            "\x1f", "subj", "pred", "obj",
-            F.col("is_literal").cast("string"),
-            F.coalesce(F.col("arg_pos").cast("string"), F.lit("")),
-            F.coalesce(F.col("arg_name"), F.lit("")),
-            "graph",
-        )
-    )
-    return (
-        tri.select("pred", h.alias("h"))
-        .groupBy("pred")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias("digest"),
-        )
-    )
+    return _pred_digest(_flow_quads(spark), annotated=True)
 
 
 def _oracle_kg_flow_digest() -> str:
-    import hashlib
-    from collections import defaultdict
-
-    _doc, quads = _oracle_corpus()
-
-    per_pred: dict[str, list[str]] = defaultdict(list)
-    for subj, pred, obj, is_literal, arg_pos, arg_name, graph in quads:
-        row = "\x1f".join([
-            subj, pred, obj, "true" if is_literal else "false",
-            "" if arg_pos is None else str(arg_pos),
-            "" if arg_name is None else arg_name,
-            graph,
-        ])
-        per_pred[pred].append(hashlib.md5(row.encode("utf-8")).hexdigest())
-    rows = [
-        (pred, len(hs), hashlib.md5("".join(sorted(hs)).encode()).hexdigest())
-        for pred, hs in sorted(per_pred.items())
-    ]
-    return _values_table(rows, ["pred", "n", "digest"],
-                         ["VARCHAR", "BIGINT", "VARCHAR"])
+    return _oracle_pred_digest(_oracle_corpus()[1])
 
 
 #: deterministic Posts.xml/Votes.xml fixture for the S1/S2/J1/J2 driver
@@ -1860,22 +1927,11 @@ def _oracle_semforms_corpus() -> str:
     from graph4code_spark.operators.flows import (
         build_flow_catalog, extract_page_expressions,
     )
-    from graph4code_spark.reference_impl.qa_oracle import (
-        oracle_parse_qa_page as parse_qa_page,
-    )
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
 
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
     cat = build_flow_catalog(FIXED_CATALOG)
     counts: Counter = Counter()
-    for pid in range(0, 8000, 40):
-        page = _page_record(pid, 42, names, hub, etypes)
-        rec = parse_qa_page(page["url"], page["html"].decode("utf-8"))
-        if rec is None:
-            continue
-        for e in extract_page_expressions(page["url"], rec["codes"], cat):
+    for url, codes in _oracle_code_pages(range(0, 8000, 40)):
+        for e in extract_page_expressions(url, codes, cat):
             counts[e["code"]] += 1
     top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
     rows = [(f"expr{idx}", code, cnt) for idx, (code, cnt) in enumerate(top)]
@@ -2010,284 +2066,6 @@ SELECT 'dataset' AS family, csv AS item, CAST(script_rank AS BIGINT) AS rank,
        CAST(n_mentions AS BIGINT) AS support, script AS witness
 FROM data_half
 """
-
-
-# ---------------------------------------------------------------------------
-# driver contract
-# ---------------------------------------------------------------------------
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full KG pipeline on synthetic pages (sf0.001-scale)."""
-    from graph4code_spark.emitters.forum import forum_triples
-    from graph4code_spark.materialize import dedup_quads
-    from graph4code_spark.operators.linking import link_entities
-    from graph4code_spark.sources.qa import extract_qa
-
-    pages = synth_pages(spark, 200, seed=42)
-    qa = extract_qa(pages)
-    links = link_entities(qa, FIXED_CATALOG)
-    return dedup_quads(forum_triples(links, qa, FIXED_CATALOG))
-
-
-def queries_full() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The FULL fine-grained inventory (one entry per operator/query,
-    including every component that the curated driver registry composes).
-    `jobs/verify_all.py` and `tests/test_entry_oracles.py` check this
-    superset; the driver contract (`queries()`) is the curated ≤50-entry
-    selection so every operator family lands on the capped CORRECTNESS
-    record."""
-    return {
-        # KG core
-        "kg_doc_triples": q_kg_doc_triples,
-        "kg_sameas": q_kg_sameas,
-        "kg_mentions": q_kg_mentions,
-        "kg_question_triples": q_kg_question_triples,
-        "kg_flow_closure": q_kg_flow_closure,
-        "kg_pipeline_forum": q_kg_pipeline_forum,
-        "kg_pipeline_digest": q_kg_pipeline_digest,
-        "kg_flow_triples": q_kg_flow_triples,
-        "kg_flow_digest": q_kg_flow_digest,
-        "kg_next_steps": q_kg_next_steps,
-        "posts_xml_questions": q_posts_xml_questions,
-        # dedup / similarity
-        "dedup_exact": q_dedup_exact,
-        "dedup_groups": q_dedup_groups,
-        "dedup_token_jaccard": q_dedup_token_jaccard,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_minhash_md5": q_dedup_minhash_md5,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_embedding_lsh": q_dedup_embedding_lsh,
-        "sim_cosine_topk": q_sim_cosine_topk,
-        "sim_lsh_topk": q_sim_lsh_topk,
-        # text analysis
-        "text_token_counts": q_text_token_counts,
-        "text_language": q_text_language,
-        "text_quality": q_text_quality,
-        "text_repetition": q_text_repetition,
-        "doc_fingerprint": q_doc_fingerprint,
-        "doc_md5_keys": q_doc_md5_keys,
-        "posexplode_words": q_posexplode_words,
-        "semforms_expressions": q_semforms_expressions,
-        "semforms_dataflow": q_semforms_dataflow,
-        "semforms_corpus": q_semforms_corpus,
-        "datarinse_index": q_datarinse_index,
-        "mining_suite": q_mining_suite,
-        # relational coverage
-        "agg_pricing_summary": q_agg_pricing_summary,
-        "join_topk_orders": q_join_topk_orders,
-        "corpus_extraction_sql": q_corpus_extraction_sql,
-        "join_region_drilldown": q_join_region_drilldown,
-        "window_top3_orders": q_window_top3_orders,
-        "anti_join_customers": q_anti_join_customers,
-        "semi_join_suppliers": q_semi_join_suppliers,
-        "set_ops_event_types": q_set_ops_event_types,
-        "events_hourly": q_events_hourly,
-        "events_stream_hourly": q_events_stream_hourly,
-        "votes_per_user": q_votes_per_user,
-        "topk_event_types": q_topk_event_types,
-        # multimodal plumbing
-        "media_features": q_media_features,
-        # extended §2 coverage
-        "merge_modules": q_merge_modules,
-        "longest_description": q_longest_description,
-        "shape_dims": q_shape_dims,
-        "graph_uri_normalize": q_graph_uri_normalize,
-        "kg_patched_types": q_kg_patched_types,
-        "kg_rst_docstrings": q_kg_rst_docstrings,
-        "kg_golden_nq": q_kg_golden_nq,
-        "kg_sink_roundtrip": q_kg_sink_roundtrip,
-        "kg_golden_emitter": q_kg_golden_emitter,
-        "top_modules": q_top_modules,
-        "builtin_blacklist": q_builtin_blacklist,
-        "test_module_filter": q_test_module_filter,
-        "optional_left_outer": q_optional_left_outer,
-        "posts_xml_volume": q_posts_xml_volume,
-        "posts_xml_volume_agg": q_posts_xml_volume_agg,
-        "sim_ivf_topk": q_sim_ivf_topk,
-        "kg_canonical_triples": q_kg_canonical_triples,
-        "media_frame_plan": q_media_frame_plan,
-        "kg_debug_posts": q_kg_debug_posts,
-        "kg_find_posts": q_kg_find_posts,
-        "kg_hyperparam_dist": q_kg_hyperparam_dist,
-        "kg_single_model_fits": q_kg_single_model_fits,
-        "kg_fit_predict_pairs": q_kg_fit_predict_pairs,
-        # round-3 additions: the remaining reference usage queries
-        "kg_type_inference": q_kg_type_inference,
-        "kg_hyperparam_violations": q_kg_hyperparam_violations,
-        "kg_similar_flows": q_kg_similar_flows,
-        "top_modules_volume": q_top_modules_volume,
-        "doc_sample_stratified": q_doc_sample_stratified,
-        "doc_sample_topk": q_doc_sample_topk,
-        "corpus_curation": q_corpus_curation,
-        # corpus hygiene
-        "pii_redact": q_pii_redact,
-        "dedup_lines": q_dedup_lines,
-        "decontaminate": q_decontaminate,
-        "pack_sequences": q_pack_sequences,
-        "emb_quantize": q_emb_quantize,
-        "sim_ivf_recall": q_sim_ivf_recall,
-        "kg_void_stats": q_kg_void_stats,
-        "corpus_pipeline": q_corpus_pipeline,
-        "kmeans_clusters": q_kmeans_clusters,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
-        "bm25_search": q_bm25_search,
-        "events_sessionize": q_events_sessionize,
-        "asof_join_events": q_asof_join_events,
-        "range_join_events": q_range_join_events,
-        "events_rollup": q_events_rollup,
-        "events_pivot": q_events_pivot,
-        "events_percentiles": q_events_percentiles,
-        "cms_user_counts": q_cms_user_counts,
-        "kmv_distinct": q_kmv_distinct,
-        # round-4 composed family queries (the curated driver entries)
-        "kg_canonicalize": q_kg_canonicalize,
-        "kg_usage_posts": q_kg_usage_posts,
-        "kg_usage_models": q_kg_usage_models,
-        "kg_usage_graph": q_kg_usage_graph,
-        "kg_doc_aggregates": q_kg_doc_aggregates,
-        "text_profile": q_text_profile,
-        "semi_anti_joins": q_semi_anti_joins,
-        "posts_votes": q_posts_votes,
-        "top_modules_suite": q_top_modules_suite,
-        "doc_sampling": q_doc_sampling,
-        "events_temporal": q_events_temporal,
-        "events_analytics": q_events_analytics,
-        "media_suite": q_media_suite,
-    }
-
-
-def _oracle_builders() -> dict[str, Callable[[], str] | str]:
-    """Oracle SQL per query name: a constant, or a function that builds
-    it (some read reference files)."""
-    return {
-        "kg_doc_triples": _oracle_kg_doc_triples,
-        "kg_sameas": _oracle_kg_sameas,
-        "kg_mentions": _oracle_kg_mentions,
-        "kg_question_triples": _oracle_kg_question_triples,
-        "kg_flow_closure": _oracle_kg_flow_closure,
-        "kg_pipeline_digest": _oracle_kg_pipeline_digest,
-        "kg_flow_digest": _oracle_kg_flow_digest,
-        "kg_next_steps": _oracle_kg_next_steps,
-        "posts_xml_questions": _oracle_posts_xml_questions,
-        "graph_uri_normalize": _ORACLE_GRAPH_URI,
-        "dedup_exact": _ORACLE_DEDUP_EXACT,
-        "dedup_groups": _ORACLE_DEDUP_GROUPS,
-        "dedup_token_jaccard": _ORACLE_DEDUP_JACCARD,
-        "dedup_embedding": _ORACLE_DEDUP_EMBEDDING,
-        "dedup_simhash": _ORACLE_DEDUP_SIMHASH,
-        "dedup_minhash_md5": _ORACLE_DEDUP_MINHASH_MD5,
-        "sim_cosine_topk": _ORACLE_COSINE_TOPK,
-        "sim_lsh_topk": _oracle_sim_lsh_topk,
-        "dedup_embedding_lsh": _oracle_dedup_embedding_lsh,
-        "media_features": _oracle_media_features,
-        "text_token_counts": _ORACLE_TOKEN_COUNTS,
-        "text_language": _oracle_text_language,
-        "text_quality": _ORACLE_TEXT_QUALITY,
-        "text_repetition": _ORACLE_TEXT_REPETITION,
-        "doc_fingerprint": _ORACLE_FINGERPRINT,
-        "doc_md5_keys": _ORACLE_MD5_KEYS,
-        "posexplode_words": _ORACLE_POSEXPLODE,
-        "semforms_expressions": _oracle_semforms_expressions,
-        "semforms_dataflow": _oracle_semforms_dataflow,
-        "semforms_corpus": _oracle_semforms_corpus,
-        "datarinse_index": _oracle_datarinse_index,
-        "mining_suite": _oracle_mining_suite,
-        "agg_pricing_summary": _ORACLE_PRICING,
-        "join_topk_orders": _ORACLE_TOPK_ORDERS,
-        "corpus_extraction_sql": _ORACLE_CORPUS_EXTRACTION,
-        "join_region_drilldown": _ORACLE_REGION,
-        "window_top3_orders": _ORACLE_WINDOW_TOP3,
-        "anti_join_customers": _ORACLE_ANTI,
-        "semi_join_suppliers": _ORACLE_SEMI,
-        "set_ops_event_types": _ORACLE_SET_OPS,
-        "events_hourly": _ORACLE_EVENTS_HOURLY,
-        "events_stream_hourly": _ORACLE_EVENTS_HOURLY,
-        "votes_per_user": _ORACLE_VOTES_PER_USER,
-        "topk_event_types": _ORACLE_TOPK_EVENTS,
-        "merge_modules": _oracle_merge_modules,
-        "longest_description": _ORACLE_LONGEST_DESC,
-        "shape_dims": _oracle_shape_dims,
-        "kg_patched_types": _oracle_kg_patched_types,
-        "kg_rst_docstrings": _oracle_kg_rst_docstrings,
-        "kg_golden_nq": _oracle_kg_golden_nq,
-        "kg_sink_roundtrip": _oracle_kg_sink_roundtrip,
-        "kg_golden_emitter": _oracle_kg_golden_emitter,
-        "top_modules": _oracle_top_modules,
-        "builtin_blacklist": _oracle_builtin_blacklist,
-        "test_module_filter": _oracle_test_module_filter,
-        "optional_left_outer": _oracle_optional_left_outer,
-        "posts_xml_volume": _oracle_posts_xml_volume,
-        "posts_xml_volume_agg": _oracle_posts_xml_volume_agg,
-        "sim_ivf_topk": _oracle_sim_ivf_topk,
-        "kg_canonical_triples": _oracle_kg_canonical_triples,
-        "media_frame_plan": _oracle_media_frame_plan,
-        "kg_debug_posts": _oracle_kg_debug_posts,
-        "kg_find_posts": _oracle_kg_find_posts,
-        "kg_hyperparam_dist": _oracle_kg_hyperparam_dist,
-        "kg_single_model_fits": _oracle_kg_single_model_fits,
-        "kg_fit_predict_pairs": _oracle_kg_fit_predict_pairs,
-        "kg_type_inference": _oracle_kg_type_inference,
-        "kg_hyperparam_violations": _oracle_kg_hyperparam_violations,
-        "kg_similar_flows": _oracle_kg_similar_flows,
-        "kg_pipeline_forum": _oracle_kg_pipeline_forum,
-        "kg_flow_triples": _oracle_kg_flow_triples,
-        "top_modules_volume": _oracle_top_modules_volume,
-        "doc_sample_stratified": _ORACLE_SAMPLE_STRATIFIED,
-        "doc_sample_topk": _ORACLE_SAMPLE_TOPK,
-        "corpus_curation": _oracle_corpus_curation,
-        "pii_redact": _ORACLE_PII_REDACT,
-        "dedup_lines": _ORACLE_DEDUP_LINES,
-        "decontaminate": _ORACLE_DECONTAMINATE,
-        "pack_sequences": _ORACLE_PACK_SEQUENCES,
-        "emb_quantize": _ORACLE_EMB_QUANTIZE,
-        "sim_ivf_recall": _oracle_sim_ivf_recall,
-        "kg_void_stats": _oracle_kg_void_stats,
-        "corpus_pipeline": _ORACLE_CORPUS_PIPELINE,
-        "kmeans_clusters": _oracle_kmeans_clusters,
-        "cluster_balanced_sample": _oracle_cluster_balanced_sample,
-        "bm25_search": _oracle_bm25_search,
-        "events_sessionize": _ORACLE_EVENTS_SESSIONIZE,
-        "asof_join_events": _ORACLE_ASOF_JOIN,
-        "range_join_events": _ORACLE_RANGE_JOIN,
-        "events_rollup": _ORACLE_EVENTS_ROLLUP,
-        "events_pivot": _ORACLE_EVENTS_PIVOT,
-        "events_percentiles": _ORACLE_EVENTS_PERCENTILES,
-        "cms_user_counts": _ORACLE_CMS_USER_COUNTS,
-        "kmv_distinct": _ORACLE_KMV_DISTINCT,
-        # round-4 composed family oracles
-        "kg_canonicalize": _oracle_kg_canonicalize,
-        "kg_usage_posts": _oracle_kg_usage_posts,
-        "kg_usage_models": _oracle_kg_usage_models,
-        "kg_usage_graph": _oracle_kg_usage_graph,
-        "kg_doc_aggregates": _oracle_kg_doc_aggregates,
-        "text_profile": _oracle_text_profile,
-        "semi_anti_joins": _oracle_semi_anti_joins,
-        "posts_votes": _oracle_posts_votes,
-        "top_modules_suite": _oracle_top_modules_suite,
-        "doc_sampling": _oracle_doc_sampling,
-        "events_temporal": _oracle_events_temporal,
-        "events_analytics": _oracle_events_analytics,
-        "media_suite": _oracle_media_suite,
-    }
-
-
-def _build_oracle(oracle: Callable[[], str] | str) -> str:
-    """The oracle's SQL.  When it needs a reference file that is absent,
-    an oracle that fails with the missing path instead: only the rows
-    that read the file fail, not every oracle."""
-    if isinstance(oracle, str):
-        return oracle
-    try:
-        return oracle()
-    except FileNotFoundError as exc:
-        return f"SELECT error({_sql_quote(f'missing reference file: {exc.filename}')})"
-
-
-def oracle_sql_full() -> dict[str, str]:
-    """Oracles for `queries_full()` (superset of the curated driver
-    oracles).  Entries absent here are rows-only by design."""
-    return {name: _build_oracle(o) for name, o in _oracle_builders().items()}
 
 
 # ---------------------------------------------------------------------------
@@ -2653,7 +2431,6 @@ def _oracle_kg_rst_docstrings() -> str:
 # N-quads golden parity (round-2 addition)
 # ---------------------------------------------------------------------------
 
-_GOLDEN_NQ = "/root/reference/sample_graph/example1.nq"
 #: all four reference sample graphs — example2/3 exercise the
 #: reads/slice/unpack node shapes flows.py added in r3/r4 (VERDICT r4 #3)
 _GOLDEN_NQS = [
@@ -2723,7 +2500,6 @@ def q_kg_golden_nq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_kg_golden_nq() -> str:
     import re
-    from collections import defaultdict
 
     lit = r'[^"\\]*(?:\\.[^"\\]*)*'
     obj = rf'(<[^>]*>|"{lit}"(?:\^\^<[^>]*>)?)'
@@ -2778,18 +2554,6 @@ _GOLDEN_PAIRS = [
     )
     for i in (1, 2, 3)
 ]
-
-
-def _quad_md5() -> F.Column:
-    return F.md5(
-        F.concat_ws(
-            "\x1f", "subj", "pred", "obj",
-            F.col("is_literal").cast("string"),
-            F.coalesce(F.col("arg_pos").cast("string"), F.lit("")),
-            F.coalesce(F.col("arg_name"), F.lit("")),
-            "graph",
-        )
-    )
 
 
 def q_kg_golden_emitter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3046,7 +2810,6 @@ def _sink_roundtrip_rows() -> list[tuple]:
     """Straight-line twin of q_kg_sink_roundtrip: the independent
     reference_impl quad set, deduped, keyed by predicate short-name."""
     import re as _re
-    from collections import defaultdict
 
     from graph4code_spark.reference_impl.emitters import documentation_quads
 
@@ -3094,34 +2857,19 @@ def q_top_modules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_top_modules() -> str:
+def _oracle_top_modules(pids: range = range(300), k: int = 5) -> str:
+    """Straight-line A2/A3 over the flow nodes of pages ``pids``."""
     from collections import Counter
 
-    from graph4code_spark.operators.flows import (
-        build_flow_catalog,
-        extract_page_flow_nodes,
-    )
     from graph4code_spark.operators.topmodules import BUILTIN_MODULES
-    from graph4code_spark.reference_impl.qa_oracle import (
-        oracle_parse_qa_page as parse_qa_page,
-    )
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
 
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    cat = build_flow_catalog(FIXED_CATALOG)
-    counts: Counter = Counter()
-    for pid in range(300):
-        page = _page_record(pid, 42, names, hub, etypes)
-        rec = parse_qa_page(page["url"], page["html"].decode("utf-8"))
-        if rec is None:
-            continue
-        for node in extract_page_flow_nodes(page["url"], rec["codes"], cat):
-            if node["is_import"] and node["path_end"] not in BUILTIN_MODULES:
-                counts[node["path_end"]] += 1
+    counts = Counter(
+        node["path_end"]
+        for node in _oracle_flow_nodes(pids)
+        if node["is_import"] and node["path_end"] not in BUILTIN_MODULES
+    )
     top = sorted(((m, c - 1) for m, c in counts.items()),
-                 key=lambda mc: (-mc[1], mc[0]))[:5]
+                 key=lambda mc: (-mc[1], mc[0]))[:k]
     return _values_table(top, ["module", "cnt"], ["VARCHAR", "BIGINT"])
 
 
@@ -3341,8 +3089,10 @@ def q_posts_xml_volume_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _posts_volume_oracle_rows(n: int = _POSTS_VOLUME_N):
-    import hashlib
+@functools.cache
+def _posts_volume_oracle_rows(n: int = _POSTS_VOLUME_N) -> tuple[dict, ...]:
+    """Straight-line question assembly of the volume corpus, shared by
+    both volume oracles."""
     import xml.etree.ElementTree as ET
 
     from graph4code_spark.sources.posts_xml import question_block_lines
@@ -3386,7 +3136,7 @@ def _posts_volume_oracle_rows(n: int = _POSTS_VOLUME_N):
             "n_answers": len(ans),
             "content_md5": hashlib.md5(content.encode("utf-8")).hexdigest(),
         })
-    return out
+    return tuple(out)
 
 
 def _oracle_posts_xml_volume() -> str:
@@ -3563,8 +3313,6 @@ def q_media_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_media_frame_plan() -> str:
-    import hashlib
-
     rows = []
     for i in range(60):
         if i % 3 != 2:  # types cycle image/audio/video; only video planned
@@ -3587,6 +3335,15 @@ _DEBUG_POSTS_ENTITIES = [
 _DEBUG_POSTS_PHRASE = "the right dtype"
 
 
+def _usage_posts_columns(out: DataFrame) -> DataFrame:
+    return out.select(
+        "q", "t",
+        F.md5("q_content").alias("qc_md5"),
+        F.md5("a_content").alias("ac_md5"),
+        "c",
+    )
+
+
 def q_kg_debug_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`usage_queries/debug_stackoverflow.sparql` over the full pipeline
     output: questions about a VALUES list of entities scored by hit
@@ -3596,33 +3353,14 @@ def q_kg_debug_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-execution of the graph pattern."""
     from graph4code_spark.plans.queries import debug_posts
 
-    tri = _materialized(
-        _pipeline_forum_triples(spark)
-        .select("subj", "pred", "obj", "is_literal", "graph")
-        .dropDuplicates()
-    )
-    out = debug_posts(tri, _DEBUG_POSTS_ENTITIES, _DEBUG_POSTS_PHRASE)
-    return out.select(
-        "q", "t",
-        F.md5("q_content").alias("qc_md5"),
-        F.md5("a_content").alias("ac_md5"),
-        "c",
-    )
+    out = debug_posts(_forum_quads(spark), _DEBUG_POSTS_ENTITIES, _DEBUG_POSTS_PHRASE)
+    return _usage_posts_columns(out)
 
 
-def _oracle_kg_debug_posts() -> str:
-    import hashlib
+def _oracle_kg_debug_posts(phrase: str | None = _DEBUG_POSTS_PHRASE) -> str:
     from collections import Counter
 
-    from graph4code_spark.reference_impl.emitters import forum_pipeline_quads
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
     from graph4code_spark.uris import PREFIXES
-
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    pages_rows = [_page_record(pid, 42, names, hub, etypes) for pid in range(300)]
-    quads = forum_pipeline_quads(pages_rows, FIXED_CATALOG, PREFIXES["stackoverflow3"])
 
     schema_p, sioc_p = PREFIXES["schema"], PREFIXES["sioc"]
     rdf_type = PREFIXES["rdf"] + "type"
@@ -3632,7 +3370,7 @@ def _oracle_kg_debug_posts() -> str:
     qtype, atype = set(), set()
     about, sugg = set(), set()
     name, content = {}, {}
-    for s, p, o, _lit, _g in quads:
+    for s, p, o, _lit, _g in _oracle_forum_quads():
         if p == rdf_type and o == schema_p + "Question":
             qtype.add(s)
         elif p == rdf_type and o == schema_p + "Answer":
@@ -3655,7 +3393,7 @@ def _oracle_kg_debug_posts() -> str:
         for qq, a in sugg:
             if qq != q or a not in atype or a not in content:
                 continue
-            if _DEBUG_POSTS_PHRASE not in content[a]:
+            if phrase is not None and phrase not in content[a]:
                 continue
             ac = hashlib.md5(content[a].encode("utf-8")).hexdigest()
             rows.append((q, name[q], qc, ac, c))
@@ -3674,72 +3412,11 @@ def q_kg_find_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contents are md5'd to keep the compared payload compact."""
     from graph4code_spark.plans.queries import find_so_posts
 
-    tri = _materialized(
-        _pipeline_forum_triples(spark)
-        .select("subj", "pred", "obj", "is_literal", "graph")
-        .dropDuplicates()
-    )
-    out = find_so_posts(tri, _DEBUG_POSTS_ENTITIES)
-    return out.select(
-        "q", "t",
-        F.md5("q_content").alias("qc_md5"),
-        F.md5("a_content").alias("ac_md5"),
-        "c",
-    )
+    return _usage_posts_columns(find_so_posts(_forum_quads(spark), _DEBUG_POSTS_ENTITIES))
 
 
 def _oracle_kg_find_posts() -> str:
-    import hashlib
-    from collections import Counter
-
-    from graph4code_spark.reference_impl.emitters import forum_pipeline_quads
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
-    from graph4code_spark.uris import PREFIXES
-
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    pages_rows = [_page_record(pid, 42, names, hub, etypes) for pid in range(300)]
-    quads = forum_pipeline_quads(pages_rows, FIXED_CATALOG, PREFIXES["stackoverflow3"])
-
-    schema_p, sioc_p = PREFIXES["schema"], PREFIXES["sioc"]
-    rdf_type = PREFIXES["rdf"] + "type"
-    py = PREFIXES["py"]
-    vals = {py + n for n in _DEBUG_POSTS_ENTITIES}
-
-    qtype, atype = set(), set()
-    about, sugg = set(), set()
-    name, content = {}, {}
-    for s, p, o, _lit, _g in quads:
-        if p == rdf_type and o == schema_p + "Question":
-            qtype.add(s)
-        elif p == rdf_type and o == schema_p + "Answer":
-            atype.add(s)
-        elif p == schema_p + "about":
-            about.add((s, o))
-        elif p == schema_p + "suggestedAnswer":
-            sugg.add((s, o))
-        elif p == schema_p + "name":
-            name[s] = o
-        elif p == sioc_p + "content":
-            content[s] = o
-
-    counts = Counter(q for q, f in about if f in vals and q in qtype)
-    rows = []
-    for q, c in counts.items():
-        if q not in name or q not in content:
-            continue
-        qc = hashlib.md5(content[q].encode("utf-8")).hexdigest()
-        for qq, a in sugg:
-            if qq != q or a not in atype or a not in content:
-                continue
-            ac = hashlib.md5(content[a].encode("utf-8")).hexdigest()
-            rows.append((q, name[q], qc, ac, c))
-    return _values_table(
-        sorted(rows),
-        ["q", "t", "qc_md5", "ac_md5", "c"],
-        ["VARCHAR", "VARCHAR", "VARCHAR", "VARCHAR", "BIGINT"],
-    )
+    return _oracle_kg_debug_posts(phrase=None)
 
 
 # ---------------------------------------------------------------------------
@@ -3763,56 +3440,11 @@ def q_kg_hyperparam_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("name", "param", "value", F.col("n").cast("long").alias("n"))
 
 
-def _oracle_corpus() -> tuple[set, set]:
-    """(doc_quads, ana_quads) for the shared 300-page oracle corpus —
-    the straight-line reference_impl recomputation every cross-graph
-    usage-query oracle starts from.  Cached: oracle_sql() calls several
-    of them in one driver run."""
-    global _ORACLE_CORPUS_CACHE
-    if _ORACLE_CORPUS_CACHE is not None:
-        return _ORACLE_CORPUS_CACHE
-    from graph4code_spark.operators.flows import (
-        build_flow_catalog,
-        extract_page_flow_nodes,
-    )
-    from graph4code_spark.reference_impl.emitters import (
-        analysis_quads,
-        documentation_quads,
-    )
-    from graph4code_spark.reference_impl.qa_oracle import oracle_parse_qa_page
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
-
-    alias = build_class_alias_map(FIXED_CLASS_MAP)
-    doc_quads = set()
-    for rec in FIXED_CATALOG:
-        doc_quads |= documentation_quads(rec, alias)
-
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    cat = build_flow_catalog(FIXED_CATALOG)
-    ana_quads = set()
-    for pid in range(300):
-        page = _page_record(pid, 42, names, hub, etypes)
-        rec = oracle_parse_qa_page(page["url"], page["html"].decode("utf-8"))
-        if rec is None:
-            continue
-        for node in extract_page_flow_nodes(page["url"], rec["codes"], cat):
-            ana_quads |= analysis_quads(node)
-    _ORACLE_CORPUS_CACHE = (doc_quads, ana_quads)
-    return _ORACLE_CORPUS_CACHE
-
-
-_ORACLE_CORPUS_CACHE: tuple[set, set] | None = None
-
-
 def _oracle_classifier_names(doc_quads: set, base_class: str) -> set[str]:
     """Python restatement of `classifier_class_names`: labels of classes
     reaching ``base_class`` via REFLEXIVE rdfs:subClassOf* (SPARQL `*`
     includes the zero-length path, so the base class itself is always a
     member — matching the seeded-closure + union impl)."""
-    from collections import defaultdict
-
     from graph4code_spark.uris import PREFIXES
 
     rdfs_sub = PREFIXES["rdfs"] + "subClassOf"
@@ -3877,7 +3509,6 @@ def q_kg_single_model_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_kg_single_model_fits() -> str:
     import json as _json
-    from collections import defaultdict
 
     from graph4code_spark.uris import PREFIXES
 
@@ -3949,8 +3580,6 @@ def q_kg_fit_predict_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_fit_predict_pairs() -> str:
-    from collections import defaultdict
-
     from graph4code_spark.uris import PREFIXES
 
     rdfs_label = PREFIXES["rdfs"] + "label"
@@ -3999,52 +3628,6 @@ def _oracle_kg_fit_predict_pairs() -> str:
 
 
 
-def _materialized(df):
-    """One eager materialization for multi-leg quad-table queries: the
-    per-predicate legs re-scan this buffer instead of re-executing the
-    extraction pipeline once per leg (a 300-page mapInPandas chain).  At
-    production scale the quad table is a parquet read with (pred_name)
-    partition pruning — this stands in for that read."""
-    return df.localCheckpoint(eager=True)
-
-
-#: session-scoped materialized quad stores, keyed by Spark applicationId
-#: (a localCheckpoint dies with its session, so a stale entry must never
-#: outlive the session that built it).  The reference's usage model is
-#: load-once-query-many: `create_kg.sh` bulk-loads the emitted N-Quads
-#: into Jena TDB2 ONCE (SURVEY §2.1 S11), then every usage_queries/*.sparql
-#: runs against that store.  Rebuilding the 300-page extraction chain per
-#: query would charge every usage query the full KG-construction cost —
-#: the one-time load is the semantically faithful stand-in.  Inputs are
-#: deterministic (FIXED_CATALOG + seed-42 pages), so caching cannot
-#: change any query's result.
-_QUAD_STORE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cached_store(spark: SparkSession, kind: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, kind)
-    df = _QUAD_STORE_CACHE.get(key)
-    if df is None:
-        df = _QUAD_STORE_CACHE[key] = _materialized(build())
-    return df
-
-
-def _usage_quads(spark: SparkSession) -> DataFrame:
-    """The full usage-query store: docstrings graph ∪ analysis graphs."""
-
-    def build() -> DataFrame:
-        alias = build_class_alias_map(FIXED_CLASS_MAP)
-        doc_t = docstring_triples(catalog_df(spark, FIXED_CATALOG), alias)
-        return doc_t.unionByName(_flow_triples(spark)).dropDuplicates()
-
-    return _cached_store(spark, "doc+flow", build)
-
-
-def _flow_quads(spark: SparkSession) -> DataFrame:
-    """Analysis-graphs-only store (queries that never touch docstrings)."""
-    return _cached_store(spark, "flow", lambda: _flow_triples(spark))
-
-
 def q_kg_type_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`type_inference.sparql` (duck-typed receiver-type inference) over
     the union of docstrings + pipeline flow triples — see
@@ -4057,7 +3640,6 @@ def q_kg_type_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_kg_type_inference() -> str:
     import json as _json
-    from collections import defaultdict
 
     from graph4code_spark.uris import PREFIXES
 
@@ -4179,7 +3761,6 @@ def q_kg_hyperparam_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_kg_hyperparam_violations() -> str:
     import json as _json
-    from collections import defaultdict
 
     from graph4code_spark.uris import PREFIXES
 
@@ -4257,8 +3838,6 @@ def q_kg_similar_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_similar_flows() -> str:
-    from collections import defaultdict
-
     from graph4code_spark.uris import PREFIXES
 
     rdfs_label = PREFIXES["rdfs"] + "label"
@@ -4336,34 +3915,7 @@ def q_top_modules_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_top_modules_volume() -> str:
-    from collections import Counter
-
-    from graph4code_spark.operators.flows import (
-        build_flow_catalog,
-        extract_page_flow_nodes,
-    )
-    from graph4code_spark.operators.topmodules import BUILTIN_MODULES
-    from graph4code_spark.reference_impl.qa_oracle import (
-        oracle_parse_qa_page as parse_qa_page,
-    )
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
-
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    cat = build_flow_catalog(FIXED_CATALOG)
-    counts: Counter = Counter()
-    for pid in range(0, 8000, 40):
-        page = _page_record(pid, 42, names, hub, etypes)
-        rec = parse_qa_page(page["url"], page["html"].decode("utf-8"))
-        if rec is None:
-            continue
-        for node in extract_page_flow_nodes(page["url"], rec["codes"], cat):
-            if node["is_import"] and node["path_end"] not in BUILTIN_MODULES:
-                counts[node["path_end"]] += 1
-    top = sorted(((m, c - 1) for m, c in counts.items()),
-                 key=lambda mc: (-mc[1], mc[0]))[:10]
-    return _values_table(top, ["module", "cnt"], ["VARCHAR", "BIGINT"])
+    return _oracle_top_modules(range(0, 8000, 40), k=10)
 
 
 def q_doc_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4842,11 +4394,8 @@ def q_kg_void_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     `void:properties`/`void:distinctSubjects` shapes).  One hash-agg
     over the quad table; the oracle recomputes from the straight-line
     reference pipeline."""
-    tri = _pipeline_forum_triples(spark).select(
-        "subj", "pred", "obj", "is_literal", "graph"
-    ).dropDuplicates()
     return (
-        tri.groupBy("pred")
+        _forum_quads(spark).groupBy("pred")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_triples"),
             F.count_distinct("subj").cast("long").alias("n_subjects"),
@@ -4858,24 +4407,11 @@ def q_kg_void_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_void_stats() -> str:
-    from collections import defaultdict
-
-    from graph4code_spark.reference_impl.emitters import forum_pipeline_quads
-    from graph4code_spark.synth import HUB_ENTITY, _page_record, entity_type
-    from graph4code_spark.uris import PREFIXES
-
-    names = sorted({entity_name(r) for r in FIXED_CATALOG})
-    etypes = {entity_name(r): entity_type(r) for r in FIXED_CATALOG}
-    hub = HUB_ENTITY if HUB_ENTITY in names else names[0]
-    pages_rows = [_page_record(pid, 42, names, hub, etypes) for pid in range(300)]
-    quads = set(
-        forum_pipeline_quads(pages_rows, FIXED_CATALOG, PREFIXES["stackoverflow3"])
-    )
     subs = defaultdict(set)
     objs = defaultdict(set)
     graphs = defaultdict(set)
     counts = defaultdict(int)
-    for s, p, o, _lit, g in quads:
+    for s, p, o, _lit, g in _oracle_forum_quads():
         counts[p] += 1
         subs[p].add(s)
         objs[p].add(o)
@@ -5607,22 +5143,72 @@ FROM kth k JOIN exact e USING (event_type) ORDER BY event_type
 
 
 # ---------------------------------------------------------------------------
-# round-4 composed family queries
+# text_profile: the text-analysis rows as one wide select
 # ---------------------------------------------------------------------------
-# The driver records at most 50 CORRECTNESS rows per round (observed:
-# r1=42-entry dict → 42 rows, r2/r3 capped at 50 while the dict grew to
-# 85), so fine-grained entries past #50 silently fall off the hard
-# record.  The fix (VERDICT r3 next-round #1) is curation: operator
-# families that each held several single-op rows are COMPOSED into one
-# union query over a fixed typed spine, so `queries()` holds exactly 50
-# entries and every family keeps a strict oracle row on the record.
-# The fine-grained components stay in `queries_full()`/`oracle_sql_full()`
-# and are still verified by jobs/verify_all.py and pytest.
+
+def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All five text-analysis families + the MD5 doc key in ONE narrow
+    JVM pass over `documents` (no union spine needed — every component
+    is per-doc, so the composition is a single wide select: zero
+    shuffle, whole-stage codegen end to end).  Components remain
+    individually oracle-checked in queries_full(); this is the curated
+    driver row covering token counting, language ID, Gopher repetition,
+    quality ratios, winnowing fingerprint, and X7 MD5 keys."""
+    from graph4code_spark.operators.textstats import repetition_features
+
+    docs = _t(spark, sf_dir, "documents")
+    t = F.col("text")
+    base = repetition_features(docs.select("doc_id", "text"), "text")
+    return base.select(
+        "doc_id",
+        whitespace_token_count(t).cast("long").alias("ws_tokens"),
+        bpe_token_count(t).cast("long").alias("bpe_tokens"),
+        detect_language(t).alias("lang_detected"),
+        "rep_dup_word_frac",
+        "rep_top_bigram_frac",
+        *_quality_columns(t),
+        _fingerprint(t).alias("fp"),
+        F.md5("text").alias("doc_key"),
+    )
+
+
+def _oracle_text_profile() -> str:
+    return f"""
+WITH c_tok AS ({_ORACLE_TOKEN_COUNTS}),
+c_lang AS ({_oracle_text_language()}),
+c_rep AS ({_ORACLE_TEXT_REPETITION}),
+c_qual AS ({_ORACLE_TEXT_QUALITY}),
+c_fp AS ({_ORACLE_FINGERPRINT}),
+c_key AS ({_ORACLE_MD5_KEYS})
+SELECT c_tok.doc_id, ws_tokens, bpe_tokens, lang_detected,
+       rep_dup_word_frac, rep_top_bigram_frac,
+       q_chars, q_words, q_stopword_ratio, q_punct_ratio,
+       c_fp.fp, c_key.doc_key
+FROM c_tok
+JOIN c_lang ON c_lang.doc_id = c_tok.doc_id
+JOIN c_rep ON c_rep.doc_id = c_tok.doc_id
+JOIN c_qual ON c_qual.doc_id = c_tok.doc_id
+JOIN c_fp ON c_fp.doc_id = c_tok.doc_id
+JOIN c_key ON c_key.doc_id = c_tok.doc_id
+"""
+
+
+# ---------------------------------------------------------------------------
+# composed families: spine unions of registered rows
+# ---------------------------------------------------------------------------
+# The driver records at most 50 CORRECTNESS rows, so a family of several
+# single-op rows is COMPOSED into one union query over a fixed typed
+# spine: `queries()` holds exactly 50 entries, every family keeps one
+# strict oracle row on the record, and its components stay registered
+# rows of `queries_full()`/`oracle_sql_full()`.
 #
 # Spine: (part, k1, k2, s1..s4, n1..n4, v1..v3) — strings / bigints /
-# doubles.  Each component maps its columns onto the spine (NULL-padded);
-# the oracle applies the SAME mapping to the component's oracle SQL, so
-# the union compare is exactly as strict as the per-component compares.
+# doubles.  `_FAMILIES` states each family once, as its parts: (part
+# label, component row, spine mapping {spine_col: component column}).
+# The query projects each component's DataFrame onto the spine with
+# `_spine_df` (NULL-padded); the oracle applies the SAME mapping to the
+# SQL already built for the component with `_spine_sql`, so the union
+# compare is exactly as strict as the per-component compares.
 
 _SPINE = [
     ("k1", "string", "VARCHAR"), ("k2", "string", "VARCHAR"),
@@ -5666,437 +5252,264 @@ def _spine_union_sql(parts) -> str:
     return "\nUNION ALL\n".join(_spine_sql(sql, part, **m) for sql, part, m in parts)
 
 
-def q_kg_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 alias join + the full canonicalization rewrite on one driver
-    row: union of the CC alias mapping (kg_sameas) and the canonicalized
-    docstring quad table (kg_canonical_triples)."""
-    return _spine_union_df(
-        _spine_df(q_kg_sameas(spark, sf_dir), "sameas", k1="name", k2="canon"),
-        _spine_df(q_kg_canonical_triples(spark, sf_dir), "canonical",
-                  k1="subj", k2="pred", s1="obj", s2="is_literal", s3="graph"),
-    )
-
-
-def _oracle_kg_canonicalize() -> str:
-    return _spine_union_sql([
-        (_oracle_kg_sameas(), "sameas", dict(k1="name", k2="canon")),
-        (_oracle_kg_canonical_triples(), "canonical",
+#: family → its parts: (part label, component row, spine mapping).
+_FAMILIES: dict[str, Parts] = {
+    # J6 alias join + the full canonicalization rewrite: the CC alias
+    # mapping and the canonicalized docstring quad table
+    "kg_canonicalize": [
+        ("sameas", "kg_sameas", dict(k1="name", k2="canon")),
+        ("canonical", "kg_canonical_triples",
          dict(k1="subj", k2="pred", s1="obj", s2="is_literal", s3="graph")),
-    ])
-
-
-_USAGE_POSTS_MAP = dict(k1="q", k2="t", s1="qc_md5", s2="ac_md5", n1="c")
-
-
-def q_kg_usage_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two StackOverflow-lookup usage queries
-    (debug_stackoverflow.sparql + find_stack_overflow_posts.sparql) over
-    the full pipeline quad store, on one driver row."""
-    return _spine_union_df(
-        _spine_df(q_kg_debug_posts(spark, sf_dir), "debug", **_USAGE_POSTS_MAP),
-        _spine_df(q_kg_find_posts(spark, sf_dir), "find", **_USAGE_POSTS_MAP),
-    )
-
-
-def _oracle_kg_usage_posts() -> str:
-    return _spine_union_sql([
-        (_oracle_kg_debug_posts(), "debug", _USAGE_POSTS_MAP),
-        (_oracle_kg_find_posts(), "find", _USAGE_POSTS_MAP),
-    ])
-
-
-_USAGE_MODELS_MAPS = [
-    ("hyper_dist", dict(k1="name", k2="param", s1="value", n1="n")),
-    ("single_fit", dict(k1="graph", k2="fit", s1="cls_name", n1="l1",
-                        n2="l2", s2="txt")),
-    ("fit_predict", dict(k1="graph", k2="model", s1="name", s2="fit",
-                         s3="predict")),
-    ("violations", dict(k1="graph", k2="clf", s1="name", n1="n_hyper",
-                        n2="l1", n3="l2", s2="txt")),
-]
-
-
-def q_kg_usage_models(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The four model-centric usage queries (hyperparameter
-    distributions, single-model fits, fit→predict pairs, hyperparameter
-    violations) over the shared doc+flow quad store, on one driver row."""
-    dfs = [
-        q_kg_hyperparam_dist(spark, sf_dir),
-        q_kg_single_model_fits(spark, sf_dir),
-        q_kg_fit_predict_pairs(spark, sf_dir),
-        q_kg_hyperparam_violations(spark, sf_dir),
-    ]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m)
-        for df, (part, m) in zip(dfs, _USAGE_MODELS_MAPS)
-    ])
-
-
-def _oracle_kg_usage_models() -> str:
-    sqls = [
-        _oracle_kg_hyperparam_dist(),
-        _oracle_kg_single_model_fits(),
-        _oracle_kg_fit_predict_pairs(),
-        _oracle_kg_hyperparam_violations(),
-    ]
-    return _spine_union_sql([
-        (sql, part, m) for sql, (part, m) in zip(sqls, _USAGE_MODELS_MAPS)
-    ])
-
-
-_USAGE_GRAPH_MAPS = [
-    ("type_inference", dict(k1="graph", k2="n1", s1="label", s2="cls",
-                            s3="super", s4="txt", n1="l1", n2="l2")),
-    ("similar_flows", dict(k1="classifierName", n1="c")),
-    ("void_stats", dict(k1="pred", n1="n_triples", n2="n_subjects",
-                        n3="n_objects", n4="n_graphs")),
-]
-
-
-def q_kg_usage_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The graph-structural usage queries (type inference, similar
-    flows, VoID dataset statistics) on one driver row."""
-    dfs = [
-        q_kg_type_inference(spark, sf_dir),
-        q_kg_similar_flows(spark, sf_dir),
-        q_kg_void_stats(spark, sf_dir),
-    ]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m)
-        for df, (part, m) in zip(dfs, _USAGE_GRAPH_MAPS)
-    ])
-
-
-def _oracle_kg_usage_graph() -> str:
-    sqls = [
-        _oracle_kg_type_inference(),
-        _oracle_kg_similar_flows(),
-        _oracle_kg_void_stats(),
-    ]
-    return _spine_union_sql([
-        (sql, part, m) for sql, (part, m) in zip(sqls, _USAGE_GRAPH_MAPS)
-    ])
-
-
-_DOC_AGG_MAPS = [
-    ("merge_modules", dict(k1="module", k2="klass", s1="function", s2="doc")),
-    ("longest_desc", dict(k1="source", n1="doc_id", n2="n_chars")),
-    ("shape_dims", dict(n1="sid", s1="dims_csv")),
-]
-
-
-def q_kg_doc_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docstring-pipeline aggregation family (J7 MergeModules full-outer
-    merge, A7 longest-description-wins, A9 shape/dimensionality
-    extraction) on one driver row."""
-    dfs = [
-        q_merge_modules(spark, sf_dir),
-        q_longest_description(spark, sf_dir),
-        q_shape_dims(spark, sf_dir),
-    ]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m) for df, (part, m) in zip(dfs, _DOC_AGG_MAPS)
-    ])
-
-
-def _oracle_kg_doc_aggregates() -> str:
-    sqls = [_oracle_merge_modules(), _ORACLE_LONGEST_DESC, _oracle_shape_dims()]
-    return _spine_union_sql([
-        (sql, part, m) for sql, (part, m) in zip(sqls, _DOC_AGG_MAPS)
-    ])
-
-
-def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All five text-analysis families + the MD5 doc key in ONE narrow
-    JVM pass over `documents` (no union spine needed — every component
-    is per-doc, so the composition is a single wide select: zero
-    shuffle, whole-stage codegen end to end).  Components remain
-    individually oracle-checked in queries_full(); this is the curated
-    driver row covering token counting, language ID, Gopher repetition,
-    quality ratios, winnowing fingerprint, and X7 MD5 keys."""
-    from graph4code_spark.operators.textstats import repetition_features
-
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    w = F.split(F.lower(F.trim(t)), r"\s+")
-    n_words = whitespace_token_count(t)
-    sw = F.array(*[F.lit(s) for s in _EN_STOP])
-    sw_ratio = F.size(F.filter(w, lambda x: F.array_contains(sw, x))) / F.greatest(
-        F.size(w), F.lit(1)
-    )
-    punct = F.size(F.regexp_extract_all(t, F.lit(r"[^\w\s]"), 0))
-    win = 5
-    n = F.size(w)
-    grams = F.when(
-        n >= win,
-        F.transform(
-            F.sequence(F.lit(1), n - (win - 1)),
-            lambda i: F.md5(F.array_join(F.slice(w, i, win), " ")),
-        ),
-    ).otherwise(F.array(F.md5(F.array_join(w, " "))))
-    base = repetition_features(docs.select("doc_id", "text"), "text")
-    return base.select(
-        "doc_id",
-        whitespace_token_count(t).cast("long").alias("ws_tokens"),
-        bpe_token_count(t).cast("long").alias("bpe_tokens"),
-        detect_language(t).alias("lang_detected"),
-        "rep_dup_word_frac",
-        "rep_top_bigram_frac",
-        F.length(t).cast("long").alias("q_chars"),
-        n_words.cast("long").alias("q_words"),
-        F.round(sw_ratio, 6).alias("q_stopword_ratio"),
-        F.round(punct / F.greatest(F.length(t), F.lit(1)), 6).alias("q_punct_ratio"),
-        F.array_min(grams).alias("fp"),
-        F.md5("text").alias("doc_key"),
-    )
-
-
-def _oracle_text_profile() -> str:
-    return f"""
-WITH c_tok AS ({_ORACLE_TOKEN_COUNTS}),
-c_lang AS ({_oracle_text_language()}),
-c_rep AS ({_ORACLE_TEXT_REPETITION}),
-c_qual AS ({_ORACLE_TEXT_QUALITY}),
-c_fp AS ({_ORACLE_FINGERPRINT}),
-c_key AS ({_ORACLE_MD5_KEYS})
-SELECT c_tok.doc_id, ws_tokens, bpe_tokens, lang_detected,
-       rep_dup_word_frac, rep_top_bigram_frac,
-       q_chars, q_words, q_stopword_ratio, q_punct_ratio,
-       c_fp.fp, c_key.doc_key
-FROM c_tok
-JOIN c_lang ON c_lang.doc_id = c_tok.doc_id
-JOIN c_rep ON c_rep.doc_id = c_tok.doc_id
-JOIN c_qual ON c_qual.doc_id = c_tok.doc_id
-JOIN c_fp ON c_fp.doc_id = c_tok.doc_id
-JOIN c_key ON c_key.doc_id = c_tok.doc_id
-"""
-
-
-_SEMI_ANTI_MAPS = [
-    ("semi", dict(n1="s_suppkey", s1="s_name")),
-    ("anti", dict(n1="c_custkey", s1="c_name")),
-    # r5: J11 optional→left-outer promoted from pytest-only coverage
-    ("optional", dict(k1="param_uri", s1="param_label", n1="param_index")),
-]
-
-
-def q_semi_anti_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J10 VALUES/semi-join + J9 minus/anti-join + J11 optional/left
-    outer (r5 promotion) on one driver row."""
-    dfs = [
-        q_semi_join_suppliers(spark, sf_dir),
-        q_anti_join_customers(spark, sf_dir),
-        q_optional_left_outer(spark, sf_dir),
-    ]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m) for df, (part, m) in zip(dfs, _SEMI_ANTI_MAPS)
-    ])
-
-
-def _oracle_semi_anti_joins() -> str:
-    return _spine_union_sql([
-        (sql, part, m)
-        for sql, (part, m) in zip(
-            [_ORACLE_SEMI, _ORACLE_ANTI, _oracle_optional_left_outer()],
-            _SEMI_ANTI_MAPS,
-        )
-    ])
-
-
-_POSTS_VOTES_MAPS = [
-    ("volume", dict(k1="question_id", k2="title", s1="tags", s2="q_votes",
-                    s3="answer_ids", s4="content_md5")),
-    ("volume_agg", dict(n1="n_questions", n2="n_answers", n3="n_with_votes",
-                        n4="total_q_votes")),
-    ("votes_per_user", dict(n1="user_id", n2="n_errors")),
-]
-
-
-def q_posts_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Posts.xml/Votes.xml family at volume on one driver row:
-    sampled row-level assembly check, global assembly invariants, and
-    the J2 post⋈votes left-outer count."""
-    dfs = [
-        q_posts_xml_volume(spark, sf_dir),
-        q_posts_xml_volume_agg(spark, sf_dir),
-        q_votes_per_user(spark, sf_dir),
-    ]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m) for df, (part, m) in zip(dfs, _POSTS_VOTES_MAPS)
-    ])
-
-
-def _oracle_posts_votes() -> str:
-    sqls = [
-        _oracle_posts_xml_volume(),
-        _oracle_posts_xml_volume_agg(),
-        _ORACLE_VOTES_PER_USER,
-    ]
-    return _spine_union_sql([
-        (sql, part, m) for sql, (part, m) in zip(sqls, _POSTS_VOTES_MAPS)
-    ])
-
-
-_TOP_MODULES_MAP = dict(k1="module", n1="cnt")
-
-
-_TOP_MODULES_EXTRA_MAPS = [
-    ("blacklist", _TOP_MODULES_MAP),
-    ("testfilter", dict(n1="doc_id", k1="klass", k2="function")),
-]
-
-
-def q_top_modules_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2/A3 import counting (300-page top-5 + 8000-page volume top-10,
-    1-in-40 strict sample) on one driver row; r5: plus the two
-    module-filtering operators promoted from pytest-only coverage —
-    F2's builtin blacklist and F9's `.tests.` filter, each on a
-    documents-table derivation where the filter is load-bearing."""
-    return _spine_union_df(
-        _spine_df(q_top_modules(spark, sf_dir), "top5", **_TOP_MODULES_MAP),
-        _spine_df(q_top_modules_volume(spark, sf_dir), "volume8k", **_TOP_MODULES_MAP),
-        _spine_df(q_builtin_blacklist(spark, sf_dir), "blacklist",
-                  **_TOP_MODULES_EXTRA_MAPS[0][1]),
-        _spine_df(q_test_module_filter(spark, sf_dir), "testfilter",
-                  **_TOP_MODULES_EXTRA_MAPS[1][1]),
-    )
-
-
-def _oracle_top_modules_suite() -> str:
-    return _spine_union_sql([
-        (_oracle_top_modules(), "top5", _TOP_MODULES_MAP),
-        (_oracle_top_modules_volume(), "volume8k", _TOP_MODULES_MAP),
-        (_oracle_builtin_blacklist(), "blacklist", _TOP_MODULES_EXTRA_MAPS[0][1]),
-        (_oracle_test_module_filter(), "testfilter", _TOP_MODULES_EXTRA_MAPS[1][1]),
-    ])
-
-
-_DOC_SAMPLING_MAPS = [
-    ("stratified", dict(n1="doc_id", k1="source", s1="h2")),
-    ("topk", dict(n1="doc_id", k1="source", n2="rk")),
-]
-
-
-def q_doc_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic corpus sampling family (stratified hash rates +
-    exactly-k-per-stratum) on one driver row."""
-    dfs = [q_doc_sample_stratified(spark, sf_dir), q_doc_sample_topk(spark, sf_dir)]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m) for df, (part, m) in zip(dfs, _DOC_SAMPLING_MAPS)
-    ])
-
-
-def _oracle_doc_sampling() -> str:
-    return _spine_union_sql([
-        (sql, part, m)
-        for sql, (part, m) in zip(
-            [_ORACLE_SAMPLE_STRATIFIED, _ORACLE_SAMPLE_TOPK], _DOC_SAMPLING_MAPS
-        )
-    ])
-
-
-_EVENTS_TEMPORAL_MAPS = [
-    ("sessionize", dict(n1="user_id", n2="session_seq", n3="n_events",
-                        s1="s_start", s2="s_end")),
-    ("asof", dict(n1="click_id", n2="user_id", s1="c_ts", n3="view_id",
-                  s2="v_ts")),
-    ("range", dict(n1="win_id", n2="n_events", n3="first_event",
-                   n4="last_event")),
-]
-
-
-def q_events_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The temporal-operator family (gap sessionization, AS-OF join,
-    bucketed RANGE join) on one driver row."""
-    dfs = [
-        q_events_sessionize(spark, sf_dir),
-        q_asof_join_events(spark, sf_dir),
-        q_range_join_events(spark, sf_dir),
-    ]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m) for df, (part, m) in zip(dfs, _EVENTS_TEMPORAL_MAPS)
-    ])
-
-
-def _oracle_events_temporal() -> str:
-    sqls = [_ORACLE_EVENTS_SESSIONIZE, _ORACLE_ASOF_JOIN, _ORACLE_RANGE_JOIN]
-    return _spine_union_sql([
-        (sql, part, m) for sql, (part, m) in zip(sqls, _EVENTS_TEMPORAL_MAPS)
-    ])
-
-
-_EVENTS_ANALYTICS_MAPS = [
-    ("rollup", dict(k1="grain", k2="bucket", s1="event_type", n1="n",
-                    v1="total_value")),
-    ("pivot", dict(k1="user_id", n1="n_click", n2="n_view", n3="n_purchase",
-                   n4="n_error")),
-    ("percentiles", dict(k1="event_type", v1="p50", v2="p90", v3="p99")),
-    ("cms", dict(k1="user_id", n1="exact", n2="cms_estimate")),
-    ("kmv", dict(k1="event_type", n1="exact_distinct", v1="kmv_estimate")),
-    ("topk_types", dict(k1="event_type", n1="cnt")),
-]
-
-
-def q_events_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events-analytics family (GROUPING-SETS rollup, explicit-list
-    pivot, exact percentiles, CMS frequency sketch, KMV distinct sketch,
-    top-K types) on one driver row."""
-    dfs = [
-        q_events_rollup(spark, sf_dir),
-        q_events_pivot(spark, sf_dir),
-        q_events_percentiles(spark, sf_dir),
-        q_cms_user_counts(spark, sf_dir),
-        q_kmv_distinct(spark, sf_dir),
-        q_topk_event_types(spark, sf_dir),
-    ]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m) for df, (part, m) in zip(dfs, _EVENTS_ANALYTICS_MAPS)
-    ])
-
-
-def _oracle_events_analytics() -> str:
-    sqls = [
-        _ORACLE_EVENTS_ROLLUP,
-        _ORACLE_EVENTS_PIVOT,
-        _ORACLE_EVENTS_PERCENTILES,
-        _ORACLE_CMS_USER_COUNTS,
-        _ORACLE_KMV_DISTINCT,
-        _ORACLE_TOPK_EVENTS,
-    ]
-    return _spine_union_sql([
-        (sql, part, m) for sql, (part, m) in zip(sqls, _EVENTS_ANALYTICS_MAPS)
-    ])
-
-
-_MEDIA_SUITE_MAPS = [
-    ("features", dict(k1="media_id", k2="media_type", n1="n_bytes",
-                      n2="feat_checksum", n3="f0")),
-    ("frame_plan", dict(k1="media_id", n1="frame_ts_ms")),
-]
-
-
-def q_media_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing family (real PPM/WAV decode features + video
-    frame-sampling plan) on one driver row."""
-    dfs = [q_media_features(spark, sf_dir), q_media_frame_plan(spark, sf_dir)]
-    return _spine_union_df(*[
-        _spine_df(df, part, **m) for df, (part, m) in zip(dfs, _MEDIA_SUITE_MAPS)
-    ])
-
-
-def _oracle_media_suite() -> str:
-    return _spine_union_sql([
-        (sql, part, m)
-        for sql, (part, m) in zip(
-            [_oracle_media_features(), _oracle_media_frame_plan()], _MEDIA_SUITE_MAPS
-        )
-    ])
+    ],
+    # the two StackOverflow-lookup usage queries (debug_stackoverflow +
+    # find_stack_overflow_posts) over the forum store
+    "kg_usage_posts": [
+        ("debug", "kg_debug_posts",
+         dict(k1="q", k2="t", s1="qc_md5", s2="ac_md5", n1="c")),
+        ("find", "kg_find_posts",
+         dict(k1="q", k2="t", s1="qc_md5", s2="ac_md5", n1="c")),
+    ],
+    # the four model-centric usage queries over the doc+flow store
+    "kg_usage_models": [
+        ("hyper_dist", "kg_hyperparam_dist",
+         dict(k1="name", k2="param", s1="value", n1="n")),
+        ("single_fit", "kg_single_model_fits",
+         dict(k1="graph", k2="fit", s1="cls_name", n1="l1", n2="l2", s2="txt")),
+        ("fit_predict", "kg_fit_predict_pairs",
+         dict(k1="graph", k2="model", s1="name", s2="fit", s3="predict")),
+        ("violations", "kg_hyperparam_violations",
+         dict(k1="graph", k2="clf", s1="name", n1="n_hyper", n2="l1", n3="l2",
+              s2="txt")),
+    ],
+    # the graph-structural usage queries: type inference, similar flows,
+    # VoID dataset statistics
+    "kg_usage_graph": [
+        ("type_inference", "kg_type_inference",
+         dict(k1="graph", k2="n1", s1="label", s2="cls", s3="super", s4="txt",
+              n1="l1", n2="l2")),
+        ("similar_flows", "kg_similar_flows", dict(k1="classifierName", n1="c")),
+        ("void_stats", "kg_void_stats",
+         dict(k1="pred", n1="n_triples", n2="n_subjects", n3="n_objects",
+              n4="n_graphs")),
+    ],
+    # docstring-pipeline aggregation: J7 MergeModules full-outer merge,
+    # A7 longest-description-wins, A9 shape/dimensionality extraction
+    "kg_doc_aggregates": [
+        ("merge_modules", "merge_modules",
+         dict(k1="module", k2="klass", s1="function", s2="doc")),
+        ("longest_desc", "longest_description",
+         dict(k1="source", n1="doc_id", n2="n_chars")),
+        ("shape_dims", "shape_dims", dict(n1="sid", s1="dims_csv")),
+    ],
+    # J10 VALUES/semi-join, J9 minus/anti-join, J11 optional/left outer
+    "semi_anti_joins": [
+        ("semi", "semi_join_suppliers", dict(n1="s_suppkey", s1="s_name")),
+        ("anti", "anti_join_customers", dict(n1="c_custkey", s1="c_name")),
+        ("optional", "optional_left_outer",
+         dict(k1="param_uri", s1="param_label", n1="param_index")),
+    ],
+    # Posts.xml/Votes.xml at volume: sampled row-level assembly, global
+    # assembly invariants, the J2 post⋈votes left-outer count
+    "posts_votes": [
+        ("volume", "posts_xml_volume",
+         dict(k1="question_id", k2="title", s1="tags", s2="q_votes",
+              s3="answer_ids", s4="content_md5")),
+        ("volume_agg", "posts_xml_volume_agg",
+         dict(n1="n_questions", n2="n_answers", n3="n_with_votes",
+              n4="total_q_votes")),
+        ("votes_per_user", "votes_per_user", dict(n1="user_id", n2="n_errors")),
+    ],
+    # A2/A3 import counting (300-page top-5, 8000-page volume top-10 on
+    # a 1-in-40 strict sample), F2's builtin blacklist and F9's `.tests.`
+    # filter on documents-table derivations where the filter is
+    # load-bearing
+    "top_modules_suite": [
+        ("top5", "top_modules", dict(k1="module", n1="cnt")),
+        ("volume8k", "top_modules_volume", dict(k1="module", n1="cnt")),
+        ("blacklist", "builtin_blacklist", dict(k1="module", n1="cnt")),
+        ("testfilter", "test_module_filter",
+         dict(n1="doc_id", k1="klass", k2="function")),
+    ],
+    # deterministic corpus sampling: stratified hash rates and
+    # exactly-k-per-stratum
+    "doc_sampling": [
+        ("stratified", "doc_sample_stratified",
+         dict(n1="doc_id", k1="source", s1="h2")),
+        ("topk", "doc_sample_topk", dict(n1="doc_id", k1="source", n2="rk")),
+    ],
+    # gap sessionization, AS-OF join, bucketed RANGE join
+    "events_temporal": [
+        ("sessionize", "events_sessionize",
+         dict(n1="user_id", n2="session_seq", n3="n_events", s1="s_start",
+              s2="s_end")),
+        ("asof", "asof_join_events",
+         dict(n1="click_id", n2="user_id", s1="c_ts", n3="view_id", s2="v_ts")),
+        ("range", "range_join_events",
+         dict(n1="win_id", n2="n_events", n3="first_event", n4="last_event")),
+    ],
+    # GROUPING-SETS rollup, explicit-list pivot, exact percentiles, CMS
+    # frequency sketch, KMV distinct sketch, top-K types
+    "events_analytics": [
+        ("rollup", "events_rollup",
+         dict(k1="grain", k2="bucket", s1="event_type", n1="n", v1="total_value")),
+        ("pivot", "events_pivot",
+         dict(k1="user_id", n1="n_click", n2="n_view", n3="n_purchase",
+              n4="n_error")),
+        ("percentiles", "events_percentiles",
+         dict(k1="event_type", v1="p50", v2="p90", v3="p99")),
+        ("cms", "cms_user_counts",
+         dict(k1="user_id", n1="exact", n2="cms_estimate")),
+        ("kmv", "kmv_distinct",
+         dict(k1="event_type", n1="exact_distinct", v1="kmv_estimate")),
+        ("topk_types", "topk_event_types", dict(k1="event_type", n1="cnt")),
+    ],
+    # multimodal plumbing: real PPM/WAV decode features and the video
+    # frame-sampling plan
+    "media_suite": [
+        ("features", "media_features",
+         dict(k1="media_id", k2="media_type", n1="n_bytes", n2="feat_checksum",
+              n3="f0")),
+        ("frame_plan", "media_frame_plan", dict(k1="media_id", n1="frame_ts_ms")),
+    ],
+}
+
+
+def _family_query(parts: Parts) -> Query:
+    """A family's query: the spine union of its components' DataFrames."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _spine_union_df(*[
+            _spine_df(_REGISTRY[name][0](spark, sf_dir), part, **mapping)
+            for part, name, mapping in parts
+        ])
+
+    return query
 
 
 # ---------------------------------------------------------------------------
-# the curated driver contract: exactly 50 entries, one per operator family
+# the registry and the driver contract
 # ---------------------------------------------------------------------------
 
+#: name → (query, oracle).  An oracle is its SQL text, a function that
+#: builds it (some read reference files), a family's parts, or None for
+#: a rows-only row.
+_REGISTRY: dict[str, tuple[Query, Oracle | None]] = {
+    # KG core
+    "kg_doc_triples": (q_kg_doc_triples, _oracle_kg_doc_triples),
+    "kg_sameas": (q_kg_sameas, _oracle_kg_sameas),
+    "kg_mentions": (q_kg_mentions, _oracle_kg_mentions),
+    "kg_question_triples": (q_kg_question_triples, _oracle_kg_question_triples),
+    "kg_flow_closure": (q_kg_flow_closure, _oracle_kg_flow_closure),
+    "kg_pipeline_forum": (q_kg_pipeline_forum, _oracle_kg_pipeline_forum),
+    "kg_pipeline_digest": (q_kg_pipeline_digest, _oracle_kg_pipeline_digest),
+    "kg_flow_triples": (q_kg_flow_triples, _oracle_kg_flow_triples),
+    "kg_flow_digest": (q_kg_flow_digest, _oracle_kg_flow_digest),
+    "kg_next_steps": (q_kg_next_steps, _oracle_kg_next_steps),
+    "posts_xml_questions": (q_posts_xml_questions, _oracle_posts_xml_questions),
+    # dedup / similarity
+    "dedup_exact": (q_dedup_exact, _ORACLE_DEDUP_EXACT),
+    "dedup_groups": (q_dedup_groups, _ORACLE_DEDUP_GROUPS),
+    "dedup_token_jaccard": (q_dedup_token_jaccard, _ORACLE_DEDUP_JACCARD),
+    "dedup_minhash": (q_dedup_minhash, None),
+    "dedup_minhash_md5": (q_dedup_minhash_md5, _ORACLE_DEDUP_MINHASH_MD5),
+    "dedup_simhash": (q_dedup_simhash, _ORACLE_DEDUP_SIMHASH),
+    "dedup_embedding": (q_dedup_embedding, _ORACLE_DEDUP_EMBEDDING),
+    "dedup_embedding_lsh": (q_dedup_embedding_lsh, _oracle_dedup_embedding_lsh),
+    "sim_cosine_topk": (q_sim_cosine_topk, _ORACLE_COSINE_TOPK),
+    "sim_lsh_topk": (q_sim_lsh_topk, _oracle_sim_lsh_topk),
+    # text analysis
+    "text_token_counts": (q_text_token_counts, _ORACLE_TOKEN_COUNTS),
+    "text_language": (q_text_language, _oracle_text_language),
+    "text_quality": (q_text_quality, _ORACLE_TEXT_QUALITY),
+    "text_repetition": (q_text_repetition, _ORACLE_TEXT_REPETITION),
+    "doc_fingerprint": (q_doc_fingerprint, _ORACLE_FINGERPRINT),
+    "doc_md5_keys": (q_doc_md5_keys, _ORACLE_MD5_KEYS),
+    "posexplode_words": (q_posexplode_words, _ORACLE_POSEXPLODE),
+    "semforms_expressions": (q_semforms_expressions, _oracle_semforms_expressions),
+    "semforms_dataflow": (q_semforms_dataflow, _oracle_semforms_dataflow),
+    "semforms_corpus": (q_semforms_corpus, _oracle_semforms_corpus),
+    "datarinse_index": (q_datarinse_index, _oracle_datarinse_index),
+    "mining_suite": (q_mining_suite, _oracle_mining_suite),
+    # relational coverage
+    "agg_pricing_summary": (q_agg_pricing_summary, _ORACLE_PRICING),
+    "join_topk_orders": (q_join_topk_orders, _ORACLE_TOPK_ORDERS),
+    "corpus_extraction_sql": (q_corpus_extraction_sql, _ORACLE_CORPUS_EXTRACTION),
+    "join_region_drilldown": (q_join_region_drilldown, _ORACLE_REGION),
+    "window_top3_orders": (q_window_top3_orders, _ORACLE_WINDOW_TOP3),
+    "anti_join_customers": (q_anti_join_customers, _ORACLE_ANTI),
+    "semi_join_suppliers": (q_semi_join_suppliers, _ORACLE_SEMI),
+    "set_ops_event_types": (q_set_ops_event_types, _ORACLE_SET_OPS),
+    "events_hourly": (q_events_hourly, _ORACLE_EVENTS_HOURLY),
+    "events_stream_hourly": (q_events_stream_hourly, _ORACLE_EVENTS_HOURLY),
+    "votes_per_user": (q_votes_per_user, _ORACLE_VOTES_PER_USER),
+    "topk_event_types": (q_topk_event_types, _ORACLE_TOPK_EVENTS),
+    # multimodal plumbing
+    "media_features": (q_media_features, _oracle_media_features),
+    # extended §2 coverage
+    "merge_modules": (q_merge_modules, _oracle_merge_modules),
+    "longest_description": (q_longest_description, _ORACLE_LONGEST_DESC),
+    "shape_dims": (q_shape_dims, _oracle_shape_dims),
+    "graph_uri_normalize": (q_graph_uri_normalize, _ORACLE_GRAPH_URI),
+    "kg_patched_types": (q_kg_patched_types, _oracle_kg_patched_types),
+    "kg_rst_docstrings": (q_kg_rst_docstrings, _oracle_kg_rst_docstrings),
+    "kg_golden_nq": (q_kg_golden_nq, _oracle_kg_golden_nq),
+    "kg_sink_roundtrip": (q_kg_sink_roundtrip, _oracle_kg_sink_roundtrip),
+    "kg_golden_emitter": (q_kg_golden_emitter, _oracle_kg_golden_emitter),
+    "top_modules": (q_top_modules, _oracle_top_modules),
+    "builtin_blacklist": (q_builtin_blacklist, _oracle_builtin_blacklist),
+    "test_module_filter": (q_test_module_filter, _oracle_test_module_filter),
+    "optional_left_outer": (q_optional_left_outer, _oracle_optional_left_outer),
+    "posts_xml_volume": (q_posts_xml_volume, _oracle_posts_xml_volume),
+    "posts_xml_volume_agg": (q_posts_xml_volume_agg, _oracle_posts_xml_volume_agg),
+    "sim_ivf_topk": (q_sim_ivf_topk, _oracle_sim_ivf_topk),
+    "kg_canonical_triples": (q_kg_canonical_triples, _oracle_kg_canonical_triples),
+    "media_frame_plan": (q_media_frame_plan, _oracle_media_frame_plan),
+    "kg_debug_posts": (q_kg_debug_posts, _oracle_kg_debug_posts),
+    "kg_find_posts": (q_kg_find_posts, _oracle_kg_find_posts),
+    "kg_hyperparam_dist": (q_kg_hyperparam_dist, _oracle_kg_hyperparam_dist),
+    "kg_single_model_fits": (q_kg_single_model_fits, _oracle_kg_single_model_fits),
+    "kg_fit_predict_pairs": (q_kg_fit_predict_pairs, _oracle_kg_fit_predict_pairs),
+    # round-3 additions: the remaining reference usage queries
+    "kg_type_inference": (q_kg_type_inference, _oracle_kg_type_inference),
+    "kg_hyperparam_violations": (
+        q_kg_hyperparam_violations, _oracle_kg_hyperparam_violations
+    ),
+    "kg_similar_flows": (q_kg_similar_flows, _oracle_kg_similar_flows),
+    "top_modules_volume": (q_top_modules_volume, _oracle_top_modules_volume),
+    "doc_sample_stratified": (q_doc_sample_stratified, _ORACLE_SAMPLE_STRATIFIED),
+    "doc_sample_topk": (q_doc_sample_topk, _ORACLE_SAMPLE_TOPK),
+    "corpus_curation": (q_corpus_curation, _oracle_corpus_curation),
+    # corpus hygiene
+    "pii_redact": (q_pii_redact, _ORACLE_PII_REDACT),
+    "dedup_lines": (q_dedup_lines, _ORACLE_DEDUP_LINES),
+    "decontaminate": (q_decontaminate, _ORACLE_DECONTAMINATE),
+    "pack_sequences": (q_pack_sequences, _ORACLE_PACK_SEQUENCES),
+    "emb_quantize": (q_emb_quantize, _ORACLE_EMB_QUANTIZE),
+    "sim_ivf_recall": (q_sim_ivf_recall, _oracle_sim_ivf_recall),
+    "kg_void_stats": (q_kg_void_stats, _oracle_kg_void_stats),
+    "corpus_pipeline": (q_corpus_pipeline, _ORACLE_CORPUS_PIPELINE),
+    "kmeans_clusters": (q_kmeans_clusters, _oracle_kmeans_clusters),
+    "cluster_balanced_sample": (
+        q_cluster_balanced_sample, _oracle_cluster_balanced_sample
+    ),
+    "bm25_search": (q_bm25_search, _oracle_bm25_search),
+    "events_sessionize": (q_events_sessionize, _ORACLE_EVENTS_SESSIONIZE),
+    "asof_join_events": (q_asof_join_events, _ORACLE_ASOF_JOIN),
+    "range_join_events": (q_range_join_events, _ORACLE_RANGE_JOIN),
+    "events_rollup": (q_events_rollup, _ORACLE_EVENTS_ROLLUP),
+    "events_pivot": (q_events_pivot, _ORACLE_EVENTS_PIVOT),
+    "events_percentiles": (q_events_percentiles, _ORACLE_EVENTS_PERCENTILES),
+    "cms_user_counts": (q_cms_user_counts, _ORACLE_CMS_USER_COUNTS),
+    "kmv_distinct": (q_kmv_distinct, _ORACLE_KMV_DISTINCT),
+    # the single-query composed rows
+    "text_profile": (q_text_profile, _oracle_text_profile),
+}
+_REGISTRY.update(
+    (family, (_family_query(parts), parts)) for family, parts in _FAMILIES.items()
+)
+
+#: the curated driver contract in record order: exactly 50 entries, one
+#: per operator family
 _CURATED = [
     # KG core
     "kg_doc_triples", "kg_canonicalize", "kg_mentions", "kg_question_triples",
@@ -6136,14 +5549,72 @@ _CURATED = [
 ]
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: full KG pipeline on synthetic pages (sf0.001-scale)."""
+    from graph4code_spark.emitters.forum import forum_triples
+    from graph4code_spark.materialize import dedup_quads
+    from graph4code_spark.operators.linking import link_entities
+    from graph4code_spark.sources.qa import extract_qa
+
+    pages = synth_pages(spark, 200, seed=42)
+    qa = extract_qa(pages)
+    links = link_entities(qa, FIXED_CATALOG)
+    return dedup_quads(forum_triples(links, qa, FIXED_CATALOG))
+
+
+def queries_full() -> dict[str, Query]:
+    """The FULL fine-grained inventory (one entry per operator/query,
+    including every component that the curated driver registry composes).
+    `jobs/verify_all.py` and `tests/test_entry_oracles.py` check this
+    superset; the driver contract (`queries()`) is the curated ≤50-entry
+    selection so every operator family lands on the capped CORRECTNESS
+    record."""
+    return {name: query for name, (query, _oracle) in _REGISTRY.items()}
+
+
+def _build_oracle(oracle: Callable[[], str] | str) -> str:
+    """The oracle's SQL.  When it needs a reference file that is absent,
+    an oracle that fails with the missing path instead: only the rows
+    that read the file fail, not every oracle."""
+    if isinstance(oracle, str):
+        return oracle
+    try:
+        return oracle()
+    except FileNotFoundError as exc:
+        return f"SELECT error({_sql_quote(f'missing reference file: {exc.filename}')})"
+
+
+def _oracle_sqls(names) -> dict[str, str]:
+    """The oracle SQL of each of ``names`` that has one.  Each oracle is
+    built at most once per call: a family's oracle is the spine union of
+    the SQL already built for its components."""
+
+    @functools.cache
+    def build(name: str) -> str:
+        oracle = _REGISTRY[name][1]
+        if isinstance(oracle, list):
+            return _spine_union_sql([(build(c), part, m) for part, c, m in oracle])
+        return oracle if isinstance(oracle, str) else oracle()
+
+    return {
+        name: _build_oracle(functools.partial(build, name))
+        for name in names
+        if _REGISTRY[name][1] is not None
+    }
+
+
+def oracle_sql_full() -> dict[str, str]:
+    """Oracles for `queries_full()` (superset of the curated driver
+    oracles).  Entries absent here are rows-only by design."""
+    return _oracle_sqls(_REGISTRY)
+
+
+def queries() -> dict[str, Query]:
     """The curated driver contract: exactly 50 entries (the driver's
     CORRECTNESS record cap), one strict-oracle row per operator family.
     The fine-grained inventory lives in `queries_full()`."""
-    full = queries_full()
-    return {name: full[name] for name in _CURATED}
+    return {name: _REGISTRY[name][0] for name in _CURATED}
 
 
 def oracle_sql() -> dict[str, str]:
-    builders = _oracle_builders()
-    return {name: _build_oracle(builders[name]) for name in _CURATED if name in builders}
+    return _oracle_sqls(_CURATED)

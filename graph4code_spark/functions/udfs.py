@@ -24,12 +24,3 @@ def normalize_graph_uri(uris: pd.Series) -> pd.Series:
         )
     )
 
-
-@pandas_udf("string")
-def analyzer_joined(texts: pd.Series) -> pd.Series:
-    """ES-analyzer token string of a text column (used for ad-hoc
-    debugging/oracle work; the linking path tokenizes inside its own
-    batched UDF to avoid a second pass)."""
-    from graph4code_spark.analyzer import analyze_joined
-
-    return texts.map(lambda t: analyze_joined(t or ""))

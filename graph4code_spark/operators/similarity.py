@@ -19,7 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graph4code_spark.session import local_df
 
 
 def _norm(col):
@@ -96,15 +95,6 @@ def ivf_centroids(dim: int, n_lists: int, seed: int) -> np.ndarray:
     rs = np.random.RandomState(seed)
     c = rs.normal(size=(n_lists, dim)).astype(np.float64)
     return c / np.linalg.norm(c, axis=1, keepdims=True)
-
-
-def _centroid_df(spark, dim: int, n_lists: int, seed: int) -> DataFrame:
-    cents = ivf_centroids(dim, n_lists, seed)
-    return local_df(
-        spark,
-        [(i, [float(x) for x in cents[i]]) for i in range(n_lists)],
-        "list_id int, centroid array<double>",
-    )
 
 
 def ivf_assign(

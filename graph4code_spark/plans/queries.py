@@ -385,16 +385,7 @@ def fit_predict_pairs(triples: DataFrame, base_class: str) -> DataFrame:
     )
 
 
-def transitive_closure_flows(triples: DataFrame) -> DataFrame:
-    from graph4code_spark.operators.closure import (
-        flows_to_edges,
-        transitive_closure,
-    )
-
-    return transitive_closure(flows_to_edges(triples))
-
-
-def type_inference(triples: DataFrame, base_modules_check: bool = True) -> DataFrame:
+def type_inference(triples: DataFrame) -> DataFrame:
     """`usage_queries/type_inference.sparql:15-46` restated: duck-typed
     receiver-type inference.
 
@@ -456,35 +447,34 @@ def type_inference(triples: DataFrame, base_modules_check: bool = True) -> DataF
         F.col("n_ok") == F.col("n_all")
     ).select("n1", "graph", "cls")
 
-    if base_modules_check:
-        # honest import-exists subset: an isPartOf* ancestor label of cls
-        # appears as an Imported node label in the same analysis graph
-        labels_all = _pred(triples, PREFIXES["rdfs"] + "label").select(
-            F.col("subj").alias("node"), F.col("obj").alias("lbl"), "graph"
-        )
-        imported = _pred(triples, rdf_type).where(
-            F.col("obj") == "http://purl.org/twc/graph4code/Imported"
-        ).select(F.col("subj").alias("node"), "graph")
-        imp_labels = imported.join(labels_all, ["node", "graph"]).select(
-            "graph", F.col("lbl").alias("anc_lbl")
-        ).distinct()
+    # honest import-exists subset: an isPartOf* ancestor label of cls
+    # appears as an Imported node label in the same analysis graph
+    labels_all = _pred(triples, PREFIXES["rdfs"] + "label").select(
+        F.col("subj").alias("node"), F.col("obj").alias("lbl"), "graph"
+    )
+    imported = _pred(triples, rdf_type).where(
+        F.col("obj") == "http://purl.org/twc/graph4code/Imported"
+    ).select(F.col("subj").alias("node"), "graph")
+    imp_labels = imported.join(labels_all, ["node", "graph"]).select(
+        "graph", F.col("lbl").alias("anc_lbl")
+    ).distinct()
 
-        ipo = _pred(triples, dct + "isPartOf").select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst"), "graph"
-        ).distinct()
-        anc = transitive_closure(ipo).select(
-            F.col("src").alias("cls"), F.col("dst").alias("anc")
-        )
-        anc = anc.unionByName(
-            cand.select("cls").distinct().withColumn("anc", F.col("cls"))
-        )
-        cls_labels = _pred(triples, PREFIXES["rdfs"] + "label").select(
-            F.col("subj").alias("anc"), F.col("obj").alias("anc_lbl")
-        ).distinct()
-        anc_lbls = anc.join(cls_labels, "anc").select("cls", "anc_lbl").distinct()
-        cand = cand.join(F.broadcast(anc_lbls), "cls").join(
-            imp_labels, ["graph", "anc_lbl"], "left_semi"
-        ).select("n1", "graph", "cls").distinct()
+    ipo = _pred(triples, dct + "isPartOf").select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst"), "graph"
+    ).distinct()
+    anc = transitive_closure(ipo).select(
+        F.col("src").alias("cls"), F.col("dst").alias("anc")
+    )
+    anc = anc.unionByName(
+        cand.select("cls").distinct().withColumn("anc", F.col("cls"))
+    )
+    cls_labels = _pred(triples, PREFIXES["rdfs"] + "label").select(
+        F.col("subj").alias("anc"), F.col("obj").alias("anc_lbl")
+    ).distinct()
+    anc_lbls = anc.join(cls_labels, "anc").select("cls", "anc_lbl").distinct()
+    cand = cand.join(F.broadcast(anc_lbls), "cls").join(
+        imp_labels, ["graph", "anc_lbl"], "left_semi"
+    ).select("n1", "graph", "cls").distinct()
 
     labels = _pred(triples, _RDFS_LABEL).select(
         F.col("subj").alias("n1"), F.col("obj").alias("label"), "graph"

@@ -80,21 +80,6 @@ def _name_end(sink: QuadSink, name: str, doc_uri: str):
         sink.add(doc_uri, _G4C + "name_end", pe, True, DOCSTRINGS_GRAPH)
 
 
-def _param_name_key(param: str):
-    key = (
-        param.replace("`", "").replace("{", "").replace('"', "")
-        .replace("'", "").replace("<", "").replace(":", " ")
-    )
-    arr = " ".join(key.split(" ")).split()
-    if len(arr) == 1:
-        return arr[0]
-    if len(arr) == 2:
-        return arr[1]
-    if len(arr) > 2:
-        return arr[0]
-    return None
-
-
 def _param_map_triples(sink: QuadSink, doc_uri: str, param_map, param_names):
     if param_names is None or param_map is None:
         return

@@ -49,44 +49,6 @@ SIO_LOCATION = PREFIXES["sio"] + "SIO_000061"        # located-in (src loc)
 SIO_FIELD = PREFIXES["sio"] + "SIO_000420"           # has-part (field acc.)
 
 
-def py_uri(dotted_name: str) -> str:
-    """Entity URI: ``http://purl.org/twc/graph4code/python/<dotted.name>``.
-
-    Mirrors ``get_new_func_klass_uri`` (`create_docstrings_graph.py:348`).
-    """
-    return PREFIXES["py"] + dotted_name
-
-
-def param_uri(entity_uri: str, index_1based: int) -> str:
-    """Parameter node: ``<entity>/p/<i>`` (`create_docstrings_graph.py:196`)."""
-    return f"{entity_uri}/p/{index_1based}"
-
-
-def return_uri(entity_uri: str) -> str:
-    """Return node: ``<entity>/r/1`` (`create_docstrings_graph.py:240`)."""
-    return f"{entity_uri}/r/1"
-
-
-def question_uri(forum_prefix: str, question_id: str) -> str:
-    """Question node: ``<forum-prefix><qid>`` (`utils.py:636`)."""
-    return forum_prefix + question_id
-
-
-def answer_uri(forum_prefix: str, answer_id: str) -> str:
-    """Answer node: ``<forum-prefix>a/<aid>`` (`utils.py:656`)."""
-    return forum_prefix + "a/" + answer_id
-
-
-def snippet_uri(forum_prefix: str, question_id: str, n: int) -> str:
-    """Code snippet: ``<prefix><qid>/code_snippet/<n>`` (`utils.py:669`)."""
-    return f"{forum_prefix}{question_id}/code_snippet/{n}"
-
-
-def analysis_node_uri(node_number: int) -> str:
-    """Analysis node: ``…/se<n>`` (`PythonTurtleAnalysisEngine.java:320`)."""
-    return f"{ANALYSIS_NODE_PREFIX}{node_number}"
-
-
 # ---------------------------------------------------------------------------
 # URI validation (reference drops triples whose URIRef fails validators.url,
 # `create_docstrings_graph.py:140-151`).  We reproduce the practically

@@ -78,6 +78,37 @@ def test_missing_reference_file_fails_only_its_oracle(con, tmp_path):
     assert entry_mod._build_oracle("SELECT 1 AS x") == "SELECT 1 AS x"
 
 
+
+def test_oracles_share_one_reference_corpus(monkeypatch):
+    """One `oracle_sql_full()` runs the straight-line forum pipeline
+    once (its oracle corpus is cached like `_oracle_corpus`), and each
+    composed family's oracle is the spine union of the SQL its
+    registered components already built."""
+    from graph4code_spark.reference_impl import emitters
+
+    calls = []
+    real = emitters.forum_pipeline_quads
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(emitters, "forum_pipeline_quads", counted)
+    for fn in vars(entry_mod).values():
+        if callable(getattr(fn, "cache_clear", None)):
+            fn.cache_clear()
+    oracles = entry_mod.oracle_sql_full()
+    assert len(calls) == 1
+    assert oracles == ORACLES
+
+    full = entry_mod.queries_full()
+    for family, parts in entry_mod._FAMILIES.items():
+        for _part, name, _mapping in parts:
+            assert name in full and name in oracles, (family, name)
+        assert oracles[family] == entry_mod._spine_union_sql(
+            [(oracles[name], part, mapping) for part, name, mapping in parts]
+        ), family
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     n = df.count()
