@@ -24,8 +24,9 @@ from __future__ import annotations
 
 import functools
 import hashlib
-from collections import defaultdict
+from collections import Counter, defaultdict
 from collections.abc import Callable
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1372,6 +1373,88 @@ def _oracle_corpus() -> tuple[set, set]:
     return doc_quads, ana_quads
 
 
+@functools.cache
+def _oracle_analysis() -> SimpleNamespace:
+    """The usage-query oracles' one index of the oracle corpus's analysis
+    quads, built in one scan.  Node URIs (se<n>) repeat across graphs, so
+    every node map is keyed (graph, node):
+
+    - ``flows[g]``: flowsTo adjacency (node → successors); ``recv[g]``:
+      the same for its ``arg_pos = 0`` receiver edges;
+    - ``label``, ``about``, ``text``: the single-valued literals;
+      ``lines``: (firstLine, lastLine) of the SIO_000061 location;
+    - ``by_label``/``by_about``: (graph, value) → nodes;
+    - ``consts``: count of constant non-receiver args (SIO_000230 with
+      ``arg_pos > 0`` or a name); ``named``: (name, value) per named arg;
+    - ``imports[g]``: labels of the graph's ``Imported`` nodes."""
+    import json
+
+    from graph4code_spark.uris import PREFIXES
+
+    schema_p, sio_p = PREFIXES["schema"], PREFIXES["sio"]
+    label_p, type_p = PREFIXES["rdfs"] + "label", PREFIXES["rdf"] + "type"
+    # flowsTo lives under the BASE purl namespace, not /ontology/
+    # (PythonTurtleAnalysisEngine.java:377; closure.flows_to_edges)
+    flows_p = "http://purl.org/twc/graph4code/flowsTo"
+    a = SimpleNamespace(
+        flows=defaultdict(lambda: defaultdict(set)),
+        recv=defaultdict(lambda: defaultdict(set)),
+        label={}, about={}, text={}, lines={},
+        by_label=defaultdict(set), by_about=defaultdict(set),
+        consts=defaultdict(int), named=defaultdict(list), imports=defaultdict(set),
+    )
+    imported = set()
+    for s, p, o, _lit, pos, nm, g in _oracle_corpus()[1]:
+        if p == flows_p:
+            a.flows[g][s].add(o)
+            if pos == 0:
+                a.recv[g][s].add(o)
+        elif p == label_p:
+            a.label[(g, s)] = o
+            a.by_label[(g, o)].add(s)
+        elif p == schema_p + "about":
+            a.about[(g, s)] = o
+            a.by_about[(g, o)].add(s)
+        elif p == schema_p + "text":
+            a.text[(g, s)] = o
+        elif p == sio_p + "SIO_000061":
+            d = json.loads(o)
+            a.lines[(g, s)] = (d.get("firstLine"), d.get("lastLine"))
+        elif p == sio_p + "SIO_000230":
+            if (pos is not None and pos > 0) or nm is not None:
+                a.consts[(g, s)] += 1
+            if nm is not None:
+                a.named[(g, s)].append((nm, o))
+        elif p == type_p and o == "http://purl.org/twc/graph4code/Imported":
+            imported.add((g, s))
+    for g, n in imported:
+        if (g, n) in a.label:
+            a.imports[g].add(a.label[(g, n)])
+    # plain dicts: a lookup of a missing key must not grow the cached index
+    return SimpleNamespace(**{k: dict(v) for k, v in vars(a).items()})
+
+
+def _reach(adj: dict, starts) -> set:
+    """flowsTo+ from ``starts`` over ``adj`` (node → successors): every
+    node one or more edges away (a start only through a cycle)."""
+    seen, stack = set(), [d for s in starts for d in adj.get(s, ())]
+    while stack:
+        x = stack.pop()
+        if x not in seen:
+            seen.add(x)
+            stack.extend(adj.get(x, ()))
+    return seen
+
+
+def _ctor_name(label: str | None, names: set[str]) -> str | None:
+    """The class a constructor-call label names, if it is in ``names``:
+    the reference's trailing-separator quirk makes a multi-part analysis
+    label the class name + '.'."""
+    if label and label.endswith(".") and label[:-1] in names:
+        return label[:-1]
+    return None
+
+
 def _quad_hex(q: tuple) -> str:
     """The oracle-side twin of `_quad_md5`: 5-column forum quads and
     7-column annotated analysis quads alike."""
@@ -1566,39 +1649,16 @@ def q_kg_next_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_next_steps() -> str:
-    from collections import Counter, defaultdict
-
-    _doc, quads = _oracle_corpus()
-
-    label_p = "http://www.w3.org/2000/01/rdf-schema#label"
-    flows_p = "http://purl.org/twc/graph4code/flowsTo"
-    labels: dict[tuple[str, str], str] = {}
-    edges: dict[str, dict[str, set]] = defaultdict(lambda: defaultdict(set))
-    for s, p, o, _lit, _pos, _name, g in quads:
-        if p == label_p:
-            labels[(g, s)] = o
-        elif p == flows_p:
-            edges[g][s].add(o)
-
+    a = _oracle_analysis()
     counts: Counter = Counter()
-    for g, adj in edges.items():
-        # per-graph transitive closure, BFS from every node
-        for src in list(adj):
-            seen, stack = set(), list(adj[src])
-            while stack:
-                d = stack.pop()
-                if d in seen:
-                    continue
-                seen.add(d)
-                stack.extend(adj.get(d, ()))
-            if (g, src) in labels and "SVC" in labels[(g, src)]:
-                for d in seen:
-                    if (g, d) in labels:
-                        counts[labels[(g, d)]] += 1
+    for g, adj in a.flows.items():
+        for src in adj:
+            if "SVC" in a.label.get((g, src), ""):
+                counts.update(
+                    a.label[(g, d)] for d in _reach(adj, [src]) if (g, d) in a.label
+                )
     top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
-    return _values_table(
-        [(lbl, c) for lbl, c in top], ["next_label", "c"], ["VARCHAR", "BIGINT"]
-    )
+    return _values_table(top, ["next_label", "c"], ["VARCHAR", "BIGINT"])
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3440,10 +3500,10 @@ def q_kg_hyperparam_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("name", "param", "value", F.col("n").cast("long").alias("n"))
 
 
-def _oracle_classifier_names(doc_quads: set, base_class: str) -> set[str]:
+def _oracle_classifier_names(bases: tuple[str, ...]) -> set[str]:
     """Python restatement of `classifier_class_names`: labels of classes
-    reaching ``base_class`` via REFLEXIVE rdfs:subClassOf* (SPARQL `*`
-    includes the zero-length path, so the base class itself is always a
+    reaching any of ``bases`` via REFLEXIVE rdfs:subClassOf* (SPARQL `*`
+    includes the zero-length path, so each base class itself is always a
     member — matching the seeded-closure + union impl)."""
     from graph4code_spark.uris import PREFIXES
 
@@ -3451,44 +3511,24 @@ def _oracle_classifier_names(doc_quads: set, base_class: str) -> set[str]:
     rdfs_label = PREFIXES["rdfs"] + "label"
     edges = defaultdict(set)
     lbl: dict[str, str] = {}
-    for s, p, o, _l, _g in doc_quads:
+    for s, p, o, _l, _g in _oracle_corpus()[0]:
         if p == rdfs_sub:
             edges[s].add(o)
         elif p == rdfs_label:
             lbl.setdefault(s, o)
-    base_uri = PREFIXES["py"] + base_class
-    classes = {base_uri}
-    for start in list(edges):
-        seen, stack = set(), [start]
-        while stack:
-            x = stack.pop()
-            if x in seen:
-                continue
-            seen.add(x)
-            stack.extend(edges.get(x, ()))
-        if base_uri in seen:
-            classes.add(start)
+    base_uris = {PREFIXES["py"] + b for b in bases}
+    classes = base_uris | {c for c in edges if _reach(edges, [c]) & base_uris}
     return {lbl[c] for c in classes if c in lbl}
 
 
 def _oracle_kg_hyperparam_dist() -> str:
-    from collections import Counter
-
-    from graph4code_spark.uris import PREFIXES
-
-    rdfs_label = PREFIXES["rdfs"] + "label"
-    sio_in = PREFIXES["sio"] + "SIO_000230"
-
-    doc_quads, ana_quads = _oracle_corpus()
-    cls_names = _oracle_classifier_names(doc_quads, _HYPER_BASE)
-    ctor_nodes = {}
-    for s, p, o, _l, _pos, _nm, _g in ana_quads:
-        if p == rdfs_label and o.endswith(".") and o[:-1] in cls_names:
-            ctor_nodes[(s, _g)] = o[:-1]
+    a = _oracle_analysis()
+    names = _oracle_classifier_names((_HYPER_BASE,))
     counts: Counter = Counter()
-    for s, p, o, _l, _pos, nm, g in ana_quads:
-        if p == sio_in and nm is not None and (s, g) in ctor_nodes:
-            counts[(ctor_nodes[(s, g)], nm, o)] += 1
+    for (g, node), args in a.named.items():
+        cls = _ctor_name(a.label.get((g, node)), names)
+        if cls:
+            counts.update((cls, prm, v) for prm, v in args)
     rows = sorted((n, prm, v, c) for (n, prm, v), c in counts.items())
     return _values_table(
         rows, ["name", "param", "value", "n"],
@@ -3508,60 +3548,26 @@ def q_kg_single_model_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_single_model_fits() -> str:
-    import json as _json
-
-    from graph4code_spark.uris import PREFIXES
-
-    rdfs_label = PREFIXES["rdfs"] + "label"
-    schema_p, sio_p = PREFIXES["schema"], PREFIXES["sio"]
-    # flowsTo lives under the BASE purl namespace, not /ontology/
-    # (PythonTurtleAnalysisEngine.java:377; closure.flows_to_edges)
-    flows_p = "http://purl.org/twc/graph4code/flowsTo"
-
-    doc_quads, ana_quads = _oracle_corpus()
-    cls_names = _oracle_classifier_names(doc_quads, _HYPER_BASE)
-
-    flows = defaultdict(lambda: defaultdict(set))
-    fits = set()
-    ana_lbl, txts, locs = {}, {}, {}
-    for s, p, o, _l, _pos, _nm, g in ana_quads:
-        if p == flows_p:
-            flows[g][s].add(o)
-        elif p == schema_p + "about" and o == "fit":
-            fits.add((s, g))
-        elif p == rdfs_label:
-            ana_lbl[(s, g)] = o
-        elif p == schema_p + "text":
-            txts[(s, g)] = o
-        elif p == sio_p + "SIO_000061":
-            d = _json.loads(o)
-            locs[(s, g)] = (d.get("firstLine"), d.get("lastLine"))
-
-    # per-graph reverse reachability: which classifier classes flow into
-    # each fit node
+    a = _oracle_analysis()
+    names = _oracle_classifier_names((_HYPER_BASE,))
     rows = []
-    for fit, g in fits:
-        adj = flows[g]
-        # predecessors: nodes that reach `fit`
-        reach_cls = set()
-        for src in adj:
-            seen, stack = set(), [src]
-            hit = False
-            while stack:
-                x = stack.pop()
-                if x == fit and x != src:
-                    hit = True
-                if x in seen:
-                    continue
-                seen.add(x)
-                stack.extend(adj.get(x, ()))
-            if hit:
-                l = ana_lbl.get((src, g), "")
-                if l.endswith(".") and l[:-1] in cls_names:
-                    reach_cls.add(l[:-1])
-        if len(reach_cls) == 1 and (fit, g) in txts and (fit, g) in locs:
-            l1, l2 = locs[(fit, g)]
-            rows.append((g, fit, min(reach_cls), l1, l2, txts[(fit, g)]))
+    for (g, value), fits in a.by_about.items():
+        if value != "fit":
+            continue
+        adj = a.flows.get(g, {})
+        ctors = {
+            src: cls for src in adj
+            if (cls := _ctor_name(a.label.get((g, src)), names))
+        }
+        for fit in fits:
+            # the classifier classes whose constructor reaches this fit
+            reach_cls = {
+                cls for src, cls in ctors.items()
+                if src != fit and fit in _reach(adj, [src])
+            }
+            if len(reach_cls) == 1 and (g, fit) in a.text and (g, fit) in a.lines:
+                l1, l2 = a.lines[(g, fit)]
+                rows.append((g, fit, min(reach_cls), l1, l2, a.text[(g, fit)]))
     return _values_table(
         sorted(rows),
         ["graph", "fit", "cls_name", "l1", "l2", "txt"],
@@ -3580,52 +3586,22 @@ def q_kg_fit_predict_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_fit_predict_pairs() -> str:
-    from graph4code_spark.uris import PREFIXES
-
-    rdfs_label = PREFIXES["rdfs"] + "label"
-    schema_p = PREFIXES["schema"]
-    flows_p = "http://purl.org/twc/graph4code/flowsTo"
-
-    doc_quads, ana_quads = _oracle_corpus()
-    cls_names = _oracle_classifier_names(doc_quads, _HYPER_BASE)
-
-    flows = defaultdict(lambda: defaultdict(set))
-    about = defaultdict(set)  # (g, value) -> nodes
-    ana_lbl = {}
-    for s, p, o, _l, _pos, _nm, g in ana_quads:
-        if p == flows_p:
-            flows[g][s].add(o)
-        elif p == schema_p + "about":
-            about[(g, o)].add(s)
-        elif p == rdfs_label:
-            ana_lbl[(s, g)] = o
-
+    a = _oracle_analysis()
+    names = _oracle_classifier_names((_HYPER_BASE,))
     rows = []
-    for g, adj in flows.items():
-        fits = about.get((g, "fit"), set())
-        predicts = about.get((g, "predict"), set())
-        if not fits or not predicts:
-            continue
+    for g, adj in a.flows.items():
+        fits = a.by_about.get((g, "fit"), set())
+        predicts = a.by_about.get((g, "predict"), set())
         for src in adj:
-            l = ana_lbl.get((src, g), "")
-            if not (l.endswith(".") and l[:-1] in cls_names):
-                continue
-            seen, stack = set(), list(adj[src])
-            while stack:
-                x = stack.pop()
-                if x in seen:
-                    continue
-                seen.add(x)
-                stack.extend(adj.get(x, ()))
-            for f in fits & seen:
-                for pr in predicts & seen:
-                    rows.append((g, src, l[:-1], f, pr))
+            cls = _ctor_name(a.label.get((g, src)), names)
+            if cls:
+                seen = _reach(adj, [src])
+                rows += [(g, src, cls, f, pr) for f in fits & seen for pr in predicts & seen]
     return _values_table(
         sorted(rows),
         ["graph", "model", "name", "fit", "predict"],
         ["VARCHAR"] * 5,
     )
-
 
 
 def q_kg_type_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3639,19 +3615,9 @@ def q_kg_type_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_type_inference() -> str:
-    import json as _json
-
     from graph4code_spark.uris import PREFIXES
 
-    g4c, dct = PREFIXES["graph4code"], PREFIXES["dcterms"]
-    rdfs_label = PREFIXES["rdfs"] + "label"
-    rdfs_sub = PREFIXES["rdfs"] + "subClassOf"
-    rdf_type = PREFIXES["rdf"] + "type"
-    schema_p, sio_p = PREFIXES["schema"], PREFIXES["sio"]
-    flows_p = "http://purl.org/twc/graph4code/flowsTo"
-    imported_t = "http://purl.org/twc/graph4code/Imported"
-
-    doc_quads, ana_quads = _oracle_corpus()
+    g4c, dct, rdfs = PREFIXES["graph4code"], PREFIXES["dcterms"], PREFIXES["rdfs"]
 
     # docstrings side: method tail -> classes, isPartOf, labels, subClassOf
     m_p2: dict[str, str] = {}
@@ -3659,88 +3625,45 @@ def _oracle_kg_type_inference() -> str:
     ipo = defaultdict(set)
     dlabels: dict[str, str] = {}
     subc = defaultdict(set)
-    for s, p, o, _l, _g in doc_quads:
+    for s, p, o, _l, _g in _oracle_corpus()[0]:
         if p == g4c + "name_end":
             m_p2[s] = o
         elif p == g4c + "classMember":
             m_cls[s].add(o)
         elif p == dct + "isPartOf":
             ipo[s].add(o)
-        elif p == rdfs_label:
+        elif p == rdfs + "label":
             dlabels.setdefault(s, o)
-        elif p == rdfs_sub:
+        elif p == rdfs + "subClassOf":
             subc[s].add(o)
     methods = defaultdict(set)  # p2 -> {cls}
     for m, p2 in m_p2.items():
-        for c in m_cls.get(m, ()):
-            methods[p2].add(c)
+        methods[p2] |= m_cls.get(m, set())
 
-    # analysis side
-    edges0 = defaultdict(set)   # g -> {(n1, n2)} at receiver position 0
-    about: dict[tuple, str] = {}
-    labels: dict[tuple, str] = {}
-    locs: dict[tuple, tuple] = {}
-    txts: dict[tuple, str] = {}
-    imports = defaultdict(set)  # g -> {import labels}
-    imp_nodes = defaultdict(set)
-    for s, p, o, _l, pos, _nm, g in ana_quads:
-        if p == flows_p and pos == 0:
-            edges0[g].add((s, o))
-        elif p == schema_p + "about":
-            about[(g, s)] = o
-        elif p == rdfs_label:
-            labels[(g, s)] = o
-        elif p == sio_p + "SIO_000061":
-            d = _json.loads(o)
-            locs[(g, s)] = (d.get("lastLine"), d.get("firstLine"))
-        elif p == schema_p + "text":
-            txts[(g, s)] = o
-        elif p == rdf_type and o == imported_t:
-            imp_nodes[g].add(s)
-    for g, nodes in imp_nodes.items():
-        for n in nodes:
-            if (g, n) in labels:
-                imports[g].add(labels[(g, n)])
-
-    def bfs(adj: dict, start: str) -> set:
-        seen, stack = set(), list(adj.get(start, ()))
-        while stack:
-            x = stack.pop()
-            if x in seen:
-                continue
-            seen.add(x)
-            stack.extend(adj.get(x, ()))
-        return seen
-
+    a = _oracle_analysis()
     rows = []
-    for g, pairs in edges0.items():
-        per_n1 = defaultdict(set)
-        for n1, n2 in pairs:
-            per_n1[n1].add(n2)
-        for n1, n2s in per_n1.items():
+    for g, recv in a.recv.items():
+        for n1, n2s in recv.items():
             per_cls = defaultdict(set)
             for n2 in n2s:
-                p2 = about.get((g, n2))
-                if p2 is None:
-                    continue
-                for c in methods.get(p2, ()):
+                for c in methods.get(a.about.get((g, n2)), ()):
                     per_cls[c].add(n2)
             for cls, ok in per_cls.items():
                 if len(ok) != len(n2s):
                     continue
                 # honest import-exists subset: some isPartOf* ancestor
                 # label of cls is imported in this graph
-                anc = {cls} | bfs(ipo, cls)
-                if not any(dlabels.get(a) in imports[g] for a in anc if a in dlabels):
+                anc = {cls} | _reach(ipo, [cls])
+                if not {dlabels[x] for x in anc if x in dlabels} & a.imports.get(g, set()):
                     continue
-                if (g, n1) not in labels or (g, n1) not in locs:
+                if (g, n1) not in a.label or (g, n1) not in a.lines:
                     continue
-                l1, l2 = locs[(g, n1)]
-                txt = txts.get((g, n1))
-                for sup in bfs(subc, cls):
-                    rows.append(
-                        (g, n1, labels[(g, n1)], cls, sup, l1, l2, txt)
-                    )
+                # the SPARQL binds ?l1 to lastLine and ?l2 to firstLine
+                l2, l1 = a.lines[(g, n1)]
+                rows += [
+                    (g, n1, a.label[(g, n1)], cls, sup, l1, l2, a.text.get((g, n1)))
+                    for sup in _reach(subc, [cls])
+                ]
     return _values_table(
         sorted(rows, key=lambda r: tuple(str(x) for x in r)),
         ["graph", "n1", "label", "cls", "super", "l1", "l2", "txt"],
@@ -3760,63 +3683,21 @@ def q_kg_hyperparam_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_hyperparam_violations() -> str:
-    import json as _json
-
-    from graph4code_spark.uris import PREFIXES
-
-    rdfs_label = PREFIXES["rdfs"] + "label"
-    schema_p, sio_p = PREFIXES["schema"], PREFIXES["sio"]
-    flows_p = "http://purl.org/twc/graph4code/flowsTo"
-
-    doc_quads, ana_quads = _oracle_corpus()
-    cls_names = _oracle_classifier_names(
-        doc_quads, "sklearn.base.ClassifierMixin"
-    ) | _oracle_classifier_names(doc_quads, "sklearn.base.RegressorMixin")
-
-    labels: dict[tuple, str] = {}
-    consts = defaultdict(int)   # (g, node) -> n constant non-receiver args
-    flows = defaultdict(lambda: defaultdict(set))
-    locs: dict[tuple, tuple] = {}
-    txts: dict[tuple, str] = {}
-    for s, p, o, _l, pos, nm, g in ana_quads:
-        if p == rdfs_label:
-            labels[(g, s)] = o
-        elif p == sio_p + "SIO_000230" and (
-            (pos is not None and pos > 0) or nm is not None
-        ):
-            consts[(g, s)] += 1
-        elif p == flows_p:
-            flows[g][s].add(o)
-        elif p == sio_p + "SIO_000061":
-            d = _json.loads(o)
-            locs[(g, s)] = (d.get("lastLine"), d.get("firstLine"))
-        elif p == schema_p + "text":
-            txts[(g, s)] = o
-
+    a = _oracle_analysis()
+    names = _oracle_classifier_names(
+        ("sklearn.base.ClassifierMixin", "sklearn.base.RegressorMixin")
+    )
     # forward reach from optimizer nodes, per graph
-    optimized = set()
-    for (g, s), l in labels.items():
-        if l == "hyperopt.fmin.":
-            stack = list(flows[g].get(s, ()))
-            while stack:
-                x = stack.pop()
-                if (g, x) in optimized:
-                    continue
-                optimized.add((g, x))
-                stack.extend(flows[g].get(x, ()))
-
+    optimized = {
+        (g, x) for g, adj in a.flows.items()
+        for x in _reach(adj, a.by_label.get((g, "hyperopt.fmin."), ()))
+    }
     rows = []
-    for (g, node), l in labels.items():
-        if not (l.endswith(".") and l[:-1] in cls_names):
-            continue
-        if (g, node) not in consts or (g, node) in optimized:
-            continue
-        if (g, node) not in locs or (g, node) not in txts:
-            continue
-        l1, l2 = locs[(g, node)]
-        rows.append(
-            (g, node, l[:-1], consts[(g, node)], l1, l2, txts[(g, node)])
-        )
+    for (g, node), n_hyper in a.consts.items():
+        cls = _ctor_name(a.label.get((g, node)), names)
+        if cls and (g, node) not in optimized and (g, node) in a.lines and (g, node) in a.text:
+            l2, l1 = a.lines[(g, node)]
+            rows.append((g, node, cls, n_hyper, l1, l2, a.text[(g, node)]))
     return _values_table(
         sorted(rows),
         ["graph", "clf", "name", "n_hyper", "l1", "l2", "txt"],
@@ -3838,55 +3719,23 @@ def q_kg_similar_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kg_similar_flows() -> str:
-    from graph4code_spark.uris import PREFIXES
-
-    rdfs_label = PREFIXES["rdfs"] + "label"
-    schema_p = PREFIXES["schema"]
-    flows_p = "http://purl.org/twc/graph4code/flowsTo"
+    a = _oracle_analysis()
     anchor = "sklearn.ensemble.RandomForestClassifier."
-
-    _doc, ana_quads = _oracle_corpus()
-    labels: dict[tuple, str] = {}
-    flows = defaultdict(lambda: defaultdict(set))
-    edges0 = defaultdict(set)
-    fits = defaultdict(set)
-    for s, p, o, _l, pos, _nm, g in ana_quads:
-        if p == rdfs_label:
-            labels[(g, s)] = o
-        elif p == flows_p:
-            flows[g][s].add(o)
-            if pos == 0:
-                edges0[g].add((s, o))
-        elif p == schema_p + "about" and o == "fit":
-            fits[g].add(s)
-
     per_name_graphs = defaultdict(set)
-    for g, adj in flows.items():
-        reads = [s for (gg, s), l in labels.items() if gg == g and l == "pandas.read_csv."]
-        if not reads or not fits.get(g):
-            continue
-        reached = set()
-        for r in reads:
-            stack = list(adj.get(r, ()))
-            while stack:
-                x = stack.pop()
-                if x in reached:
-                    continue
-                reached.add(x)
-                stack.extend(adj.get(x, ()))
+    for g, adj in a.flows.items():
+        fed = a.by_about.get((g, "fit"), set()) & _reach(
+            adj, a.by_label.get((g, "pandas.read_csv."), ())
+        )
+        # labels of the receiver constructors of the read-fed fit calls
         fed_lbls = {
-            labels.get((g, ctor))
-            for ctor, fit in edges0.get(g, ())
-            if fit in reached and fit in fits[g] and (g, ctor) in labels
+            a.label[(g, ctor)] for ctor, dsts in a.recv.get(g, {}).items()
+            if dsts & fed and (g, ctor) in a.label
         }
-        fed_lbls.discard(None)
-        if anchor not in fed_lbls:
-            continue
-        for l in fed_lbls:
-            if l != anchor:
+        if anchor in fed_lbls:
+            for lbl in fed_lbls - {anchor}:
                 # strip ONE trailing separator (the label quirk), matching
                 # the Spark side's regexp_replace(lbl, r'\.$', '')
-                per_name_graphs[l[:-1] if l.endswith(".") else l].add(g)
+                per_name_graphs[lbl.removesuffix(".")].add(g)
     rows = sorted(
         ((n, len(gs)) for n, gs in per_name_graphs.items()),
         key=lambda kv: (-kv[1], kv[0]),

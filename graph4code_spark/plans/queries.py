@@ -8,8 +8,11 @@ Shapes covered (SURVEY.md §3.4):
   (`docs/example_queries.md:19-45`) → questions-about / most-discussed
 - `flowsTo+` transitive closure + top-k next step
   (`usage_queries/find_next_step.sparql:11-30`) → closure + rank
-- SPARQL `minus` (`usage_queries/find_similar_flows.sparql:37-39`) →
-  anti-join
+- SPARQL `minus` / `filter not exists`
+  (`usage_queries/find_similar_flows.sparql:37-39`,
+  `must_not_set_hyperparameters.sparql:40-44`) → a label filter in
+  `similar_flows`, a (node, graph)-keyed anti-join in
+  `hyperparam_violations`
 """
 
 from __future__ import annotations
@@ -22,8 +25,12 @@ from graph4code_spark.session import local_df
 from graph4code_spark.uris import PREFIXES
 
 _RDFS_LABEL = PREFIXES["rdfs"] + "label"
+_SUBCLASS = PREFIXES["rdfs"] + "subClassOf"
 _ABOUT = PREFIXES["schema"] + "about"
+_TEXT = PREFIXES["schema"] + "text"
 _PY = PREFIXES["py"]
+# flowsTo lives under the BASE purl namespace, not /ontology/
+_FLOWS_TO = "http://purl.org/twc/graph4code/flowsTo"
 
 
 def _pred(triples: DataFrame, p: str) -> DataFrame:
@@ -32,13 +39,68 @@ def _pred(triples: DataFrame, p: str) -> DataFrame:
     return triples.where(F.col("pred") == p)
 
 
+def _leg(triples: DataFrame, p: str, subj: str, obj: str, *cols: str) -> DataFrame:
+    """One predicate's (subj, obj) pairs under the names a join needs,
+    plus ``cols`` of the quad (``"graph"`` for a node-level leg)."""
+    return _pred(triples, p).select(
+        F.col("subj").alias(subj), F.col("obj").alias(obj), *cols
+    )
+
+
+def _labels(triples: DataFrame, node: str = "node", lbl: str = "lbl") -> DataFrame:
+    """(node, lbl, graph) rdfs:label leg.  Analysis node URIs (se<n>)
+    repeat across graphs, so every node-level join on it is keyed
+    (node, graph) — joining on the URI alone would cross-wire graphs."""
+    return _leg(triples, _RDFS_LABEL, node, lbl, "graph")
+
+
+def _ctor_nodes(triples: DataFrame, names: DataFrame, node: str = "node") -> DataFrame:
+    """(node, graph, name): constructor-call nodes of the classes in
+    ``names`` (tiny → broadcast).  The reference's trailing-separator
+    label quirk makes a multi-part analysis label the class name + '.'."""
+    labels = _labels(triples, node)
+    return labels.join(
+        F.broadcast(names), labels["lbl"] == F.concat(names["name"], F.lit("."))
+    ).select(node, "graph", "name")
+
+
+def _calls(triples: DataFrame, method: str, node: str = "node") -> DataFrame:
+    """(node, graph) of the calls that are ``schema:about`` ``method``."""
+    return _pred(triples, _ABOUT).where(F.col("obj") == method).select(
+        F.col("subj").alias(node), "graph"
+    ).distinct()
+
+
+def _receiver_edges(triples: DataFrame, src: str, dst: str) -> DataFrame:
+    """(src, dst, graph) where src's value is the receiver of call dst.
+    The reference's RDF* receiver linkage (?src flowsTo/flowsTo ?dst
+    through an anonymous input at ordinal 0) is the flattened quad
+    table's ``flowsTo`` row with ``arg_pos = 0``."""
+    return (
+        triples.where((F.col("pred") == _FLOWS_TO) & (F.col("arg_pos") == 0))
+        .select(F.col("subj").alias(src), F.col("obj").alias(dst), "graph")
+        .distinct()
+    )
+
+
+def _lines(
+    triples: DataFrame, node: str, l1: str = "firstLine", l2: str = "lastLine"
+) -> DataFrame:
+    """(node, graph, l1, l2): the JSON fields ``l1``/``l2`` of a node's
+    SIO_000061 location literal, pulled with `get_json_object`
+    (JVM-side)."""
+    return _pred(triples, PREFIXES["sio"] + "SIO_000061").select(
+        F.col("subj").alias(node), "graph",
+        F.get_json_object("obj", f"$.{l1}").cast("long").alias("l1"),
+        F.get_json_object("obj", f"$.{l2}").cast("long").alias("l2"),
+    ).distinct()
+
+
 def questions_about(triples: DataFrame, entity_name: str) -> DataFrame:
     """`docs/example_queries.md:19-45`: questions about one entity with
     their titles."""
     about = _pred(triples, _ABOUT).where(F.col("obj") == _PY + entity_name)
-    names = _pred(triples, PREFIXES["schema"] + "name").select(
-        F.col("subj").alias("q"), F.col("obj").alias("title")
-    )
+    names = _leg(triples, PREFIXES["schema"] + "name", "q", "title")
     return (
         about.select(F.col("subj").alias("q"))
         .join(names, "q", "left")
@@ -63,9 +125,7 @@ def entity_params(triples: DataFrame, entity_name: str) -> DataFrame:
     params = _pred(triples, PREFIXES["graph4code"] + "param").where(
         F.col("subj") == ent
     ).select(F.col("obj").alias("param_uri"))
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("param_uri"), F.col("obj").alias("param_label")
-    )
+    labels = _leg(triples, _RDFS_LABEL, "param_uri", "param_label")
     idx = _pred(triples, PREFIXES["graph4code"] + "param_index").select(
         F.col("subj").alias("param_uri"), F.col("obj").cast("int").alias("param_index")
     )
@@ -85,20 +145,14 @@ def next_steps_after(triples: DataFrame, entity_suffix: str, k: int = 3) -> Data
     labeled nodes — graphs without a matching label contribute no join
     work and the reachability relation is only materialized from the
     bound endpoints."""
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("node"), F.col("obj").alias("label"), "graph"
-    )
-    starts = labels.where(F.col("label").contains(entity_suffix))
+    starts = _labels(triples).where(F.col("lbl").contains(entity_suffix))
     reached = transitive_closure(
         flows_to_edges(triples),
         seeds=starts.select("node", "graph"),
         direction="forward",
     )
     return (
-        reached.join(
-            labels.select(F.col("node").alias("dst"), F.col("label").alias("next_label"), "graph"),
-            ["dst", "graph"],
-        )
+        reached.join(_labels(triples, "dst", "next_label"), ["dst", "graph"])
         .groupBy("next_label")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("next_label"))
@@ -140,18 +194,14 @@ def debug_posts(
         _pred(triples, rdf_type).where(F.col("obj") == schema_p + "Answer")
         .select(F.col("subj").alias("a")).distinct()
     )
-    about = _pred(triples, schema_p + "about").select(
-        F.col("subj").alias("q"), F.col("obj").alias("f")
-    ).distinct()
+    about = _leg(triples, _ABOUT, "q", "f").distinct()
     counts = (
         about.join(F.broadcast(vals), "f")
         .join(qtype, "q")
         .groupBy("q")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    name = _pred(triples, schema_p + "name").select(
-        F.col("subj").alias("q"), F.col("obj").alias("t")
-    ).distinct()
+    name = _leg(triples, schema_p + "name", "q", "t").distinct()
     content = _pred(triples, sioc_p + "content")
     q_content = content.join(qtype, content["subj"] == qtype["q"]).select(
         "q", F.col("obj").alias("q_content")
@@ -160,9 +210,7 @@ def debug_posts(
     if phrase is not None:
         a_content = a_content.where(F.col("obj").contains(phrase))
     a_content = a_content.select("a", F.col("obj").alias("a_content")).distinct()
-    sugg = _pred(triples, schema_p + "suggestedAnswer").select(
-        F.col("subj").alias("q"), F.col("obj").alias("a")
-    ).distinct()
+    sugg = _leg(triples, schema_p + "suggestedAnswer", "q", "a").distinct()
     return (
         counts.join(name, "q")
         .join(q_content, "q")
@@ -203,22 +251,9 @@ def hyperparameter_distributions(
 
     ``subClassOf*`` is the semi-naive closure operator reused from
     flowsTo+; the class list is tiny → broadcast into the label match."""
-    sio_has_input = PREFIXES["sio"] + "SIO_000230"
-    cls_names = classifier_class_names(triples, base_class)
-
-    # labels carry their named graph: analysis node URIs (se<n>) repeat
-    # across graphs, so every node-level join below is keyed
-    # (node, graph) — joining on the URI alone would cross-wire graphs
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("node"), F.col("obj").alias("lbl"), "graph"
-    )
-    ctor_nodes = labels.join(
-        F.broadcast(cls_names),
-        labels["lbl"] == F.concat(cls_names["name"], F.lit(".")),
-    ).select("node", "graph", "name")
-
+    ctor_nodes = _ctor_nodes(triples, classifier_class_names(triples, base_class))
     named = (
-        _pred(triples, sio_has_input)
+        _pred(triples, PREFIXES["sio"] + "SIO_000230")
         .where(F.col("arg_name").isNotNull())
         .select(
             F.col("subj").alias("node"),
@@ -235,31 +270,21 @@ def hyperparameter_distributions(
     )
 
 
-def classifier_class_names(triples: DataFrame, base_class: str) -> DataFrame:
-    """(name) of every class reaching ``base_class`` via rdfs:subClassOf*
-    in the docstrings graph — the shared leg of the cross-graph usage
-    queries."""
-    return classifier_class_names_any(triples, (base_class,))
-
-
-def classifier_class_names_any(
-    triples: DataFrame, base_classes: tuple[str, ...]
-) -> DataFrame:
+def classifier_class_names(triples: DataFrame, *base_classes: str) -> DataFrame:
     """(name) of every class reaching ANY of ``base_classes`` via
-    rdfs:subClassOf* — ONE backward-seeded closure with the union of the
-    bases as the seed frontier, instead of one full closure per base
-    (the UNION leg of `must_not_set_hyperparameters.sparql:14-22` names
-    two mixins; iterating the same edge set twice doubles the shuffle
-    rounds for no information).
+    rdfs:subClassOf* in the docstrings graph — the shared leg of the
+    cross-graph usage queries.  ONE backward-seeded closure with the
+    union of the bases as the seed frontier, instead of one full closure
+    per base (the UNION leg of `must_not_set_hyperparameters.sparql:14-22`
+    names two mixins; iterating the same edge set twice doubles the
+    shuffle rounds for no information).
 
     SPARQL ``*`` is REFLEXIVE: each base class itself matches through
     the zero-length path, so the bases are unioned in alongside the
     ``+`` closure (which is seeded BACKWARD from the bases — only chains
     that actually reach one are materialized)."""
     base_uris = [_PY + b for b in base_classes]
-    sub = _pred(triples, PREFIXES["rdfs"] + "subClassOf").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst"), "graph"
-    ).distinct()
+    sub = _leg(triples, _SUBCLASS, "src", "dst", "graph").distinct()
     seeds = (
         sub.select("graph").distinct()
         .select(
@@ -276,9 +301,7 @@ def classifier_class_names_any(
         )
         .distinct()
     )
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("cls"), F.col("obj").alias("name")
-    )
+    labels = _leg(triples, _RDFS_LABEL, "cls", "name")
     return classes.join(labels, "cls").select("name").distinct()
 
 
@@ -288,13 +311,9 @@ def single_model_fits(triples: DataFrame, base_class: str) -> DataFrame:
     calls (``schema:about "fit"``) whose flowsTo+ predecessors include
     EXACTLY ONE distinct classifier class — the filter-not-exists
     "?cls1 != ?cls2" pattern becomes a per-fit distinct count == 1.
-    Location lines are pulled out of the SIO_000061 JSON literal with
-    `get_json_object` (JVM-side), matching ?l1/?l2/?txt in the query."""
-    schema_p, sio_p = PREFIXES["schema"], PREFIXES["sio"]
-
-    fits = _pred(triples, schema_p + "about").where(F.col("obj") == "fit").select(
-        F.col("subj").alias("fit"), "graph"
-    ).distinct()
+    Location lines come from the SIO_000061 JSON literal, matching
+    ?l1/?l2/?txt in the query."""
+    fits = _calls(triples, "fit", "fit")
     # the query binds the path's END (the fit call), so seed the closure
     # BACKWARD from the fit nodes: only graphs containing a fit node are
     # iterated, and only (predecessor → fit) pairs are materialized
@@ -306,32 +325,16 @@ def single_model_fits(triples: DataFrame, base_class: str) -> DataFrame:
     preds = closure.select(
         F.col("src").alias("pred"), F.col("dst").alias("fit"), "graph"
     ).join(fits, ["fit", "graph"])
-
     names = classifier_class_names(triples, base_class)
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("pred"), F.col("obj").alias("lbl"), "graph"
-    )
-    cls_preds = (
-        preds.join(labels, ["pred", "graph"])
-        .join(F.broadcast(names), labels["lbl"] == F.concat(names["name"], F.lit(".")))
-        .select("fit", "graph", "name")
-    )
+    cls_preds = preds.join(_ctor_nodes(triples, names, "pred"), ["pred", "graph"])
     single = (
         cls_preds.groupBy("fit", "graph")
         .agg(F.count_distinct("name").alias("n_models"), F.min("name").alias("cls_name"))
         .where(F.col("n_models") == 1)
     )
-    txt = _pred(triples, schema_p + "text").select(
-        F.col("subj").alias("fit"), "graph", F.col("obj").alias("txt")
-    ).distinct()
-    loc = _pred(triples, sio_p + "SIO_000061").select(
-        F.col("subj").alias("fit"), "graph",
-        F.get_json_object("obj", "$.firstLine").cast("long").alias("l1"),
-        F.get_json_object("obj", "$.lastLine").cast("long").alias("l2"),
-    ).distinct()
     return (
-        single.join(txt, ["fit", "graph"])
-        .join(loc, ["fit", "graph"])
+        single.join(_leg(triples, _TEXT, "fit", "txt", "graph").distinct(), ["fit", "graph"])
+        .join(_lines(triples, "fit"), ["fit", "graph"])
         .select("graph", "fit", "cls_name", "l1", "l2", "txt")
         .orderBy("graph", "fit")
     )
@@ -344,42 +347,25 @@ def fit_predict_pairs(triples: DataFrame, base_class: str) -> DataFrame:
     ``schema:about "predict"`` call in the same graph — the multi-way
     closure join (?pred1 flowsTo+ ?fit; ?pred1 flowsTo+ ?predict).
     Output one row per (graph, model node, fit node, predict node)."""
-    schema_p = PREFIXES["schema"]
-
-    def about(v):
-        return _pred(triples, schema_p + "about").where(F.col("obj") == v).select(
-            F.col("subj").alias("node"), "graph"
-        ).distinct()
-
     # both path targets are bound (fit and predict calls) — seed the
     # closure backward from their union; graphs containing neither are
     # never touched
     closure = transitive_closure(
         flows_to_edges(triples),
-        seeds=about("fit").unionByName(about("predict")),
+        seeds=_calls(triples, "fit").unionByName(_calls(triples, "predict")),
         direction="backward",
     )
     names = classifier_class_names(triples, base_class)
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("model"), F.col("obj").alias("lbl"), "graph"
-    )
-    models = labels.join(
-        F.broadcast(names), labels["lbl"] == F.concat(names["name"], F.lit("."))
-    ).select("model", "graph", "name")
+    models = _ctor_nodes(triples, names, "model")
 
-    def reaches(target_df, alias):
-        return (
-            closure.select(
-                F.col("src").alias("model"), F.col("dst").alias(alias), "graph"
-            )
-            .join(target_df.withColumnRenamed("node", alias), [alias, "graph"])
-        )
+    def reaches(method):
+        return closure.select(
+            F.col("src").alias("model"), F.col("dst").alias(method), "graph"
+        ).join(_calls(triples, method, method), [method, "graph"])
 
-    to_fit = reaches(about("fit"), "fit")
-    to_predict = reaches(about("predict"), "predict")
     return (
-        models.join(to_fit, ["model", "graph"])
-        .join(to_predict, ["model", "graph"])
+        models.join(reaches("fit"), ["model", "graph"])
+        .join(reaches("predict"), ["model", "graph"])
         .select("graph", "model", "name", "fit", "predict")
         .orderBy("graph", "model", "fit", "predict")
     )
@@ -410,31 +396,17 @@ def type_inference(triples: DataFrame) -> DataFrame:
     ``dc:isPartOf*`` ancestor label of ?cls matches an ``Imported`` node
     label in the same analysis graph (softwareRequirements* admits the
     zero-length path, so the module itself is the minimal witness)."""
-    schema_p, g4c, dct = PREFIXES["schema"], PREFIXES["graph4code"], PREFIXES["dcterms"]
-    rdf_type = PREFIXES["rdf"] + "type"
+    g4c = PREFIXES["graph4code"]
 
-    edges0 = (
-        triples.where(
-            (F.col("pred") == "http://purl.org/twc/graph4code/flowsTo")
-            & (F.col("arg_pos") == 0)
-        )
-        .select(F.col("subj").alias("n1"), F.col("obj").alias("n2"), "graph")
-        .distinct()
-    )
-    about = _pred(triples, schema_p + "about").select(
-        F.col("subj").alias("n2"), F.col("obj").alias("p2"), "graph"
-    ).distinct()
+    edges0 = _receiver_edges(triples, "n1", "n2")
+    about = _leg(triples, _ABOUT, "n2", "p2", "graph").distinct()
     all_cnt = edges0.groupBy("n1", "graph").agg(
         F.count_distinct("n2").alias("n_all")
     )
 
     # docstrings leg: method tail → owning class (tiny → broadcast)
-    name_end = _pred(triples, g4c + "name_end").select(
-        F.col("subj").alias("m"), F.col("obj").alias("p2")
-    )
-    member = _pred(triples, g4c + "classMember").select(
-        F.col("subj").alias("m"), F.col("obj").alias("cls")
-    )
+    name_end = _leg(triples, g4c + "name_end", "m", "p2")
+    member = _leg(triples, g4c + "classMember", "m", "cls")
     methods = name_end.join(member, "m").select("p2", "cls").distinct()
 
     ok_cnt = (
@@ -449,59 +421,36 @@ def type_inference(triples: DataFrame) -> DataFrame:
 
     # honest import-exists subset: an isPartOf* ancestor label of cls
     # appears as an Imported node label in the same analysis graph
-    labels_all = _pred(triples, PREFIXES["rdfs"] + "label").select(
-        F.col("subj").alias("node"), F.col("obj").alias("lbl"), "graph"
-    )
-    imported = _pred(triples, rdf_type).where(
+    imported = _pred(triples, PREFIXES["rdf"] + "type").where(
         F.col("obj") == "http://purl.org/twc/graph4code/Imported"
     ).select(F.col("subj").alias("node"), "graph")
-    imp_labels = imported.join(labels_all, ["node", "graph"]).select(
+    imp_labels = imported.join(_labels(triples), ["node", "graph"]).select(
         "graph", F.col("lbl").alias("anc_lbl")
     ).distinct()
 
-    ipo = _pred(triples, dct + "isPartOf").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst"), "graph"
-    ).distinct()
+    ipo = _leg(triples, PREFIXES["dcterms"] + "isPartOf", "src", "dst", "graph").distinct()
     anc = transitive_closure(ipo).select(
         F.col("src").alias("cls"), F.col("dst").alias("anc")
     )
     anc = anc.unionByName(
         cand.select("cls").distinct().withColumn("anc", F.col("cls"))
     )
-    cls_labels = _pred(triples, PREFIXES["rdfs"] + "label").select(
-        F.col("subj").alias("anc"), F.col("obj").alias("anc_lbl")
-    ).distinct()
+    cls_labels = _leg(triples, _RDFS_LABEL, "anc", "anc_lbl").distinct()
     anc_lbls = anc.join(cls_labels, "anc").select("cls", "anc_lbl").distinct()
     cand = cand.join(F.broadcast(anc_lbls), "cls").join(
         imp_labels, ["graph", "anc_lbl"], "left_semi"
     ).select("n1", "graph", "cls").distinct()
 
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("n1"), F.col("obj").alias("label"), "graph"
-    ).distinct()
-    loc = _pred(triples, PREFIXES["sio"] + "SIO_000061").select(
-        F.col("subj").alias("n1"), "graph",
-        # the SPARQL binds ?l1 to lastLine and ?l2 to firstLine
-        F.get_json_object("obj", "$.lastLine").cast("long").alias("l1"),
-        F.get_json_object("obj", "$.firstLine").cast("long").alias("l2"),
-    ).distinct()
-    txt = _pred(triples, PREFIXES["schema"] + "text").select(
-        F.col("subj").alias("n1"), "graph", F.col("obj").alias("txt")
-    ).distinct()
-    supers = _pred(triples, PREFIXES["rdfs"] + "subClassOf").select(
-        F.col("subj").alias("cls"), F.col("obj").alias("s_dst"), "graph"
-    ).distinct()
     super_pairs = (
-        transitive_closure(
-            supers.select(F.col("cls").alias("src"), F.col("s_dst").alias("dst"), "graph")
-        )
+        transitive_closure(_leg(triples, _SUBCLASS, "src", "dst", "graph").distinct())
         .select(F.col("src").alias("cls"), F.col("dst").alias("super"))
         .distinct()
     )
     return (
-        cand.join(labels, ["n1", "graph"])
-        .join(loc, ["n1", "graph"])
-        .join(txt, ["n1", "graph"], "left")
+        cand.join(_labels(triples, "n1", "label").distinct(), ["n1", "graph"])
+        # the SPARQL binds ?l1 to lastLine and ?l2 to firstLine
+        .join(_lines(triples, "n1", "lastLine", "firstLine"), ["n1", "graph"])
+        .join(_leg(triples, _TEXT, "n1", "txt", "graph").distinct(), ["n1", "graph"], "left")
         .join(F.broadcast(super_pairs), "cls")
         .select("graph", "n1", "label", "cls", "super", "l1", "l2", "txt")
         .orderBy("graph", "n1", "cls", "super")
@@ -536,19 +485,9 @@ def hyperparam_violations(
       closure from optimizer nodes anti-joined against the candidates.
     Output: one row per violating constructor with the count of constant
     hyper-parameters."""
-    schema_p, sio_p = PREFIXES["schema"], PREFIXES["sio"]
-
-    names = classifier_class_names_any(triples, bases)
-
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("node"), F.col("obj").alias("lbl"), "graph"
-    )
-    ctor_nodes = labels.join(
-        F.broadcast(names), labels["lbl"] == F.concat(names["name"], F.lit("."))
-    ).select("node", "graph", "name")
-
+    ctor_nodes = _ctor_nodes(triples, classifier_class_names(triples, *bases))
     consts = (
-        _pred(triples, sio_p + "SIO_000230")
+        _pred(triples, PREFIXES["sio"] + "SIO_000230")
         .where((F.col("arg_pos") > 0) | F.col("arg_name").isNotNull())
         .select(F.col("subj").alias("node"), "graph")
     )
@@ -556,26 +495,17 @@ def hyperparam_violations(
         F.count(F.lit(1)).alias("n_hyper")
     )
 
-    opt_nodes = labels.where(F.col("lbl") == optimizer_label + ".").select(
+    opt_nodes = _labels(triples).where(F.col("lbl") == optimizer_label + ".").select(
         "node", "graph"
     )
     optimized = transitive_closure(
         flows_to_edges(triples), seeds=opt_nodes, direction="forward"
     ).select(F.col("dst").alias("node"), "graph").distinct()
-
-    loc = _pred(triples, sio_p + "SIO_000061").select(
-        F.col("subj").alias("node"), "graph",
-        F.get_json_object("obj", "$.lastLine").cast("long").alias("l1"),
-        F.get_json_object("obj", "$.firstLine").cast("long").alias("l2"),
-    ).distinct()
-    txt = _pred(triples, schema_p + "text").select(
-        F.col("subj").alias("node"), "graph", F.col("obj").alias("txt")
-    ).distinct()
     return (
         ctor_nodes.join(n_hyper, ["node", "graph"])
         .join(optimized, ["node", "graph"], "left_anti")
-        .join(loc, ["node", "graph"])
-        .join(txt, ["node", "graph"])
+        .join(_lines(triples, "node", "lastLine", "firstLine"), ["node", "graph"])
+        .join(_leg(triples, _TEXT, "node", "txt", "graph").distinct(), ["node", "graph"])
         .select(
             "graph", F.col("node").alias("clf"), "name",
             F.col("n_hyper").cast("long").alias("n_hyper"), "l1", "l2", "txt",
@@ -606,31 +536,17 @@ def similar_flows(
     - the flowsTo+ legs are one closure seeded FORWARD from the
       read-labeled nodes, so graphs without the read call are never
       iterated (the `minus` leg is a plain label filter)."""
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("node"), F.col("obj").alias("lbl"), "graph"
-    )
-    reads = labels.where(F.col("lbl") == read_label + ".").select("node", "graph")
+    reads = _labels(triples).where(F.col("lbl") == read_label + ".").select("node", "graph")
     closure = transitive_closure(
         flows_to_edges(triples), seeds=reads, direction="forward"
     )
-    fits = _pred(triples, PREFIXES["schema"] + "about").where(
-        F.col("obj") == "fit"
-    ).select(F.col("subj").alias("fit"), "graph").distinct()
     read_to_fit = (
         closure.select(F.col("dst").alias("fit"), "graph")
-        .join(fits, ["fit", "graph"])
+        .join(_calls(triples, "fit", "fit"), ["fit", "graph"])
         .distinct()
     )
-    edges0 = (
-        triples.where(
-            (F.col("pred") == "http://purl.org/twc/graph4code/flowsTo")
-            & (F.col("arg_pos") == 0)
-        )
-        .select(F.col("subj").alias("ctor"), F.col("obj").alias("fit"), "graph")
-        .distinct()
-    )
-    ctor_of_fit = edges0.join(
-        labels.withColumnRenamed("node", "ctor"), ["ctor", "graph"]
+    ctor_of_fit = _receiver_edges(triples, "ctor", "fit").join(
+        _labels(triples, "ctor"), ["ctor", "graph"]
     ).select("fit", "graph", "lbl")
     fed = read_to_fit.join(ctor_of_fit, ["fit", "graph"])
     anchored_graphs = fed.where(F.col("lbl") == anchor + ".").select("graph").distinct()
@@ -643,14 +559,3 @@ def similar_flows(
         .agg(F.count_distinct("graph").alias("c"))
         .orderBy(F.desc("c"), F.asc("classifierName"))
     )
-
-
-def flows_excluding(triples: DataFrame, exclude_label: str) -> DataFrame:
-    """SPARQL `minus` → anti-join: flow sources whose label does NOT
-    match the excluded classifier (`find_similar_flows.sparql:37-39`)."""
-    edges = flows_to_edges(triples)
-    labels = _pred(triples, _RDFS_LABEL).select(
-        F.col("subj").alias("src"), F.col("obj").alias("label")
-    )
-    excluded = labels.where(F.col("label").contains(exclude_label)).select("src")
-    return edges.join(excluded, "src", "left_anti")

@@ -8,9 +8,12 @@ must (a) agree exactly with full-closure-then-filter, and (b) touch a
 small fraction of the rows the unseeded closure materializes.
 """
 
+from collections import defaultdict
+
 import pyspark.sql.functions as F
 import pytest
 
+from __spark_entry__ import _reach
 from graph4code_spark.operators.closure import transitive_closure
 
 N_GRAPHS = 100
@@ -79,6 +82,14 @@ def test_forward_seeded_matches_filtered_full_closure(spark):
         .select(*_COLS).collect()
     )
     assert got == expected
+    # the usage-query oracles' flowsTo+ (`_reach`, per graph from each
+    # seed) gives the same pairs
+    adj = defaultdict(lambda: defaultdict(set))
+    for r in edges.collect():
+        adj[r.graph][r.src].add(r.dst)
+    assert {
+        (s.node, d, s.graph) for s in seeds.collect() for d in _reach(adj[s.graph], [s.node])
+    } == {(r.src, r.dst, r.graph) for r in got}
 
 
 def test_convergence_handles_cycles_without_cap(spark):
@@ -91,6 +102,8 @@ def test_convergence_handles_cycles_without_cap(spark):
     assert len(rows) == 9  # every ordered pair incl. self-loops via the cycle
     hops = {(r.src, r.dst): r.min_hops for r in rows}
     assert hops[("a", "a")] == 3 and hops[("a", "b")] == 1 and hops[("a", "c")] == 2
+    adj = {"a": {"b"}, "b": {"c"}, "c": {"a"}}
+    assert {(s, d) for s in adj for d in _reach(adj, [s])} == set(hops)
 
 
 def test_max_hops_raises_instead_of_truncating(spark):

@@ -81,7 +81,8 @@ def test_missing_reference_file_fails_only_its_oracle(con, tmp_path):
 
 def test_oracles_share_one_reference_corpus(monkeypatch):
     """One `oracle_sql_full()` runs the straight-line forum pipeline
-    once (its oracle corpus is cached like `_oracle_corpus`), and each
+    once (its oracle corpus is cached like `_oracle_corpus`), builds the
+    usage-query oracles' analysis index once, and each
     composed family's oracle is the spine union of the SQL its
     registered components already built."""
     from graph4code_spark.reference_impl import emitters
@@ -99,6 +100,8 @@ def test_oracles_share_one_reference_corpus(monkeypatch):
             fn.cache_clear()
     oracles = entry_mod.oracle_sql_full()
     assert len(calls) == 1
+    # the usage-query oracles read one analysis index, built once
+    assert entry_mod._oracle_analysis.cache_info().misses == 1
     assert oracles == ORACLES
 
     full = entry_mod.queries_full()

@@ -114,19 +114,21 @@ def test_linking_cap_windows_all_partitioned(spark):
     """The BM25-ordered salted cap runs as partitioned windows only —
     no Exchange SinglePartition anywhere in the full forum pipeline
     (the global-window collapse would be the 100-TB killer).  No entity
-    of the registered query exceeds the 5000 cap, so its plan holds no
-    cap; the same pipeline with a cap the hub entity exceeds holds it."""
+    of the registered query's 300 pages exceeds the default 5000 cap, so
+    its pipeline plan holds no cap; the same pipeline with a cap the hub
+    entity exceeds holds it."""
     from graph4code_spark.emitters.forum import forum_triples
     from graph4code_spark.operators.linking import link_entities
     from graph4code_spark.sources.qa import extract_qa
     from graph4code_spark.synth import FIXED_CATALOG
 
-    p = _plan(E.queries_full()["kg_pipeline_forum"](spark, SF))
+    qa = extract_qa(synth_pages(spark, 300, seed=42))
+    links = link_entities(qa, FIXED_CATALOG)
+    p = _plan(forum_triples(links, qa, FIXED_CATALOG).dropDuplicates())
     assert p.count("Exchange SinglePartition") == 0
     assert _windows(p) == 0
     assert "SortMergeJoin" not in p
 
-    qa = extract_qa(synth_pages(spark, 300, seed=42))
     links = link_entities(qa, FIXED_CATALOG, cap=10)
     p = _plan(forum_triples(links, qa, FIXED_CATALOG).dropDuplicates())
     assert p.count("Exchange SinglePartition") == 0

@@ -7,7 +7,6 @@ from graph4code_spark.emitters.forum import forum_triples
 from graph4code_spark.operators.flows import extract_flow_nodes
 from graph4code_spark.operators.linking import cap_per_entity, detect_mentions, link_entities
 from graph4code_spark.plans.queries import (
-    flows_excluding,
     most_discussed_entities,
     next_steps_after,
     questions_about,
@@ -46,16 +45,6 @@ def test_query_layer_shapes(spark):
 
     nxt = next_steps_after(triples, "SVC", k=3).collect()
     assert len(nxt) >= 1
-
-    ex = flows_excluding(triples, "SVC")
-    assert ex.count() >= 0
-    labels_of_sources = {r.src for r in ex.collect()}
-    svc_sources = {
-        r.subj for r in triples.where(
-            (F.col("pred") == PREFIXES["rdfs"] + "label") & F.col("obj").contains("SVC")
-        ).collect()
-    }
-    assert not (labels_of_sources & svc_sources)
 
 
 def test_salted_cap_equals_unsalted(spark):
