@@ -5399,7 +5399,8 @@ _CURATED = [
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full KG pipeline on synthetic pages (sf0.001-scale)."""
+    """Flagship: the forum graph of the KG build on 200 synthetic pages
+    (QA parse → linking → forum emit → dedup)."""
     from graph4code_spark.emitters.forum import forum_triples
     from graph4code_spark.materialize import dedup_quads
     from graph4code_spark.operators.linking import link_entities

@@ -1,4 +1,4 @@
-"""Column-expression helpers shared by the emitters.
+"""Column-expression helpers shared by the emitters and operators.
 
 Everything here is built-in `pyspark.sql.functions` — stays inside
 whole-stage codegen, no Python on the hot path.
@@ -6,14 +6,43 @@ whole-stage codegen, no Python on the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType
 
 from graph4code_spark.uris import URI_RLIKE
 
-# struct field order must match schemas.TRIPLES_SCHEMA
-_TRIPLE_FIELDS = ("subj", "pred", "obj", "is_literal", "arg_pos", "arg_name", "graph")
+
+#: salt buckets of `salted_top_k`'s first phase
+SALT_BUCKETS = 16
+
+
+def salted_top_k(
+    df: DataFrame, key: str, salt_of: str, order: list[Column], k: int,
+    rank_col: str,
+) -> DataFrame:
+    """The first ``k`` rows per ``key`` by ``order``, ranked 1.. in
+    ``rank_col``, as a two-phase cap over a salted key.
+
+    A hub key (the ``fit`` entity, a popular ``train.csv``) is a skewed
+    window partition at corpus scale.  Phase 1 ranks within
+    (key, xxhash64(salt_of) mod SALT_BUCKETS), so no task sees a hub's
+    full row set and each bucket keeps at most ``k`` rows; phase 2 ranks
+    the survivors per key.  A row in a key's top ``k`` is in its
+    bucket's top ``k``, so the result equals the plain per-key window
+    whenever ``order`` is total."""
+    salt = F.pmod(F.xxhash64(salt_of), F.lit(SALT_BUCKETS))
+    pre = (
+        df.withColumn(rank_col, F.row_number().over(
+            Window.partitionBy(key, salt).orderBy(*order)))
+        .where(F.col(rank_col) <= k)
+        .drop(rank_col)
+    )
+    return (
+        pre.withColumn(rank_col, F.row_number().over(
+            Window.partitionBy(key).orderBy(*order)))
+        .where(F.col(rank_col) <= k)
+    )
 
 
 def quad(

@@ -22,18 +22,20 @@ Spark-first restatement — every step is a stock relational op:
   (the reference's ``len(scripts) > 10``).
 - **rank** — top-12 datasets by (mentions desc, name asc): orderBy +
   limit = TakeOrdered, no global sort.
-- **witnesses** — first-5 scripts per surviving dataset via a rank
-  window partitioned by dataset (the reference's ``scripts[:5]``),
-  ordered deterministically.  The window keys are the 12 surviving
-  datasets only — the skew-prone full-corpus window never happens
-  because the support filter and the top-12 cut run first on
+- **witnesses** — first-5 scripts per surviving dataset, ordered
+  deterministically (the reference's ``scripts[:5]``), by the shared
+  salted cap `functions.salted_top_k`: a popular dataset (`train.csv`)
+  is a skewed key at corpus scale.  Its window keys are the 12 surviving
+  datasets only: the support filter and the top-12 cut run first, on
   aggregates, not on rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from graph4code_spark.functions import salted_top_k
 
 #: reference constants (`python_process_csv.py:46-48,53`)
 MIN_MENTIONS = 10       # strictly-greater support threshold
@@ -53,20 +55,11 @@ def dataset_script_index(
     min_mentions: int = MIN_MENTIONS,
     top_datasets: int = TOP_DATASETS,
     scripts_per_dataset: int = SCRIPTS_PER_DATASET,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """One row per (dataset, witness script) for the association index.
 
     Output: ``csv`` (dataset basename), ``n_mentions`` (corpus support),
-    ``script_rank`` (1-based, ≤ scripts_per_dataset), ``script``.
-
-    The witness window runs as a salted two-phase cap (same hub defense
-    as linking's `cap_per_entity`): a popular dataset (`train.csv`) is
-    exactly a skewed key at corpus scale, so phase 1 ranks within
-    (csv, hash(script) % S) — no task ever sees a hub's full mention
-    set and each bucket keeps ≤ scripts_per_dataset rows; phase 2 ranks
-    the ≤ S·k survivors per dataset.  Output identical to the unsalted
-    window (tests)."""
+    ``script_rank`` (1-based, ≤ scripts_per_dataset), ``script``."""
     obs = (
         mentions.select(
             F.regexp_extract(F.col(line_col), READ_CSV_RE, 1).alias("csv"),
@@ -83,18 +76,8 @@ def dataset_script_index(
         .limit(top_datasets)
     )
     cand = obs.join(F.broadcast(support), "csv")
-    order = [F.asc("_ord"), F.asc("script")]
-    if salt_buckets > 0:
-        salt = F.pmod(F.xxhash64("script"), F.lit(salt_buckets))
-        w1 = Window.partitionBy("csv", salt).orderBy(*order)
-        cand = (
-            cand.withColumn("rk", F.row_number().over(w1))
-            .where(F.col("rk") <= scripts_per_dataset)
-            .drop("rk")
-        )
-    w = Window.partitionBy("csv").orderBy(*order)
-    witnesses = (
-        cand.withColumn("script_rank", F.row_number().over(w))
-        .where(F.col("script_rank") <= scripts_per_dataset)
+    witnesses = salted_top_k(
+        cand, "csv", "script", [F.asc("_ord"), F.asc("script")],
+        scripts_per_dataset, "script_rank",
     )
     return witnesses.select("csv", "n_mentions", "script_rank", "script")

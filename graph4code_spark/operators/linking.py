@@ -3,31 +3,27 @@
 The reference probes an Elasticsearch index per catalog entity
 (``multi_match … operator: AND`` over the entity's dotted components,
 5000-hit cap, then a must-term `good_match` re-check:
-`/root/reference/src/utils.py:253-343`).  The Spark-native analogue:
+`utils.py:253-343`).  `link_entities` is the Spark-native analogue:
 
 - **mention detection** — the catalog (small) is broadcast; a batched
-  pandas UDF tokenizes each document's content once with the exact ES
-  analyzer semantics (`graph4code_spark.analyzer`) and probes an inverted
-  token→entities index built from the broadcast catalog.  Map-side only:
-  zero shuffle, the vectorized equivalent of the ES index probe.
+  pandas UDF tokenizes each document's content once with the ES
+  analyzer's semantics (`graph4code_spark.analyzer`) and probes an
+  inverted token→entities index built from the catalog.  Map-side only,
+  no shuffle.
 - **AND verification** — all required tokens present in the document's
   token set (ES ``operator: AND``).
-- **scoring** — BM25 over the required tokens, the same scoring family
-  ES applies to a single-field ``most_fields`` ``multi_match``
-  (`utils.py:281-292`): Lucene idf ``ln(1 + (N-df+0.5)/(df+0.5))`` times
-  the saturated tf, summed over the entity's tokens.  The corpus stats
-  (per-token df, doc count, average field length) that ES keeps in its
-  index are computed by ONE extra corpus pass with a map-side partial
-  aggregate (`corpus_token_stats`) and broadcast — tiny (bounded by the
-  catalog's token vocabulary).  The raw tf sum is kept as the
-  deterministic tiebreak (then url).
-- **cap** — per-entity top-5000 via a rank window (`utils.py:282`);
-  this is the one shuffle, keyed by entity.  Hub entities (``fit``) are
-  exactly the skewed keys; AQE skew-join/partition splitting plus the cap
-  itself bound the damage, mirroring the reference's silent truncation.
-  The scan counts each entity's candidates, and the cap runs only when
-  some entity has more than 5000.
-- **good_match** — must-term re-check (`utils.py:300-343`), vectorized.
+- **scoring** — BM25 over the required tokens, the scorer ES applies to
+  a single-field ``most_fields`` ``multi_match`` (`utils.py:281-292`):
+  Lucene idf ``ln(1 + (N-df+0.5)/(df+0.5))`` times the saturated tf,
+  summed over the entity's tokens.  The raw tf sum, then url, break
+  ties.
+- **cap** — per-entity top-5000 (`utils.py:282`), the one shuffle,
+  keyed by entity.  Hub entities (``fit``) are the skewed keys, so the
+  cap is the shared salted two-phase window (`functions.salted_top_k`).
+- **good_match** — must-term re-check (`utils.py:300-343`).
+
+The straight-line restatement in `reference_impl.emitters.reference_links`
+is the oracle: every row, the ``bm25`` doubles included, must equal it.
 """
 
 from __future__ import annotations
@@ -37,7 +33,7 @@ from collections import Counter
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph4code_spark.analyzer import (
@@ -46,6 +42,7 @@ from graph4code_spark.analyzer import (
     entity_required_tokens,
     must_terms,
 )
+from graph4code_spark.functions import salted_top_k
 from graph4code_spark.synth import entity_name, entity_type
 
 #: reference result cap per entity query (`utils.py:282`)
@@ -58,74 +55,6 @@ MENTIONS_SCHEMA = (
     "url string, question_id string, entity string, etype string, "
     "score int, good_match boolean, bm25 double"
 )
-
-
-def bm25_score(tf_by_token: dict, dl: int, stats: "CorpusStats") -> float:
-    """Sum of per-token BM25 contributions — the straight-line formula
-    shared by the Spark UDF and the reference_impl oracle (both CPython,
-    so the doubles are bit-identical on both sides)."""
-    n, avgdl, df = stats.n_docs, stats.avgdl, stats.df
-    s = 0.0
-    # sorted: float summation order must not depend on set/dict hash
-    # order (string hashing is per-process randomized — driver vs
-    # executor would otherwise sum in different orders)
-    for t, tf in sorted(tf_by_token.items()):
-        idf = math.log(1.0 + (n - df.get(t, 0) + 0.5) / (df.get(t, 0) + 0.5))
-        s += idf * (tf * (BM25_K1 + 1.0)) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-        )
-    return s
-
-
-class CorpusStats:
-    """Broadcastable index statistics: per-catalog-token document
-    frequency, document count, average analyzed length."""
-
-    def __init__(self, df: dict, n_docs: int, avgdl: float):
-        self.df, self.n_docs, self.avgdl = df, max(n_docs, 1), max(avgdl, 1.0)
-
-
-def corpus_token_stats(qa: DataFrame, catalog_records: list[dict]) -> CorpusStats:
-    """ONE corpus pass for the stats ES amortizes inside its index:
-    per-doc analyzed length + which catalog tokens the doc contains.
-    The aggregate output is bounded by the catalog token vocabulary
-    (small), so the collect is a few thousand rows regardless of corpus
-    size; in the staged pipeline this runs once and is checkpointed."""
-    entities, _ = build_entity_index(catalog_records)
-    vocab = sorted({t for _, _, _, req in entities for t in req})
-    vocab_set = set(vocab)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, content in zip(pdf["url"], pdf["content"]):
-                # raw findall + case-fold distinct keys only (same token
-                # semantics as `analyze`; ~3× fewer .lower() calls)
-                toks = _PARTS.findall(content)
-                dl = len(toks)
-                out.append((url, dl, None))
-                seen_toks = {k.lower() for k in set(toks)}
-                for t in seen_toks & vocab_set:
-                    out.append((url, dl, t))
-            yield pd.DataFrame(out, columns=["url", "dl", "tok"])
-
-    raw = qa.select("url", "content").mapInPandas(
-        run, schema="url string, dl int, tok string"
-    )
-    # ONE aggregation job: the NULL-token group carries (n_docs, avgdl),
-    # every other group is a per-token df — map-side partial agg, result
-    # bounded by the catalog vocabulary
-    rows = raw.groupBy("tok").agg(
-        F.count(F.lit(1)).alias("c"), F.avg("dl").alias("a")
-    ).collect()
-    df: dict = {}
-    n_docs, avgdl = 0, 0.0
-    for r in rows:
-        if r["tok"] is None:
-            n_docs, avgdl = r["c"], float(r["a"] or 0.0)
-        else:
-            df[r["tok"]] = r["c"]
-    return CorpusStats(df, n_docs, avgdl)
 
 
 def build_entity_index(catalog_records: list[dict]):
@@ -151,167 +80,36 @@ def build_entity_index(catalog_records: list[dict]):
     return entities, index
 
 
-def detect_mentions(
-    qa: DataFrame, catalog_records: list[dict], stats: CorpusStats | None = None
-) -> DataFrame:
-    """Question documents → candidate (document, entity) links.
-
-    Output: one row per (url, entity) with the AND-match tf score, the
-    `good_match` verdict, and the BM25 relevance (the ES `most_fields`
-    score the reference caps by).  Bad matches are kept (the reference
-    caps before filtering them).  Without ``stats`` the BM25 column
-    degrades to the raw tf sum (the pre-round-4 proxy) — the full path
-    (`link_entities`) always passes stats.
-
-    Everything loop-invariant is hoisted to UDF-construction time and
-    shipped in the broadcast closure: per-token Lucene idf (stats are
-    frozen for the run), per-entity sorted required-token tuples, and
-    per-entity must-term pairs for `good_match`.  The per-candidate
-    float expressions are kept textually identical to `bm25_score` (and
-    to the straight-line reference_impl oracle) — same operand order,
-    same summation order (sorted tokens) — so hoisting is bit-exact."""
-    entities, index = build_entity_index(catalog_records)
-    index_keys = frozenset(index)
-    # loop-invariant precomputation (idf depends only on the frozen stats)
-    idf: dict[str, float] = {}
-    if stats is not None:
-        n, davg, dfm = stats.n_docs, stats.avgdl, stats.df
-        for t in {tok for _, _, _, req in entities for tok in req}:
-            idf[t] = math.log(1.0 + (n - dfm.get(t, 0) + 0.5) / (dfm.get(t, 0) + 0.5))
-    k1p1 = BM25_K1 + 1.0
-    # per-entity: (name, etype, sorted required tuple, required set,
-    #              [(must_lower, must_analyzed)] for good_match)
-    prepped = []
-    for name, etype, qualified, required in entities:
-        musts = [(m.lower(), analyze_joined(m)) for m in must_terms(qualified)]
-        prepped.append((name, etype, tuple(sorted(required)), required, musts))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, qid, content in zip(pdf["url"], pdf["question_id"], pdf["content"]):
-                toks = _PARTS.findall(content)
-                dl = len(toks)
-                # count raw tokens in the C fast path, then case-fold only
-                # the distinct keys (~3× fewer .lower() calls than per-token)
-                counts: dict[str, int] = {}
-                for k, v in Counter(toks).items():
-                    lk = k.lower()
-                    counts[lk] = counts.get(lk, 0) + v
-                tokset = counts.keys()
-                # identical expression/order to bm25_score's denominator
-                kden = BM25_K1 * (1.0 - BM25_B + BM25_B * dl / stats.avgdl) \
-                    if stats is not None else 0.0
-                content_lower = content.lower()
-                seen: set[int] = set()
-                # C-level set intersection: probe only the (few) index
-                # keys present instead of dict-probing every doc token
-                for t in index_keys & tokset:
-                    for ei in index[t]:
-                        if ei in seen:
-                            continue
-                        seen.add(ei)
-                        name, etype, req_sorted, required, musts = prepped[ei]
-                        if required <= tokset:
-                            score = 0
-                            rel = 0.0
-                            if stats is not None:
-                                for r in req_sorted:
-                                    tf = counts[r]
-                                    score += tf
-                                    rel += idf[r] * (tf * k1p1) / (tf + kden)
-                            else:
-                                for r in req_sorted:
-                                    score += counts[r]
-                                rel = float(score)
-                            gm = all(
-                                ml in content_lower or mj in content_lower
-                                for ml, mj in musts
-                            )
-                            out.append(
-                                (url, qid, name, etype, score, gm, rel)
-                            )
-            yield pd.DataFrame(
-                out,
-                columns=["url", "question_id", "entity", "etype", "score",
-                         "good_match", "bm25"],
-            )
-
-    return qa.select("url", "question_id", "content").mapInPandas(
-        run, schema=MENTIONS_SCHEMA
-    )
-
-
-def cap_per_entity(
-    links: DataFrame, cap: int = ES_RESULT_CAP, salt_buckets: int = 0
-) -> DataFrame:
-    """Per-entity top-`cap` by score (W4) — deterministic rank window.
-
-    At 100 TB this is the skewed shuffle: hub entities take the most rows.
-    With ``salt_buckets > 0`` the cap runs in two phases over a **salted
-    key** (north-rule hub defense): phase 1 ranks within
-    (entity, hash(url) % S) so no single task sees a hub's full row set
-    and each bucket keeps ≤ cap rows; phase 2 ranks the ≤ S·cap survivors
-    per entity.  Output is identical to the unsalted window (verified by
-    tests); the unsalted path additionally relies on AQE skew splitting.
-
-    Ordering: BM25 relevance first (what ES's 5000-hit window keeps,
-    `utils.py:281-292`), raw tf sum then url as deterministic tiebreaks.
-    Links produced without corpus stats carry bm25 == tf, so the legacy
-    ordering is a degenerate case of the same window."""
+def cap_per_entity(links: DataFrame, cap: int = ES_RESULT_CAP) -> DataFrame:
+    """Per-entity top-`cap` links (W4): BM25 relevance first (what ES's
+    5000-hit window keeps, `utils.py:281-292`), then raw tf sum and url
+    as deterministic tiebreaks."""
     order = [F.desc("bm25"), F.desc("score"), F.asc("url")]
-    if salt_buckets > 0:
-        salt = F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
-        w1 = Window.partitionBy("entity", salt).orderBy(*order)
-        pre = (
-            links.withColumn("rk", F.row_number().over(w1))
-            .where(F.col("rk") <= cap)
-            .drop("rk")
-        )
-    else:
-        pre = links
-    w = Window.partitionBy("entity").orderBy(*order)
-    return (
-        pre.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= cap)
-        .drop("rk")
-    )
+    return salted_top_k(links, "entity", "url", order, cap, "rk").drop("rk")
 
 
 def link_entities(
-    qa: DataFrame, catalog_records: list[dict], cap: int = ES_RESULT_CAP,
-    salt_buckets: int = 16,
+    qa: DataFrame, catalog_records: list[dict], cap: int = ES_RESULT_CAP
 ) -> DataFrame:
-    """Full J3+W4 path: detect → cap. `good_match` retained as a column
-    (J4/F4); emission filters on it like the reference does.
+    """Question documents → (document, entity) links, capped per entity
+    by BM25.  Bad matches are kept, with ``good_match`` false: the
+    reference caps before it filters, and emission filters on the
+    column (J4/F4).
 
-    The cap runs salted by default (north-rule hub defense): at 10^12
-    pages the hub entities (`fit`) dominate the entity key, and phase 1
-    bounds any task to ≤ cap rows per (entity, salt) bucket.  Output is
-    identical to the unsalted window; measured overhead at bench scale
-    is ~1%.  Pass ``salt_buckets=0`` to fall back to the plain window
-    (AQE skew splitting only).
+    Each page is tokenized once.  BM25 needs corpus statistics (per-token
+    df, doc count, average length) that ES keeps in its index, so one
+    scan emits both the per-batch partial statistics and the AND-matched
+    candidates with their term-frequency vectors (no page content), and
+    is checkpointed.  One tiny aggregate then yields the statistics, and
+    a light numpy pass over the candidates alone computes BM25.
+    Its doubles are bit-identical to the straight-line reference only if
+    the per-term expression and the sorted-token summation order stay as
+    written.
 
-    The cap cut is ordered by BM25 (ES `most_fields` semantics).
-
-    **Single-tokenization plan** (round 4): the naive composition
-    (`corpus_token_stats` then `detect_mentions`) tokenizes every page
-    TWICE — once for the index statistics, once for detection.  ES
-    amortizes both in its inverted index; the Spark-native analogue is
-    one heavy scan that emits BOTH the per-doc stats contributions and
-    the AND-matched candidates with their term-frequency vectors, cached
-    as a small intermediate (no page content in it).  The global stats
-    are then aggregated JVM-side and broadcast into a *light* rescoring
-    pass over candidates only (~a few rows per page, a few floats each).
-    BM25 stays in CPython on both passes' data with the exact
-    `bm25_score` expressions and sorted-token summation order, so the
-    result is bit-identical to the two-pass composition (and to the
-    straight-line reference_impl oracle).
-
-    The scan's stats rows also count each entity's candidates, so the
-    cap runs only when some entity has more than ``cap`` of them: a cap
-    that keeps every row is the identity, and skipping it saves its
-    window shuffle."""
+    The scan also counts each entity's candidates, so the cap runs only
+    when some entity has more than ``cap`` of them: a cap that keeps
+    every row is the identity, and skipping it saves its window
+    shuffle."""
     entities, index = build_entity_index(catalog_records)
     index_keys = frozenset(index)
     vocab_set = {t for _, _, _, req in entities for t in req}
@@ -410,9 +208,7 @@ def link_entities(
     )
 
     # global index statistics: ONE tiny aggregation over the partial
-    # stats rows (bounded by catalog size × batches).  Exact-int
-    # sums; avgdl = total_dl / n_docs is the same double as Spark's
-    # avg-over-ints in corpus_token_stats (long sum, one final divide).
+    # stats rows (bounded by catalog size × batches), in exact-int sums
     candidate = F.col("dl").isNotNull()  # stats rows have no document
     rows = (
         scanned.where(~candidate)
@@ -429,12 +225,12 @@ def link_entities(
             most_candidates = max(most_candidates, int(r["c"]))
         else:
             n_docs, total_dl = int(r["c"] or 0), int(r["s"] or 0)
-    stats = CorpusStats(dfreq, n_docs, (total_dl / n_docs) if n_docs else 0.0)
 
     # light rescoring pass: candidates only, no page content
-    n, davg, dfm = stats.n_docs, stats.avgdl, stats.df
+    n = max(n_docs, 1)
+    davg = max(total_dl / n_docs, 1.0) if n_docs else 1.0
     idf = {
-        t: math.log(1.0 + (n - dfm.get(t, 0) + 0.5) / (dfm.get(t, 0) + 0.5))
+        t: math.log(1.0 + (n - dfreq.get(t, 0) + 0.5) / (dfreq.get(t, 0) + 0.5))
         for t in vocab_set
     }
     k1p1 = BM25_K1 + 1.0
@@ -452,10 +248,10 @@ def link_entities(
                     {c: pd.Series(dtype=object) for c in out_cols},
                     columns=out_cols)
                 continue
-            # vectorized per entity group: same per-term IEEE expression
-            # and the same sorted-token accumulation order as bm25_score
-            # (rel starts 0.0, += one term per token column), so every
-            # double is bit-identical to the scalar loop
+            # vectorized per entity group: the reference's per-term IEEE
+            # expression and sorted-token accumulation order (rel starts
+            # 0.0, += one term per token column), so every double is
+            # bit-identical to its scalar loop
             dl_all = pdf["dl"].to_numpy(dtype=np.float64)
             kden_all = BM25_K1 * (1.0 - BM25_B + BM25_B * dl_all / davg)
             ei_all = pdf["entity_id"].to_numpy(dtype=np.int64)
@@ -488,4 +284,4 @@ def link_entities(
     )
     if most_candidates <= cap:
         return links
-    return cap_per_entity(links, cap, salt_buckets=salt_buckets)
+    return cap_per_entity(links, cap)

@@ -263,40 +263,28 @@ def forum_quads(
     return sink.quads
 
 
-def forum_pipeline_quads(pages_rows, records, forum_prefix) -> set[Quad]:
-    """Straight-line simulation of the whole webtext path: parse each page,
-    run the per-entity ES-style AND search + cap + good_match loop
-    (`utils.py:253-343,573-592`), emit with `forum_quads`.  The golden
-    oracle for the Spark pipeline (tests + driver digest oracle).
+def _entity_searches(docs, records, cap):
+    """The reference's per-entity ES-style AND search + BM25 cap loop
+    (`utils.py:253-343`) over parsed docs (dicts with ``url`` and
+    ``content``): yields ``(record, name, etype, qualified, hits)`` per
+    entity with at least one hit, ``hits`` = ``[(bm25, tf_sum, doc)]``
+    best first, at most ``cap`` of them.
 
-    The 5000-hit window is ordered by BM25 (k1=1.2, b=0.75, Lucene idf)
-    — the score ES's single-field `most_fields` multi_match actually
-    caps by (`utils.py:281-292`) — computed here straight-line from the
-    whole doc list (df / N / avgdl), independent of the Spark
-    operator's broadcast-stats implementation.  Raw tf then url break
-    ties."""
-    import math as _math
-    from collections import Counter as _Counter
+    The window is ordered by BM25 (k1=1.2, b=0.75, Lucene idf) — the
+    score ES's single-field `most_fields` multi_match caps by
+    (`utils.py:281-292`) — computed straight-line from the whole doc
+    list (df / N / avgdl), independent of the Spark operator's
+    partial-statistics plan.  Raw tf then url break ties."""
+    import math
+    from collections import Counter
 
-    from graph4code_spark.analyzer import analyze, entity_required_tokens, good_match
-    from graph4code_spark.reference_impl.qa_oracle import (
-        oracle_parse_qa_page as parse_qa_page,
-    )
+    from graph4code_spark.analyzer import analyze, entity_required_tokens
     from graph4code_spark.synth import entity_name, entity_type
 
-    docs = []
-    for r in pages_rows:
-        html = r["html"]
-        if isinstance(html, (bytes, bytearray)):
-            html = html.decode("utf-8")
-        rec = parse_qa_page(r["url"], html)
-        if rec:
-            docs.append(rec)
-
-    # index statistics, straight-line over every parsed doc; one Counter
-    # per doc so tf is a lookup, not a rescan per required token
+    # index statistics, straight-line over every doc; one Counter per
+    # doc so tf is a lookup, not a rescan per required token
     doc_toks = [analyze(d["content"]) for d in docs]
-    doc_counts = [_Counter(toks) for toks in doc_toks]
+    doc_counts = [Counter(toks) for toks in doc_toks]
     n_docs = max(len(docs), 1)
     avgdl = max(sum(len(t) for t in doc_toks) / n_docs, 1.0) if docs else 1.0
     dfreq: dict = {}
@@ -304,7 +292,6 @@ def forum_pipeline_quads(pages_rows, records, forum_prefix) -> set[Quad]:
         for t in cnt:
             dfreq[t] = dfreq.get(t, 0) + 1
 
-    out: set[Quad] = set()
     for rec in records:
         name = entity_name(rec)
         etype = entity_type(rec)
@@ -325,13 +312,51 @@ def forum_pipeline_quads(pages_rows, records, forum_prefix) -> set[Quad]:
                 for t in sorted(required):
                     tf = cnt[t]
                     df_t = dfreq.get(t, 0)
-                    idf = _math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
+                    idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
                     rel += idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
                 hits.append((rel, score, d))
         hits.sort(key=lambda x: (-x[0], -x[1], x[2]["url"]))
-        hits = hits[:5000]
-        if not hits:
-            continue
+        if hits:
+            yield rec, name, etype, qualified, hits[:cap]
+
+
+def reference_links(docs, records, cap=5000) -> list[tuple]:
+    """Straight-line entity→doc links: one
+    ``(url, question_id, entity, etype, score, good_match, bm25)`` row
+    per kept (doc, entity) hit — the oracle of the Spark linking
+    operator's output, row for row and bit for bit."""
+    from graph4code_spark.analyzer import good_match
+
+    return [
+        (d["url"], d["question_id"], name, etype, score,
+         good_match(d["content"].lower(), qualified), rel)
+        for _, name, etype, qualified, hits in _entity_searches(docs, records, cap)
+        for rel, score, d in hits
+    ]
+
+
+def forum_pipeline_quads(pages_rows, records, forum_prefix) -> set[Quad]:
+    """Straight-line simulation of the whole webtext path: parse each page,
+    run the per-entity search + cap + good_match loop
+    (`utils.py:253-343,573-592`), emit with `forum_quads`.  The golden
+    oracle for the Spark pipeline (tests and the forum oracles in
+    `__spark_entry__.py`)."""
+    from graph4code_spark.analyzer import good_match
+    from graph4code_spark.reference_impl.qa_oracle import (
+        oracle_parse_qa_page as parse_qa_page,
+    )
+
+    docs = []
+    for r in pages_rows:
+        html = r["html"]
+        if isinstance(html, (bytes, bytearray)):
+            html = html.decode("utf-8")
+        rec = parse_qa_page(r["url"], html)
+        if rec:
+            docs.append(rec)
+
+    out: set[Quad] = set()
+    for rec, _, _, qualified, hits in _entity_searches(docs, records, 5000):
         matches = []
         for _, _, d in hits:
             matches.append(

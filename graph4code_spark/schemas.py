@@ -11,7 +11,6 @@ from pyspark.sql.types import (
     BinaryType,
     BooleanType,
     IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,
@@ -141,29 +140,5 @@ ANALYSIS_NODES_SCHEMA = StructType(
         StructField("source_location", SOURCE_LOCATION, True),
         StructField("source_text", StringType(), True),
         StructField("source_lines", ArrayType(StringType()), True),
-    ]
-)
-
-# --------------------------------------------------------------------------
-# Forum-post shape (reference Posts.xml tuple, `utils.py:143`), used by the
-# page synthesizer and by the Q/A assembly operators.
-# --------------------------------------------------------------------------
-POSTS_SCHEMA = StructType(
-    [
-        StructField("Id", StringType(), False),
-        StructField("PostTypeId", StringType(), True),
-        StructField("ParentId", StringType(), True),
-        StructField("AcceptedAnswerId", StringType(), True),
-        StructField("Title", StringType(), True),
-        StructField("Body", StringType(), True),
-        StructField("Tags", StringType(), True),
-    ]
-)
-
-VOTES_SCHEMA = StructType(
-    [
-        StructField("Id", StringType(), False),
-        StructField("PostId", StringType(), False),
-        StructField("VoteTypeId", StringType(), True),
     ]
 )

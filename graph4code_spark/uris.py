@@ -42,11 +42,9 @@ ANALYSIS_NODE_PREFIX = "http://purl.org/twc/graph4code/se"
 # SIO numeric predicates used by the analysis-edge vocabulary
 # (`PythonTurtleAnalysisEngine.java:375-420`)
 SIO_HAS_INPUT = PREFIXES["sio"] + "SIO_000230"       # has-input (arg edge)
-SIO_ORDINAL = PREFIXES["sio"] + "SIO_000613"         # ordinal position
 SIO_NAME = PREFIXES["sio"] + "SIO_000116"            # name (named arg)
 SIO_PRECEDES = PREFIXES["sio"] + "SIO_000250"        # immediatelyPrecedes
 SIO_LOCATION = PREFIXES["sio"] + "SIO_000061"        # located-in (src loc)
-SIO_FIELD = PREFIXES["sio"] + "SIO_000420"           # has-part (field acc.)
 
 
 # ---------------------------------------------------------------------------

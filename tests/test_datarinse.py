@@ -42,12 +42,14 @@ def test_top12_cut_and_basename_extraction(spark):
 
 
 def test_salted_cap_equals_plain_window(spark):
+    """The salted witness cap keeps what a plain per-dataset window
+    keeps: the first 5 scripts of each hub dataset by ``ord``."""
     rows = []
     for ds in range(3):
         for i in range(30):
             rows.append((f"w{i:02d}.py", i, f"pd.read_csv('hub{ds}.csv')"))
-    m = _mentions(spark, rows)
-    salted = dataset_script_index(m, order_col="ord", salt_buckets=4).collect()
-    plain = dataset_script_index(m, order_col="ord", salt_buckets=0).collect()
-    assert sorted(map(tuple, salted)) == sorted(map(tuple, plain))
-    assert len(salted) == 3 * 5
+    out = dataset_script_index(_mentions(spark, rows), order_col="ord").collect()
+    assert sorted(map(tuple, out)) == [
+        (f"hub{ds}.csv", 30, k + 1, f"w{k:02d}.py")
+        for ds in range(3) for k in range(5)
+    ]

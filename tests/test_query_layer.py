@@ -1,16 +1,16 @@
-"""Query layer over pipeline output + salted-cap equivalence."""
-
-from pyspark.sql import functions as F
+"""Query layer over pipeline output, and the linking operator checked
+row for row against the straight-line reference (`reference_links`)."""
 
 from graph4code_spark.emitters.analysis import analysis_triples
 from graph4code_spark.emitters.forum import forum_triples
 from graph4code_spark.operators.flows import extract_flow_nodes
-from graph4code_spark.operators.linking import cap_per_entity, detect_mentions, link_entities
+from graph4code_spark.operators.linking import link_entities
 from graph4code_spark.plans.queries import (
     most_discussed_entities,
     next_steps_after,
     questions_about,
 )
+from graph4code_spark.reference_impl.emitters import reference_links
 from graph4code_spark.sources.qa import extract_qa
 from graph4code_spark.synth import FIXED_CATALOG, HUB_ENTITY, synth_pages
 from graph4code_spark.uris import PREFIXES
@@ -47,19 +47,21 @@ def test_query_layer_shapes(spark):
     assert len(nxt) >= 1
 
 
-def test_salted_cap_equals_unsalted(spark):
-    pages = synth_pages(spark, 150, seed=33)
-    qa = extract_qa(pages)
-    links = detect_mentions(qa, FIXED_CATALOG).cache()
-    plain = cap_per_entity(links, cap=10)
-    salted = cap_per_entity(links, cap=10, salt_buckets=7)
-    key = ["url", "question_id", "entity", "etype", "score", "good_match"]
-    assert {tuple(r) for r in plain.select(*key).collect()} == {
-        tuple(r) for r in salted.select(*key).collect()
-    }
-    # cap actually binds for the hub entity
-    hub_count = plain.where(F.col("entity") == HUB_ENTITY).count()
-    assert hub_count == 10
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_salted_cap_equals_reference(spark):
+    """The salted two-phase cap keeps the reference's top 10 per entity,
+    and the cap binds: the hub entity has more than 10 candidates."""
+    qa = extract_qa(synth_pages(spark, 150, seed=33)).cache()
+    docs = [r.asDict() for r in qa.select("url", "question_id", "content").collect()]
+    got = _rows(link_entities(qa, FIXED_CATALOG, cap=10))
+    assert got == sorted(reference_links(docs, FIXED_CATALOG, cap=10))
+    assert sum(r[2] == HUB_ENTITY for r in got) == 10
+    uncapped = reference_links(docs, FIXED_CATALOG, cap=len(docs))
+    assert sum(r[2] == HUB_ENTITY for r in uncapped) > 10
+    qa.unpersist()
 
 
 def test_debug_posts_values_count_and_phrase_filter(spark):
@@ -144,13 +146,11 @@ def test_class_names_reflexive_even_with_outgoing_edges(spark):
 
 
 def test_cap_orders_by_bm25_not_tf(spark):
-    """Hub fixture where BM25 and the old tf-sum proxy disagree on the
-    cap cut (VERDICT r3): doc A repeats the entity's COMMON token (high
+    """Hub fixture where BM25 and a tf-sum ordering disagree on the cap
+    cut (VERDICT r3): doc A repeats the entity's COMMON token (high
     tf-sum, low idf) while doc B carries extra hits on the RARE token
     (lower tf-sum, higher idf weight).  ES's `most_fields` 5000-hit
-    window keeps B; the tf proxy would keep A."""
-    from graph4code_spark.operators.linking import corpus_token_stats
-
+    window keeps B; a tf ordering would keep A."""
     cat = [{"module": "zlib", "klass": None, "function": "zlib.rareword"}]
     rows = [
         ("u://a", "1", "zlib zlib zlib zlib zlib rareword"),
@@ -159,19 +159,12 @@ def test_cap_orders_by_bm25_not_tf(spark):
     qa = spark.createDataFrame(
         rows, "url string, question_id string, content string"
     )
-    stats = corpus_token_stats(qa, cat)
-    assert stats.n_docs == 22 and stats.df["zlib"] == 22 and stats.df["rareword"] == 2
-
-    links = detect_mentions(qa, cat, stats).cache()
-    kept_bm25 = [r["url"] for r in cap_per_entity(links, cap=1).collect()]
-    assert kept_bm25 == ["u://b"]
-
-    # the pre-round-4 tf ordering (no stats -> bm25 == tf) keeps A:
-    # proof this fixture actually separates the two orderings
-    tf_links = detect_mentions(qa, cat, None)
-    kept_tf = [r["url"] for r in cap_per_entity(tf_links, cap=1).collect()]
-    assert kept_tf == ["u://a"]
-    links.unpersist()
+    kept = [r["url"] for r in link_entities(qa, cat, cap=1).collect()]
+    assert kept == ["u://b"]
+    # proof this fixture separates the two orderings: A has the higher
+    # tf sum
+    tf = {r["url"]: r["score"] for r in link_entities(qa, cat).collect()}
+    assert tf == {"u://a": 6, "u://b": 3}
 
 
 def test_cross_graph_node_reuse_stress(spark):
@@ -265,20 +258,14 @@ def test_link_entities_job_count(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() > 0
 
 
-def test_fused_link_entities_equals_two_pass_composition(spark, monkeypatch):
-    """Round-4 fused single-tokenization plan (`link_entities`) must be
-    row-for-row AND bit-for-bit (bm25 doubles included) identical to the
-    legacy two-pass composition `cap_per_entity(detect_mentions(qa, cat,
-    corpus_token_stats(qa, cat)))` it replaced — randomized content with
-    case-change/digit token boundaries, hub skew, and short docs."""
+def test_link_entities_equals_reference_links(spark, monkeypatch):
+    """`link_entities` is row-for-row AND bit-for-bit (bm25 doubles
+    included) identical to the straight-line `reference_links`, capped
+    and uncapped — randomized content with case-change/digit token
+    boundaries, hub skew, and short docs."""
     import random
 
-    from graph4code_spark.operators.linking import (
-        cap_per_entity,
-        corpus_token_stats,
-        detect_mentions,
-        link_entities,
-    )
+    from graph4code_spark.operators import linking
 
     rng = random.Random(1234)
     cat = [
@@ -294,30 +281,24 @@ def test_fused_link_entities_equals_two_pass_composition(spark, monkeypatch):
         n = rng.randint(0, 40)
         rows_in.append((f"u://{i}", str(i), " ".join(rng.choice(words) for _ in range(n))))
     qa = spark.createDataFrame(rows_in, "url string, question_id string, content string")
-
-    from graph4code_spark.operators import linking
+    docs = [{"url": u, "question_id": q, "content": c} for u, q, c in rows_in]
 
     capped = []
+    cap_per_entity = linking.cap_per_entity
 
-    def spy(links, cap, salt_buckets=0):
-        capped.append((cap, salt_buckets))
-        return cap_per_entity(links, cap, salt_buckets=salt_buckets)
+    def spy(links, cap):
+        capped.append(cap)
+        return cap_per_entity(links, cap)
 
     monkeypatch.setattr(linking, "cap_per_entity", spy)
-    fused = link_entities(qa, cat, cap=7, salt_buckets=3)
-    # some entity has more than 7 candidates: the salted cap must run
-    assert capped == [(7, 3)]
-    stats = corpus_token_stats(qa, cat)
-    mentions = detect_mentions(qa, cat, stats)
-    legacy = cap_per_entity(mentions, cap=7, salt_buckets=0)
-
-    def rows(df):
-        return sorted((tuple(r) for r in df.collect()), key=lambda t: (t[2], t[0]))
-
-    assert rows(fused) == rows(legacy)  # exact: ints, bools, float bm25 bits
+    # some entity has more than 7 candidates: the cap must run
+    got = _rows(link_entities(qa, cat, cap=7))
+    assert capped == [7]
+    assert got == sorted(reference_links(docs, cat, cap=7))  # exact: float bits
 
     # no entity exceeds the cap (one candidate per page at most): the
-    # cap is skipped and every mention kept
-    uncapped = link_entities(qa, cat, cap=len(rows_in), salt_buckets=3)
-    assert capped == [(7, 3)]
-    assert rows(uncapped) == rows(mentions)
+    # cap is skipped and every candidate kept
+    uncapped = _rows(link_entities(qa, cat, cap=len(rows_in)))
+    assert capped == [7]
+    assert uncapped == sorted(reference_links(docs, cat, cap=len(rows_in)))
+    assert len(uncapped) > len(got)
