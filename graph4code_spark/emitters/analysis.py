@@ -47,11 +47,6 @@ _RDF = PREFIXES["rdf"]
 _RDFS = PREFIXES["rdfs"]
 _SCHEMA = PREFIXES["schema"]
 
-_EMPTY = (
-    "array<struct<subj:string,pred:string,obj:string,is_literal:boolean,"
-    "arg_pos:int,arg_name:string,graph:string>>"
-)
-
 
 def _se(col) -> F.Column:
     return F.concat(F.lit(ANALYSIS_NODE_PREFIX), col.cast("string"))
@@ -65,19 +60,10 @@ def _join_with_trailing(arr, sep: str):
     )
 
 
-def _empty():
-    return F.array().cast(_EMPTY)
-
-
 def analysis_triples(nodes: DataFrame) -> DataFrame:
     """ANALYSIS_NODES_SCHEMA rows → E6/E7 quads."""
     g = F.col("graph_uri")
     s = _se(F.col("node_number"))
-
-    head = F.array(
-        quad(s, _SCHEMA + "about", F.element_at(F.col("path"), -1), True, g),
-        quad(s, _RDFS + "label", _join_with_trailing(F.col("path"), "."), True, g),
-    )
 
     loc = F.col("source_location")
     # key order is Java's HashMap iteration order for this key set — the
@@ -95,97 +81,63 @@ def analysis_triples(nodes: DataFrame) -> DataFrame:
             loc["first_line"].alias("firstLine"),
         )
     )
-    opt = F.concat(
-        F.when(loc.isNotNull(), F.array(quad(s, SIO_LOCATION, loc_json, True, g))).otherwise(_empty()),
-        F.when(
-            F.col("source_text").isNotNull(),
-            F.array(quad(s, _SCHEMA + "text", F.col("source_text"), True, g)),
-        ).otherwise(_empty()),
-        F.when(
-            F.col("source_lines").isNotNull(),
-            F.array(
-                quad(s, _G4C_BASE + "sourceLines",
-                     _join_with_trailing(F.col("source_lines"), "\n"), True, g)
-            ),
-        ).otherwise(_empty()),
-        F.when(
-            F.col("normalized_label").isNotNull(),
-            F.array(quad(s, _G4C_BASE + "normalizedLabel", F.col("normalized_label"), True, g)),
-        ).otherwise(_empty()),
-        F.coalesce(
-            F.transform(
-                F.col("value_names"),
-                lambda v: quad(s, _G4C_BASE + "valueNames", v, True, g),
-            ),
-            _empty(),
-        ),
-        F.when(
-            F.col("is_import"),
-            F.array(quad(s, _RDF + "type", _G4C_BASE + "Imported", False, g)),
-        ).otherwise(_empty()),
+    head = F.array(
+        quad(s, _SCHEMA + "about", F.element_at(F.col("path"), -1), True, g),
+        quad(s, _RDFS + "label", _join_with_trailing(F.col("path"), "."), True, g),
+        # to_json of a null location is '{}', not null
+        F.when(loc.isNotNull(), quad(s, SIO_LOCATION, loc_json, True, g)),
+        quad(s, _SCHEMA + "text", F.col("source_text"), True, g),
+        quad(s, _G4C_BASE + "sourceLines",
+             _join_with_trailing(F.col("source_lines"), "\n"), True, g),
+        quad(s, _G4C_BASE + "normalizedLabel", F.col("normalized_label"), True, g),
+        F.when(F.col("is_import"), quad(s, _RDF + "type", _G4C_BASE + "Imported", False, g)),
     )
-
-    const_pos = F.coalesce(
-        F.transform(
-            F.map_entries(F.col("constant_positional_args")),
-            lambda e: quad(s, SIO_HAS_INPUT, e["value"], True, g,
-                           arg_pos=e["key"].cast("int")),
-        ),
-        _empty(),
+    value_names = F.transform(
+        F.col("value_names"), lambda v: quad(s, _G4C_BASE + "valueNames", v, True, g)
     )
-    const_named = F.coalesce(
-        F.transform(
-            F.map_entries(F.col("constant_named_args")),
-            lambda e: quad(s, SIO_HAS_INPUT, e["value"], True, g, arg_name=e["key"]),
-        ),
-        _empty(),
+    const_pos = F.transform(
+        F.map_entries(F.col("constant_positional_args")),
+        lambda e: quad(s, SIO_HAS_INPUT, e["value"], True, g, arg_pos=e["key"].cast("int")),
+    )
+    const_named = F.transform(
+        F.map_entries(F.col("constant_named_args")),
+        lambda e: quad(s, SIO_HAS_INPUT, e["value"], True, g, arg_name=e["key"]),
     )
 
     def access_block(col_name: str, pred: str):
         fld = lambda r: r["field"]  # noqa: E731
         is_node = lambda r: fld(r).rlike("^[0-9]+$")  # noqa: E731
-        return F.coalesce(
-            F.transform(
-                F.col(col_name),
-                lambda r: quad(
-                    s,
-                    _G4C_BASE + pred,
-                    F.when(is_node(r), F.concat(F.lit(ANALYSIS_NODE_PREFIX), fld(r))).otherwise(fld(r)),
-                    ~is_node(r),
-                    g,
-                    arg_name=fld(r),
-                ),
+        return F.transform(
+            F.col(col_name),
+            lambda r: quad(
+                s,
+                _G4C_BASE + pred,
+                F.when(is_node(r), F.concat(F.lit(ANALYSIS_NODE_PREFIX), fld(r))).otherwise(fld(r)),
+                ~is_node(r),
+                g,
+                arg_name=fld(r),
             ),
-            _empty(),
         )
 
-    precedes = F.coalesce(
-        F.transform(
-            F.col("immediately_precedes"),
-            lambda d: quad(s, SIO_PRECEDES, _se(d), False, g),
-        ),
-        _empty(),
+    precedes = F.transform(
+        F.col("immediately_precedes"), lambda d: quad(s, SIO_PRECEDES, _se(d), False, g)
     )
-    flows = F.coalesce(
-        F.flatten(
-            F.transform(
-                F.map_entries(F.col("flows_to")),
-                lambda e: F.transform(
-                    e["value"],
-                    lambda d: quad(
-                        s, _G4C_BASE + "flowsTo", _se(d), False, g,
-                        arg_pos=F.when(e["key"].rlike("^[0-9]+$"), e["key"].cast("int")),
-                        arg_name=F.when(~e["key"].rlike("^[0-9]+$"), e["key"]),
-                    ),
+    flows = F.flatten(
+        F.transform(
+            F.map_entries(F.col("flows_to")),
+            lambda e: F.transform(
+                e["value"],
+                lambda d: quad(
+                    s, _G4C_BASE + "flowsTo", _se(d), False, g,
+                    arg_pos=F.when(e["key"].rlike("^[0-9]+$"), e["key"].cast("int")),
+                    arg_name=F.when(~e["key"].rlike("^[0-9]+$"), e["key"]),
                 ),
-            )
-        ),
-        _empty(),
+            ),
+        )
     )
 
-    quads = F.concat(
-        head, opt, const_pos, const_named,
+    return explode_quads(
+        nodes, head, value_names, const_pos, const_named,
         access_block("reads", "read"), access_block("writes", "write"),
         precedes, flows,
     )
-    return explode_quads(nodes, quads)

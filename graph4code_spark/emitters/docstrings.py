@@ -4,7 +4,8 @@ Re-expresses `output_documentation_triples` / `add_triples_from_param_map`
 / `add_triples_from_return_map` / `add_part_of_edges` / `add_name_end`
 (`/root/reference/src/create_docstrings_graph.py:123-471`) as **pure
 column expressions** over the catalog DataFrame: one `transform`/`explode`
-pipeline, no Python UDFs, fully whole-stage-codegen'd.
+pipeline, no Python UDF (the `transform`/`exists`/`sequence` lambdas
+evaluate interpreted).
 
 Semantics reproduced exactly (they drive triple-level P/R):
 - entity-type dispatch class/function/method and the doc URI/label scheme
@@ -30,6 +31,7 @@ from graph4code_spark.functions import (
     dotted_prefix,
     explode_quads,
     quad,
+    quad_blocks,
 )
 from graph4code_spark.session import local_df
 from graph4code_spark.uris import DOCSTRINGS_GRAPH, PREFIXES
@@ -49,13 +51,6 @@ def _norm(col):
     return F.regexp_replace(F.trim(col), " ", ".")
 
 
-def _empty_quads():
-    return F.array().cast(
-        "array<struct<subj:string,pred:string,obj:string,is_literal:boolean,"
-        "arg_pos:int,arg_name:string,graph:string>>"
-    )
-
-
 def build_class_alias_map(pairs: list[tuple[str, str]]) -> dict[str, str]:
     """Load alias pairs with the reference's symmetric last-wins semantics
     (`create_docstrings_graph.py:628-635`)."""
@@ -72,16 +67,15 @@ def alias_table(spark, alias: dict[str, str]) -> DataFrame:
     return local_df(spark, list(alias.items()), "alias_key string, alias_val string")
 
 
-def docstring_triples(
-    catalog: DataFrame,
-    class_alias: dict[str, str] | None = None,
-) -> DataFrame:
-    """Catalog → quad table for the docstrings named graph."""
+def docstring_triples(catalog: DataFrame, class_alias: dict[str, str]) -> DataFrame:
+    """Catalog → quad table for the docstrings named graph.
+
+    ``class_alias``: the symmetric class map (`build_class_alias_map`),
+    ``{}`` for none."""
     spark = catalog.sparkSession
 
     c = (
-        catalog.withColumn("module_n", _norm(F.col("module")))
-        .withColumn("klass_n", _norm(F.col("klass")))
+        catalog.withColumn("klass_n", _norm(F.col("klass")))
         .withColumn("function_n", _norm(F.col("function")))
     )
     etype = (
@@ -98,32 +92,32 @@ def docstring_triples(
     c = c.withColumn("doc_uri", F.concat(F.lit(_PY), F.col("doc_name")))
 
     # alias map join (classes only) — tiny broadcast
-    if class_alias is None:
-        alias: dict[str, str] = {}
-    elif isinstance(class_alias, dict):
-        alias = dict(class_alias)
-    else:
-        alias = build_class_alias_map(class_alias)
-    if alias:
-        c = c.join(
-            F.broadcast(alias_table(spark, alias)),
-            (F.col("etype") == "class") & (F.col("klass_n") == F.col("alias_key")),
-            "left",
-        )
-    else:
-        c = c.withColumn("alias_val", F.lit(None).cast("string"))
+    c = c.join(
+        F.broadcast(alias_table(spark, class_alias)),
+        (F.col("etype") == "class") & (F.col("klass_n") == F.col("alias_key")),
+        "left",
+    )
 
     d = F.col("doc_uri")
 
-    # -- head: rdf:type + rdfs:label ---------------------------------------
+    # -- head: rdf:type + rdfs:label, name_end, aliasOf ----------------------
     type_obj = (
         F.when(F.col("etype") == "class", F.lit(_G4C + "Class"))
         .when(F.col("etype") == "method", F.lit(_G4C + "Method"))
         .otherwise(F.lit(_G4C + "Function"))
     )
+    # name_end (`create_docstrings_graph.py:339-347`)
+    ne_name = F.regexp_replace(F.trim(F.col("doc_name")), '"', "")
+    ne_comp = F.split(F.trim(ne_name), r"\.")
+    ne = F.trim(F.element_at(ne_comp, -1))
     head = F.array(
         quad(d, _RDF + "type", type_obj, False, _G),
         quad(d, _RDFS + "label", F.col("doc_name"), True, _G),
+        F.when(
+            (ne != "") & (ne != "_") & (F.size(ne_comp) >= 2),
+            quad(d, _G4C + "name_end", F.element_at(ne_comp, -1), True, _G),
+        ),
+        quad(d, _G4C + "aliasOf", F.concat(F.lit(_PY), F.col("alias_val")), False, _G),
     )
 
     # -- isPartOf / classMember hierarchy ----------------------------------
@@ -136,6 +130,10 @@ def docstring_triples(
         F.col("etype") == "class", F.lit(_DCT + "isPartOf")
     ).otherwise(F.lit(_G4C + "classMember"))
     part_uri = F.concat(F.lit(_PY), part_name)
+    part_block = F.array(
+        quad(d, part_pred, part_uri, False, _G),
+        quad(part_uri, _RDFS + "label", part_name, True, _G),
+    )
     comp = F.split(part_name, r"\.")
     seg = lambda i: F.array_join(F.slice(comp, 1, i), ".")  # noqa: E731
     chain = F.when(
@@ -155,80 +153,48 @@ def docstring_triples(
                 ),
             )
         ),
-    ).otherwise(_empty_quads())
-    part_block = F.concat(
-        F.array(
-            quad(d, part_pred, part_uri, False, _G),
-            quad(part_uri, _RDFS + "label", part_name, True, _G),
-        ),
-        chain,
     )
 
-    # -- name_end (`create_docstrings_graph.py:339-347`) --------------------
-    ne_name = F.regexp_replace(F.trim(F.col("doc_name")), '"', "")
-    ne_comp = F.split(F.trim(ne_name), r"\.")
-    ne = F.trim(F.element_at(ne_comp, -1))
-    name_end_block = F.when(
-        (ne != "") & (ne != "_") & (F.size(ne_comp) >= 2),
-        F.array(quad(d, _G4C + "name_end", F.element_at(ne_comp, -1), True, _G)),
-    ).otherwise(_empty_quads())
-
-    # -- aliasOf (classes only) ---------------------------------------------
-    alias_block = F.when(
-        F.col("alias_val").isNotNull(),
-        F.array(quad(d, _G4C + "aliasOf", F.concat(F.lit(_PY), F.col("alias_val")), False, _G)),
-    ).otherwise(_empty_quads())
-
     # -- subClassOf per base class -------------------------------------------
-    base_block = F.coalesce(
-        F.transform(
-            F.col("base_classes"),
-            lambda b: quad(d, _RDFS + "subClassOf", F.concat(F.lit(_PY), b), False, _G),
-        ),
-        _empty_quads(),
+    base_block = F.transform(
+        F.col("base_classes"),
+        lambda b: quad(d, _RDFS + "subClassOf", F.concat(F.lit(_PY), b), False, _G),
     )
 
     # -- return block ----------------------------------------------------------
     r_uri = F.concat(d, F.lit("/r/1"))
     rm = F.col("return_map")
+    has_return = rm["type"].isNotNull()
     ret_block = F.when(
-        rm.isNotNull() & rm["type"].isNotNull(),
-        F.concat(
-            F.array(
-                quad(d, _G4C + "return", r_uri, False, _G),
-                quad(r_uri, _RDF + "type", _G4C + "Return", False, _G),
-                quad(r_uri, _G4C + "return_type", F.concat(F.lit(_PY), F.trim(rm["type"])), False, _G),
-                quad(r_uri, _G4C + "return_index", F.lit("1"), True, _G),
-            ),
-            F.coalesce(
-                F.transform(
-                    rm["inferred_type"],
-                    lambda t: quad(d, _G4C + "return_inferred_type", F.concat(F.lit(_PY), t), False, _G),
-                ),
-                _empty_quads(),
-            ),
-            F.when(
-                rm["doc"].isNotNull(),
-                F.array(quad(r_uri, _SKOS + "definition", F.trim(rm["doc"]), True, _G)),
-            ).otherwise(_empty_quads()),
+        has_return,
+        F.array(
+            quad(d, _G4C + "return", r_uri, False, _G),
+            quad(r_uri, _RDF + "type", _G4C + "Return", False, _G),
+            quad(r_uri, _G4C + "return_type", F.concat(F.lit(_PY), F.trim(rm["type"])), False, _G),
+            quad(r_uri, _G4C + "return_index", F.lit("1"), True, _G),
+            quad(r_uri, _SKOS + "definition", F.trim(rm["doc"]), True, _G),
         ),
-    ).otherwise(_empty_quads())
+    )
+    ret_inferred = F.when(
+        has_return,
+        F.transform(
+            rm["inferred_type"],
+            lambda t: quad(d, _G4C + "return_inferred_type", F.concat(F.lit(_PY), t), False, _G),
+        ),
+    )
 
     # -- parameter ordinals from param_names ---------------------------------
     p_uri = lambda i: F.concat(d, F.lit("/p/"), i.cast("string"))  # noqa: E731
-    pnames_block = F.coalesce(
-        F.flatten(
-            F.transform(
-                F.col("param_names"),
-                lambda p, i: F.array(
-                    quad(d, _G4C + "param", p_uri(i + 1), False, _G),
-                    quad(p_uri(i + 1), _RDF + "type", _G4C + "Parameter", False, _G),
-                    quad(p_uri(i + 1), _RDFS + "label", p, True, _G),
-                    quad(p_uri(i + 1), _G4C + "param_index", (i + 1).cast("string"), True, _G),
-                ),
-            )
-        ),
-        _empty_quads(),
+    pnames_block = F.flatten(
+        F.transform(
+            F.col("param_names"),
+            lambda p, i: F.array(
+                quad(d, _G4C + "param", p_uri(i + 1), False, _G),
+                quad(p_uri(i + 1), _RDF + "type", _G4C + "Parameter", False, _G),
+                quad(p_uri(i + 1), _RDFS + "label", p, True, _G),
+                quad(p_uri(i + 1), _G4C + "param_index", (i + 1).cast("string"), True, _G),
+            ),
+        )
     )
 
     # -- param_map block -------------------------------------------------------
@@ -242,8 +208,10 @@ def docstring_triples(
         ).otherwise(F.lit(""))
         key_final = F.when(messy, recovered).otherwise(key)
         idx = F.array_position(F.col("param_names"), key_final)
-        pu = p_uri(idx)
-        field_quads = F.concat(
+        # every quad of the entry has the parameter as subject or object,
+        # so a null `pu` drops an unknown key (or null `param_names`) whole
+        pu = F.when((key_final != "") & (idx > 0), p_uri(idx))
+        return quad_blocks(
             F.array(
                 quad(pu, _RDF + "type", _G4C + "Parameter", False, _G),
                 quad(pu, _RDFS + "label", F.trim(key_final), True, _G),
@@ -252,65 +220,38 @@ def docstring_triples(
                 quad(pu, _RDFS + "label", F.trim(v["name"]), True, _G),
                 quad(pu, _SKOS + "definition", F.trim(v["param_doc"]), True, _G),
                 quad(pu, _G4C + "param_type", F.trim(v["type"]), True, _G),
-            ),
-            F.when(
-                v["optional"].isNotNull(),
-                F.array(quad(pu, _G4C + "optional", bool_lexical(v["optional"]), True, _G)),
-            ).otherwise(_empty_quads()),
-            F.coalesce(
-                F.transform(
-                    v["inferred_type"],
-                    lambda t: quad(pu, _G4C + "param_inferred_type", F.concat(F.lit(_PY), t), False, _G),
+                # bool_lexical(null) is 'false'
+                F.when(
+                    v["optional"].isNotNull(),
+                    quad(pu, _G4C + "optional", bool_lexical(v["optional"]), True, _G),
                 ),
-                _empty_quads(),
+            ),
+            F.transform(
+                v["inferred_type"],
+                lambda t: quad(pu, _G4C + "param_inferred_type", F.concat(F.lit(_PY), t), False, _G),
             ),
         )
-        return F.when((key_final != "") & (idx > 0), field_quads).otherwise(_empty_quads())
 
-    pmap_block = F.when(
-        F.col("param_map").isNotNull() & F.col("param_names").isNotNull(),
-        F.coalesce(
-            F.flatten(F.transform(F.map_entries(F.col("param_map")), pm_entry)),
-            _empty_quads(),
-        ),
-    ).otherwise(_empty_quads())
+    pmap_block = F.flatten(F.transform(F.map_entries(F.col("param_map")), pm_entry))
 
     # -- module block -----------------------------------------------------------
     module_uri = F.concat(F.lit(_PY), F.element_at(F.split(F.col("doc_name"), r"\."), 1))
     module_block = F.when(
-        F.col("module_n").isNotNull(),
+        F.col("module").isNotNull(),
         F.array(
             quad(d, _G4C + "module", module_uri, False, _G),
             quad(module_uri, _RDF + "type", _G4C + "Module", False, _G),
         ),
-    ).otherwise(_empty_quads())
+    )
 
     # -- docstrings + ret_types ---------------------------------------------------
-    doc_block = F.concat(
-        F.when(
-            F.col("function_docstring").isNotNull(),
-            F.array(quad(d, _SKOS + "definition", F.col("function_docstring"), True, _G)),
-        ).otherwise(_empty_quads()),
-        F.when(
-            F.col("class_docstring").isNotNull(),
-            F.array(quad(d, _SKOS + "definition", F.col("class_docstring"), True, _G)),
-        ).otherwise(_empty_quads()),
-        F.when(
-            F.col("ret_types").isNotNull(),
-            F.array(quad(d, _G4C + "ret_types", F.col("ret_types"), True, _G)),
-        ).otherwise(_empty_quads()),
+    doc_block = F.array(
+        quad(d, _SKOS + "definition", F.col("function_docstring"), True, _G),
+        quad(d, _SKOS + "definition", F.col("class_docstring"), True, _G),
+        quad(d, _G4C + "ret_types", F.col("ret_types"), True, _G),
     )
 
-    quads = F.concat(
-        head,
-        part_block,
-        name_end_block,
-        alias_block,
-        base_block,
-        ret_block,
-        pnames_block,
-        pmap_block,
-        module_block,
-        doc_block,
+    return explode_quads(
+        c, head, part_block, chain, base_block, ret_block, ret_inferred,
+        pnames_block, pmap_block, module_block, doc_block,
     )
-    return explode_quads(c, quads)

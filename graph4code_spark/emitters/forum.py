@@ -53,17 +53,9 @@ def anchor_triples(
     g = F.lit(forum_prefix)
     d = F.concat(F.lit(_PY), F.col("entity"))
     joined = linked.join(F.broadcast(ent_df), "entity")
-    quads = F.concat(
-        F.array(quad(d, _RDFS + "label", F.col("label"), True, g)),
-        F.when(
-            F.col("alt_label").isNotNull(),
-            F.array(quad(d, _RDFS + "altLabel", F.col("alt_label"), True, g)),
-        ).otherwise(
-            F.array().cast(
-                "array<struct<subj:string,pred:string,obj:string,is_literal:boolean,"
-                "arg_pos:int,arg_name:string,graph:string>>"
-            )
-        ),
+    quads = F.array(
+        quad(d, _RDFS + "label", F.col("label"), True, g),
+        quad(d, _RDFS + "altLabel", F.col("alt_label"), True, g),
     )
     return explode_quads(joined, quads)
 
@@ -84,48 +76,33 @@ def question_triples(links: DataFrame, qa: DataFrame, forum_prefix: str) -> Data
         quad(q_url, _SIOC + "content", F.col("q_body"), True, g),
         quad(q_url, _SCHEMA + "keywords", F.col("tags"), True, g),
     )
-    ans_block = F.coalesce(
-        F.flatten(
-            F.transform(
-                F.col("answers"),
-                lambda a: F.array(
-                    quad(q_url, _SCHEMA + "suggestedAnswer",
-                         F.concat(F.lit(forum_prefix + "a/"), a["aid"]), False, g),
-                    quad(F.concat(F.lit(forum_prefix + "a/"), a["aid"]),
-                         _RDF + "type", _SCHEMA + "Answer", False, g),
-                    quad(F.concat(F.lit(forum_prefix + "a/"), a["aid"]),
-                         _SIOC + "content", a["body"], True, g),
-                    quad(F.concat(F.lit(forum_prefix + "a/"), a["aid"]),
-                         _SCHEMA + "upvoteCount", a["votes"], True, g),
-                ),
-            )
-        ),
-        F.array().cast(
-            "array<struct<subj:string,pred:string,obj:string,is_literal:boolean,"
-            "arg_pos:int,arg_name:string,graph:string>>"
-        ),
+    a_uri = lambda a: F.concat(F.lit(forum_prefix + "a/"), a["aid"])  # noqa: E731
+    ans_block = F.flatten(
+        F.transform(
+            F.col("answers"),
+            lambda a: F.array(
+                quad(q_url, _SCHEMA + "suggestedAnswer", a_uri(a), False, g),
+                quad(a_uri(a), _RDF + "type", _SCHEMA + "Answer", False, g),
+                quad(a_uri(a), _SIOC + "content", a["body"], True, g),
+                quad(a_uri(a), _SCHEMA + "upvoteCount", a["votes"], True, g),
+            ),
+        )
     )
     code_uri = lambda i: F.concat(  # noqa: E731
         F.lit(forum_prefix), F.col("question_id"), F.lit("/code_snippet/"),
         (i + 1).cast("string"),
     )
-    code_block = F.coalesce(
-        F.flatten(
-            F.transform(
-                F.col("codes"),
-                lambda c, i: F.array(
-                    quad(q_url, _SCHEMA + "hasPart", code_uri(i), False, g),
-                    quad(code_uri(i), _RDF + "type", _SCHEMA + "SoftwareSourceCode", False, g),
-                    quad(code_uri(i), _PROV + "value", c, True, g),
-                ),
-            )
-        ),
-        F.array().cast(
-            "array<struct<subj:string,pred:string,obj:string,is_literal:boolean,"
-            "arg_pos:int,arg_name:string,graph:string>>"
-        ),
+    code_block = F.flatten(
+        F.transform(
+            F.col("codes"),
+            lambda c, i: F.array(
+                quad(q_url, _SCHEMA + "hasPart", code_uri(i), False, g),
+                quad(code_uri(i), _RDF + "type", _SCHEMA + "SoftwareSourceCode", False, g),
+                quad(code_uri(i), _PROV + "value", c, True, g),
+            ),
+        )
     )
-    return explode_quads(j, F.concat(head, ans_block, code_block))
+    return explode_quads(j, head, ans_block, code_block)
 
 
 def forum_triples(

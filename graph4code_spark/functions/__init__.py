@@ -1,7 +1,9 @@
 """Column-expression helpers shared by the emitters and operators.
 
-Everything here is built-in `pyspark.sql.functions` — stays inside
-whole-stage codegen, no Python on the hot path.
+Everything here is built-in `pyspark.sql.functions`: no Python UDF runs
+on the hot path.  The higher-order functions the emitters use
+(`transform`, `exists`, the `sequence` lambdas) evaluate interpreted,
+outside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -15,6 +17,12 @@ from graph4code_spark.uris import URI_RLIKE
 
 #: salt buckets of `salted_top_k`'s first phase
 SALT_BUCKETS = 16
+
+#: Spark type of an array of `quad` structs
+QUAD_ARRAY = (
+    "array<struct<subj:string,pred:string,obj:string,is_literal:boolean,"
+    "arg_pos:int,arg_name:string,graph:string>>"
+)
 
 
 def salted_top_k(
@@ -54,7 +62,7 @@ def quad(
     arg_pos: Column | None = None,
     arg_name: Column | None = None,
 ) -> Column:
-    """Build one quad struct (null-safe; filtered later by `valid_quads`)."""
+    """Build one quad struct (null-safe; filtered by `explode_quads`)."""
 
     def c(x):
         return F.lit(x) if not isinstance(x, Column) else x
@@ -70,14 +78,23 @@ def quad(
     )
 
 
-def explode_quads(df, quads_col: Column):
-    """Explode an array<quad-struct> column into the canonical quad table,
-    applying the reference's URI-validity filter
-    (`create_docstrings_graph.py:140-151`): a quad is dropped when its
-    subject/predicate — or a non-literal object — is not a valid URI.
-    Null-object quads (absent optional fields) are dropped too.
+def quad_blocks(*blocks: Column) -> Column:
+    """Concatenate quad arrays into one, each coalesced with the empty array."""
+    empty = F.array().cast(QUAD_ARRAY)
+    return F.concat(*(F.coalesce(b, empty) for b in blocks))
+
+
+def explode_quads(df: DataFrame, *blocks: Column) -> DataFrame:
+    """Explode quad-array blocks into the canonical quad table.
+
+    The null-block rule: a null block, a null quad, or a quad whose
+    subject or object is null emits nothing, so an emitter states an
+    optional field's triples without guarding them.  The reference's
+    URI-validity filter (`create_docstrings_graph.py:140-151`) also
+    applies: a quad is dropped when its subject/predicate — or a
+    non-literal object — is not a valid URI.
     """
-    q = df.select(F.explode(quads_col).alias("q")).select("q.*")
+    q = df.select(F.explode(quad_blocks(*blocks)).alias("q")).select("q.*")
     is_uri_ok = lambda col: F.col(col).rlike(URI_RLIKE)  # noqa: E731
     return q.where(
         F.col("subj").isNotNull()

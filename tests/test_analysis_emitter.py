@@ -52,6 +52,26 @@ FIXTURE = [
         "source_text": None,
         "source_lines": None,
     },
+    {
+        # every map, array and optional label null: only the head quads
+        "graph_uri": "http://github.example/test/test",
+        "node_number": 70,
+        "path": ["numpy", "zeros"],
+        "path_end": "zeros",
+        "normalized_label": None,
+        "is_import": None,
+        "is_slice": None,
+        "flows_to": None,
+        "immediately_precedes": None,
+        "reads": None,
+        "writes": None,
+        "constant_positional_args": None,
+        "constant_named_args": None,
+        "value_names": None,
+        "source_location": None,
+        "source_text": None,
+        "source_lines": None,
+    },
 ]
 
 
@@ -75,6 +95,7 @@ def test_analysis_emitter_parity(spark):
             "http://github.example/test/test") in got
     assert (f"{G4C}se64", "http://www.w3.org/2000/01/rdf-schema#label",
             "clear", True, None, None, "http://github.example/test/test") in got
+    assert len([q for q in got if q[0] == f"{G4C}se70"]) == 2
 
 
 def test_flow_extraction_receiver_and_args(spark):
