@@ -44,14 +44,20 @@ from graph4code_spark.operators.dedup import (
     simhash_candidates,
     simhash_signatures,
 )
+from graph4code_spark.operators.linking import BM25_B, BM25_K1
 from graph4code_spark.operators.multimodal import extract_media_features, synth_media
+from graph4code_spark.operators.sampling import stratified_hash_sample
 from graph4code_spark.operators.similarity import brute_force_topk, lsh_topk
 from graph4code_spark.operators.textstats import (
     _STOPWORDS,
     TOKEN_REGEX,
     bpe_token_count,
     detect_language,
+    doc_fingerprint,
+    punct_ratio,
+    quality_columns,
     whitespace_token_count,
+    words,
 )
 from graph4code_spark.synth import (
     FIXED_CATALOG,
@@ -695,24 +701,9 @@ FROM g
 """
 
 
-def _quality_columns(t: F.Column) -> list[F.Column]:
-    w = F.split(F.lower(F.trim(t)), r"\s+")
-    sw = F.array(*[F.lit(s) for s in _EN_STOP])
-    sw_ratio = F.size(F.filter(w, lambda x: F.array_contains(sw, x))) / F.greatest(
-        F.size(w), F.lit(1)
-    )
-    punct = F.size(F.regexp_extract_all(t, F.lit(r"[^\w\s]"), 0))
-    return [
-        F.length(t).cast("long").alias("q_chars"),
-        whitespace_token_count(t).cast("long").alias("q_words"),
-        F.round(sw_ratio, 6).alias("q_stopword_ratio"),
-        F.round(punct / F.greatest(F.length(t), F.lit(1)), 6).alias("q_punct_ratio"),
-    ]
-
-
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", *_quality_columns(F.col("text")))
+    return docs.select("doc_id", *quality_columns(F.col("text")))
 
 
 _ORACLE_TEXT_QUALITY = f"""
@@ -728,22 +719,6 @@ SELECT doc_id, CAST(length(text) AS BIGINT) AS q_chars, CAST(nw AS BIGINT) AS q_
         / greatest(length(text), 1), 6) AS q_punct_ratio
 FROM base
 """
-
-
-def _fingerprint(t: F.Column) -> F.Column:
-    """Winnowing fingerprint, md5 flavor: the least md5 of the 5-word
-    shingles (of the whole text when shorter)."""
-    w = F.split(F.lower(F.trim(t)), r"\s+")
-    n = F.size(w)
-    win = 5
-    grams = F.when(
-        n >= win,
-        F.transform(
-            F.sequence(F.lit(1), n - (win - 1)),
-            lambda i: F.md5(F.array_join(F.slice(w, i, win), " ")),
-        ),
-    ).otherwise(F.array(F.md5(F.array_join(w, " "))))
-    return F.array_min(grams)
 
 
 _ORACLE_FINGERPRINT = """
@@ -3620,16 +3595,19 @@ def _oracle_top_modules_volume() -> str:
     return _oracle_top_modules(range(0, 8000, 40), k=10)
 
 
+def _source_rate() -> F.Column:
+    """Per-source md5-prefix keep threshold of the sampled rows: src0-4
+    keep 1/2, src5-14 1/4, the rest 1/16."""
+    idx = F.regexp_replace("source", "src", "").cast("int")
+    return F.when(idx < 5, "80").when(idx < 15, "40").otherwise("10")
+
+
 def q_doc_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified corpus sampling: per-source keep rates
     decided by an md5-prefix threshold — a pure map-side filter (no RNG
     state, no shuffle), identical at any parallelism/retry."""
-    from graph4code_spark.operators.sampling import stratified_hash_sample
-
     docs = _t(spark, sf_dir, "documents")
-    idx = F.regexp_replace("source", "src", "").cast("int")
-    thr = F.when(idx < 5, "80").when(idx < 15, "40").otherwise("10")
-    out = stratified_hash_sample(docs, "doc_id", "source", thr)
+    out = stratified_hash_sample(docs, "doc_id", "source", _source_rate())
     return out.select(F.col("doc_id").cast("long").alias("doc_id"), "source", "h2")
 
 
@@ -3679,28 +3657,25 @@ WHERE rk <= 5
 def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical training-data curation recipe COMPOSED end-to-end
     from the individually oracle-checked operators: language-ID filter
-    (en) → quality gates (min words, max punctuation ratio) → exact
-    dedup (min doc_id per identical text wins) → stratified hash sample
-    → per-source survivor counts + token totals.  Everything is JVM
-    column expressions; the only shuffles are the dedup window and the
-    final aggregate."""
+    (en, `textstats.detect_language`) → quality gates (min words, max
+    unrounded `textstats.punct_ratio`) → exact dedup (min doc_id per
+    identical text wins) → stratified hash sample
+    (`sampling.stratified_hash_sample` at `doc_sample_stratified`'s
+    per-source rates) → per-source survivor counts + token totals.  No
+    Python UDF; the only shuffles are the dedup window and the final
+    aggregate."""
     from pyspark.sql.window import Window as W
 
     docs = _t(spark, sf_dir, "documents")
     t = F.col("text")
     n_words = whitespace_token_count(t)
-    punct = F.size(F.regexp_extract_all(t, F.lit(r"[^\w\s]"), 0))
-    punct_ratio = punct / F.greatest(F.length(t), F.lit(1))
     base = docs.where(detect_language(t) == "en").where(
-        (n_words >= 10) & (punct_ratio <= 0.3)
+        (n_words >= 10) & (punct_ratio(t) <= 0.3)
     )
     wdd = W.partitionBy(F.md5("text")).orderBy("doc_id")
     base = base.withColumn("rn", F.row_number().over(wdd)).where(F.col("rn") == 1)
-    idx = F.regexp_replace("source", "src", "").cast("int")
-    thr = F.when(idx < 5, "80").when(idx < 15, "40").otherwise("10")
-    h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     return (
-        base.where(h2 < thr)
+        stratified_hash_sample(base, "doc_id", "source", _source_rate())
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -3880,17 +3855,11 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     every SF), lines occurring in >=3 distinct docs are dropped
     corpus-wide, and each doc reports its kept-text md5 + drop counts.
     One exploded hash-agg + one anti-join + one reassembly agg
-    (`operators/scrub.py:drop_frequent_lines`)."""
-    from graph4code_spark.operators.scrub import drop_frequent_lines
+    (`operators/scrub.py:word_lines`, `drop_frequent_lines`)."""
+    from graph4code_spark.operators.scrub import drop_frequent_lines, word_lines
 
     docs = _t(spark, sf_dir, "documents")
-    w = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    n = F.size(w)
-    lines = F.transform(
-        F.sequence(F.lit(1), F.ceil(n / F.lit(3.0)).cast("int")),
-        lambda i: F.array_join(F.slice(w, (i - 1) * 3 + 1, 3), " "),
-    )
-    chunked = docs.select("doc_id", lines.alias("lines"))
+    chunked = docs.select("doc_id", word_lines(F.col("text"), 3).alias("lines"))
     out = drop_frequent_lines(chunked, "doc_id", "lines", min_docs=3)
     return out.select(
         "doc_id",
@@ -4147,17 +4116,15 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-batch prep a 100 TB crawl actually runs: plant-PII fixture
     → redact (stateless map) → benchmark decontamination (broadcast
     gram join) → frequent-line removal (CCNet) → quality gate →
-    deterministic-shuffle sequence packing (two-level scan).  Every
-    stage is individually oracle-checked; this query checks their
+    deterministic-shuffle sequence packing (two-level scan).  The stages
+    are `plans/corpus.py`'s `decontaminate`/`clean`/`pack` at
+    `CorpusConfig`'s defaults, run in memory; every stage is
+    individually oracle-checked, and this query checks their
     COMPOSITION against one fully composed SQL oracle."""
-    from graph4code_spark.operators.packing import pack_sequences
-    from graph4code_spark.operators.scrub import (
-        contaminated_doc_ids,
-        drop_frequent_lines,
-        pii_features,
-    )
+    from graph4code_spark.operators.scrub import pii_features
+    from graph4code_spark.plans.corpus import CorpusConfig, clean, decontaminate, pack
 
-    d = F.col("doc_id")
+    cfg = CorpusConfig(out_dir="")  # in memory: no stage is written
     planted = _pii_planted(_t(spark, sf_dir, "documents"), phone=False)
     red = pii_features(planted, "t2").select(
         "doc_id", F.col("t2_redacted").alias("rt")
@@ -4167,34 +4134,14 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the in-query analogue of plans/corpus.py's 01_redacted parquet
     # boundary, which is what a 100 TB run writes instead
     red = red.localCheckpoint(eager=True)
-
-    bench = red.where(d % 50 == 0)
-    corpus = red.where(d % 50 != 0)
-    contaminated = contaminated_doc_ids(corpus, bench, "doc_id", "rt", k=4)
-    survivors = corpus.join(contaminated.select("doc_id"), "doc_id", "left_anti")
-
-    w = F.split(F.lower(F.trim(F.col("rt"))), r"\s+")
-    n = F.size(w)
-    lines = F.transform(
-        F.sequence(F.lit(1), F.ceil(n / F.lit(3.0)).cast("int")),
-        lambda i: F.array_join(F.slice(w, (i - 1) * 3 + 1, 3), " "),
-    )
-    chunked = survivors.select("doc_id", lines.alias("lines"))
-    cleaned = drop_frequent_lines(chunked, "doc_id", "lines", min_docs=3).select(
-        "doc_id", F.array_join("lines_kept", " ").alias("ct")
-    )
-    counted = cleaned.select(
-        "doc_id", whitespace_token_count(F.col("ct")).alias("nw")
-    ).where(F.col("nw") >= 10)
     # pack_sequences takes TWO actions (bucket-totals collect + the
     # final one); without a checkpoint each re-runs the whole
-    # redact→decontaminate→line-dedup chain.  The gated (doc_id, nw)
-    # manifest is tiny relative to the corpus — exactly what the staged
-    # plans/corpus.py pipeline writes as its 03→04 parquet boundary.
-    counted = counted.localCheckpoint(eager=True)
+    # redact→decontaminate→line-dedup chain.  The cleaned (doc_id, ct)
+    # table is the staged pipeline's 03_cleaned parquet boundary.
+    cleaned = clean(decontaminate(red, cfg), cfg).localCheckpoint(eager=True)
 
     return (
-        pack_sequences(counted, "doc_id", "nw", seq_len=64)
+        pack(cleaned, cfg)
         .orderBy("doc_id")
         .select(
             "doc_id",
@@ -4382,7 +4329,6 @@ SELECT vec_id, cluster FROM ranked WHERE rn <= 25 ORDER BY vec_id
 
 
 _BM25_QUERY_TERMS = ("spark", "table", "merge", "window")
-_BM25_K1, _BM25_B = 1.2, 0.75
 
 
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4395,8 +4341,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     math, floats rounded at the edge."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     terms = F.array(*[F.lit(t) for t in _BM25_QUERY_TERMS])
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    base = docs.select("doc_id", toks.alias("w")).select(
+    base = docs.select("doc_id", words(F.col("text")).alias("w")).select(
         "doc_id", F.size("w").alias("dl"), F.explode("w").alias("term")
     )
     n_avg = base.select(
@@ -4419,11 +4364,11 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "s",
             idf
-            * (F.col("tf") * (_BM25_K1 + 1))
+            * (F.col("tf") * (BM25_K1 + 1))
             / (
                 F.col("tf")
-                + _BM25_K1
-                * (1 - _BM25_B + _BM25_B * F.col("dl") / F.lit(float(avgdl)))
+                + BM25_K1
+                * (1 - BM25_B + BM25_B * F.col("dl") / F.lit(float(avgdl)))
             ),
         )
         .groupBy("doc_id")
@@ -4461,8 +4406,8 @@ scored AS (
   SELECT q.doc_id,
          round(sum(
            ln(1 + (s.n - d.df + 0.5) / (d.df + 0.5))
-           * (q.tf * ({_BM25_K1} + 1))
-           / (q.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * q.dl / s.avgdl))
+           * (q.tf * ({BM25_K1} + 1))
+           / (q.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * q.dl / s.avgdl))
          ), 6) AS score,
          CAST(count(*) AS BIGINT) AS n_terms_hit
   FROM qtf q JOIN dft d USING (term) CROSS JOIN stats s
@@ -4858,8 +4803,8 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         detect_language(t).alias("lang_detected"),
         "rep_dup_word_frac",
         "rep_top_bigram_frac",
-        *_quality_columns(t),
-        _fingerprint(t).alias("fp"),
+        *quality_columns(t),
+        doc_fingerprint(t).alias("fp"),
         F.md5("text").alias("doc_key"),
     )
 

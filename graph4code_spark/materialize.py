@@ -48,6 +48,16 @@ def dedup_quads(triples: DataFrame) -> DataFrame:
     return triples.dropDuplicates(TRIPLE_COLS)
 
 
+def _sink_frame(triples: DataFrame, buckets: int) -> DataFrame:
+    """The deduplicated quads plus the sink's two partition columns,
+    ``pred_name`` and ``subj_bucket``."""
+    return (
+        dedup_quads(triples)
+        .withColumn("pred_name", pred_short_name(F.col("pred")))
+        .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int"))
+    )
+
+
 def materialize_triples(
     triples: DataFrame,
     out_path: str,
@@ -58,9 +68,7 @@ def materialize_triples(
     t0 = time.time()
     obs = Observation()
     df = (
-        dedup_quads(triples)
-        .withColumn("pred_name", pred_short_name(F.col("pred")))
-        .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int"))
+        _sink_frame(triples, buckets)
         .observe(
             obs,
             F.count(F.lit(1)).alias("n_triples"),
@@ -116,11 +124,7 @@ def materialize_triples_iceberg(
     equivalents: Iceberg adds snapshot isolation + hidden partitioning on
     top of the identical physical layout.
     """
-    df = (
-        dedup_quads(triples)
-        .withColumn("pred_name", pred_short_name(F.col("pred")))
-        .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int"))
-    )
+    df = _sink_frame(triples, buckets)
     try:
         (
             df.writeTo(table)

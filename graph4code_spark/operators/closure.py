@@ -30,25 +30,17 @@ from pyspark.sql import functions as F
 from graph4code_spark.session import local_df
 
 
-def _driver_closure(edge_rows, seed_rows, direction: str):
-    """Driver-side min-hop closure (the small-graph fast path): BFS per
-    graph, per start node — same (src, dst, graph, min_hops) contract as
-    the distributed iteration, seeds/direction honored identically."""
+def _driver_closure(edge_rows, seed_rows):
+    """Driver-side forward min-hop closure (the small-graph fast path):
+    BFS per graph, per start node — same (src, dst, graph, min_hops)
+    contract as the distributed iteration, seeds honored identically."""
     from collections import defaultdict, deque
 
     fwd: dict = defaultdict(lambda: defaultdict(set))
     for s, d, g in edge_rows:
         fwd[g][s].add(d)
     out = []
-    for g, a in fwd.items():
-        if direction == "forward":
-            graph_adj = a
-        else:
-            rev: dict = defaultdict(set)
-            for s, ds in a.items():
-                for d in ds:
-                    rev[d].add(s)
-            graph_adj = rev
+    for g, graph_adj in fwd.items():
         if seed_rows is None:
             starts = set(graph_adj)
         else:
@@ -62,10 +54,7 @@ def _driver_closure(edge_rows, seed_rows, direction: str):
                     continue
                 dist[n] = h
                 dq.extend((m, h + 1) for m in graph_adj.get(n, ()) if m not in dist)
-            for n, h in dist.items():
-                out.append(
-                    (s0, n, g, h) if direction == "forward" else (n, s0, g, h)
-                )
+            out.extend((s0, n, g, h) for n, h in dist.items())
     return out
 
 
@@ -107,7 +96,8 @@ def transitive_closure(
     (direction="backward") is a seed are computed; base edges are
     pre-filtered to graphs containing at least one seed.  The result is
     identical to computing the full closure and filtering that endpoint,
-    at a fraction of the join work.
+    at a fraction of the join work.  A backward closure is the forward
+    closure of the reversed edges with its endpoints swapped back.
 
     ``small_graph_threshold`` — when the (seed-pruned) edge set is at
     most this many rows, the closure runs driver-side (BFS) and the
@@ -120,6 +110,14 @@ def transitive_closure(
     """
     if direction not in ("forward", "backward"):
         raise ValueError(f"direction must be forward|backward, got {direction!r}")
+    if direction == "backward":
+        # paths ending at a seed are the forward paths of the reversed
+        # edges starting at it, endpoints swapped back
+        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "graph")
+        out = transitive_closure(rev, max_hops, seeds, "forward", small_graph_threshold, stats)
+        return out.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"), "graph", "min_hops"
+        )
     base = edges.select("src", "dst", "graph").distinct()
     seed_nodes = None
     if seeds is not None:
@@ -135,7 +133,6 @@ def transitive_closure(
                 [(r["src"], r["dst"], r["graph"]) for r in edge_rows],
                 None if seed_nodes is None
                 else [(r["node"], r["graph"]) for r in seed_nodes.collect()],
-                direction,
             )
             if stats is not None:
                 stats.update(path="driver", rounds=0)
@@ -147,9 +144,8 @@ def transitive_closure(
     if stats is not None:
         stats.update(path="distributed")
     if seed_nodes is not None:
-        anchor = "src" if direction == "forward" else "dst"
         first = base.join(
-            seed_nodes.withColumnRenamed("node", anchor), [anchor, "graph"], "left_semi"
+            seed_nodes.withColumnRenamed("node", "src"), ["src", "graph"], "left_semi"
         )
     else:
         first = base
@@ -157,44 +153,24 @@ def transitive_closure(
     frontier = closure
     rounds = 1
     while True:
-        if direction == "forward":
-            # extend paths at the dst end: (seed..f_dst) + (f_dst -> e_dst)
-            hop = (
-                frontier.select(
-                    F.col("src").alias("f_src"), F.col("dst").alias("f_dst"),
-                    F.col("graph").alias("graph"), F.col("hops").alias("f_hops"),
-                )
-                .join(
-                    base.select(
-                        F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
-                        F.col("graph").alias("e_graph"),
-                    ),
-                    on=[F.col("f_dst") == F.col("e_src"), F.col("graph") == F.col("e_graph")],
-                )
-                .select(
-                    F.col("f_src").alias("src"), F.col("e_dst").alias("dst"),
-                    F.col("graph"), (F.col("f_hops") + 1).alias("hops"),
-                )
+        # extend paths at the dst end: (seed..f_dst) + (f_dst -> e_dst)
+        hop = (
+            frontier.select(
+                F.col("src").alias("f_src"), F.col("dst").alias("f_dst"),
+                F.col("graph").alias("graph"), F.col("hops").alias("f_hops"),
             )
-        else:
-            # extend paths at the src end: (e_src -> e_dst) + (e_dst..seed)
-            hop = (
-                frontier.select(
-                    F.col("src").alias("f_src"), F.col("dst").alias("f_dst"),
-                    F.col("graph").alias("graph"), F.col("hops").alias("f_hops"),
-                )
-                .join(
-                    base.select(
-                        F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
-                        F.col("graph").alias("e_graph"),
-                    ),
-                    on=[F.col("e_dst") == F.col("f_src"), F.col("graph") == F.col("e_graph")],
-                )
-                .select(
-                    F.col("e_src").alias("src"), F.col("f_dst").alias("dst"),
-                    F.col("graph"), (F.col("f_hops") + 1).alias("hops"),
-                )
+            .join(
+                base.select(
+                    F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
+                    F.col("graph").alias("e_graph"),
+                ),
+                on=[F.col("f_dst") == F.col("e_src"), F.col("graph") == F.col("e_graph")],
             )
+            .select(
+                F.col("f_src").alias("src"), F.col("e_dst").alias("dst"),
+                F.col("graph"), (F.col("f_hops") + 1).alias("hops"),
+            )
+        )
         nxt = hop.join(
             closure.select("src", "dst", "graph"), ["src", "dst", "graph"], "left_anti"
         ).distinct()

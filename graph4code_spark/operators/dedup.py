@@ -4,8 +4,9 @@ Four strategies, all DataFrame-first:
 
 - **exact**: hash-groupBy on content digest — one shuffle on the digest,
   map-side partial agg;
-- **MinHash + LSH**: word shingles → K minhashes (computed as K
-  `min(xxhash64(shingle, seed_k))` aggregations — pure JVM, no UDF) →
+- **MinHash + LSH**: word shingles (`textstats.word_kgrams`) → K
+  minhashes (computed as K `min(xxhash64(shingle, seed_k))`
+  aggregations — pure JVM, no UDF) →
   banded bucket join → candidate pairs → exact Jaccard verification →
   connected components → keep cluster minimum.  The classic near-dup
   path for ~10^12 documents: cost is O(docs × shingles) map side plus a
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph4code_spark.operators.canonicalize import connected_components
+from graph4code_spark.operators.textstats import word_kgrams
 
 
 # ---------------------------------------------------------------------------
@@ -60,23 +62,14 @@ def duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # shingling + minhash (pure column expressions)
 # ---------------------------------------------------------------------------
 
-def _words(text_col: str):
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-
-
 def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
-    """(id, shingle) distinct pairs; shingle = k consecutive words."""
-    w = _words(text_col)
-    n = F.size(w)
-    shingles = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.array_join(F.slice(w, i, k), " "),
-        ),
-    ).otherwise(F.array(F.array_join(w, " ")))
+    """(id, shingle) distinct pairs; shingle = a word ``k``-gram
+    (`textstats.word_kgrams`: the whole text when shorter than ``k``)."""
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(shingles).alias("shingle"))
+        df.select(
+            F.col(id_col).alias("id"),
+            F.explode(word_kgrams(F.col(text_col), k)).alias("shingle"),
+        )
         .distinct()
     )
 

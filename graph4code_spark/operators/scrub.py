@@ -3,8 +3,9 @@ between crawl and tokenizer: PII redaction, CCNet-style frequent-line
 removal, and benchmark decontamination.
 
 All three are pure `pyspark.sql.functions` column expressions plus the
-minimum shuffles their semantics require — no Python in the hot path,
-whole-stage codegen end to end.
+minimum shuffles their semantics require — no Python UDF.  Lines and
+grams are built on `textstats.words`/`textstats.word_kgrams`, the one
+word split of the text operators.
 
 Scale notes (the 100 TB shapes):
 - PII redaction is a stateless map — zero shuffle, scales with input.
@@ -25,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from graph4code_spark.operators.textstats import word_kgrams, words
 
 #: detection patterns restricted to the syntax shared by Java regex
 #: (Spark) and RE2 (DuckDB oracles): no backrefs, no lookaround.
@@ -80,6 +83,17 @@ def frequent_lines(
     )
 
 
+def word_lines(text: Column, c: int) -> Column:
+    """The lowercased words of ``text`` chunked into lines of ``c`` words
+    (the last line may be shorter): the line shape `drop_frequent_lines`
+    runs on for text without newlines."""
+    w = words(text)
+    return F.transform(
+        F.sequence(F.lit(1), F.ceil(F.size(w) / F.lit(float(c))).cast("int")),
+        lambda i: F.array_join(F.slice(w, (i - 1) * c + 1, c), " "),
+    )
+
+
 def drop_frequent_lines(
     df: DataFrame, id_col: str, lines_col: str, min_docs: int
 ) -> DataFrame:
@@ -117,18 +131,6 @@ def drop_frequent_lines(
             F.col("n_lines").cast("int"),
             (F.col("n_lines") - F.size(kept_arr)).cast("int").alias("n_dropped"),
         )
-    )
-
-
-def word_kgrams(text: Column, k: int) -> Column:
-    """All word ``k``-grams of the lowercased text, in order; a doc
-    shorter than ``k`` words yields its whole text as the single gram
-    (the minimal witness, so no doc silently opts out)."""
-    w = F.split(F.lower(F.trim(text)), r"\s+")
-    n = F.size(w)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(w, i, k), " "),
     )
 
 

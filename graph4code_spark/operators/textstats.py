@@ -1,6 +1,8 @@
-"""Text analysis operators: language-ID, quality scoring, token counting,
-document fingerprinting.  All pure `pyspark.sql.functions` — whole-stage
-codegen end to end, no Python.
+"""Text analysis operators: the word split and word k-grams the other
+text operators build on, language-ID, quality columns, token counting,
+repetition signals and document fingerprinting.  All pure
+`pyspark.sql.functions` column expressions, no Python UDF; the
+`transform`/`filter` lambdas evaluate interpreted.
 """
 
 from __future__ import annotations
@@ -21,8 +23,21 @@ _STOPWORDS = {
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
 
 
-def _words(text: Column) -> Column:
+def words(text: Column) -> Column:
+    """The lowercased words of ``text``: the one word split of the text
+    operators (an empty text is the single word ``""``)."""
     return F.split(F.lower(F.trim(text)), r"\s+")
+
+
+def word_kgrams(text: Column, k: int) -> Column:
+    """All word ``k``-grams of the lowercased text, in order; a doc
+    shorter than ``k`` words yields its whole text as the single gram
+    (the minimal witness, so no doc silently opts out)."""
+    w = words(text)
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(w) - (k - 1), F.lit(1))),
+        lambda i: F.array_join(F.slice(w, i, k), " "),
+    )
 
 
 def whitespace_token_count(text: Column) -> Column:
@@ -36,7 +51,7 @@ def bpe_token_count(text: Column) -> Column:
 
 def stopword_ratio(text: Column, lang: str = "en") -> Column:
     sw = F.array(*[F.lit(s) for s in _STOPWORDS[lang]])
-    w = _words(text)
+    w = words(text)
     hits = F.size(F.filter(w, lambda x: F.array_contains(sw, x)))
     return hits / F.greatest(F.size(w), F.lit(1))
 
@@ -53,33 +68,23 @@ def detect_language(text: Column) -> Column:
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def quality_features(df: DataFrame, text_col: str) -> DataFrame:
-    """Per-doc quality features + a composite [0,1] score (length,
-    punctuation ratio, stopword ratio, mean word length) — the standard
-    web-corpus filters."""
-    t = F.col(text_col)
-    w = _words(t)
-    n_chars = F.length(t)
-    n_words = whitespace_token_count(t)
-    punct = F.size(F.regexp_extract_all(t, F.lit(r"[^\w\s]"), 0))
-    mean_wl = F.when(n_words > 0, n_chars / n_words).otherwise(F.lit(0.0))
-    sw_ratio = stopword_ratio(t, "en")
-    punct_ratio = punct / F.greatest(n_chars, F.lit(1))
-    score = (
-        F.when((n_words >= 10) & (n_words <= 100000), F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when((mean_wl >= 3) & (mean_wl <= 12), F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(sw_ratio >= 0.05, F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(punct_ratio <= 0.2, F.lit(0.25)).otherwise(F.lit(0.0))
-    )
-    return df.select(
-        "*",
-        n_chars.alias("q_chars"),
-        n_words.cast("int").alias("q_words"),
-        F.round(mean_wl, 4).alias("q_mean_word_len"),
-        F.round(sw_ratio, 4).alias("q_stopword_ratio"),
-        F.round(punct_ratio, 4).alias("q_punct_ratio"),
-        score.alias("q_score"),
-    )
+def punct_ratio(text: Column) -> Column:
+    """Share of the characters that are neither word characters nor
+    whitespace (unrounded)."""
+    punct = F.size(F.regexp_extract_all(text, F.lit(r"[^\w\s]"), 0))
+    return punct / F.greatest(F.length(text), F.lit(1))
+
+
+def quality_columns(text: Column) -> list[Column]:
+    """The per-doc quality columns of the standard web-corpus filters:
+    ``q_chars``, ``q_words``, and the English stopword and punctuation
+    ratios rounded to 6 places."""
+    return [
+        F.length(text).cast("long").alias("q_chars"),
+        whitespace_token_count(text).cast("long").alias("q_words"),
+        F.round(stopword_ratio(text, "en"), 6).alias("q_stopword_ratio"),
+        F.round(punct_ratio(text), 6).alias("q_punct_ratio"),
+    ]
 
 
 def repetition_features(df: DataFrame, text_col: str, max_words: int = 200) -> DataFrame:
@@ -88,9 +93,9 @@ def repetition_features(df: DataFrame, text_col: str, max_words: int = 200) -> D
     per-doc work is bounded (O(max_words²) worst case for the bigram
     mode count) regardless of document length — at corpus scale a
     runaway 10 MB document must not dominate its task.  Pure column
-    expressions, whole-stage codegen."""
+    expressions."""
     t = F.col(text_col)
-    w = F.slice(_words(t), 1, max_words)
+    w = F.slice(words(t), 1, max_words)
     n = F.size(w)
     dup_word = F.when(
         n > 0, 1 - F.size(F.array_distinct(w)) / n.cast("double")
@@ -119,16 +124,7 @@ def repetition_features(df: DataFrame, text_col: str, max_words: int = 200) -> D
     )
 
 
-def doc_fingerprint(text: Column, window: int = 5) -> Column:
-    """Winnowing-style fingerprint: min over rolling word-5-gram hashes —
-    stable under small edits, one 64-bit value per doc."""
-    w = _words(text)
-    n = F.size(w)
-    grams = F.when(
-        n >= window,
-        F.transform(
-            F.sequence(F.lit(1), n - (window - 1)),
-            lambda i: F.xxhash64(F.array_join(F.slice(w, i, window), " ")),
-        ),
-    ).otherwise(F.array(F.xxhash64(F.array_join(w, " "))))
-    return F.array_min(grams)
+def doc_fingerprint(text: Column) -> Column:
+    """Winnowing fingerprint: the least md5 of the word 5-grams (of the
+    whole text when shorter) — stable under small edits."""
+    return F.array_min(F.transform(word_kgrams(text, 5), lambda g: F.md5(g)))

@@ -10,6 +10,11 @@ The parquet boundaries are also where a 100 TB run wants its barriers:
 the redacted table is the reusable corpus-of-record, the cleaned table
 is what the tokenizer consumes, the packed table is the training
 manifest.
+
+The stages after redaction are module functions of (input, config):
+`run_corpus_pipeline` wraps each in `StageRunner.run`, and the
+registered `corpus_pipeline` query calls the same functions in memory,
+so the stage literals live only in `CorpusConfig`'s defaults.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from graph4code_spark.operators.scrub import (
     contaminated_doc_ids,
     drop_frequent_lines,
     pii_features,
+    word_lines,
 )
 from graph4code_spark.operators.textstats import whitespace_token_count
 from graph4code_spark.plans.pipeline import StageRunner
@@ -49,6 +55,33 @@ class CorpusConfig:
         return hashlib.md5(basis.encode()).hexdigest()[:12]
 
 
+def decontaminate(red: DataFrame, cfg: CorpusConfig) -> DataFrame:
+    """(doc_id, rt) minus the benchmark slice (``doc_id % bench_mod ==
+    0``) and every corpus doc sharing a word ``gram_k``-gram with it."""
+    bench = red.where(F.col("doc_id") % cfg.bench_mod == 0)
+    corpus = red.where(F.col("doc_id") % cfg.bench_mod != 0)
+    hit = contaminated_doc_ids(corpus, bench, "doc_id", "rt", k=cfg.gram_k)
+    return corpus.join(hit.select("doc_id"), "doc_id", "left_anti")
+
+
+def clean(surv: DataFrame, cfg: CorpusConfig) -> DataFrame:
+    """(doc_id, ct): ``rt`` chunked into ``line_words``-word lines, the
+    lines found in ``min_docs`` or more docs dropped."""
+    chunked = surv.select("doc_id", word_lines(F.col("rt"), cfg.line_words).alias("lines"))
+    return drop_frequent_lines(
+        chunked, "doc_id", "lines", min_docs=cfg.min_docs
+    ).select("doc_id", F.array_join("lines_kept", " ").alias("ct"))
+
+
+def pack(cleaned: DataFrame, cfg: CorpusConfig) -> DataFrame:
+    """Docs of at least ``min_tokens`` words of ``ct``, packed into
+    ``seq_len``-token sequences (`pack_sequences`)."""
+    counted = cleaned.select(
+        "doc_id", whitespace_token_count(F.col("ct")).alias("nw")
+    ).where(F.col("nw") >= cfg.min_tokens)
+    return pack_sequences(counted, "doc_id", "nw", seq_len=cfg.seq_len)
+
+
 def run_corpus_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -68,34 +101,8 @@ def run_corpus_pipeline(
             "doc_id", F.col("text_redacted").alias("rt")
         ),
     )
-
-    def _decontaminate():
-        bench = red.where(F.col("doc_id") % cfg.bench_mod == 0)
-        corpus = red.where(F.col("doc_id") % cfg.bench_mod != 0)
-        hit = contaminated_doc_ids(corpus, bench, "doc_id", "rt", k=cfg.gram_k)
-        return corpus.join(hit.select("doc_id"), "doc_id", "left_anti")
-
-    surv = runner.run("02_decontaminated", _decontaminate, deps=["01_redacted"])
-
-    def _clean():
-        w = F.split(F.lower(F.trim(F.col("rt"))), r"\s+")
-        n = F.size(w)
-        c = cfg.line_words
-        lines = F.transform(
-            F.sequence(F.lit(1), F.ceil(n / F.lit(float(c))).cast("int")),
-            lambda i: F.array_join(F.slice(w, (i - 1) * c + 1, c), " "),
-        )
-        chunked = surv.select("doc_id", lines.alias("lines"))
-        return drop_frequent_lines(
-            chunked, "doc_id", "lines", min_docs=cfg.min_docs
-        ).select("doc_id", F.array_join("lines_kept", " ").alias("ct"))
-
-    cleaned = runner.run("03_cleaned", _clean, deps=["02_decontaminated"])
-
-    def _pack():
-        counted = cleaned.select(
-            "doc_id", whitespace_token_count(F.col("ct")).alias("nw")
-        ).where(F.col("nw") >= cfg.min_tokens)
-        return pack_sequences(counted, "doc_id", "nw", seq_len=cfg.seq_len)
-
-    return runner.run("04_packed", _pack, deps=["03_cleaned"])
+    surv = runner.run(
+        "02_decontaminated", lambda: decontaminate(red, cfg), deps=["01_redacted"]
+    )
+    cleaned = runner.run("03_cleaned", lambda: clean(surv, cfg), deps=["02_decontaminated"])
+    return runner.run("04_packed", lambda: pack(cleaned, cfg), deps=["03_cleaned"])

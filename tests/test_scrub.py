@@ -10,8 +10,8 @@ from graph4code_spark.operators.scrub import (
     contaminated_doc_ids,
     drop_frequent_lines,
     pii_features,
-    word_kgrams,
 )
+from graph4code_spark.operators.textstats import word_kgrams
 
 _PII_DOCS = [
     (1, "mail a.b_c%x+1@foo-bar.example.COM and 10.0.255.7 now"),
@@ -81,10 +81,16 @@ def test_word_kgrams_short_doc_yields_whole_text(spark):
     df = spark.range(1).select(
         word_kgrams(F.lit("Only two"), 5).alias("g"),
         word_kgrams(F.lit("a b c d"), 3).alias("g3"),
+        word_kgrams(F.lit(""), 3).alias("empty"),
+        word_kgrams(F.lit("  one  "), 3).alias("one"),
+        word_kgrams(F.lit("A b\tC"), 3).alias("exact_k"),
     )
     row = df.first()
     assert row["g"] == ["only two"]
     assert row["g3"] == ["a b c", "b c d"]
+    assert row["empty"] == [""]
+    assert row["one"] == ["one"]
+    assert row["exact_k"] == ["a b c"]
 
 
 def test_contaminated_doc_ids(spark):

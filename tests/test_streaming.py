@@ -187,15 +187,15 @@ def test_stateless_hygiene_ops_compose_with_streams(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from graph4code_spark.operators.scrub import pii_features
-    from graph4code_spark.operators.textstats import quality_features
+    from graph4code_spark.operators.textstats import quality_columns
 
     in_dir = str(tmp_path / "pages_h")
     synth_pages(spark, 30, seed=5).write.parquet(in_dir)
 
     def hygiene(df):
         return pii_features(
-            quality_features(df.select("url", "text"), "text"), "text"
-        ).select("url", "q_words", "q_score", "pii_email", "text_redacted")
+            df.select("url", "text", *quality_columns(F.col("text"))), "text"
+        ).select("url", "q_words", "q_punct_ratio", "pii_email", "text_redacted")
 
     q = (
         hygiene(read_page_stream(spark, in_dir))
@@ -204,11 +204,11 @@ def test_stateless_hygiene_ops_compose_with_streams(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = {
-        r["url"]: (r["q_words"], r["q_score"], r["pii_email"], r["text_redacted"])
+        r["url"]: (r["q_words"], r["q_punct_ratio"], r["pii_email"], r["text_redacted"])
         for r in spark.sql("select * from hygiene_stream").collect()
     }
     want = {
-        r["url"]: (r["q_words"], r["q_score"], r["pii_email"], r["text_redacted"])
+        r["url"]: (r["q_words"], r["q_punct_ratio"], r["pii_email"], r["text_redacted"])
         for r in hygiene(spark.read.parquet(in_dir)).collect()
     }
     assert got == want and len(got) == 30

@@ -4,7 +4,7 @@ from graph4code_spark.operators.textstats import (
     bpe_token_count,
     detect_language,
     doc_fingerprint,
-    quality_features,
+    quality_columns,
     whitespace_token_count,
 )
 
@@ -37,17 +37,24 @@ def test_language_detection(spark):
 
 
 def test_quality_and_fingerprint(spark):
-    good = "the quick brown fox jumps over the lazy dog and keeps running for a while"
+    good = "the quick brown fox jumps over the lazy dog and keeps running for a while longer"
     bad = "!!! ??? ### $$$ %%%"
-    df = spark.createDataFrame([(1, good), (2, bad)], "id long, text string")
-    q = {r.id: r.q_score for r in quality_features(df, "text").collect()}
-    assert q[1] > q[2]
+    short = "Three Word doc"
+    df = spark.createDataFrame([(1, good), (2, bad), (3, short)], "id long, text string")
+    q = {r.id: r for r in df.select("id", *quality_columns(F.col("text"))).collect()}
+    # good: 16 words, 5 stopwords (the, the, and, for, a), no punctuation
+    assert (q[1].q_chars, q[1].q_words) == (len(good), 16)
+    assert (q[1].q_stopword_ratio, q[1].q_punct_ratio) == (0.3125, 0.0)
+    # bad: 15 of its 19 characters are punctuation, rounded to 6 places
+    assert (q[2].q_words, q[2].q_stopword_ratio, q[2].q_punct_ratio) == (5, 0.0, 0.789474)
 
-    fp = df.select("id", doc_fingerprint(F.col("text")).alias("fp")).collect()
-    fps = {r.id: r.fp for r in fp}
-    # deterministic + distinct for different docs
-    fp2 = {r.id: r.fp for r in df.select("id", doc_fingerprint(F.col("text")).alias("fp")).collect()}
-    assert fps == fp2 and fps[1] != fps[2]
+    fp = df.select("id", doc_fingerprint(F.col("text")).alias("fp"))
+    fps = {r.id: r.fp for r in fp.collect()}
+    # the least md5 of the word 5-grams ("the quick brown fox jumps")
+    assert fps[1] == "170077285ecc90bfc4f817925c083ee9"
+    # shorter than 5 words: md5 of the whole lowercased text, "three word doc"
+    assert fps[3] == "aa3638b3b0661a1990cc4ff447ac887f"
+    assert fps[2] != fps[1]
 
 
 def test_repetition_features(spark):
