@@ -47,7 +47,7 @@ from graph4code_spark.operators.dedup import (
 from graph4code_spark.operators.linking import BM25_B, BM25_K1
 from graph4code_spark.operators.multimodal import extract_media_features, synth_media
 from graph4code_spark.operators.sampling import stratified_hash_sample
-from graph4code_spark.operators.similarity import brute_force_topk, lsh_topk
+from graph4code_spark.operators.similarity import as_double, brute_force_topk, lsh_topk
 from graph4code_spark.operators.textstats import (
     _STOPWORDS,
     TOKEN_REGEX,
@@ -368,6 +368,70 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id")
 
 
+def _sql_cc_survivors(table: str, id_col: str) -> str:
+    """The tail of a near-dup oracle: connected components of the
+    verified VARCHAR pairs ``ver(s, d)`` by a recursive CTE, canon = the
+    LEXICOGRAPHIC min (the Spark operator works on string ids), and the
+    ``table`` rows that are not a cluster's non-minimum member."""
+    return f"""edges AS (SELECT s, d FROM ver UNION SELECT d, s FROM ver),
+reach(s, d) AS (
+  SELECT s, d FROM edges
+  UNION
+  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
+),
+canon AS (SELECT s, least(s, min(d)) AS c FROM reach GROUP BY s),
+dropped AS (SELECT CAST(s AS BIGINT) AS {id_col} FROM canon WHERE c < s)
+SELECT {id_col} FROM {table} WHERE {id_col} NOT IN (SELECT {id_col} FROM dropped)
+"""
+
+
+def _sql_cosine(a: str, b: str) -> str:
+    """The oracles' cosine of two DOUBLE[] expressions."""
+    return (f"list_dot_product({a}, {b}) /\n"
+            f"  (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))")
+
+
+def _sql_vectors(matrix) -> str:
+    """The VALUES rows ``(i, [x, ...])`` of a literal vector table, each
+    double printed with all its digits."""
+    return ",\n".join(
+        "(%d, [%s])" % (i, ", ".join("%.17g" % x for x in row))
+        for i, row in enumerate(matrix)
+    )
+
+
+def _sql_top10(scored: str) -> str:
+    """The tail of a top-k oracle: rank ``scored``'s (query_id, vec_id,
+    cosine) rows per query, cosine descending and vec_id ascending, and
+    keep the first 10 with the cosine rounded to 6 places."""
+    return f"""topk AS (
+  SELECT query_id, vec_id, cosine,
+         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
+  FROM {scored}
+)
+SELECT query_id, vec_id, round(cosine, 6) AS cosine, CAST(rank AS BIGINT) AS rank
+FROM topk WHERE rank <= 10
+"""
+
+
+def _top10(emb: DataFrame, search, **kw) -> DataFrame:
+    """A top-k row: ``search`` ranks the ``emb`` vectors for the query
+    points vec_id < 5 (k = 10), cosine rounded to 6 places."""
+    queries = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    return search(emb, queries, k=10, **kw).select(
+        "query_id", "vec_id", F.round("cosine", 6).alias("cosine"),
+        F.col("rank").cast("long").alias("rank"),
+    )
+
+
+def _double_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _t(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("embedding")
+    )
+
+
 _ORACLE_DEDUP_MINHASH_MD5 = """
 WITH RECURSIVE
 base AS (
@@ -413,16 +477,7 @@ ver AS (
   FROM common cm2 JOIN sizes za ON za.doc_id = cm2.a JOIN sizes zb ON zb.doc_id = cm2.b2
   WHERE CAST(cm2.cm AS DOUBLE) / (za.n + zb.n - cm2.cm) >= 0.7
 ),
-edges AS (SELECT s, d FROM ver UNION SELECT d, s FROM ver),
-reach(s, d) AS (
-  SELECT s, d FROM edges
-  UNION
-  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-),
-canon AS (SELECT s, least(s, min(d)) AS c FROM reach GROUP BY s),
-dropped AS (SELECT CAST(s AS BIGINT) AS doc_id FROM canon WHERE c < s)
-SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-"""
+""" + _sql_cc_survivors("documents", "doc_id")
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -477,18 +532,15 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph4code_spark.operators.dedup import embedding_cosine_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
-    p = embedding_cosine_pairs(emb, "embedding", "vec_id", threshold=0.4)
+    p = embedding_cosine_pairs(emb, threshold=0.4)
     return p.select("a", "b", F.round("cosine", 6).alias("cosine"))
 
 
-_ORACLE_DEDUP_EMBEDDING = """
+_ORACLE_DEDUP_EMBEDDING = f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
-SELECT a.vec_id AS a, b.vec_id AS b,
-       round(list_dot_product(a.e, b.e) /
-             (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))), 6) AS cosine
+SELECT a.vec_id AS a, b.vec_id AS b, round({_sql_cosine("a.e", "b.e")}, 6) AS cosine
 FROM v a JOIN v b ON a.vec_id < b.vec_id
-WHERE list_dot_product(a.e, b.e) /
-      (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) >= 0.4
+WHERE {_sql_cosine("a.e", "b.e")} >= 0.4
 """
 
 
@@ -509,16 +561,11 @@ def _oracle_dedup_embedding_lsh() -> str:
     ids are compared as VARCHAR."""
     from graph4code_spark.operators.similarity import _planes
 
-    planes = _planes(64, 6, 42)
-    rows = ",\n".join(
-        "(%d, [%s])" % (p, ", ".join("%.17g" % x for x in planes[p]))
-        for p in range(6)
-    )
     return f"""
 WITH RECURSIVE
 v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 planes(p, w) AS (VALUES
-{rows}
+{_sql_vectors(_planes(64, 6, 42))}
 ),
 b AS (
   SELECT vec_id, SUM(CASE WHEN list_dot_product(e, w) > 0
@@ -532,66 +579,28 @@ ver AS (
   SELECT CAST(x.vec_id AS VARCHAR) AS s, CAST(y.vec_id AS VARCHAR) AS d
   FROM eligible x JOIN eligible y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
   JOIN v va ON va.vec_id = x.vec_id JOIN v vb ON vb.vec_id = y.vec_id
-  WHERE list_dot_product(va.e, vb.e) /
-        (sqrt(list_dot_product(va.e, va.e)) * sqrt(list_dot_product(vb.e, vb.e))) >= 0.4
+  WHERE {_sql_cosine("va.e", "vb.e")} >= 0.4
 ),
-edges AS (SELECT s, d FROM ver UNION SELECT d, s FROM ver),
-reach(s, d) AS (
-  SELECT s, d FROM edges
-  UNION
-  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-),
-canon AS (SELECT s, least(s, min(d)) AS c FROM reach GROUP BY s),
-dropped AS (SELECT CAST(s AS BIGINT) AS vec_id FROM canon WHERE c < s)
-SELECT vec_id FROM embeddings
-WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-"""
+{_sql_cc_survivors("embeddings", "vec_id")}"""
 
 
 def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    queries = (
-        emb.where(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    )
-    out = brute_force_topk(emb, queries, k=10)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _top10(_double_embeddings(spark, sf_dir), brute_force_topk)
 
 
-_ORACLE_COSINE_TOPK = """
+_ORACLE_COSINE_TOPK = f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
 scored AS (
-  SELECT q.query_id, v.vec_id,
-         list_dot_product(v.e, q.qe) /
-           (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(q.qe, q.qe))) AS cosine
+  SELECT q.query_id, v.vec_id, {_sql_cosine("v.e", "q.qe")} AS cosine
   FROM v CROSS JOIN q
-), ranked AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, round(cosine, 6) AS cosine, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 10
-"""
+),
+{_sql_top10("scored")}"""
 
 
 def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = (
-        emb.where(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    )
-    out = lsh_topk(emb, queries, dim=64, k=10, n_planes=8)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    # the float arrays go uncast into the bucketing and the cosine
+    return _top10(_t(spark, sf_dir, "embeddings"), lsh_topk, dim=64, n_planes=8)
 
 
 def _oracle_sim_lsh_topk() -> str:
@@ -601,17 +610,12 @@ def _oracle_sim_lsh_topk() -> str:
     literal vectors.  Independent of the Arrow/numpy implementation."""
     from graph4code_spark.operators.similarity import _planes
 
-    planes = _planes(64, 8, 42)
-    rows = ",\n".join(
-        "(%d, [%s])" % (p, ", ".join("%.17g" % x for x in planes[p]))
-        for p in range(8)
-    )
     # embeddings are float32 in parquet; Spark's numpy path promotes to
     # float64 per element, matching CAST(embedding AS DOUBLE[])
     return f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 planes(p, w) AS (VALUES
-{rows}
+{_sql_vectors(_planes(64, 8, 42))}
 ),
 b AS (
   SELECT vec_id, CAST(SUM(CASE WHEN list_dot_product(e, w) > 0
@@ -623,21 +627,12 @@ cand AS (
   SELECT qb.query_id, b.vec_id FROM b JOIN qb USING (bucket)
 ),
 scored AS (
-  SELECT c.query_id, c.vec_id,
-         list_dot_product(v.e, q.e) /
-           (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(q.e, q.e))) AS cosine
+  SELECT c.query_id, c.vec_id, {_sql_cosine("v.e", "q.e")} AS cosine
   FROM cand c
   JOIN v ON v.vec_id = c.vec_id
   JOIN v q ON q.vec_id = c.query_id
 ),
-ranked AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, round(cosine, 6) AS cosine, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 10
-"""
+{_sql_top10("scored")}"""
 
 
 # The per-doc text components: `text_profile` runs their column
@@ -3080,32 +3075,16 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole path in SQL with the centroids embedded as literals."""
     from graph4code_spark.operators.similarity import ivf_topk
 
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    queries = (
-        emb.where(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    )
-    out = ivf_topk(emb, queries, dim=64, k=10, n_lists=8, nprobe=2, seed=42)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _top10(_double_embeddings(spark, sf_dir), ivf_topk, dim=64, n_lists=8, nprobe=2)
 
 
 def _oracle_sim_ivf_topk() -> str:
     from graph4code_spark.operators.similarity import ivf_centroids
 
-    cents = ivf_centroids(64, 8, 42)
-    rows = ",\n".join(
-        "(%d, [%s])" % (i, ", ".join("%.17g" % x for x in cents[i]))
-        for i in range(8)
-    )
     return f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 cents(list_id, c) AS (VALUES
-{rows}
+{_sql_vectors(ivf_centroids(64, 8, 42))}
 ),
 scored AS (
   SELECT vec_id, list_id, round(list_dot_product(e, c), 6) AS d
@@ -3122,21 +3101,12 @@ cand AS (
   SELECT DISTINCT ql.query_id, vl.vec_id FROM vl JOIN ql USING (list_id)
 ),
 rescored AS (
-  SELECT c.query_id, c.vec_id,
-         list_dot_product(v.e, q.e) /
-           (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(q.e, q.e))) AS cosine
+  SELECT c.query_id, c.vec_id, {_sql_cosine("v.e", "q.e")} AS cosine
   FROM cand c
   JOIN v ON v.vec_id = c.vec_id
   JOIN v q ON q.vec_id = c.query_id
 ),
-topk AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM rescored
-)
-SELECT query_id, vec_id, round(cosine, 6) AS cosine, CAST(rank AS BIGINT) AS rank
-FROM topk WHERE rank <= 10
-"""
+{_sql_top10("rescored")}"""
 
 
 # ---------------------------------------------------------------------------
@@ -3607,7 +3577,7 @@ def q_doc_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     decided by an md5-prefix threshold — a pure map-side filter (no RNG
     state, no shuffle), identical at any parallelism/retry."""
     docs = _t(spark, sf_dir, "documents")
-    out = stratified_hash_sample(docs, "doc_id", "source", _source_rate())
+    out = stratified_hash_sample(docs, "doc_id", _source_rate())
     return out.select(F.col("doc_id").cast("long").alias("doc_id"), "source", "h2")
 
 
@@ -3675,7 +3645,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wdd = W.partitionBy(F.md5("text")).orderBy("doc_id")
     base = base.withColumn("rn", F.row_number().over(wdd)).where(F.col("rn") == 1)
     return (
-        stratified_hash_sample(base, "doc_id", "source", _source_rate())
+        stratified_hash_sample(base, "doc_id", _source_rate())
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -4006,7 +3976,7 @@ def q_emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-_ORACLE_EMB_QUANTIZE = """
+_ORACLE_EMB_QUANTIZE = f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 s AS (
   SELECT vec_id, e,
@@ -4032,8 +4002,7 @@ SELECT vec_id,
   round(list_max(list_transform(generate_series(1, len(e)),
         i -> abs(e[i] - deq[i]))), 6) AS q_max_abs_err,
   round(CASE WHEN list_dot_product(e, e) > 0 AND list_dot_product(deq, deq) > 0
-        THEN list_dot_product(e, deq) /
-             (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(deq, deq)))
+        THEN {_sql_cosine("e", "deq")}
         ELSE 1.0 END, 6) AS q_cosine
 FROM d ORDER BY vec_id
 """
@@ -4243,14 +4212,10 @@ def _oracle_kmeans_clusters() -> str:
     from graph4code_spark.operators.similarity import ivf_centroids
 
     cents = [[round(float(x), 6) for x in row] for row in ivf_centroids(64, 4, 7)]
-    rows = ",\n".join(
-        "(%d, [%s])" % (i, ", ".join("%.17g" % x for x in cents[i]))
-        for i in range(4)
-    )
     return f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 c0(cl, c) AS (VALUES
-{rows}
+{_sql_vectors(cents)}
 ),
 s0 AS (
   SELECT vec_id, e, cl,

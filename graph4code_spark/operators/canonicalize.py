@@ -79,6 +79,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
 #: comes back as an Arrow-built frame (``local_df``), so downstream scans
 #: of it start no Python worker.
 SMALL_GRAPH_EDGES = 200_000
+#: bound on the large-star/small-star rounds of the distributed path
+MAX_ROUNDS = 25
 
 
 def _union_find_mapping(edge_rows) -> list[tuple[str, str]]:
@@ -102,7 +104,7 @@ def _union_find_mapping(edge_rows) -> list[tuple[str, str]]:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 25,
+    edges: DataFrame,
     small_graph_threshold: int = SMALL_GRAPH_EDGES,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -124,7 +126,7 @@ def connected_components(
     cur = cur.localCheckpoint(eager=True)
     prev_sig = None
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         rounds += 1
         # convergence: edge-set signature (count + hash sum) is stable
@@ -149,12 +151,9 @@ def connected_components(
     return mapping
 
 
-def canonical_mapping(class_map: DataFrame, extra_edges: DataFrame | None = None) -> DataFrame:
-    """Alias pairs (+ optional co-reference edges) → (name, canon)."""
-    edges = symmetric_alias_edges(class_map)
-    if extra_edges is not None:
-        edges = edges.unionByName(extra_edges.select("src", "dst")).distinct()
-    return connected_components(edges)
+def canonical_mapping(class_map: DataFrame) -> DataFrame:
+    """Alias pairs → (name, canon)."""
+    return connected_components(symmetric_alias_edges(class_map))
 
 
 def same_as_triples(mapping: DataFrame) -> DataFrame:

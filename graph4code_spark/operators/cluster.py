@@ -32,21 +32,15 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph4code_spark.operators.similarity import ivf_centroids
+from graph4code_spark.operators.similarity import as_double, dot, ivf_centroids, lit_vector
 
 
 def _assign(df: DataFrame, id_col: str, cents: list[list[float]]) -> DataFrame:
     """(id, vec, cluster, dist) — nearest centroid by squared L2 via the
     literal-projection trick; key rounded to 6 dp, cluster tie-break."""
-    def dot(a, b_lit):
-        return F.aggregate(
-            F.zip_with(a, b_lit, lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-
     scored = []
     for ci, c in enumerate(cents):
-        lit = F.array(*[F.lit(float(x)) for x in c])
+        lit = lit_vector(c)
         key = F.round(dot(lit, lit) - 2 * dot(F.col("vec"), lit), 6)
         scored.append(F.struct(key.alias("d"), F.lit(ci).alias("cluster")))
     best = F.sort_array(F.array(*scored))[0]
@@ -72,7 +66,7 @@ def kmeans_fit(
     centroid."""
     base = df.select(
         F.col(id_col).alias("_kid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
+        as_double(F.col(vec_col)).alias("vec"),
     )
     cents = [[round(float(x), 6) for x in row] for row in ivf_centroids(dim, k, seed)]
     assigned = _assign(base, "_kid", cents)

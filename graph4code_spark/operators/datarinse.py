@@ -47,23 +47,17 @@ SCRIPTS_PER_DATASET = 5
 READ_CSV_RE = r"read_csv\(['\"]?(?:[^'\"()]*/)?([^'\"()/]+?\.csv)"
 
 
-def dataset_script_index(
-    mentions: DataFrame,
-    line_col: str = "line",
-    script_col: str = "script",
-    order_col: str = "script",
-    min_mentions: int = MIN_MENTIONS,
-    top_datasets: int = TOP_DATASETS,
-    scripts_per_dataset: int = SCRIPTS_PER_DATASET,
-) -> DataFrame:
-    """One row per (dataset, witness script) for the association index.
+def dataset_script_index(mentions: DataFrame, order_col: str = "script") -> DataFrame:
+    """One row per (dataset, witness script) for the association index,
+    over (script, line) mention rows whose witnesses order by
+    ``order_col``.
 
     Output: ``csv`` (dataset basename), ``n_mentions`` (corpus support),
-    ``script_rank`` (1-based, ≤ scripts_per_dataset), ``script``."""
+    ``script_rank`` (1-based, ≤ SCRIPTS_PER_DATASET), ``script``."""
     obs = (
         mentions.select(
-            F.regexp_extract(F.col(line_col), READ_CSV_RE, 1).alias("csv"),
-            F.col(script_col).alias("script"),
+            F.regexp_extract(F.col("line"), READ_CSV_RE, 1).alias("csv"),
+            "script",
             F.col(order_col).alias("_ord"),
         )
         .where(F.col("csv") != "")
@@ -71,13 +65,13 @@ def dataset_script_index(
     support = (
         obs.groupBy("csv")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .where(F.col("n_mentions") > min_mentions)
+        .where(F.col("n_mentions") > MIN_MENTIONS)
         .orderBy(F.desc("n_mentions"), F.asc("csv"))
-        .limit(top_datasets)
+        .limit(TOP_DATASETS)
     )
     cand = obs.join(F.broadcast(support), "csv")
     witnesses = salted_top_k(
         cand, "csv", "script", [F.asc("_ord"), F.asc("script")],
-        scripts_per_dataset, "script_rank",
+        SCRIPTS_PER_DATASET, "script_rank",
     )
     return witnesses.select("csv", "n_mentions", "script_rank", "script")

@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four strategies, all DataFrame-first:
+Five strategies, all DataFrame-first:
 
 - **exact**: hash-groupBy on content digest — one shuffle on the digest,
   map-side partial agg;
@@ -14,9 +14,16 @@ Four strategies, all DataFrame-first:
 - **SimHash**: 64-bit signature by bit-voting over token hashes
   (vectorized Arrow UDF over numpy), Hamming-≤-k candidate join via
   band-equality (pigeonhole over 4 × 16-bit chunks);
+- **embedding cosine**: exact all-pairs cosine for small inputs, and the
+  hyperplane-bucket scale path (`similarity.hyperplane_buckets` →
+  within-bucket pairs → exact cosine verify → connected components);
 - **n-gram Jaccard**: exact pairwise similarity via token-explode join —
   quadratic within shared tokens, used as the verifier and for small
   inputs.
+
+Both banded paths share `_bucket_pairs` (the size-capped in-bucket
+pairs) and `_drop_clusters` (connected components over the verified
+pairs, keep each cluster's minimum id).
 """
 
 from __future__ import annotations
@@ -29,7 +36,47 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph4code_spark.operators.canonicalize import connected_components
+from graph4code_spark.operators.similarity import as_double, cosine_expr, hyperplane_buckets
 from graph4code_spark.operators.textstats import word_kgrams
+
+#: shingle width of `minhash_dedup` (word 3-grams)
+SHINGLE_K = 3
+#: hub caps: a bucket of more ids than this emits no pairs
+MINHASH_BUCKET_CAP = 64
+EMBEDDING_BUCKET_CAP = 256
+
+
+def _bucket_pairs(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """(a, b) distinct id pairs, a < b, of every bucket (the ``id`` rows
+    grouped by ``keys``) holding 2 to ``cap`` ids.  A degenerate bucket
+    of m ids would emit m² pairs, so larger buckets are skipped,
+    mirroring the reference's silent hub caps (`utils.py:282`)."""
+    grouped = rows.groupBy(*keys).agg(F.sort_array(F.collect_set("id")).alias("ids"))
+    grouped = grouped.where((F.size("ids") > 1) & (F.size("ids") <= cap))
+    return grouped.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    F.col("ids"),
+                    lambda a, i: F.transform(
+                        F.slice(F.col("ids"), i + 2, F.size("ids")),
+                        lambda b: F.struct(a.alias("a"), b.alias("b")),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select("p.a", "p.b").distinct()
+
+
+def _drop_clusters(df: DataFrame, id_col: str, verified: DataFrame) -> DataFrame:
+    """``df`` minus every non-minimum member of each connected component
+    of the verified (a, b) pairs."""
+    edges = verified.select(
+        F.col("a").cast("string").alias("src"), F.col("b").cast("string").alias("dst")
+    )
+    mapping = connected_components(edges)  # name -> canon (min of cluster)
+    drop = mapping.select(F.col("name").cast(df.schema[id_col].dataType).alias(id_col))
+    return df.join(drop, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -114,9 +161,8 @@ def lsh_candidate_pairs(
     key (engine-agnostic, used by the SQL-oracle path); the default
     xxhash64 compresses it for narrower shuffles at scale.
 
-    Hub defense: a degenerate bucket (boilerplate shingle sets) of size m
-    produces m² pairs — buckets are capped at 64 docs (log-dropped at
-    scale), mirroring the reference's silent hub caps (`utils.py:282`)."""
+    Hub defense: a degenerate bucket (boilerplate shingle sets) of more
+    than `MINHASH_BUCKET_CAP` docs emits no pairs (`_bucket_pairs`)."""
     rows = num_hashes // bands
 
     def band_key(b):
@@ -138,24 +184,7 @@ def lsh_candidate_pairs(
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
-    grouped = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_set("id")).alias("ids")
-    )
-    grouped = grouped.where((F.size("ids") > 1) & (F.size("ids") <= 64))
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size("ids")),
-                        lambda b: F.struct(a.alias("a"), b.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.a", "p.b").distinct()
-    return pairs
+    return _bucket_pairs(banded, ["band", "bucket"], MINHASH_BUCKET_CAP)
 
 
 def jaccard_verify(
@@ -184,7 +213,6 @@ def minhash_dedup(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k_shingle: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
@@ -200,16 +228,10 @@ def minhash_dedup(
     # common-shingle join, the size agg); materialize it once instead of
     # re-running the explode+distinct per branch — at cluster scale this
     # is the stage you'd persist to a checkpoint table anyway
-    sh = word_shingles(df, text_col, id_col, k_shingle).localCheckpoint(eager=False)
+    sh = word_shingles(df, text_col, id_col, SHINGLE_K).localCheckpoint(eager=False)
     sig = minhash_signatures(sh, num_hashes, hash_fn)
     pairs = lsh_candidate_pairs(sig, bands, num_hashes, hash_bucket)
-    verified = jaccard_verify(pairs, sh, threshold)
-    edges = verified.select(
-        F.col("a").cast("string").alias("src"), F.col("b").cast("string").alias("dst")
-    )
-    mapping = connected_components(edges)  # name -> canon (min of cluster)
-    drop = mapping.select(F.col("name").cast(df.schema[id_col].dataType).alias(id_col))
-    return df.join(drop, id_col, "left_anti")
+    return _drop_clusters(df, id_col, jaccard_verify(pairs, sh, threshold))
 
 
 # ---------------------------------------------------------------------------
@@ -305,23 +327,19 @@ def simhash_candidates(
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-def embedding_cosine_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.4,
-) -> DataFrame:
-    """Exact all-pairs cosine near-dup — the verifier / small-input path.
+def _vectors(df: DataFrame) -> DataFrame:
+    """(id, e): the ``vec_id`` and the double-cast ``embedding``."""
+    return df.select(F.col("vec_id").alias("id"), as_double(F.col("embedding")).alias("e"))
+
+
+def embedding_cosine_pairs(df: DataFrame, threshold: float = 0.4) -> DataFrame:
+    """Exact all-pairs cosine near-dup over ``(vec_id, embedding)`` — the
+    verifier / small-input path.
 
     O(n²) self-join; dot products are pure JVM column expressions
-    (`zip_with` + `aggregate`), no Python.  At scale this runs only on
+    (`similarity.cosine_expr`), no Python.  At scale this runs only on
     LSH candidate pairs (see `embedding_neardup`)."""
-    from graph4code_spark.operators.similarity import cosine_expr
-
-    v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("e"),
-    )
+    v = _vectors(df)
     a = v.select(F.col("id").alias("a"), F.col("e").alias("ea"))
     b = v.select(F.col("id").alias("b"), F.col("e").alias("eb"))
     return (
@@ -332,59 +350,29 @@ def embedding_cosine_pairs(
 
 
 def embedding_neardup(
-    df: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.4,
-    n_planes: int = 6,
-    seed: int = 42,
-    bucket_cap: int = 256,
+    df: DataFrame, dim: int, threshold: float = 0.4, n_planes: int = 6,
 ) -> DataFrame:
-    """LSH-bucketed embedding near-dup — the scale path.
+    """LSH-bucketed embedding near-dup over ``(vec_id, embedding)`` — the
+    scale path.
 
     hyperplane sign buckets (one Arrow pass, no shuffle) → within-bucket
-    candidate pairs (bucket-hash shuffle only; degenerate buckets capped
-    at `bucket_cap`, mirroring the reference's hub caps `utils.py:282`) →
-    exact cosine verify on candidates only → connected components →
-    keep the min-id representative per near-dup cluster.
+    candidate pairs (bucket-hash shuffle only; buckets of more than
+    `EMBEDDING_BUCKET_CAP` ids skipped) → exact cosine verify on
+    candidates only → connected components → keep the min-id
+    representative per near-dup cluster.
 
     Recall < 1 by construction (pairs split by every hyperplane are
     missed); n_planes trades recall for candidate volume."""
-    from graph4code_spark.operators.similarity import cosine_expr, hyperplane_buckets
-
-    vb = hyperplane_buckets(df, vec_col, id_col, dim, n_planes, seed)
-    grouped = vb.groupBy("bucket").agg(F.sort_array(F.collect_set("id")).alias("ids"))
-    grouped = grouped.where((F.size("ids") > 1) & (F.size("ids") <= bucket_cap))
-    cand = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size("ids")),
-                        lambda b: F.struct(a.alias("a"), b.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.a", "p.b").distinct()
-    v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("e"),
-    )
+    vb = hyperplane_buckets(df, "embedding", "vec_id", dim, n_planes)
+    cand = _bucket_pairs(vb, ["bucket"], EMBEDDING_BUCKET_CAP)
+    v = _vectors(df)
     verified = (
         cand.join(v.select(F.col("id").alias("a"), F.col("e").alias("ea")), "a")
         .join(v.select(F.col("id").alias("b"), F.col("e").alias("eb")), "b")
         .select("a", "b", cosine_expr(F.col("ea"), F.col("eb")).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
-    edges = verified.select(
-        F.col("a").cast("string").alias("src"), F.col("b").cast("string").alias("dst")
-    )
-    mapping = connected_components(edges)  # name -> canon (min of cluster)
-    drop = mapping.select(F.col("name").cast(df.schema[id_col].dataType).alias(id_col))
-    return df.join(drop, id_col, "left_anti")
+    return _drop_clusters(df, "vec_id", verified)
 
 
 # ---------------------------------------------------------------------------

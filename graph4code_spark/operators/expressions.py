@@ -99,20 +99,17 @@ def extract_expressions(qa: DataFrame, catalog_records: list[dict]) -> DataFrame
     return qa.select("url", "codes").mapInPandas(run, schema=EXPRESSIONS_SCHEMA)
 
 
-def mine_expressions(
-    code_df: DataFrame, code_col: str = "code", k: int = TOP_EXPRESSIONS,
-    pre_normalized: bool = False,
-) -> DataFrame:
-    """``code2count`` → top-K → ``expr<idx>`` labels.
+def mine_expressions(code_df: DataFrame, pre_normalized: bool = False) -> DataFrame:
+    """``code2count`` → top-`TOP_EXPRESSIONS` → ``expr<idx>`` labels.
 
-    Input: one row per observed expression occurrence.  Output columns:
+    Input: one row per observed expression occurrence, in column
+    ``code``.  Output columns:
     ``expr_name`` (rank label), ``code`` (normalized), ``cnt``.
     Deterministic: ties broken by code text ascending.
     ``pre_normalized=True`` skips the receiver regex — for input from
     `extract_expressions`, whose receivers are already canonical by
     producer identity (a strictly finer normalization)."""
-    code = (F.col(code_col) if pre_normalized
-            else normalize_receivers(F.col(code_col)))
+    code = F.col("code") if pre_normalized else normalize_receivers(F.col("code"))
     counted = (
         code_df.select(code.alias("code"))
         .where(F.col("code").isNotNull())
@@ -122,7 +119,7 @@ def mine_expressions(
     # orderBy+limit = TakeOrdered: per-partition top-K then a K-row
     # merge on the driver — the aggregate is never globally sorted.
     # The labeling window then runs over only K rows.
-    top = counted.orderBy(F.desc("cnt"), F.asc("code")).limit(k)
+    top = counted.orderBy(F.desc("cnt"), F.asc("code")).limit(TOP_EXPRESSIONS)
     # unpartitioned window is intentional and safe: its input is ≤ k
     # rows by construction (WindowExec's warning refers to the general
     # case; a constant partition key would just be constant-folded away)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graph4code_spark.operators.similarity import as_double, dot, norm
+
 
 def _round_half_up(x: Column) -> Column:
     return F.floor(x + F.lit(0.5))
@@ -29,7 +31,7 @@ def quantize_int8(df: DataFrame, vec_col: str) -> DataFrame:
 
     All pure column expressions over the array — one codegen stage, no
     shuffle, no Python."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = as_double(F.col(vec_col))
     scale = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
     q = F.when(
         scale > 0,
@@ -39,17 +41,8 @@ def quantize_int8(df: DataFrame, vec_col: str) -> DataFrame:
     err = F.array_max(
         F.zip_with(v, deq, lambda a, b: F.abs(a - b))
     )
-    dot = F.aggregate(
-        F.zip_with(v, deq, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n2 = lambda a: F.sqrt(  # noqa: E731 — local norm helper
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
-    )
-    cos = F.when(
-        (n2(v) > 0) & (n2(deq) > 0), dot / (n2(v) * n2(deq))
-    ).otherwise(F.lit(1.0))
+    nv, nd = norm(v), norm(deq)
+    cos = F.when((nv > 0) & (nd > 0), dot(v, deq) / (nv * nd)).otherwise(F.lit(1.0))
     return df.select(
         "*",
         scale.alias("q_scale"),

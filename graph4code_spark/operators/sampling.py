@@ -32,9 +32,7 @@ def _h2(key: Column) -> Column:
     return F.substring(F.md5(key.cast("string")), 1, 2)
 
 
-def stratified_hash_sample(
-    df: DataFrame, key: str, stratum: str, threshold: Column
-) -> DataFrame:
+def stratified_hash_sample(df: DataFrame, key: str, threshold: Column) -> DataFrame:
     """Rows whose md5-prefix falls below the per-row ``threshold``
     (a Column of 2-hex-digit strings, usually a CASE over the stratum).
     Keep-rate per stratum = int(threshold, 16) / 256."""

@@ -1,13 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
+Every path is filter-then-verify over the same primitives, stated once
+here: `dot`/`norm`/`cosine_expr` (JVM-side `F.zip_with` + `F.aggregate`
+folds, no Python), `as_double`, and the per-query top-k window
+(`_top_k`).  Vectors arrive as ``(vec_id, embedding)`` and queries as
+``(query_id, query_vec)``.
+
 - **brute-force cosine top-k**: the correctness baseline.  Queries are
-  broadcast; dot products run JVM-side via `F.zip_with` + `F.aggregate`
-  (no Python), per-query top-k via rank window.
+  broadcast; every vector is scored against every query.
 - **LSH-bucketed (random hyperplanes)**: the scale path.  B seeded
   hyperplanes → sign-bit bucket per vector (Arrow-batched numpy matmul),
-  candidates = bucket equality (optionally multi-probe), exact cosine
-  re-rank within candidates.  At 10^12 rows the bucket join replaces the
-  full cross product; plane seeds are deterministic.
+  candidates = bucket equality, exact cosine re-rank within candidates.
+  At 10^12 rows the bucket join replaces the full cross product; plane
+  seeds are deterministic.
+- **IVF (inverted lists)**: each vector lives in its nearest list, each
+  query probes its ``nprobe`` nearest, exact cosine re-rank within the
+  probed lists.
 """
 
 from __future__ import annotations
@@ -16,40 +24,72 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: seed of the LSH planes and the IVF centroids of the top-k paths
+SEED = 42
 
 
-def _norm(col):
-    return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
+def dot(a: Column, b: Column) -> Column:
+    """Dot product as a sequential left fold from 0.0: the evaluation
+    order of DuckDB's list_dot_product, so the oracles agree bit for bit."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine_expr(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    return dot / (_norm(a) * _norm(b))
+def norm(a: Column) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def cosine_expr(a: Column, b: Column) -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
+
+
+def as_double(vec: Column) -> Column:
+    """The vector with every element cast to double."""
+    return F.transform(vec, lambda x: x.cast("double"))
+
+
+def lit_vector(v) -> Column:
+    """A literal array<double> of the numbers ``v`` (a centroid)."""
+    return F.array(*[F.lit(float(x)) for x in v])
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, cosine, rank ≤ k): the per-query rank window,
+    cosine descending, vec_id ascending on ties."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _candidates(vk: DataFrame, qk: DataFrame, key: str) -> DataFrame:
+    """(query_id, vec_id) pairs whose (id, ``key``) rows share ``key``."""
+    return vk.join(qk.withColumnRenamed("id", "qid"), key).select(
+        F.col("qid").alias("query_id"), F.col("id").alias("vec_id")
+    )
+
+
+def _rerank(cand: DataFrame, vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact cosine over the candidate pairs (queries broadcast), then
+    the per-query top ``k``."""
+    scored = (
+        cand.join(vectors, "vec_id")
+        .join(F.broadcast(queries), "query_id")
+        .select("query_id", "vec_id",
+                cosine_expr(F.col("embedding"), F.col("query_vec")).alias("cosine"))
+    )
+    return _top_k(scored, k)
+
+
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """(query_id, vec_id, cosine, rank ≤ k). Queries side is broadcast —
     the scan of `vectors` stays partition-local; one shuffle for the
     per-query top-k window."""
-    j = vectors.crossJoin(F.broadcast(queries))
-    scored = j.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine_expr(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
+    scored = vectors.crossJoin(F.broadcast(queries)).select(
+        "query_id", "vec_id",
+        cosine_expr(F.col("embedding"), F.col("query_vec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(scored, k)
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -63,7 +103,7 @@ def hyperplane_buckets(
     id_col: str,
     dim: int,
     n_planes: int = 12,
-    seed: int = 42,
+    seed: int = SEED,
 ) -> DataFrame:
     """(id, bucket) — sign-bit signature under seeded random hyperplanes.
 
@@ -108,27 +148,18 @@ def ivf_assign(
     top-``nprobe`` with `sort_array` + `slice` — no crossJoin, no
     per-id window (the first cut shuffled the full vector table just to
     rank 8 rows per id; `.explain` showed the Exchange).  JVM-side on
-    purpose: the dot product is a sequential `F.aggregate` fold (same
-    evaluation order as DuckDB's list_dot_product) and the ranking key
-    rounds to 6 decimals with a list_id tie-break, so the assignment is
-    bit-stable across engines."""
+    purpose: the score is `dot` and the ranking key rounds to 6 decimals
+    with a list_id tie-break, so the assignment is bit-stable across
+    engines."""
     cents = ivf_centroids(dim, n_lists, seed)
-
-    def dot_with(c: "np.ndarray"):
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        return F.aggregate(
-            F.zip_with(F.col("vec"), lit, lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-
     # sort_array asc on struct(-round(d,6), list_id) == (d desc, list_id asc)
     scored = F.array(
         *[
             F.struct(
-                (-F.round(dot_with(cents[i]), 6)).alias("nd"),
+                (-F.round(dot(F.col("vec"), lit_vector(c)), 6)).alias("nd"),
                 F.lit(i).alias("list_id"),
             )
-            for i in range(n_lists)
+            for i, c in enumerate(cents)
         ]
     )
     return (
@@ -150,35 +181,16 @@ def ivf_topk(
     k: int = 10,
     n_lists: int = 8,
     nprobe: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF-flavored ANN: vectors live in their nearest inverted list,
     queries probe the ``nprobe`` nearest lists, exact cosine re-rank
     within the probed lists.  Same scale shape as a trained IVF index:
     the candidate join is list-equality (shuffle on list_id, |lists|
-    bounded), never a cross product."""
-    vl = ivf_assign(vectors, vec_col, id_col, dim, n_lists, seed, nprobe=1)
-    ql = ivf_assign(queries, query_vec_col, query_id_col, dim, n_lists, seed, nprobe=nprobe)
-    cand = (
-        vl.join(ql.withColumnRenamed("id", "qid"), "list_id")
-        .select(F.col("qid").alias(query_id_col), F.col("id").alias(id_col))
-        .distinct()
-    )
-    j = (
-        cand.join(vectors, id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            cosine_expr(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return j.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    bounded), never a cross product.  A vector reached through two
+    probed lists is one candidate."""
+    vl = ivf_assign(vectors, "embedding", "vec_id", dim, n_lists, SEED, nprobe=1)
+    ql = ivf_assign(queries, "query_vec", "query_id", dim, n_lists, SEED, nprobe=nprobe)
+    return _rerank(_candidates(vl, ql, "list_id").distinct(), vectors, queries, k)
 
 
 def lsh_topk(
@@ -187,29 +199,10 @@ def lsh_topk(
     dim: int,
     k: int = 10,
     n_planes: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Bucketed ANN: candidates share the hyperplane bucket, exact cosine
     re-rank within. Recall < 1 by construction; n_planes trades recall
     for candidate-set size."""
-    vb = hyperplane_buckets(vectors, vec_col, id_col, dim, n_planes, seed)
-    qb = hyperplane_buckets(queries, query_vec_col, query_id_col, dim, n_planes, seed)
-    cand = (
-        vb.join(qb.withColumnRenamed("id", "qid"), "bucket")
-        .select(F.col("qid").alias(query_id_col), F.col("id").alias(id_col))
-    )
-    j = (
-        cand.join(vectors, id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            cosine_expr(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return j.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    vb = hyperplane_buckets(vectors, "embedding", "vec_id", dim, n_planes)
+    qb = hyperplane_buckets(queries, "query_vec", "query_id", dim, n_planes)
+    return _rerank(_candidates(vb, qb, "bucket"), vectors, queries, k)

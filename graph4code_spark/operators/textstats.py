@@ -22,6 +22,9 @@ _STOPWORDS = {
 #: the standard pre-tokenization shape for byte-pair encoders
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
 
+#: `repetition_features` reads only a document's first words
+REPETITION_MAX_WORDS = 200
+
 
 def words(text: Column) -> Column:
     """The lowercased words of ``text``: the one word split of the text
@@ -41,8 +44,8 @@ def word_kgrams(text: Column, k: int) -> Column:
 
 
 def whitespace_token_count(text: Column) -> Column:
-    w = F.split(F.trim(text), r"\s+")
-    return F.when(F.trim(text) == "", 0).otherwise(F.size(w))
+    """The number of `words` of ``text``; 0 for a blank text."""
+    return F.when(F.trim(text) == "", 0).otherwise(F.size(words(text)))
 
 
 def bpe_token_count(text: Column) -> Column:
@@ -87,15 +90,15 @@ def quality_columns(text: Column) -> list[Column]:
     ]
 
 
-def repetition_features(df: DataFrame, text_col: str, max_words: int = 200) -> DataFrame:
+def repetition_features(df: DataFrame, text_col: str) -> DataFrame:
     """Gopher-style repetition signals: duplicate-word fraction and
-    top-bigram fraction, computed over the first ``max_words`` words so
-    per-doc work is bounded (O(max_words²) worst case for the bigram
-    mode count) regardless of document length — at corpus scale a
-    runaway 10 MB document must not dominate its task.  Pure column
-    expressions."""
+    top-bigram fraction, computed over the first `REPETITION_MAX_WORDS`
+    words so per-doc work is bounded (quadratic in that cap, worst case,
+    for the bigram mode count) regardless of document length — at corpus
+    scale a runaway 10 MB document must not dominate its task.  Pure
+    column expressions."""
     t = F.col(text_col)
-    w = F.slice(words(t), 1, max_words)
+    w = F.slice(words(t), 1, REPETITION_MAX_WORDS)
     n = F.size(w)
     dup_word = F.when(
         n > 0, 1 - F.size(F.array_distinct(w)) / n.cast("double")

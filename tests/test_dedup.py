@@ -5,6 +5,7 @@ from graph4code_spark.operators.dedup import (
     embedding_neardup,
     exact_dedup,
     duplicate_groups,
+    lsh_candidate_pairs,
     minhash_dedup,
     ngram_jaccard_pairs,
     simhash_candidates,
@@ -38,12 +39,22 @@ def test_exact_dedup(spark):
 
 def test_minhash_dedup_collapses_near_dups(spark):
     d = _docs(spark)
-    out = minhash_dedup(d, "text", "doc_id", k_shingle=3, num_hashes=32,
-                        bands=16, threshold=0.6)
+    out = minhash_dedup(d, "text", "doc_id", num_hashes=32, bands=16, threshold=0.6)
     ids = {r.doc_id for r in out.collect()}
     assert 0 in ids           # representative of {0,1,2}
     assert 1 not in ids and 2 not in ids
     assert 5 in ids           # singleton survives
+
+
+def test_lsh_candidate_pairs_bucket_cap(spark):
+    # m identical signatures fill one bucket per band: 64 docs give all
+    # 64·63/2 pairs, 65 docs exceed the hub cap and give none
+    for m, want in ((64, 2016), (65, 0)):
+        sig = spark.createDataFrame([(i, [7, 8, 9, 10]) for i in range(m)],
+                                    "id long, sig array<long>")
+        pairs = lsh_candidate_pairs(sig, bands=2, num_hashes=4).collect()
+        assert len(pairs) == want, m
+        assert all(r.a < r.b for r in pairs)
 
 
 def test_ngram_jaccard_pairs(spark):
@@ -69,7 +80,7 @@ def _emb(spark, n=40, dim=8, seed=7):
 def test_embedding_cosine_pairs_exact(spark):
     df, base = _emb(spark)
     got = {(r.a, r.b): r.cosine for r in
-           embedding_cosine_pairs(df, "embedding", "vec_id", threshold=0.95).collect()}
+           embedding_cosine_pairs(df, threshold=0.95).collect()}
     v = base.astype(np.float32).astype(np.float64)  # match the float column round-trip
     norms = np.linalg.norm(v, axis=1)
     cos = (v @ v.T) / np.outer(norms, norms)
@@ -89,7 +100,7 @@ def test_embedding_neardup_lsh(spark):
     assert 2 in survivors and 3 not in survivors
     # LSH survivors are a superset of the exact-pairs survivors
     exact_drop = {r.b for r in
-                  embedding_cosine_pairs(df, "embedding", "vec_id", 0.95).collect()}
+                  embedding_cosine_pairs(df, 0.95).collect()}
     assert survivors <= set(range(40)) - {1, 3} and survivors >= set(range(40)) - exact_drop
 
 

@@ -1,7 +1,11 @@
 import math
 
+import numpy as np
+from pyspark.sql import functions as F
+
 from graph4code_spark.operators.similarity import (
     brute_force_topk,
+    cosine_expr,
     ivf_assign,
     ivf_topk,
     lsh_topk,
@@ -67,3 +71,23 @@ def test_ivf_topk_self_query_ranks_first(spark):
           for r in brute_force_topk(v, q, k=5).collect()}
     for r in out:
         assert math.isclose(bf[(r.query_id, r.vec_id)], r.cosine, rel_tol=1e-9)
+
+
+def test_cosine_expr_is_a_left_fold(spark):
+    # the oracles rely on the fold order of DuckDB's list_dot_product:
+    # cosine_expr must equal a left-to-right Python fold bit for bit
+    def fold(x, y):
+        acc = 0.0
+        for a, b in zip(x, y):
+            acc = acc + a * b
+        return acc
+
+    rs = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rs.normal(size=64)], [float(x) for x in rs.normal(size=64)])
+            for i in range(50)]
+    df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
+    got = {r.i: r.c for r in
+           df.select("i", cosine_expr(F.col("a"), F.col("b")).alias("c")).collect()}
+    for i, a, b in rows:
+        want = fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
+        assert got[i] == want, i
