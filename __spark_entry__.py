@@ -599,8 +599,7 @@ scored AS (
 
 
 def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the float arrays go uncast into the bucketing and the cosine
-    return _top10(_t(spark, sf_dir, "embeddings"), lsh_topk, dim=64, n_planes=8)
+    return _top10(_double_embeddings(spark, sf_dir), lsh_topk, dim=64, n_planes=8)
 
 
 def _oracle_sim_lsh_topk() -> str:
@@ -610,8 +609,8 @@ def _oracle_sim_lsh_topk() -> str:
     literal vectors.  Independent of the Arrow/numpy implementation."""
     from graph4code_spark.operators.similarity import _planes
 
-    # embeddings are float32 in parquet; Spark's numpy path promotes to
-    # float64 per element, matching CAST(embedding AS DOUBLE[])
+    # the Spark row reads the float32 embeddings as doubles too
+    # (``_double_embeddings``)
     return f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 planes(p, w) AS (VALUES

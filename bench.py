@@ -1,40 +1,30 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS], plus the north-rule two-parallelism scaling
-measurement of the KG pipeline.
+local[$SPARK_GRAFT_CPUS], plus the north-rule N→4N scaling measurement
+of the KG pipeline.
 
-Prints ONE JSON line:
+Prints ONE JSON line (and writes it up as BENCH.md):
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ...,
-   "scaling": {"low": {...}, "high": {...}, "efficiency": ...,
-               "max_cores": {...}}}
+   "scaling": {"protocol": "spark-submit", "low": {...}, "high": {...},
+               "levels": {...}, "max_cores": {...}, "efficiency": ...,
+               "controls_gate": {...}, "controls": {...},
+               "efficiency_adjusted": ...},
+   "headline_controls_gate": {...}}
 
-Scaling methodology (round 3). The north rule's criterion is throughput
-scaling efficiency ≥ 0.8 from N to 4N executors.  This sandbox has 32
-vCPUs, but 8→32 raw-CPU scaling tops out at ~2.6×/4× (SMT/steal), so the
-N→4N pair is measured at 2→8 cores, as INTERLEAVED ladders (levels
-round-robin, REPEATS recorded ladders after a warm one, min-wall per
-level — the VM bursts 2-4× in multi-minute windows; interleaving spreads
-bursts across all levels and min drops them).  local[32] is reported as
-max-parallelism headline throughput.
-
-Round-3 changes, driven by the event-log attribution
-(jobs/profile_scaling.py + jobs/scaling_controls.py, table in BENCH.md):
-- the 2→8 pair is the ONLY reported pair (ADVICE r2: picking the better
-  of two pairs was favorable selection; the 1-core baseline's per-task
-  overhead flattered 1→4 anyway), and
-- the input tripled to 96k pages (REPEATS=5 ladders): profiling showed ~10 s of
-  core-count-independent driver wall (plan analysis + job setup) per
-  run, a Amdahl term that distorted the ratio at 32k pages.
-The remaining measured gap is machine memory bandwidth: independent
-perfectly-parallel numpy-copy processes scale at ~0.76 on this VM 2→8,
-while pure-ALU loops scale at ~0.98 — and the pipeline's summed task CPU
-inflates by the matching ~1.34× from 2 to 8 cores.  See BENCH.md.
+Scaling: the north rule's criterion is throughput scaling efficiency
+≥ 0.8 from N to 4N executors, measured here as the 2→8 core pair;
+local[CPUS] is reported as max-parallelism throughput.  Each level is a
+``spark-submit --py-files`` run of ``jobs/run_pipeline.py --bench`` in a
+fresh JVM over the same N_PAGES synthetic pages.  No-Spark controls
+(``jobs/scaling_controls.py``) sampled before and after the ladder gate
+the recording on the machine's memory-bandwidth scaling.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -42,10 +32,14 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from graph4code_spark.session import _BASE_CONF, get_spark, stop_all  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "96000"))
-REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
+#: synthetic pages per scaling level: at this size the ~10 s of
+#: core-count-independent driver wall per run (plan analysis, job set-up)
+#: stays a small share of the 2-core level
+N_PAGES = 96000
 
 HEADLINE = [
     "kg_mentions",
@@ -60,7 +54,7 @@ HEADLINE = [
     "window_top3_orders",
     "events_hourly",
     "posts_xml_volume",
-    # round-3 entrants: seeded-closure usage query + volume import counts
+    # seeded-closure usage query + volume import counts
     "kg_type_inference",
     "top_modules_volume",
     # corpus hygiene + batch prep
@@ -73,82 +67,23 @@ HEADLINE = [
     # temporal operators
     "events_sessionize",
     "asof_join_events",
-    # round-4 entrant: semForms-analogue expression mining
+    # semForms-analogue expression mining
     "semforms_expressions",
-    # round-5 entrant: dataflow-normalized mining over the 8000-page
-    # corpus spine (extraction at volume, the top_modules_volume shape)
+    # dataflow-normalized mining over the 8000-page corpus spine
+    # (extraction at volume, the top_modules_volume shape)
     "semforms_corpus",
 ]
 
 
-def _pipeline_triples(spark, n_pages: int) -> int:
-    """In-memory pipeline for throughput measurement.  qa and links are
-    cached — mirroring the staged pipeline, which materializes both as
-    checkpoint tables between stages."""
-    from graph4code_spark.emitters.forum import forum_triples
-    from graph4code_spark.materialize import dedup_quads
-    from graph4code_spark.operators.linking import link_entities
-    from graph4code_spark.sources.qa import extract_qa
-    from graph4code_spark.synth import FIXED_CATALOG, synth_pages
-
-    pages = synth_pages(spark, n_pages, seed=42, partitions=max(64, n_pages // 250))
-    qa = extract_qa(pages).cache()
-    links = link_entities(qa, FIXED_CATALOG).cache()
-    triples = dedup_quads(forum_triples(links, qa, FIXED_CATALOG))
-    n = triples.count()
-    qa.unpersist()
-    links.unpersist()
-    return n
-
-
-def pipeline_ladders(cores_list, n_pages: int, ladders: int = REPEATS) -> dict:
-    """Interleaved-ladder measurement in ONE process: run the levels
-    round-robin (1,2,4,8,32, 1,2,4,8,32, ...) and keep the per-level min.
-
-    Why interleaved: this VM bursts/throttles in multi-minute windows
-    (observed 20%+ swings between identical runs).  Measuring each level
-    in its own contiguous window lets one throttle window clobber one
-    level and silently skew the N-to-4N ratio in either direction;
-    round-robin ladders spread any burst across ALL levels, and min-wall
-    per level drops the throttled samples (noise only ever slows a run).
-    Ladder 0 is an unrecorded warm pass (JIT/codegen is JVM-wide); the
-    master switches per ladder step via a fresh session."""
-    from graph4code_spark.session import get_spark, stop_all
-
-    best: dict[int, float] = {}
-    n = 0
-    for rep in range(ladders + 1):  # +1: warm ladder
-        for cores in cores_list:
-            spark = get_spark(
-                f"g4c-bench-{cores}", master=f"local[{cores}]",
-                extra_conf={"spark.sql.shuffle.partitions": str(max(cores, 8))},
-            )
-            t0 = time.time()
-            n = _pipeline_triples(spark, n_pages)
-            w = time.time() - t0
-            stop_all()
-            if rep == 0:
-                continue
-            best[cores] = min(best.get(cores, w), w)
-    return {
-        str(c): {
-            "cores": c, "pages": n_pages, "triples": n,
-            "sec": round(best[c], 3),
-            "triples_per_sec": round(n / best[c], 1),
-        }
-        for c in cores_list
-    }
-
-
-#: controls gate (VERDICT r4 #1): BENCH_r04 was recorded in a throttled
-#: window (its own membw control read 0.75) and overstated two query
-#: regressions ~3× vs same-protocol re-timings.  The recorded run now
-#: refuses to start while the machine is throttled: measure the no-Spark
-#: membw control first and, if it reads below the gate, wait for a later
-#: window (bounded attempts — the last attempt records anyway, flagged).
-GATE_MEMBW = float(os.environ.get("SPARK_GRAFT_BENCH_GATE", "0.8"))
-GATE_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_BENCH_GATE_ATTEMPTS", "3"))
-GATE_SLEEP_S = int(os.environ.get("SPARK_GRAFT_BENCH_GATE_SLEEP", "120"))
+#: controls gate: a recording waits for a window in which the no-Spark
+#: memory-bandwidth control scales 2→8 at ≥ GATE_MEMBW, sampling up to
+#: GATE_ATTEMPTS times GATE_SLEEP_S apart (the last attempt records
+#: anyway, flagged)
+GATE_MEMBW = 0.8
+GATE_ATTEMPTS = 3
+GATE_SLEEP_S = 120
+#: interleaved spark-submit rounds per scaling level
+SUBMIT_REPS = 2
 
 
 def _measure_controls() -> dict | None:
@@ -181,36 +116,22 @@ def _wait_for_quiet_window() -> tuple[dict | None, bool, int]:
     return ctrl, False, GATE_ATTEMPTS
 
 
-#: scaling protocol of record (round 5, VERDICT r4 #1's blessed
-#: alternative): the north rule's own launch mode — each level is a real
-#: ``spark-submit --py-files`` run in a FRESH JVM, so no session state
-#: leaks between levels and the measurement is literally the command a
-#: cluster operator would time.  ``SPARK_GRAFT_BENCH_PROTOCOL=ladder``
-#: keeps the round-3/4 in-process interleaved-ladder protocol available
-#: as a same-session cross-check.
-PROTOCOL = os.environ.get("SPARK_GRAFT_BENCH_PROTOCOL", "submit")
-SUBMIT_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_SUBMIT_REPS", "2"))
-
 _SPARK_SUBMIT = (
-    __import__("shutil").which("spark-submit")
+    shutil.which("spark-submit")
     or os.path.join(os.path.dirname(os.path.dirname(sys.executable)),
                     "bin", "spark-submit")
 )
 
 
 def _submit_levels(cores_list, n_pages: int, reps: int = SUBMIT_REPS) -> dict:
-    """Submit-mode levels: for each core count, ``spark-submit --master
-    local[N] --py-files <zip> jobs/run_pipeline.py --bench 1``, repeated
-    ``reps`` times with the LEVELS interleaved (2,8,32, 2,8,32, ...) so a
-    VM throttle window spreads across all levels instead of clobbering
-    one; min-wall per level (noise only ever slows a run).  Each submit
-    warms in-JVM once before its recorded pass (run_pipeline.py --bench),
-    so JVM/JIT startup is excluded from the measured wall exactly as the
-    ladder protocol excluded it via the warm ladder."""
-    import shutil as _sh
-
-    os.makedirs(os.path.join(REPO, "dist"), exist_ok=True)
-    zip_path = _sh.make_archive(
+    """For each core count, ``spark-submit --master local[N] --py-files
+    <zip> jobs/run_pipeline.py --bench 1``, launched as README "Launch"
+    documents it.  The levels run interleaved (2,8,32, 2,8,32, ...) for
+    ``reps`` rounds so a VM throttle window spreads across all levels
+    instead of clobbering one, and each level keeps its min wall (noise
+    only ever slows a run).  Each submit warms in-JVM once before its
+    timed pass, so JVM start-up and JIT warm-up stay out of the wall."""
+    zip_path = shutil.make_archive(
         os.path.join(REPO, "dist", "graph4code_spark"), "zip",
         root_dir=REPO, base_dir="graph4code_spark",
     )
@@ -220,14 +141,11 @@ def _submit_levels(cores_list, n_pages: int, reps: int = SUBMIT_REPS) -> dict:
         for cores in cores_list:
             r = subprocess.run(
                 [_SPARK_SUBMIT, "--master", f"local[{cores}]",
-                 # launch-time driver sizing: spark.driver.memory set in
-                 # the SparkSession builder is IGNORED under
-                 # spark-submit (the JVM already started), so the 8g the
-                 # in-process sessions get must be passed here — the 1g
-                 # default OOMs at local[32] once 32 concurrent Arrow
-                 # batches of flow nodes are in flight
-                 "--driver-memory",
-                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+                 # the driver JVM starts before the session builder runs,
+                 # so its memory and JIT flags go on the command line
+                 "--driver-memory", _BASE_CONF["spark.driver.memory"],
+                 "--driver-java-options",
+                 _BASE_CONF["spark.driver.extraJavaOptions"],
                  "--py-files", zip_path,
                  os.path.join(REPO, "jobs", "run_pipeline.py"),
                  "--bench", "1", "--pages", str(n_pages)],
@@ -255,82 +173,50 @@ def _submit_levels(cores_list, n_pages: int, reps: int = SUBMIT_REPS) -> dict:
 
 
 def _run_scaling() -> dict:
-    """One N-to-4N pair, 2→8 cores (ADVICE r2: a single pre-declared
-    pair, no favorable selection).  Round 5: measured in SUBMIT mode by
-    default (fresh JVM per level, the north rule's launch mode); the
-    round-3/4 in-process interleaved ladder stays selectable via
-    ``SPARK_GRAFT_BENCH_PROTOCOL=ladder``.  Input is 96k pages: profiling
-    showed ~10 s of core-count-independent driver wall (plan analysis +
-    job setup) per run, an Amdahl term that distorted the ratio at 32k
-    pages (see BENCH.md)."""
+    """The 2→8 core pair plus local[CPUS], measured by ``_submit_levels``
+    inside a controls bracket: a PRE sample admits the window and a POST
+    sample validates it, since a throttle burst can open mid-ladder.  A
+    ladder whose bracket fails the gate re-runs on a fresh window, up to
+    three tries; the last is recorded either way with its controls
+    attached, so a contaminated record is self-describing.
+    ``efficiency_adjusted`` is the raw efficiency over the bracket's
+    lower membw sample."""
+    if not os.path.exists(_SPARK_SUBMIT):
+        raise RuntimeError(f"spark-submit not found at {_SPARK_SUBMIT}")
     cores_list = [2, 8, CPUS]
-    # the gate brackets the ladder: a PRE sample admits the window and a
-    # POST sample validates it — a throttle burst opening MID-ladder
-    # (observed: pre 0.92 → post 0.10) invalidates the measurement, so
-    # the whole ladder re-runs on a fresh window (bounded retries; the
-    # last attempt is recorded either way, with its controls attached so
-    # a contaminated record is self-describing)
     for _ladder_try in range(3):
         pre_ctrl, gate_ok, attempts = _wait_for_quiet_window()
-        if PROTOCOL == "submit" and os.path.exists(_SPARK_SUBMIT):
-            levels = _submit_levels(cores_list, N_PAGES)
-            protocol = "spark-submit"
-        else:
-            out_run = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--ladders",
-                 ",".join(map(str, cores_list)), str(N_PAGES), str(REPEATS)],
-                capture_output=True, text=True, cwd=REPO, timeout=2700,
-            )
-            levels = json.loads(out_run.stdout.strip().splitlines()[-1])
-            protocol = "in-process-ladder"
+        levels = _submit_levels(cores_list, N_PAGES)
         post_ctrl = _measure_controls()
         if (gate_ok and post_ctrl
                 and post_ctrl["membw_efficiency"] >= GATE_MEMBW):
             break
         gate_ok = False
 
-    def eff(lo: int, hi: int) -> float:
-        return round(
-            levels[str(hi)]["triples_per_sec"]
-            / ((hi / lo) * levels[str(lo)]["triples_per_sec"]),
-            3,
-        )
-
+    efficiency = round(
+        levels["8"]["triples_per_sec"] / (4 * levels["2"]["triples_per_sec"]), 3
+    )
     out = {
-        "protocol": protocol,
+        "protocol": "spark-submit",
         "low": levels["2"],
         "high": levels["8"],
         "levels": {k: v for k, v in levels.items() if int(k) != CPUS},
         "max_cores": levels[str(CPUS)],
-        "efficiency_2v8": eff(2, 8),
-    }
-    out["efficiency"] = out["efficiency_2v8"]
-
-    # Same-session hardware controls (VERDICT r3 #5): perfectly parallel
-    # no-Spark workloads measured in the SAME machine state as the
-    # pipeline ladders — once before (the gate sample) and once after,
-    # bracketing the measurement window.  `efficiency_adjusted` =
-    # raw / membw-control — how close the pipeline gets to what this
-    # machine's shared memory controller allows a bandwidth-bound
-    # workload (a multi-executor cluster gives each executor its own
-    # controller, so the raw number understates cluster scaling; see
-    # BENCH.md attribution).  post_ctrl comes from the bracketing loop
-    # above (`passed` is True only when BOTH samples cleared the gate).
-    out["controls_gate"] = {
-        "threshold": GATE_MEMBW,
-        "passed": gate_ok,
-        "attempts": attempts,
-        "pre": pre_ctrl,
-        "post": post_ctrl,
+        "efficiency_2v8": efficiency,
+        "efficiency": efficiency,
+        "controls_gate": {
+            "threshold": GATE_MEMBW,
+            "passed": gate_ok,
+            "attempts": attempts,
+            "pre": pre_ctrl,
+            "post": post_ctrl,
+        },
     }
     ctrl = post_ctrl or pre_ctrl
     if ctrl is not None:
-        # the bracketing samples' min is the conservative window state
-        bw = min(
-            c["membw_efficiency"] for c in (pre_ctrl, post_ctrl) if c
-        )
+        bw = min(c["membw_efficiency"] for c in (pre_ctrl, post_ctrl) if c)
         out["controls"] = dict(ctrl, membw_efficiency=bw)
-        out["efficiency_adjusted"] = round(out["efficiency"] / bw, 3) if bw else None
+        out["efficiency_adjusted"] = round(efficiency / bw, 3) if bw else None
     else:
         out["controls"] = {"error": "controls measurement failed"}
         out["efficiency_adjusted"] = None
@@ -339,7 +225,6 @@ def _run_scaling() -> dict:
 
 def main() -> None:
     import __spark_entry__ as entry_mod
-    from graph4code_spark.session import get_spark, stop_all
 
     scaling = _run_scaling()
 
@@ -376,12 +261,17 @@ def main() -> None:
             "controls": head_ctrl,
         },
     }
-    _write_bench_md(result)
+    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
+        f.write(_bench_md(result))
     print(json.dumps(result))
 
 
-def _write_bench_md(result: dict) -> None:
+def _bench_md(result: dict) -> str:
+    """BENCH.md for one ``main`` result: the scaling levels with their
+    gate and controls, then the headline timings with theirs."""
     s = result["scaling"]
+    gate = s["controls_gate"]
+    ctrl = s["controls"]
     lines = [
         "# BENCH — measured numbers (this repo)",
         "",
@@ -389,200 +279,54 @@ def _write_bench_md(result: dict) -> None:
         "",
         "## KG pipeline throughput at two parallelism levels",
         "",
-        "Same deterministic page corpus, same job, protocol ="
-        f" **{s.get('protocol', 'in-process-ladder')}**: each level is a"
-        " real `spark-submit --py-files` run in a fresh JVM (the north"
-        f" rule's launch mode), {SUBMIT_REPS} submits per level with the",
-        "LEVELS interleaved (2,8,32, 2,8,32) so a VM throttle window",
-        "spreads across all levels instead of clobbering one; min-wall",
-        "per level; each submit warms in-JVM before its recorded pass.",
-        "The round-3/4 in-process interleaved-ladder protocol stays",
-        "available via SPARK_GRAFT_BENCH_PROTOCOL=ladder as a",
-        "same-session cross-check. local[N] threads stand in for",
-        "executors per BASELINE.md.",
-        "",
-        "**Why the low core range:** measured raw-CPU scaling on this VM",
-        "(independent busy-loop processes, no Spark) is near-linear up to",
-        "~8 procs but only ~2.6×/4× from 8→32 — an SMT/steal hardware",
-        "ceiling, not a Spark property. The 32-core pipeline number is",
-        "reported alongside as max-parallelism throughput; repeated runs",
-        "on this VM vary by 2×+ (burst throttling); treat single runs as",
-        "indicative only.",
+        f"Protocol **{s['protocol']}**: each level is one `spark-submit --py-files`",
+        "run of `jobs/run_pipeline.py --bench 1` in a fresh JVM over the same",
+        f"{s['low']['pages']} synthetic pages, warmed once in-JVM before its timed",
+        f"pass; {SUBMIT_REPS} rounds with the levels interleaved, min wall per level.",
+        "No-Spark controls (`jobs/scaling_controls.py`) sampled before and after",
+        "the ladder bracket it. local[N] threads stand in for executors per",
+        "BASELINE.md.",
         "",
         "| level | cores | pages | triples | sec | triples/sec |",
         "|---|---|---|---|---|---|",
     ]
-    attribution = [
-        "",
-        "## Where the 2→8 gap goes — event-log attribution (round 3)",
-        "",
-        "Per-task metrics from Spark event logs (`jobs/profile_scaling.py`,",
-        "32k pages, fresh subprocess per level) against two perfectly",
-        "parallel no-Spark controls (`jobs/scaling_controls.py`):",
-        "",
-        "| measurement | 2 cores | 8 cores | 2→8 efficiency |",
-        "|---|---|---|---|",
-        "| pure-ALU control (float loops) | — | — | **0.981** |",
-        "| memory-bandwidth control (numpy 128 MiB copies) | — | — | **0.760** |",
-        "| pipeline wall (cache variant) | 59.8 s | 25.4 s | 0.589 |",
-        "| pipeline Σ task CPU (`run_s`, same input!) | 99.9 s | 134.2 s | 1.34× inflation ≈ 1/0.75 |",
-        "| pipeline GC / shuffle-fetch / sched delay | 0.4 / 0.0 / 2.0 s | 1.4 / 0.0 / 2.0 s | negligible |",
-        "| non-task driver wall (plan analysis + job setup) | ~9.9 s | ~8.6 s | fixed, core-independent |",
-        "",
-        "Reading: each task burns ~34% more CPU at 8 cores on identical",
-        "work while GC and fetch wait stay ~zero — the per-core slowdown",
-        "is the machine's shared memory controller (matches the 0.76",
-        "bandwidth control; the ALU control proves it is NOT SMT/steal at",
-        "8 procs). The rest of the gap is the ~10 s core-count-independent",
-        "driver wall — an input-size artifact, addressed by doubling the",
-        "bench input to 64k pages. Variants: serialized cache and no-cache",
-        "both measured WORSE (run_s inflation 1.50×/1.48× — more bytes",
-        "moved); the deserialized cache the bench uses is the right call.",
-        "",
-        "Round-4 re-profile (same protocol, fused linking, 32k pages,",
-        "single shot): run_s 85.3→137.9 (1.62× inflation 2→8) on a session",
-        "whose PURE-ALU control itself scaled at only 0.807 — i.e. that",
-        "day's numbers are machine-state-dominated and not comparable to",
-        "the r3 table above; the interleaved-ladder bench on the SAME",
-        "session still measured 0.813 raw / 0.995 bandwidth-adjusted,",
-        "which is the protocol designed to survive exactly this state.",
-        "",
-        "Practical ceiling for this bandwidth-bound workload on this",
-        "single-socket VM: ~0.76 (bandwidth) × ~0.92 (residual fixed wall",
-        "at 64k pages) ≈ **0.70**. On a real multi-executor cluster each",
-        "executor owns its node's memory controller, so the bandwidth term",
-        "does not apply across nodes — the plan itself (map-side pipeline,",
-        "two cached reuses, broadcast joins, salted cap) has no",
-        "parallelism-hostile stage, which is what the per-stage run_s",
-        "breakdown shows (one big map stage + two cache-fill jobs).",
-        "",
-        "## Round-5 final notes (2026-08-19)",
-        "",
-        "- **Submit mode is now the recorded protocol** (promoted into",
-        "  `bench.py` itself — fresh JVM per level, the north rule's",
-        "  launch mode; VERDICT r4 #1's blessed alternative). The",
-        "  2026-08-19 manual refresh measured local[2] 11,804.9 t/s,",
-        "  local[8] 37,967.4 t/s → **efficiency 0.804 raw** (target",
-        "  ≥ 0.8, met on a controls-verified quiet window, bracketing",
-        "  no-Spark controls CLEAN at membw 1.407 pre / 1.361 post).",
-        "  Full table in BASELINE.md; the table below is this run's.",
-        "- **Absolute throughput vs 08-18** (55.7k → 38.0k t/s at the",
-        "  submit 8-core level): the extractor now simulates the complete",
-        "  late-r5 statement/control-flow semantics per page (SSA phi at",
-        "  branch/loop/try joins, return phi, early exit, lambda/chained-",
-        "  assignment/tuple-unpack desugars, boolean-operator phi) — more",
-        "  Python CPU per page at an UNCHANGED plan shape; the scaling",
-        "  ratio holding (0.890 → 0.804) confirms the added work is",
-        "  per-partition, not a new serial or shuffle term.",
-        "- **Triple count** 1,418,402 (r4) → 1,382,402: early-exit and",
-        "  phi semantics KILL dead control edges and stale bindings the",
-        "  r4 extractor over-emitted, while the grown special-snippet",
-        "  fixture adds nodes — net −2.5%, both directions documented in",
-        "  the extractor tests.",
-        "- **One anomalous sample**: a same-day bench recorded",
-        "  top_modules_volume at 9.07 s with its POST-run membw control",
-        "  at 0.669 (throttle window opened mid-headline); re-measured",
-        "  1.45–2.2 s (warm, min-of-3, clean windows, twice). The",
-        "  recorded table below is from a run whose bracketing controls",
-        "  passed.",
-        "",
-        "## Round-5 session-2 notes (2026-08-21)",
-        "",
-        "- **The r4-flagged queries are closed for good**: the session-2",
-        "  clean-gate runs measured `pack_sequences` 1.25–1.33 s and",
-        "  `top_modules_volume` 1.54–1.55 s — both FASTER than r3",
-        "  (1.79/1.98), on gates whose bracketing controls passed; the",
-        "  plan-pin tests (`tests/test_plans.py`) hold the shapes",
-        "  deterministically.",
-        "- **Headline suite ~28.6–29 s total** across session-2 gated",
-        "  runs — the best of the round (r3 37.4 s, r4 recorded 46.0 s in",
-        "  a throttled window).",
-        "- **Submit-mode 2→8 efficiency across the round's gated",
-        "  samples: 0.890, 0.840, 0.804, 0.830, 0.741** (median ≈ 0.83,",
-        "  target ≥ 0.8). The 0.741 tail sample's own PURE-ALU control",
-        "  read 0.919 (a degraded window penalizing the multi-core",
-        "  level — pure CPU work should scale ~0.98 on a quiet box);",
-        "  its bandwidth-adjusted number is below too, which is the",
-        "  machine, not the plan: the best same-code clean-window sample",
-        "  (0.830 raw, ALU 1.05, membw brackets 0.83/0.896,",
-        "  adjusted 1.0) and the 70,244 t/s local[32] max-parallelism",
-        "  record are in BASELINE.md.",
-        "- **Triple count moved with the fixture** (session-2 shapes +",
-        "  a REPL-transcript block in the special==0 snippet); every",
-        "  constituent stays oracle-matched — full verify at sf0.01 AND",
-        "  sf0.1 from an isolated clone: FAILURES none.",
-    ]
-    for key in sorted(s["levels"], key=int):
-        r = s["levels"][key]
+    rows = [(f"local[{s['levels'][k]['cores']}]", s["levels"][k])
+            for k in sorted(s["levels"], key=int)]
+    for level, r in rows + [("max_cores", s["max_cores"])]:
         lines.append(
-            f"| local[{r['cores']}] | {r['cores']} | {r['pages']} | {r['triples']} "
+            f"| {level} | {r['cores']} | {r['pages']} | {r['triples']} "
             f"| {r['sec']} | {r['triples_per_sec']} |"
         )
-    r = s["max_cores"]
-    lines.append(
-        f"| max_cores | {r['cores']} | {r['pages']} | {r['triples']} "
-        f"| {r['sec']} | {r['triples_per_sec']} |"
-    )
     lines += [
-        "",
-        "One pre-declared N→4N pair (ADVICE r2: no pair selection; the",
-        "1-core baseline's per-task overhead flattered 1→4, so it was",
-        "dropped and its time budget doubled the input size):",
         "",
         f"- headline `efficiency` 2→8 cores: **{s['efficiency_2v8']}**"
         " (target ≥ 0.8).",
-        f"- controls gate (r5): recording waited for a window with"
-        f" membw-control ≥ {s.get('controls_gate', {}).get('threshold', 0.8)};"
-        f" passed={s.get('controls_gate', {}).get('passed', '—')} after"
-        f" {s.get('controls_gate', {}).get('attempts', '—')} attempt(s)"
-        " (pre/post samples bracket the ladder; the min is used below).",
-        f"- same-session controls: pure-ALU {s.get('controls', {}).get('cpu_efficiency', '—')},"
-        f" memory-bandwidth {s.get('controls', {}).get('membw_efficiency', '—')}.",
-        f"- `efficiency_adjusted` (raw / bandwidth control, the"
-        f" machine-normalized number): **{s.get('efficiency_adjusted', '—')}**"
-        " — ≥ 0.95 means the plan scales as well as ANY bandwidth-bound"
-        " work can on this box; on a multi-executor cluster each executor"
-        " owns its memory controller, so the raw number is the sandbox's"
-        " floor, not the plan's.",
-        "",
-        "Machine-state caveat: identical code measured 0.93 (r1,",
-        "spark-submit best-of-2), 0.82 (r2, fresh VM), and with the",
-        "round-3 protocol **0.862 / 0.773 / 0.753** and, later the same",
-        "round, **0.729 / 0.723 / 0.692** on consecutive same-day runs —",
-        "the spread tracks the VM's burst-credit state",
-        "(after hours of sustained 32-core load, steal time penalizes",
-        "the multi-core levels more than the low ones; the same runs'",
-        "headline queries slowed 2-3x wholesale). The interleaved-ladder",
-        "protocol removes per-level window bias; it cannot remove",
-        "sustained throttling. Treat the number as a lower bound tied to",
-        "machine state at run time; the attribution below bounds what",
-        "this machine can give a bandwidth-bound workload (~0.76).",
+        f"- controls gate: recording waited for a window with"
+        f" membw-control ≥ {gate['threshold']}; passed={gate['passed']}"
+        f" after {gate['attempts']} attempt(s) (pre/post samples bracket"
+        " the ladder; the min is used below).",
+        f"- same-session controls: pure-ALU {ctrl.get('cpu_efficiency', '—')},"
+        f" memory-bandwidth {ctrl.get('membw_efficiency', '—')}.",
+        f"- `efficiency_adjusted` (raw / memory-bandwidth control):"
+        f" **{s['efficiency_adjusted']}**.",
     ]
-    lines += attribution
-    hg = result.get("headline_controls_gate", {})
-    hc = hg.get("controls") or {}
+    hg = result["headline_controls_gate"]
+    hc = hg["controls"] or {}
     lines += [
         "",
         "## Headline query timings (sec, warmed, noop sink)",
         "",
         f"Own quiet-window gate: membw-control "
-        f"{hc.get('membw_efficiency', '—')} (threshold {hg.get('threshold', 0.8)}, "
-        f"passed={hg.get('passed', '—')}, {hg.get('attempts', '—')} attempt(s)).",
+        f"{hc.get('membw_efficiency', '—')} (threshold {hg['threshold']}, "
+        f"passed={hg['passed']}, {hg['attempts']} attempt(s)).",
         "",
         "| query | sec |",
         "|---|---|",
     ]
     for k, v in result["queries"].items():
         lines.append(f"| {k} | {v} |")
-    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+    return "\n".join(lines) + "\n"
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 2 and sys.argv[1] == "--ladders":
-        print(json.dumps(pipeline_ladders(
-            [int(c) for c in sys.argv[2].split(",")],
-            int(sys.argv[3]), int(sys.argv[4]),
-        )))
-    else:
-        main()
+    main()

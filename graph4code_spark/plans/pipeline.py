@@ -47,11 +47,10 @@ from graph4code_spark.operators.canonicalize import (
     same_as_triples,
 )
 from graph4code_spark.operators.flows import extract_flow_nodes
-from graph4code_spark.operators.linking import ES_RESULT_CAP, link_entities
+from graph4code_spark.operators.linking import link_entities
 from graph4code_spark.schemas import TRIPLE_COLS
 from graph4code_spark.sources.qa import extract_qa
 from graph4code_spark.synth import FIXED_CATALOG, FIXED_CLASS_MAP, catalog_df, class_map_df
-from graph4code_spark.uris import PREFIXES
 
 #: quads per subject bucket of the final sink.  At the ~7 B/quad (zstd)
 #: measured on the synthetic KG, one bucket's files total ~120 MB, about
@@ -75,16 +74,12 @@ def subject_buckets(rows: int) -> int:
 @dataclass
 class PipelineConfig:
     out_dir: str
-    forum_prefix: str = PREFIXES["stackoverflow3"]
-    cap: int = ES_RESULT_CAP
     catalog_records: list = field(default_factory=lambda: FIXED_CATALOG)
     class_map_pairs: list = field(default_factory=lambda: FIXED_CLASS_MAP)
 
     def fingerprint(self) -> str:
         basis = json.dumps(
             {
-                "forum_prefix": self.forum_prefix,
-                "cap": self.cap,
                 "n_catalog": len(self.catalog_records),
                 "n_aliases": len(self.class_map_pairs),
             },
@@ -187,7 +182,7 @@ def run_pipeline(
     records = cfg.catalog_records
 
     qa = runner.run("01_qa", lambda: extract_qa(pages))
-    links = runner.run("02_links", lambda: link_entities(qa, records, cfg.cap),
+    links = runner.run("02_links", lambda: link_entities(qa, records),
                        deps=["01_qa"])
     doc_t = runner.run(
         "03_doc_triples",
@@ -197,7 +192,7 @@ def run_pipeline(
     )
     forum_t = runner.run(
         "04_forum_triples",
-        lambda: forum_triples(links, qa, records, cfg.forum_prefix),
+        lambda: forum_triples(links, qa, records),
         deps=["01_qa", "02_links"],
     )
     # fault-barrier lineage: the pages the extractor dropped

@@ -101,7 +101,7 @@ def get_spark(
 
 
 def stop_all() -> None:
-    """Stop the active session (used by the two-parallelism bench)."""
+    """Stop the active session, if any."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()

@@ -48,7 +48,6 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=32000,
                     help="synthetic corpus size when --input is not given")
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--cap", type=int, default=5000, help="per-entity result cap (W4)")
     ap.add_argument("--bench", type=int, default=0, metavar="R",
                     help="throughput mode: skip the checkpointed write, run the "
                          "in-memory pipeline R times after a warm-up and report "
@@ -139,7 +138,7 @@ def main() -> None:
         return
 
     t0 = time.time()
-    cfg = PipelineConfig(out_dir=args.out_dir, cap=args.cap)
+    cfg = PipelineConfig(out_dir=args.out_dir)
     stats: dict = {}
     triples = run_pipeline(spark, pages, cfg, stats=stats)
     n = triples.count()
